@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Shuffle-VOLUME audit (VERDICT r15 ask #7): ExplainAudit pins plan
   * SHAPES, but a payload column accidentally riding a wide exchange is
   * shape-invisible — it only shows as bytes. This main measures actual
-  * `shuffle bytes/records written` per registered query (Spark task
-  * metrics via a listener) and prints ONE JSON line, committed as
+  * `shuffle bytes/records written` per registered query (task metrics
+  * from [[Measure]]) and prints ONE JSON line, committed as
   * `BENCH_volumes.json` so regressions diff.
   *
   * It also proves the r16 election rewrites AT THE METRICS LEVEL, not
@@ -25,59 +24,15 @@ import org.apache.spark.sql.functions._
   */
 object BenchVolumes {
 
-  final class ShuffleListener extends SparkListener {
-    val bytes = new java.util.concurrent.atomic.LongAdder
-    val records = new java.util.concurrent.atomic.LongAdder
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        bytes.add(m.shuffleWriteMetrics.bytesWritten)
-        records.add(m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-volumes")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val listener = new ShuffleListener
-    spark.sparkContext.addSparkListener(listener)
-
-    // settle: poll the async listener totals until stable so one
-    // query's late task-end events never leak into the next reading.
-    // BOUNDED: speculative/zombie tasks trickling events forever must
-    // fail the run with a diagnostic, not hang the bench harness
-    def settled(): (Long, Long) = {
-      var last = (listener.bytes.sum(), listener.records.sum())
-      var prev = last
-      var same = 0
-      var polls = 0
-      while (same < 2) {
-        polls += 1
-        if (polls > 500) // 500 × 120 ms = 60 s of non-quiescence
-          sys.error(s"shuffle listener never settled after $polls polls" +
-            s" — last two readings: $prev then $last (bytes, records)")
-        Thread.sleep(120)
-        val cur = (listener.bytes.sum(), listener.records.sum())
-        if (cur == last) same += 1 else { same = 0; prev = last; last = cur }
-      }
-      last
-    }
+    val queries = Measure.selected()
+    val spark = Session.local("graft-bench-volumes", Session.cpus)
+    val listener = Measure.attach(spark)
     def measure(fn: => DataFrame): (Long, Long) = {
       spark.catalog.clearCache()
-      val (b0, r0) = settled()
-      fn.write.format("noop").mode("overwrite").save()
-      val (b1, r1) = settled()
-      (b1 - b0, r1 - r0)
+      val r = Measure.run(spark, listener)(fn)
+      (r.shuffleWriteBytes, r.shuffleWriteRecords)
     }
 
     var ok = true
@@ -86,13 +41,7 @@ object BenchVolumes {
       ok &= cond
     }
 
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val vols = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) =>
-        val (b, r) = measure(fn(spark, sfDir))
-        name -> (b, r)
-      }
+    val vols = queries.map { case (name, fn) => name -> measure(fn(spark, sfDir)) }
     val volMap = vols.toMap
 
     // the r16 election-rewrite evidence: aggregate vs window twins

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints formatted physical plans for representative
   * queries so pushdown/broadcast/codegen regressions are visible.
   * Checks (exit 1 on failure):
@@ -21,13 +19,7 @@ object ExplainAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-explain", 4)
 
     def plan(name: String): String = {
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-curve fixture generator (dev tooling, not driver contract):
@@ -61,15 +61,7 @@ object ScaleGen {
     val src = args(0)
     val out = args(1)
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scalegen")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-scalegen", Session.cpus)
 
     def read(n: String): DataFrame = spark.read.parquet(s"$src/$n.parquet")
     def write(df: DataFrame, n: String): Unit =

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{Scd1Upsert, Tables}
 import graft.streaming.Streams
@@ -14,13 +14,7 @@ import graft.streaming.Streams
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-stream-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-stream-demo", 4)
     import spark.implicits._
 
     // split events into 3 files so AvailableNow+maxFilesPerTrigger=1

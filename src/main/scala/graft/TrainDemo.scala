@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{Materialize, Tables}
 import graft.operators.{Dedup, Sampling, TextQuality}
@@ -25,13 +25,7 @@ import graft.operators.{Dedup, Sampling, TextQuality}
 object TrainDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("graft-train-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-train-demo", 8)
 
     var ok = true
     def check(name: String, cond: Boolean): Unit = {

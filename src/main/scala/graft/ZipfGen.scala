@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Zipf-skew fixture generator (dev tooling, not driver contract) —
@@ -49,15 +49,7 @@ object ZipfGen {
     val docCopies = args.lift(2).map(_.toInt).getOrElse(10)
     val hotRepeat = args.lift(3).map(_.toInt).getOrElse(10)
     val embCopies = args.lift(4).map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-zipfgen")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-zipfgen", Session.cpus)
 
     def read(n: String): DataFrame = spark.read.parquet(s"$src/$n.parquet")
     // 128 files: scan parallelism must well exceed the bench host cores,

@@ -1,64 +1,24 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.functions.{lit, raise_error}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards the outlier-re-run feedback loop: `Bench.floorTimesFrom` must
-  * harvest per-query floors from the REAL committed driver artifacts,
-  * whose payload quotes are `\"`-escaped inside a wrapping JSON string.
-  * Rounds 3-5 shipped contaminated because the previous pattern matched
-  * zero entries against that escaping and `reran` stayed empty.
-  */
+/** The bench results record: the compact stdout line's size and keys,
+  * the per-query fields of `bench_results_verbose.json`, failures kept
+  * out of the total, outlier re-run choice, and the query selector
+  * every per-query main shares. */
 class BenchFloorSpec extends AnyFunSuite {
-  private val committed =
-    Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.matches("BENCH_r\\d+\\.json")).map(_.getPath).toSeq
 
-  test("committed BENCH_r*.json artifacts yield >= 60 floors") {
-    assert(committed.nonEmpty, "no committed BENCH_r*.json found in cwd")
-    val floors = Bench.floorTimesFrom(committed)
-    assert(floors.size >= 60, s"only ${floors.size} floors harvested: ${floors.keys.toSeq.sorted.take(5)}...")
-    assert(floors.values.forall(v => v > 0 && v < 10000))
-  }
+  private def reading(wallS: Double, runMs: Long = 1000, cpuMs: Long = 900) =
+    Measure.Reading(wallS, jobs = 2, jobWallMs = 700, taskRunMs = runMs,
+      taskCpuMs = cpuMs, gcMs = 30, shuffleReadBytes = 4096,
+      shuffleReadRecords = 40, shuffleWriteBytes = 4096,
+      shuffleWriteRecords = 40, maxTaskMs = 250,
+      stages = Seq.tabulate(20)(i => Measure.Stage(i, 100, 4, 500 - i, 400,
+        5, 1 << 20, 2048, 2048)))
 
-  test("one new-format artifact alone floors EVERY query through the " +
-    "driver's wrap-escape-tail-truncate") {
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    assert(names.size >= 75)
-    val mins = names.zipWithIndex.map { case (n, i) => n -> (0.5 + i * 0.01) }
-    // what Bench.main prints: big line (passes for every query, far over
-    // the driver's window) bracketed by the compact floors chunk lines
-    val floorsLines = Bench.floorsJson(mins)
-    floorsLines.foreach(l => assert(l.length < 1400,
-      s"a floors chunk too long to survive the ~2000-char tail: ${l.length}"))
-    // all trailing chunks + the sbt trailer must fit the tail window
-    // TODAY (at ~195 queries the oldest chunk starts getting cut, which
-    // the regex-per-pair harvest degrades through gracefully — this
-    // assert is the early warning to re-budget)
-    assert(floorsLines.map(_.length + 1).sum < 1900,
-      s"floors chunks total ${floorsLines.map(_.length + 1).sum} — tail overflow")
-    val passes = mins.map { case (k, v) => "\"" + k + s"\":[$v,${v * 2}]" }
-      .mkString("{", ",", "}")
-    val stdout = floorsLines.mkString("\n") + "\n" +
-      s"""{"metric":"total","value":42.0,"unit":"sec","passes":$passes}""" +
-      "\n" + floorsLines.mkString("\n") + "\n[success] Total time: 168 s"
-    // the driver keeps only the tail, escaped inside a JSON string field
-    val wrapped = "{\"n\":7,\"rc\":0,\"tail\": \"" +
-      stdout.takeRight(2000).replace("\\", "\\\\").replace("\"", "\\\"") + "\"}"
-    val dir = java.nio.file.Files.createTempDirectory("benchfloor75")
-    val p = dir.resolve("BENCH_r97.json")
-    java.nio.file.Files.write(p, wrapped.getBytes("UTF-8"))
-    val floors = Bench.floorTimesFrom(Seq(p.toString))
-    names.foreach { n =>
-      val f = Bench.floorFor(floors, n)
-      assert(f.nonEmpty, s"no floor recovered for $n")
-      val want = mins.toMap.apply(n)
-      assert(f.get <= want + 1e-9 && f.get >= want - 0.1,
-        s"$n floor ${f.get} != floored($want)")
-    }
-  }
-
-  test("compact results line survives the driver's 2000-char tail and " +
-    "round-trips as floors") {
+  test("compact results line fits the 2000-char budget, unique qNN keys") {
     val names = SparkEntry.queries.keys.toSeq.sorted
     // qNN prefixes must be unique or the compact line silently merges
     // two queries' results
@@ -67,52 +27,91 @@ class BenchFloorSpec extends AnyFunSuite {
       s"duplicate qNN prefixes: ${prefixes.diff(prefixes.distinct).distinct}")
     // pessimistic: every query at 99.9 s (4-char values), 3-digit loads
     val res = names.map(_ -> 99.94)
-    val line = Bench.compactLine(res, 9999.9, "/root/testdata/sf0.1", 5,
-      "[99.99,99.99,99.99]")
-    // budget: 2000-char tail - "[info] " prefix - "\n" - ~75-char sbt
-    // [success] trailer => the line itself must stay under ~1915
-    assert(line.length < 1900, s"compact line ${line.length} chars — " +
-      "will be cut by the driver's stdout tail")
-    assert(line.contains("\"metric\":\"total\"") && line.contains("\"unit\":\"sec\""))
-    // floored, clamped values: 99.94 -> 99.9, and a 0.01 s query floors
-    // to the 0.05 clamp (a raw 0.0 would trip the 3x outlier test on
-    // every future run)
-    assert(line.contains("\":99.9"))
-    val tiny = Bench.compactLine(Seq("q01_x" -> 0.01), 0.01, "d", 0, "[]")
+    val line = Bench.compactLine(res, 9999.9, "testdata/sf0.1", 5, 5,
+      Seq(99.99, 99.99, 99.99))
+    assert(line.length < 1900, s"compact line ${line.length} chars")
+    val json = new ObjectMapper().readTree(line)
+    assert(json.get("metric").asText === "total" && json.get("unit").asText === "sec")
+    assert(json.get("queries").size === names.size)
+    // floored, never rounded up; a 0.01 s query clamps to 0.05
+    assert(json.get("queries").get("q03").asDouble === 99.9)
+    val tiny = Bench.compactLine(Seq("q01_x" -> 0.01), 0.01, "d", 0, 0, Nil)
     assert(tiny.contains("\"q01\":0.05"))
-    // the driver wraps the tail in an escaped JSON string; harvesting
-    // the artifact must floor every query from the compact line alone
-    val wrapped = "{\"n\":18,\"rc\":0,\"tail\": \"" +
-      ("[info] " + line + "\n[success] Total time: 600 s").takeRight(2000)
-        .replace("\\", "\\\\").replace("\"", "\\\"") + "\"}"
-    val dir = java.nio.file.Files.createTempDirectory("benchcompact")
-    val p = dir.resolve("BENCH_r98.json")
-    java.nio.file.Files.write(p, wrapped.getBytes("UTF-8"))
-    val floors = Bench.floorTimesFrom(Seq(p.toString))
-    names.foreach { n =>
-      assert(Bench.floorFor(floors, n).contains(99.9), s"no floor for $n")
-    }
   }
 
-  test("floorFor: short qNN keys serve full names, min wins over both") {
-    val m = Map("q49" -> 0.7, "q49_humanname_parse" -> 0.9, "q03" -> 1.2)
-    assert(Bench.floorFor(m, "q49_humanname_parse").contains(0.7))
-    assert(Bench.floorFor(Map("q49_humanname_parse" -> 0.4, "q49" -> 0.8),
-      "q49_humanname_parse").contains(0.4))
-    assert(Bench.floorFor(m, "q03_join_star_revenue").contains(1.2))
-    assert(Bench.floorFor(m, "q99_missing").isEmpty)
+  test("verbose record: per-query fields, failures out of the total") {
+    val ok = Bench.Result("q01_ok", Seq(reading(2.0), reading(1.5)), 0.8, None)
+    val bad = Bench.Result("q02_bad", Nil, 0.8, Some("boom"))
+    val txt = Bench.record(Seq(ok, bad), Seq("q01_ok"), Nil,
+      Seq(0.5, 0.4, 0.3), Seq(0.6, 0.5, 0.4), "/sf")
+    val json = new ObjectMapper().readTree(txt)
+    assert(json.get("value").asDouble === 1.5)
+    assert(json.get("failed").get(0).asText === "q02_bad")
+    assert(json.get("queries").get("q02_bad") === null)
+    assert(json.get("leaked").get(0).asText === "q01_ok")
+    assert(json.get("loadavg_start").size === 3)
+    val q = json.get("queries").get("q01_ok")
+    assert(q.get("best_s").asDouble === 1.5)
+    assert(q.get("passes").size === 2 && q.get("passes").get(0).asDouble === 2.0)
+    assert(q.get("load_start").asDouble === 0.8)
+    assert(q.get("jobs").asInt === 2)
+    assert(q.get("job_wall_s").asDouble === 0.7)
+    assert(math.abs(q.get("driver_gap_s").asDouble - 0.8) < 1e-9)
+    assert(q.get("task_run_s").asDouble === 1.0 && q.get("task_cpu_s").asDouble === 0.9)
+    assert(q.get("gc_s").asDouble === 0.03)
+    for (k <- Seq("shuffle_read_bytes", "shuffle_write_bytes"))
+      assert(q.get(k).asLong === 4096, k)
+    for (k <- Seq("shuffle_read_records", "shuffle_write_records"))
+      assert(q.get(k).asLong === 40, k)
+    assert(q.get("max_task_s").asDouble === 0.25)
+    // top 14 stages by run time
+    val stages = q.get("stages")
+    assert(stages.size === 14 && stages.get(0).get("id").asInt === 0)
+    assert(stages.get(0).get("run_s").asDouble === 0.5)
+    assert(stages.get(0).get("input_bytes").asLong === (1L << 20))
   }
 
-  test("escaped-quote payloads parse identically to bare-quote payloads") {
-    val bare = """{"q01_agg":[2.5,1.25],"q02_filter":0.75}"""
-    val escaped = "{\"tail\": \"" + bare.replace("\"", "\\\"") + "\"}"
-    val dir = java.nio.file.Files.createTempDirectory("benchfloor")
-    val pBare = dir.resolve("bare.json"); val pEsc = dir.resolve("esc.json")
-    java.nio.file.Files.write(pBare, bare.getBytes("UTF-8"))
-    java.nio.file.Files.write(pEsc, escaped.getBytes("UTF-8"))
-    val fBare = Bench.floorTimesFrom(Seq(pBare.toString))
-    val fEsc = Bench.floorTimesFrom(Seq(pEsc.toString))
-    assert(fBare === Map("q01_agg" -> 1.25, "q02_filter" -> 0.75))
-    assert(fEsc === fBare)
+  test("a query that fails is recorded as failed, not timed") {
+    val spark = TestSpark.spark
+    val listener = Measure.attach(spark)
+    try {
+      val r = Bench.measure(spark, listener, "q00_fails", 2)(
+        spark.range(3).select(raise_error(lit("boom"))))
+      assert(r.error.exists(_.contains("boom")), r.error)
+      assert(r.passes.isEmpty)
+      val good = Bench.measure(spark, listener, "q00_ok", 2)(spark.range(3).toDF())
+      assert(good.error.isEmpty && good.passes.size === 2)
+      val json = new ObjectMapper().readTree(
+        Bench.record(Seq(r, good), Nil, Nil, Nil, Nil, "d"))
+      assert(json.get("failed").get(0).asText === "q00_fails")
+      assert(json.get("queries").size === 1)
+      assert(json.get("value").asDouble === math.round(good.best.wallS * 1000) / 1000.0)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("outlier re-runs: contention signals over 1.5 s, at most 5") {
+    def res(n: String, wall: Double, load: Double, runMs: Long, cpuMs: Long) =
+      Bench.Result(n, Seq(reading(wall, runMs, cpuMs)), load, None)
+    val quiet = res("q01", 9.0, 0.5, 1000, 900)
+    val loaded = res("q02", 3.0, 9.0, 1000, 900)
+    val offCpu = res("q03", 2.0, 0.5, 1000, 400)
+    val short = res("q04", 1.0, 9.0, 1000, 100)
+    val failed = Bench.Result("q05", Nil, 9.0, Some("x"))
+    assert(Bench.rerunCandidates(Seq(quiet, loaded, offCpu, short, failed), 4) ===
+      Seq("q02", "q03"))
+    val many = (10 until 20).map(i => res(s"q$i", i.toDouble, 9.0, 1000, 900))
+    assert(Bench.rerunCandidates(many, 4) === Seq("q19", "q18", "q17", "q16", "q15"))
+  }
+
+  test("query selector: full name or qNN prefix; unknown or empty fails") {
+    val names = Seq("q10_b", "q02_a", "q03_c")
+    assert(Measure.select(names, None) === Seq("q02_a", "q03_c", "q10_b"))
+    assert(Measure.select(names, Some("q10_b, q02")) === Seq("q02_a", "q10_b"))
+    // a prefix is the whole qNN: q1 is not q10
+    for (bad <- Seq("q1", "q02_a,q999_nope", "", " , "))
+      intercept[IllegalArgumentException](Measure.select(names, Some(bad)))
+    assert(Measure.select(SparkEntry.queries.keys,
+      Some("q03_join_star_revenue,q145")) ===
+      Seq("q03_join_star_revenue", "q145_topk_aggregate"))
   }
 }

@@ -160,4 +160,15 @@ class CoreSpec extends AnyFunSuite {
       .run().select("v", "x").as[(String, Long)].collect().toSeq
     assert(twoUpdates == Seq(("S", 5L)))
   }
+
+  test("Measure listener: a two-partition groupBy shuffles, tasks use CPU") {
+    val listener = Measure.attach(spark)
+    try {
+      val r = Measure.run(spark, listener)(spark.range(0, 10000, 1, 2)
+        .groupBy((col("id") % 7).as("k")).count())
+      assert(r.shuffleWriteRecords > 0 && r.shuffleReadRecords > 0, r)
+      assert(r.shuffleWriteBytes > 0 && r.taskCpuMs > 0, r)
+      assert(r.jobs >= 1 && r.stages.nonEmpty && r.maxTaskMs <= r.taskRunMs, r)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

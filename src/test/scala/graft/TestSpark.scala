@@ -4,19 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.plans.ArrayDotProduct.register(s)
-    graft.plans.CharHash.register(s)
-    graft.plans.SortedIntersectCount.register(s)
-    s
-  }
+  lazy val spark: SparkSession = Session.local("graft-test", 4)
 
   /** Smallest driver fixture dir (for specs that read real tables). */
   val sfDir = "/root/testdata/sf0.001"
