@@ -6,6 +6,8 @@ package graft
   *  - q02: parquet scan carries PushedFilters + pruned ReadSchema
   *  - q03: nation/region joined via BroadcastHashJoin
   *  - q01: partial (map-side) aggregation before the shuffle
+  *  - q37/q115/q122/q124: no `lambdafunction` (the text hot paths stay
+  *    on the native kernels, never interpreted higher-order functions)
   *  - EVERY registered query: no `Exchange SinglePartition` in the plan
   *    (the round-1 sorted-dictionary windows funneled whole vocabularies
   *    through one task). Allowlisted: q26/q51/q52 — IdMinter's global
@@ -15,7 +17,7 @@ package graft
 object ExplainAudit {
   /** Exact number of `check(...)` calls a full run performs (named
     * checks + the generic per-query single-partition screen). */
-  val ExpectedChecks = 255
+  val ExpectedChecks = 259
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -501,6 +503,17 @@ object ExplainAudit {
         "never shuffles for the screen")
     check(!p115.contains("CartesianProduct"),
       "q115 has no cartesian product")
+
+    // The curation hot paths run on the native text kernels
+    // (plans/TextKernels): a higher-order function creeping back into
+    // one of these plans costs one interpreted lambda call per token.
+    Seq("q37_dedup_minhash_lsh" -> plan("q37_dedup_minhash_lsh"),
+        "q115_decontamination" -> p115, "q122_repetition_screens" -> p122,
+        "q124_paragraph_dedup" -> p124).foreach { case (name, p) =>
+      check(!p.contains("lambdafunction"),
+        s"$name runs no interpreted lambda (tokens, shingles, chunks " +
+          "and mode counts are native kernels)")
+    }
 
     val p116 = plan("q116_curation_pipeline")
     check(p116.contains("graft-"),

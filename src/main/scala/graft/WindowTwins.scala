@@ -39,12 +39,8 @@ object WindowTwins {
     * window-hash ownership via a per-hash window (the hot hash's
     * whole occurrence list sorts in one task). */
   def spanOwnership(docs: DataFrame): DataFrame = {
-    val tokenHashes = transform(TextFunctions.tokens(col("text")),
-      t => TextFunctions.charHash(t))
-    val hashes = org.apache.spark.sql.GraftExpr.column(
-      graft.plans.WindowHashes(
-        org.apache.spark.sql.GraftExpr.expression(tokenHashes), 10))
-    val occ = docs.select(col("doc_id"), hashes.as("hs"))
+    val occ = docs.select(col("doc_id"),
+        TextFunctions.windowHashes(col("text"), 10).as("hs"))
       .select(col("doc_id"), posexplode(col("hs")).as(Seq("pos", "win_hash")))
     val w = Window.partitionBy(col("win_hash"))
       .orderBy(col("doc_id").asc, col("pos").asc)

@@ -31,10 +31,13 @@ import org.apache.spark.sql.DataFrame
   */
 object Materialize {
 
-  /** Materialize `df` at `path` (overwrite) and return the re-read. */
+  /** Materialize `df` at `path` (overwrite) and return the re-read.
+    * The re-read is given `df`'s schema: inferring it would start one
+    * footer-reading Spark job per landing to recover a schema the
+    * caller already holds. */
   def parquet(df: DataFrame, path: String): DataFrame = {
     df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
+    df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
   /** Materialize into a fresh temp dir; the dir is deleted at JVM exit

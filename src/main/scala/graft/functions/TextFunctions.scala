@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Tokenization / shingling / text-feature primitives for the
   * LLM-training-data operators (dedup, quality, language-ID,
-  * fingerprinting). All pure Column expressions — no UDFs, so the whole
-  * pipeline stays in Catalyst and scales with codegen.
+  * fingerprinting). All Column expressions — no UDFs, so the whole
+  * pipeline stays in Catalyst; the per-token hot paths are native
+  * codegen'd kernels (graft.plans.TextKernels).
   *
   * Reference anchors: abstract cleaning + inverted index
   * (libraries/dlt_utils/openalex/dlt/transform.py:24-64); title
@@ -15,23 +16,32 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Whitespace tokens, empty strings dropped. */
-  def tokens(text: Column): Column =
-    filter(split(text, " "), t => t =!= "")
+  private def kernel(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
+    org.apache.spark.sql.GraftExpr.column(e)
+  private def expr(c: Column) = org.apache.spark.sql.GraftExpr.expression(c)
+
+  /** Space-separated tokens (U+0020 only — tabs and newlines stay
+    * inside tokens), empty strings dropped; null text gives null.
+    * Evaluated by the codegen'd [[graft.plans.Tokens]] kernel. */
+  def tokens(text: Column): Column = kernel(graft.plans.Tokens(expr(text)))
 
   /** Word k-shingles as space-joined strings; empty array when the doc
-    * has fewer than k tokens. Built as k−1 `zip_with` passes over
-    * shifted slices (NOT a per-position `slice` lambda — that is O(n·k)
-    * interpreted calls and dominated the sf0.1 dedup bench). */
-  def wordShingles(text: Column, k: Int): Column = {
-    val toks = tokens(text)
-    val n = size(toks)
-    val len = n - (k - 1)
-    val joined = (1 until k).foldLeft(slice(toks, lit(1), len)) { (acc, j) =>
-      zip_with(acc, slice(toks, lit(j + 1), len), (a, b) => concat(a, lit(" "), b))
-    }
-    when(n >= k, joined).otherwise(array().cast("array<string>"))
-  }
+    * is null or has fewer than k tokens ([[graft.plans.WordShingles]]:
+    * one loop per row writes every shingle of the document). */
+  def wordShingles(text: Column, k: Int): Column =
+    kernel(graft.plans.WordShingles(expr(text), k))
+
+  /** [[charHash]] of every token, in token order — the word ids of the
+    * fingerprint, span-dedup and decontamination passes
+    * ([[graft.plans.TokenHashes]]); null text gives null. */
+  def tokenHashes(text: Column): Column =
+    kernel(graft.plans.TokenHashes(expr(text)))
+
+  /** Stride-1 hashes of every `window`-token run ([[tokenHashes]]
+    * folded by the rolling [[graft.plans.WindowHashes]]); empty when
+    * the doc has fewer than `window` tokens. */
+  def windowHashes(text: Column, window: Int): Column =
+    kernel(graft.plans.WindowHashes(expr(tokenHashes(text)), window))
 
   /** BPE-ish token count: runs of letters, runs of digits, or single
     * other non-space chars (same regex in the DuckDB oracles). */
@@ -61,17 +71,6 @@ object TextFunctions {
     * SQL oracle reproduces it exactly via a `list_reduce` fold, unlike
     * engine-internal hashes (xxhash64 seeds/variants differ across
     * engines). Evaluated by the codegen'd [[graft.plans.CharHash]]
-    * expression (one fused loop per row); [[charHashHof]] keeps the
-    * built-in-HOF formulation for the bit-equality cross-check. */
-  def charHash(s: Column): Column =
-    org.apache.spark.sql.GraftExpr.column(
-      graft.plans.CharHash(
-        org.apache.spark.sql.GraftExpr.expression(s)))
-
-  /** Interpreted-HOF twin of [[charHash]] (one lambda dispatch per
-    * character) — spec-only, for proving the codegen expression
-    * bit-identical on the fixture corpus + unicode edges. */
-  def charHashHof(s: Column): Column =
-    aggregate(transform(split(s, ""), c => ascii(c)),
-      lit(0L), (h, c) => (h * 31 + c) % CharHashMod)
+    * expression (one fused loop per row). */
+  def charHash(s: Column): Column = kernel(graft.plans.CharHash(expr(s)))
 }

@@ -19,35 +19,27 @@ import graft.functions.TextFunctions
   *  - keep — all fractions under their thresholds.
   *
   * 100 TB posture: one narrow projection, zero shuffle, zero explode —
-  * the per-document mode counts run as array HOFs inside whole-stage
-  * codegen (documents are short; the O(distinct × n) in-array count is
-  * thousands of comparisons per row, not a corpus-wide aggregation).
+  * tokens, shingles and the per-document mode counts are native
+  * kernels inside whole-stage codegen (graft.plans.TextKernels;
+  * documents are short, so the O(n log n) in-row sort is thousands of
+  * comparisons per row, not a corpus-wide aggregation).
   */
 object TextQuality {
 
   final case class RepetitionThresholds(maxTopWordFrac: Double = 0.20,
       maxTopBigramFrac: Double = 0.40, maxDupTrigramFrac: Double = 0.30)
 
-  /** Highest occurrence count of any element of `arr` (0 for empty).
-    * Computed as the longest equal run of the SORTED array — one
-    * `array_sort` + one `aggregate` fold, O(n log n) per row. The
-    * naive distinct×filter form is O(distinct·n) and measured 6×
+  /** Highest occurrence count of any element of the ARRAY<STRING>
+    * `arr` (0 for null or empty; null elements count as one value).
+    * The native [[graft.plans.TopCount]] kernel sorts a row's
+    * elements and takes the longest equal run, O(n log n) per row.
+    * The naive distinct×filter form is O(distinct·n) and measured 6×
     * the whole-query time at sf0.1 document lengths (q122 14.9 s →
     * sub-second); the result is identical, so the DuckDB oracles'
     * distinct-count recomputation stays a valid independent check. */
-  def topCount(arr: Column): Column = {
-    val folded = aggregate(array_sort(arr),
-      struct(lit(null).cast("string").as("prev"), lit(0).as("run"),
-        lit(0).as("best")),
-      (s, x) => {
-        val run = when(x <=> s.getField("prev"),
-          s.getField("run") + 1).otherwise(lit(1))
-        struct(x.as("prev"), run.as("run"),
-          greatest(s.getField("best"), run).as("best"))
-      },
-      s => s.getField("best"))
-    when(size(arr) > 0, folded).otherwise(0)
-  }
+  def topCount(arr: Column): Column =
+    org.apache.spark.sql.GraftExpr.column(graft.plans.TopCount(
+      org.apache.spark.sql.GraftExpr.expression(arr)))
 
   private def r6(c: Column): Column = floor(c * 1000000 + 0.5) / 1000000.0
   private def frac(num: Column, den: Column): Column =
@@ -57,15 +49,11 @@ object TextQuality {
   /** Fixed-size token chunks as space-joined "paragraphs" (the unit
     * of cross-document paragraph dedup when the corpus carries no
     * layout newlines; with real paragraphs, split on them instead —
-    * the downstream dedup is identical). Final short chunk kept. */
-  def tokenChunks(text: Column, chunkSize: Int): Column = {
-    val toks = TextFunctions.tokens(text)
-    val lastChunk = floor((size(toks) - 1) / lit(chunkSize)).cast("int")
-    when(size(toks) > 0,
-      transform(sequence(lit(0), lastChunk),
-        i => array_join(slice(toks, i * chunkSize + 1, lit(chunkSize)), " ")))
-      .otherwise(array().cast("array<string>"))
-  }
+    * the downstream dedup is identical). Final short chunk kept; empty
+    * for null or token-less text ([[graft.plans.TokenChunks]]). */
+  def tokenChunks(text: Column, chunkSize: Int): Column =
+    org.apache.spark.sql.GraftExpr.column(graft.plans.TokenChunks(
+      org.apache.spark.sql.GraftExpr.expression(text), chunkSize))
 
   /** Cross-document paragraph dedup (the Dolma paragraph-level pass):
     * every paragraph occurrence hashes ([[TextFunctions.charHash]]),
@@ -249,8 +237,8 @@ object TextQuality {
 
   /** Exact-substring duplicate spans (the Lee-et-al. suffix-array
     * dedup re-expressed Spark-shaped): every STRIDE-1 window of
-    * `window` tokens hashes ([[TextFunctions.charHash]] built inside
-    * the transform lambda, so only (pos, hash) longs ever leave the
+    * `window` tokens hashes ([[TextFunctions.tokenHashes]] folded by
+    * the rolling WindowHashes, so only (pos, hash) longs ever leave the
     * row — never the window strings); the first corpus-wide
     * occurrence of a hash — by (docId, pos) — owns it; every later
     * occurrence marks its whole window-token span duplicated.
@@ -292,23 +280,16 @@ object TextQuality {
       idCol: String, textCol: String, window: Int = 8): DataFrame = {
     val sep = "\u0001"
     def winOcc(df: DataFrame): DataFrame = {
-      val tokenHashes = transform(TextFunctions.tokens(col(textCol)),
-        t => TextFunctions.charHash(t))
-      val hashes = org.apache.spark.sql.GraftExpr.column(
-        graft.plans.WindowHashes(
-          org.apache.spark.sql.GraftExpr.expression(tokenHashes), window))
-      df.select(col(idCol), hashes.as("__hs"))
+      df.select(col(idCol),
+          TextFunctions.windowHashes(col(textCol), window).as("__hs"))
         .select(col(idCol), posexplode(col("__hs")).as(Seq("pos", "wh")))
     }
     // eval side: distinct (hash, verbatim span) — eval sets are tiny,
     // so carrying and broadcasting the span strings is free
     val benchSpans = {
       val toks = TextFunctions.tokens(col(textCol))
-      val tokenHashes = transform(toks, t => TextFunctions.charHash(t))
-      val hashes = org.apache.spark.sql.GraftExpr.column(
-        graft.plans.WindowHashes(
-          org.apache.spark.sql.GraftExpr.expression(tokenHashes), window))
-      bench.select(toks.as("__t"), hashes.as("__hs"))
+      bench.select(toks.as("__t"),
+          TextFunctions.windowHashes(col(textCol), window).as("__hs"))
         .select(col("__t"), posexplode(col("__hs")).as(Seq("pos", "wh")))
         .select(col("wh"),
           array_join(slice(col("__t"), col("pos") + 1, lit(window)), sep)
@@ -362,11 +343,8 @@ object TextQuality {
     // window fold (O(n)) — vs the r14-initial per-window string
     // join + re-hash, which was O(n·window·chars) with a string
     // allocation per position (measured 2x on q135 at sf0.1)
-    val tokenHashes = transform(toks, t => TextFunctions.charHash(t))
-    val hashes = org.apache.spark.sql.GraftExpr.column(
-      graft.plans.WindowHashes(
-        org.apache.spark.sql.GraftExpr.expression(tokenHashes), window))
-    val occ = docs.select(col(idCol), hashes.as("hs"))
+    val occ = docs.select(col(idCol),
+        TextFunctions.windowHashes(col(textCol), window).as("hs"))
       .select(col(idCol),
         posexplode(col("hs")).as(Seq("pos", "win_hash")))
     val wonByDoc = occ.groupBy(col("win_hash"))

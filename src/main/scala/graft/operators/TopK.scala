@@ -88,6 +88,23 @@ object TopK {
     (score, id) => f(score, id)
   }
 
+  /** The first k of two best-first buffers, best first. Buffers are
+    * any `Seq`: Spark decodes a buffer as a `List` in generated code
+    * but as another `Seq` when it evaluates without codegen (after a
+    * compile failure), so nothing here may assume the concrete type. */
+  private def mergeTop[T](a: Seq[T], b: Seq[T], k: Int)(
+      beats: (T, T) => Boolean): Seq[T] = {
+    val out = List.newBuilder[T]
+    val (x, y) = (a.iterator.buffered, b.iterator.buffered)
+    var n = 0
+    while (n < k && (x.hasNext || y.hasNext)) {
+      out += (if (!y.hasNext || (x.hasNext && beats(x.head, y.head))) x.next()
+        else y.next())
+      n += 1
+    }
+    out.result()
+  }
+
   /** Aggregate input for the payload-carrying variant: score (LONG,
     * bigger = better), id (STRING, ties break ascending), payload
     * (any row data the consumer needs back — typically
@@ -106,36 +123,27 @@ object TopK {
     * ids upstream if their natural order must differ from collation).
     * Input ids must be non-null and unique within a group. */
   final class TopKRowsAgg(k: Int)
-      extends Aggregator[ScoredRow, List[ScoredRow], Seq[ScoredRow]] {
+      extends Aggregator[ScoredRow, Seq[ScoredRow], Seq[ScoredRow]] {
     require(k >= 1)
 
     private def beats(a: ScoredRow, b: ScoredRow): Boolean =
       a.score > b.score || (a.score == b.score && a.id < b.id)
 
-    def zero: List[ScoredRow] = Nil
+    def zero: Seq[ScoredRow] = Nil
 
     // O(k) linear insertion, like TopKAgg — sized for k ≤ ~100
-    def reduce(buf: List[ScoredRow], x: ScoredRow): List[ScoredRow] = {
+    def reduce(buf: Seq[ScoredRow], x: ScoredRow): Seq[ScoredRow] = {
       val (better, rest) = buf.span(e => !beats(x, e))
       if (better.length >= k) buf
-      else (better ::: x :: rest).take(k)
+      else (better ++ (x +: rest)).take(k)
     }
 
-    def merge(a: List[ScoredRow], b: List[ScoredRow]): List[ScoredRow] = {
-      val out = List.newBuilder[ScoredRow]
-      var (x, y, n) = (a, b, 0)
-      while (n < k && (x.nonEmpty || y.nonEmpty)) {
-        if (y.isEmpty || (x.nonEmpty && beats(x.head, y.head))) {
-          out += x.head; x = x.tail
-        } else { out += y.head; y = y.tail }
-        n += 1
-      }
-      out.result()
-    }
+    def merge(a: Seq[ScoredRow], b: Seq[ScoredRow]): Seq[ScoredRow] =
+      mergeTop(a, b, k)(beats)
 
-    def finish(buf: List[ScoredRow]): Seq[ScoredRow] = buf
+    def finish(buf: Seq[ScoredRow]): Seq[ScoredRow] = buf
 
-    def bufferEncoder: Encoder[List[ScoredRow]] = ExpressionEncoder()
+    def bufferEncoder: Encoder[Seq[ScoredRow]] = ExpressionEncoder()
     def outputEncoder: Encoder[Seq[ScoredRow]] = ExpressionEncoder()
   }
 
@@ -160,7 +168,7 @@ object TopK {
     * primitive would decode as 0.0, not sort last like a window's
     * desc_nulls_last). */
   final class TopKDoubleAgg(k: Int)
-      extends Aggregator[DScoredId, List[DScoredId], Seq[DScoredId]] {
+      extends Aggregator[DScoredId, Seq[DScoredId], Seq[DScoredId]] {
     require(k >= 1)
 
     private def beats(a: DScoredId, b: DScoredId): Boolean = {
@@ -168,30 +176,21 @@ object TopK {
       c > 0 || (c == 0 && a.id < b.id)
     }
 
-    def zero: List[DScoredId] = Nil
+    def zero: Seq[DScoredId] = Nil
 
     // O(k) linear insertion, like TopKAgg — sized for k ≤ ~100
-    def reduce(buf: List[DScoredId], x: DScoredId): List[DScoredId] = {
+    def reduce(buf: Seq[DScoredId], x: DScoredId): Seq[DScoredId] = {
       val (better, rest) = buf.span(e => !beats(x, e))
       if (better.length >= k) buf
-      else (better ::: x :: rest).take(k)
+      else (better ++ (x +: rest)).take(k)
     }
 
-    def merge(a: List[DScoredId], b: List[DScoredId]): List[DScoredId] = {
-      val out = List.newBuilder[DScoredId]
-      var (x, y, n) = (a, b, 0)
-      while (n < k && (x.nonEmpty || y.nonEmpty)) {
-        if (y.isEmpty || (x.nonEmpty && beats(x.head, y.head))) {
-          out += x.head; x = x.tail
-        } else { out += y.head; y = y.tail }
-        n += 1
-      }
-      out.result()
-    }
+    def merge(a: Seq[DScoredId], b: Seq[DScoredId]): Seq[DScoredId] =
+      mergeTop(a, b, k)(beats)
 
-    def finish(buf: List[DScoredId]): Seq[DScoredId] = buf
+    def finish(buf: Seq[DScoredId]): Seq[DScoredId] = buf
 
-    def bufferEncoder: Encoder[List[DScoredId]] = ExpressionEncoder()
+    def bufferEncoder: Encoder[Seq[DScoredId]] = ExpressionEncoder()
     def outputEncoder: Encoder[Seq[DScoredId]] = ExpressionEncoder()
   }
 

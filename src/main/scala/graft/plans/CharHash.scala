@@ -103,11 +103,15 @@ object CharHash {
   /** Interpreted twin of the codegen loop: decode codepoints directly
     * from the UTF8String bytes (no String allocation). Equal to
     * [[hash]] on well-formed UTF-8 — asserted in PlansSpec. */
-  def hashUtf8(s: UTF8String): Long = {
-    val n = s.numBytes()
+  def hashUtf8(s: UTF8String): Long = hashRange(s, 0, s.numBytes())
+
+  /** [[hashUtf8]] of the bytes `[from, to)` of `s` — the charHash of
+    * that substring, without materializing it (TextKernels' per-token
+    * hashes). */
+  def hashRange(s: UTF8String, from: Int, to: Int): Long = {
     var h = 0L
-    var i = 0
-    while (i < n) {
+    var i = from
+    while (i < to) {
       val b0 = s.getByte(i) & 0xFF
       var cp = 0
       var l = 1
@@ -116,7 +120,7 @@ object CharHash {
       else if (b0 < 0xF0) { cp = b0 & 0x0F; l = 3 }
       else { cp = b0 & 0x07; l = 4 }
       var k = 1
-      while (k < l && i + k < n) {
+      while (k < l && i + k < to) {
         cp = (cp << 6) | (s.getByte(i + k) & 0x3F)
         k += 1
       }

@@ -91,8 +91,8 @@ object TextQueries {
   private def q34(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
     val ids = d.select(col("doc_id"),
-      transform(TextFunctions.tokens(col("text")),
-        w => TextFunctions.charHash(w) % Dedup.Prime).as("ids"))
+      transform(TextFunctions.tokenHashes(col("text")),
+        h => h % Dedup.Prime).as("ids"))
     val hs = when(size(col("ids")) >= 4,
       transform(sequence(lit(1), size(col("ids")) - 3), tt =>
         (element_at(col("ids"), tt) +
@@ -338,7 +338,8 @@ object TextQueries {
 
   /** q122: the Gopher/C4-family repetition screens — per-document
     * top-word/top-bigram/duplicate-trigram fractions and the keep
-    * verdict, all as array HOFs in one projection (zero shuffle). */
+    * verdict, all as native text kernels in one projection (zero
+    * shuffle). */
   private def q122(s: SparkSession, dir: String): DataFrame =
     graft.operators.TextQuality.repetitionScreens(
       t(s, dir, "documents").select(col("doc_id"), col("text")), "text")

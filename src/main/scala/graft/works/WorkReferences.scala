@@ -40,9 +40,12 @@ object WorkReferences {
     Seq("doi", "pmid", "arxiv", "title", "authors", "year", "raw")
 
   /** Explode `references` into work_references rows (the CTAS cell),
-    * dropping the no-references sentinel shape. */
+    * dropping the no-references sentinel shape. Empty and null
+    * `references` give no rows; the first element is read with
+    * `try_element_at`, because Spark may evaluate the sentinel test
+    * before the size guard and `getItem(0)` throws on `[]` under ANSI. */
   def explodeRefs(locations: DataFrame): DataFrame = {
-    val r0 = col("references").getItem(0)
+    val r0 = try_element_at(col("references"), lit(1))
     val sentinel = size(col("references")) === 1 &&
       Seq("doi", "pmid", "title", "arxiv", "raw")
         .map(f => r0.getField(f).isNull).reduce(_ && _)

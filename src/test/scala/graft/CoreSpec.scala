@@ -24,6 +24,25 @@ class CoreSpec extends AnyFunSuite {
     assert(new java.io.File(dir).exists())
   }
 
+  test("Materialize: the re-read carries the schema inference would " +
+    "give, for nested arrays, structs, maps, a non-nullable column " +
+    "and column metadata") {
+    val meta = new MetadataBuilder().putString("comment", "doc id").build()
+    val df = spark.range(0, 20).select(
+        col("id").as("id", meta),
+        array(col("id"), col("id") + 1).as("arr"),
+        struct(col("id").as("a"),
+          array(struct((col("id") * 2).as("b"))).as("bs")).as("st"),
+        map(col("id").cast("string"), array(col("id"))).as("m"),
+        when(col("id") % 3 === 0, lit(null)).otherwise(col("id"))
+          .cast("string").as("maybe"))
+    assert(!df.schema("id").nullable)
+    val (mat, dir) = Materialize.temp(df)
+    assert(mat.schema == spark.read.parquet(dir).schema)
+    assert(mat.schema("id").metadata == meta)
+    assert(mat.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
+  }
+
   test("MergeInto: update / conditional delete / insert") {
     val target = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
     val source = Seq((2L, "B"), (3L, "DEL"), (4L, "d")).toDF("k", "v")

@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{AsofJoin, IntervalJoin, SaltedJoin, TopK}
+import graft.functions.TextFunctions
+import graft.operators.{AsofJoin, IntervalJoin, SaltedJoin, TextQuality, TopK}
 
 /** Seeded randomized parity for the round-14 scale operators: each
   * operator's Spark plan is driven with generated inputs (random keys,
@@ -15,6 +18,141 @@ class RandomizedParitySpec extends AnyFunSuite {
   import spark.implicits._
 
   private def rng(seed: Long) = new scala.util.Random(seed)
+
+  /** Runs `body` with the given session confs, then restores them. */
+  private def withConfs[T](kv: Seq[(String, String)])(body: => T): T = {
+    val conf = spark.conf
+    val old = kv.map { case (k, _) => k -> conf.getOption(k) }
+    kv.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally old.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+  }
+
+  /** Generated code only: a kernel whose Java fails to compile fails
+    * the test instead of falling back to the interpreter. */
+  private val Codegen = Seq("spark.sql.codegen.wholeStage" -> "true",
+    "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+    "spark.sql.codegen.fallback" -> "false")
+  /** What Spark runs after a codegen compile failure: interpreted
+    * operators and interpreted projections. */
+  private val NoCodegen = Seq("spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** An RDD-backed frame: a local relation would be folded by the
+    * optimizer's interpreted projection and never reach codegen. */
+  private def frame(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+
+  /** Every (name, kernel, spec) pair agrees on data type, nullability
+    * and every value, with and without codegen. */
+  private def assertParity(df: DataFrame,
+      pairs: Seq[(String, Column, Column)]): Unit =
+    for ((mode, confs) <- Seq("codegen" -> Codegen,
+        "no-codegen" -> NoCodegen)) withConfs(confs) {
+      val out = df.select(pairs.flatMap { case (n, k, sp) =>
+        Seq(k.as(s"k_$n"), sp.as(s"s_$n")) }: _*)
+      val f = out.schema.fields
+      for (((n, _, _), i) <- pairs.zipWithIndex) {
+        assert(f(2 * i).dataType == f(2 * i + 1).dataType,
+          s"$mode $n dataType")
+        assert(f(2 * i).nullable == f(2 * i + 1).nullable,
+          s"$mode $n nullable")
+      }
+      val rows = out.collect()
+      assert(rows.length == df.count())
+      for (r <- rows; ((n, _, _), i) <- pairs.zipWithIndex)
+        assert(r.get(2 * i) == r.get(2 * i + 1), s"$mode $n on $r")
+    }
+
+  /** Random documents over a small vocabulary (ties, repeats) of 1-,
+    * 2-, 3- and 4-byte UTF-8 tokens, some with tabs or newlines inside;
+    * runs of spaces, leading and trailing spaces; plus the edge rows. */
+  private def texts(seed: Long, n: Int): Seq[String] = {
+    val r = rng(seed)
+    val vocab = Seq("the", "a", "of", "x", "data", "é", "straße", "naïve",
+      "中", "文字", "€uro", "𝄞", "😀ok", "tab\there", "line\nbreak", "\t",
+      "\n", "a\r\nb", "!?", "7")
+    def sep() = " " * (1 + (if (r.nextInt(4) == 0) r.nextInt(3) else 0))
+    val random = Seq.fill(n) {
+      val toks = Seq.fill(r.nextInt(25))(vocab(r.nextInt(vocab.size)))
+      val lead = if (r.nextInt(5) == 0) " " * (1 + r.nextInt(2)) else ""
+      val trail = if (r.nextInt(5) == 0) " " * (1 + r.nextInt(2)) else ""
+      lead + toks.map(_ + sep()).mkString.dropRight(1) + trail
+    }
+    Seq(null, "", " ", "   ", "\t", "\n", "one", " one ", "one two",
+      "a  b   c", "\ta b\n", "tab\tinside word", "é ß 中 𝄞",
+      "😀 😀 😀", "x x y y z") ++ random
+  }
+
+  test("text kernels: tokens, token hashes, word shingles and token " +
+    "chunks equal their HOF specs on random text, with and without " +
+    "codegen") {
+    for (seed <- Seq(81L, 82L)) {
+      val df = frame(texts(seed, 200).map(Row(_)),
+          StructType(Seq(StructField("text", StringType))))
+        .withColumn("nn", coalesce(col("text"), lit("")))
+      val pairs = Seq("text", "nn").flatMap { c =>
+        val t = col(c)
+        Seq((s"tokens_$c", TextFunctions.tokens(t), TextSpecs.tokens(t)),
+          (s"hashes_$c", TextFunctions.tokenHashes(t),
+            TextSpecs.tokenHashes(t))) ++
+          Seq(1, 2, 3, 5).map(k => (s"shingles${k}_$c",
+            TextFunctions.wordShingles(t, k), TextSpecs.wordShingles(t, k))) ++
+          Seq(1, 3, 10).map(n => (s"chunks${n}_$c",
+            TextQuality.tokenChunks(t, n), TextSpecs.tokenChunks(t, n)))
+      }
+      assertParity(df, pairs)
+    }
+  }
+
+  test("text kernels: topCount equals its sort-and-fold spec on arrays " +
+    "with ties, null elements, empty and null arrays") {
+    for (seed <- Seq(91L, 92L)) {
+      val r = rng(seed)
+      val pool = Seq("a", "b", "ab", "é", "中", "𝄞", "", " ")
+      val arrays = Seq(null, Seq(), Seq(null), Seq(null, null, "a"),
+        Seq("a", null, "a", null, null), Seq("b", "a", "b", "a")) ++
+        Seq.fill(200)(Seq.fill(r.nextInt(12))(
+          if (r.nextInt(6) == 0) null else pool(r.nextInt(pool.size))))
+      val df = frame(arrays.map(Row(_)), StructType(Seq(
+          StructField("arr", ArrayType(StringType, containsNull = true)))))
+        .withColumn("nn", coalesce(col("arr"), array().cast("array<string>")))
+        .withColumn("text", concat_ws(" ", col("arr")))
+      val pairs = Seq(
+        ("arr", TextQuality.topCount(col("arr")), TextSpecs.topCount(col("arr"))),
+        ("nn", TextQuality.topCount(col("nn")), TextSpecs.topCount(col("nn"))),
+        ("tokens", TextQuality.topCount(TextFunctions.tokens(col("text"))),
+          TextSpecs.topCount(TextSpecs.tokens(col("text")))),
+        ("bigrams",
+          TextQuality.topCount(TextFunctions.wordShingles(col("text"), 2)),
+          TextSpecs.topCount(TextSpecs.wordShingles(col("text"), 2))))
+      assertParity(df, pairs)
+    }
+  }
+
+  test("TopK buffers survive evaluation without codegen: topKRows and " +
+    "topKDouble equal the codegen run") {
+    val r = rng(101L)
+    val d = Seq.fill(400)((r.nextInt(15).toLong, r.nextInt(5).toLong,
+      r.nextInt(60).toLong, r.nextInt(4) / 2.0))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(d, 4))
+      .toDF("g", "score", "id", "dscore")
+    def run(): (Set[Row], Set[Row]) = {
+      val rows = df.groupBy(col("g"))
+        .agg(TopK.topKRows(3)(col("score"), col("id").cast("string"),
+          col("id").cast("string")).as("tk"))
+        .collect().toSet
+      val dbl = df.groupBy(col("g"))
+        .agg(TopK.topKDouble(3)(col("dscore"), col("id")).as("tk"))
+        .collect().toSet
+      (rows, dbl)
+    }
+    val codegen = run()
+    assert(codegen._1.size == 15 && codegen._2.size == 15)
+    val interpreted = withConfs(NoCodegen)(run())
+    assert(interpreted == codegen)
+    assert(run() == codegen)
+  }
 
   test("asofJoin: random keys/timestamps (with cross-side ts " +
     "collisions and matchless keys) equal the per-row naive scan") {

@@ -13,9 +13,9 @@ class WorkReferencesSpec extends AnyFunSuite {
   private def loc(workId: Long,
       refs: Seq[(String, String, String)]) =
     (s"n$workId", "doi", workId, "crossref",
-      refs.map { case (d, p, r) => (d, p,
+      Option(refs).map(_.map { case (d, p, r) => (d, p,
         null.asInstanceOf[String], null.asInstanceOf[String],
-        null.asInstanceOf[String], null.asInstanceOf[Integer], r) })
+        null.asInstanceOf[String], null.asInstanceOf[Integer], r) }).orNull)
 
   private def locDf(rows: Seq[(String, String, Long, String,
       Seq[(String, String, String, String, String, Integer, String)])]) =
@@ -35,6 +35,23 @@ class WorkReferencesSpec extends AnyFunSuite {
     val out = WorkReferences.explodeRefs(df)
     assert(out.select("citing_work_id").distinct().as[Long].collect().toSeq == Seq(2L))
     assert(out.count() == 2)
+  }
+
+  test("explodeRefs: empty, null and sentinel-only references arrays " +
+    "give no rows; the real row still explodes") {
+    val df = locDf(Seq(
+      loc(1L, Seq()),                                   // []
+      loc(2L, null),                                    // null
+      loc(3L, Seq((null, null, null))),                 // sentinel
+      loc(4L, Seq(("10.1/x", null, null), (null, null, "raw ref")))))
+    val direct = WorkReferences.explodeRefs(df)
+      .select(col("citing_work_id"), col("ref_ind"), col("doi"), col("raw"))
+      .as[(Long, Int, String, String)].collect().toSeq.sortBy(_._2)
+    assert(direct == Seq((4L, 0, "10.1/x", null), (4L, 1, null, "raw ref")))
+    // again from files, so the filter runs in a scan stage rather
+    // than folded over a local relation
+    val (landed, _) = graft.core.Materialize.temp(df, "graft-refs")
+    assert(WorkReferences.explodeRefs(landed).count() == 2)
   }
 
   test("insert-only + staged resolution: preset ids survive, doi beats pmid, null gates hold") {
