@@ -8,6 +8,8 @@ package graft
   *  - q01: partial (map-side) aggregation before the shuffle
   *  - q37/q115/q122/q124: no `lambdafunction` (the text hot paths stay
   *    on the native kernels, never interpreted higher-order functions)
+  *  - q37: MinHash slots come from the native `minhash_slots` kernel
+  *  - q115: no `count(distinct` and no `Expand` in the overlap count
   *  - EVERY registered query: no `Exchange SinglePartition` in the plan
   *    (the round-1 sorted-dictionary windows funneled whole vocabularies
   *    through one task). Allowlisted: q26/q51/q52 — IdMinter's global
@@ -17,7 +19,7 @@ package graft
 object ExplainAudit {
   /** Exact number of `check(...)` calls a full run performs (named
     * checks + the generic per-query single-partition screen). */
-  val ExpectedChecks = 259
+  val ExpectedChecks = 262
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -503,11 +505,20 @@ object ExplainAudit {
         "never shuffles for the screen")
     check(!p115.contains("CartesianProduct"),
       "q115 has no cartesian product")
+    check(!p115.contains("count(distinct"),
+      "q115 counts shared shingles per (doc, bench) without a " +
+        "count-distinct (no three-key distinct shuffle)")
+    check(!p115.contains("Expand"),
+      "q115 has no Expand")
 
     // The curation hot paths run on the native text kernels
     // (plans/TextKernels): a higher-order function creeping back into
     // one of these plans costs one interpreted lambda call per token.
-    Seq("q37_dedup_minhash_lsh" -> plan("q37_dedup_minhash_lsh"),
+    val p37 = plan("q37_dedup_minhash_lsh")
+    check(p37.contains("minhash_slots"),
+      "q37 takes its MinHash signature from the per-doc set with the " +
+        "native kernel (no per-slot min buffers in the aggregation)")
+    Seq("q37_dedup_minhash_lsh" -> p37,
         "q115_decontamination" -> p115, "q122_repetition_screens" -> p122,
         "q124_paragraph_dedup" -> p124).foreach { case (name, p) =>
       check(!p.contains("lambdafunction"),

@@ -406,22 +406,13 @@ object AwardKeys {
     *
     * r18: evaluates via the native [[graft.plans.AwardIsWeak]]
     * expression — one tree node, hash dispatch, per-JVM compiled
-    * patterns. [[isWeakNormSpec]] keeps the reference Column chain;
-    * AwardKeysSpec asserts per-row parity across every configured
-    * funder × an adversarial string battery. */
+    * patterns. The reference Column chain lives on as the test-scope
+    * spec (ChainSpecs); AwardKeysSpec asserts per-row parity across
+    * every configured funder × an adversarial string battery. */
   def isWeakNorm(funderId: Column, n: Column): Column =
     org.apache.spark.sql.GraftExpr.column(graft.plans.AwardIsWeak(
       org.apache.spark.sql.GraftExpr.expression(funderId.cast("long")),
       org.apache.spark.sql.GraftExpr.expression(n)))
-
-  /** The pre-r18 Column-chain form of [[isWeakNorm]] — the executable
-    * spec the parity test runs the native expression against. */
-  private[graft] def isWeakNormSpec(funderId: Column, n: Column): Column =
-    // reduceRight: when(a).otherwise(when(b).otherwise(...)) — each
-    // when gets exactly one otherwise
-    coalesce(weakBare.map { case (f, p) =>
-      when(funderId === f, n.rlike(p))
-    }.reduceRight(_.otherwise(_)), lit(false))
 
   /** Sharp key for (funder, award, side); null for unconfigured
     * funders — callers fall back to the generic key.
@@ -451,24 +442,14 @@ object AwardKeys {
     * falling back to row mode; the native node keeps stages
     * codegen-able and dispatches by hash instead of 40 guards. A null
     * registrySide coalesces to false = the chain's `otherwise`
-    * (deposited) branch. [[sharpKeyNormSpec]] keeps the Column chain
-    * as the executable spec for the parity test. */
+    * (deposited) branch. The Column chain over [[rules]] lives on as
+    * the test-scope spec (ChainSpecs) for the parity test. */
   def sharpKeyNorm(funderId: Column, n: Column, registrySide: Column): Column =
     org.apache.spark.sql.GraftExpr.column(graft.plans.AwardSharpKey(
       org.apache.spark.sql.GraftExpr.expression(funderId.cast("long")),
       org.apache.spark.sql.GraftExpr.expression(n),
       org.apache.spark.sql.GraftExpr.expression(
         coalesce(registrySide, lit(false)))))
-
-  /** The pre-r18 Column-chain form of [[sharpKeyNorm]] — the
-    * executable spec the parity test runs the native expression
-    * against. */
-  private[graft] def sharpKeyNormSpec(funderId: Column, n: Column,
-      registrySide: Column): Column =
-    rules.map { r =>
-      when(funderId === r.funderId,
-        when(registrySide, r.registry(n)).otherwise(r.deposited(n)))
-    }.reduceRight(_.otherwise(_))
 
   /** Deposited provenances (WorkAwards): sharp keys from these are
     * weakness-guarded; everything else is registry-side. */

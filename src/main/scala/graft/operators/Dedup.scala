@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.functions.TextFunctions
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -25,7 +26,7 @@ import graft.functions.TextFunctions
   *    partitionBy funnels the whole vocabulary through one task.
   */
 object Dedup {
-  val Prime = 1000003L
+  val Prime: Long = graft.plans.MinHashSlots.Prime
 
   /** Exact dedup: md5 content groups with min-id canonical row. */
   def exactGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -151,33 +152,32 @@ object Dedup {
       sh.join(dict, "shingle")
     }
 
-  /** MinHash signature: numHashes permutations h_i(x)=((x mod P)·a_i+b_i)
-    * mod P, one aggregation pass (no per-hash explode). The mod-P happens
-    * INSIDE the permutation — sids stay full-width 56-bit for identity
-    * (bucketing ids into P up front would alias distinct shingles), and
-    * the pre-reduction keeps `sid·a_i` inside signed-64 range. */
-  def minHashSignature(ids: DataFrame, idCol: String, numHashes: Int): DataFrame = {
-    val aggs = (0 until numHashes).map { i =>
-      min(((col("sid") % Prime) * lit(hashA(i)) + lit(hashB(i))) % Prime).as(s"s$i")
-    }
-    ids.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-  }
+  def hashA(i: Int): Long = graft.plans.MinHashSlots.hashA(i)
+  def hashB(i: Int): Long = graft.plans.MinHashSlots.hashB(i)
 
-  def hashA(i: Int): Long = 101L * i + 37
-  def hashB(i: Int): Long = 53L * i + 11
-
-  /** MinHash signature AND the per-doc sorted shingle-id set in ONE
-    * aggregation pass — the signature feeds LSH banding, the set feeds
-    * exact-Jaccard verification, and computing them together halves the
-    * shuffles of the widest frame in the pipeline (duplicate input rows
-    * are absorbed by min/collect_set partials). Output: (idCol, s0..sN,
-    * set, n). */
+  /** MinHash signature AND the per-doc sorted shingle-id set: the
+    * signature feeds LSH banding, the set feeds exact-Jaccard
+    * verification. The aggregation collects only the set (duplicate
+    * input rows collapse in the collect_set partials); the
+    * `numHashes` permutation minima h_i(x)=((x mod P)·a_i+b_i) mod P
+    * are then taken from the set per row by one native kernel
+    * ([[graft.plans.MinHashSlots]]), so no partial buffer carries
+    * per-slot state. A doc whose sids are all null gets null slots
+    * and an empty set. `sid` must be an integral column. Output:
+    * (idCol, s0..sN-1, set, n). */
   def signatureWithSets(ids: DataFrame, idCol: String, numHashes: Int): DataFrame = {
-    val aggs = (0 until numHashes).map { i =>
-      min(((col("sid") % Prime) * lit(hashA(i)) + lit(hashB(i))) % Prime).as(s"s$i")
-    } :+ sort_array(collect_set(col("sid"))).as("set")
-    ids.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-      .withColumn("n", size(col("set")))
+    val sidType = ids.select(col("sid")).schema.head.dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(sidType),
+      s"signatureWithSets needs an integral sid column, got ${sidType.catalogString}")
+    val sets = ids.groupBy(col(idCol))
+      .agg(sort_array(collect_set(col("sid"))).as("set"))
+    val slots = org.apache.spark.sql.GraftExpr.column(graft.plans.MinHashSlots(
+      org.apache.spark.sql.GraftExpr.expression(col("set").cast("array<bigint>")),
+      numHashes))
+    sets.select(col(idCol), col("set"), slots.as("__mh"))
+      .select(col(idCol) +: (0 until numHashes).map(i =>
+        col("__mh").getItem(i).as(s"s$i")) :+ col("set") :+
+        size(col("set")).as("n"): _*)
   }
 
   /** LSH banding: candidate pairs sharing at least one band key.
@@ -332,20 +332,29 @@ object Dedup {
     * contaminated when it shares at least `minCommon` DISTINCT
     * shingles with any single benchmark document.
     *
-    * Input is raw [[shingles]] output for both sides (duplicates
-    * collapse in the count-distinct partials). The benchmark side is
-    * eval-set-sized — broadcast — so the corpus never shuffles: one
-    * broadcast join + one keyed aggregation.
+    * Input is raw [[shingles]] output for both sides; repeated
+    * shingles collapse on the way. The benchmark side is eval-set
+    * sized: its distinct (shingle, bench id) rows are broadcast, so the
+    * corpus never shuffles for the match. Corpus rows whose shingle
+    * the eval set holds are de-duplicated per (doc, shingle), joined
+    * to the broadcast again and counted per (doc, bench): both keyed
+    * aggregations are ones the map-side partials shrink, where a
+    * count-distinct shuffles every (doc, bench, shingle) hit. Both
+    * probes read one shuffle of the eval side (a reused exchange).
+    * Null bench ids count like any other id; null shingles match
+    * nothing.
     *
     * @return (idCol, bench_id, n_common) pairs at n_common >= minCommon */
   def contaminationPairs(docShingles: DataFrame, benchShingles: DataFrame,
       idCol: String, minCommon: Int): DataFrame = {
     val bench = benchShingles
-      .select(col(idCol).as("bench_id"), col("shingle")).distinct()
-    docShingles
+      .select(col("shingle"), col(idCol).as("bench_id")).distinct()
+    docShingles.select(col(idCol), col("shingle"))
+      .join(broadcast(bench), Seq("shingle"), "left_semi")
+      .distinct()
       .join(broadcast(bench), Seq("shingle"))
       .groupBy(col(idCol), col("bench_id"))
-      .agg(countDistinct(col("shingle")).as("n_common"))
+      .agg(count(lit(1)).as("n_common"))
       .filter(col("n_common") >= minCommon)
   }
 
@@ -367,48 +376,73 @@ object Dedup {
     * halving), so reach doubles per round: `maxIter` rounds cover
     * components of diameter 2^maxIter. Every step is a keyed
     * shuffle/aggregation (the distributed-CC shape of the large-star/
-    * small-star family); NO driver-side convergence loop — the
-    * iteration count is fixed and lineage is cut at a Materialize
-    * parquet boundary every second round so the plan stays bounded at
-    * any scale. Near-dup graphs have shallow components (chains of
-    * borderline pairs), so the default 8 rounds (diameter 256) is
-    * far past anything a real corpus produces.
+    * small-star family); no step collects rows to one process.
+    *
+    * Round 1 reads the edges alone (label = least(id, min neighbor)).
+    * Every later round is one plan over the previous round's landed
+    * labels, so rounds 3 on reuse the generated classes of round 2.
+    * Each round lands at a Materialize parquet boundary (the plan
+    * stays bounded at any scale), and the landing job also counts the
+    * labels the round changed (`Dataset.observe`, no extra job). A
+    * round is a deterministic function of the labels it reads, so the
+    * loop stops after the first round that changes none: later rounds
+    * could change nothing either, and the result equals that of
+    * running all `maxIter` rounds. `maxIter` only caps the rounds (the
+    * default 8 covers diameter 256, far past the borderline chains a
+    * real corpus produces).
     *
     * @param pairs candidate pairs (both orientations implied)
     * @return (id, cluster_id) for every node appearing in `pairs` */
   def connectedComponents(pairs: DataFrame, idA: String = "da",
       idB: String = "db", maxIter: Int = 8): DataFrame = {
-    // edges land ONCE (read again every round); labels land every
-    // round — each round references `labels` four times (neighbor
-    // join, union, both sides of the pointer jump), so an
-    // un-materialized loop re-expands the whole prior subtree per
-    // reference and the plan grows geometrically (measured 30 s for 8
-    // rounds over a 4k-node fixture; landed, ~4 s). The reference
-    // point for the shape is iterative distributed CC: each round is
-    // two keyed shuffles over (id)/(label), nothing global.
+    // edges land ONCE (read again every round); a round references
+    // the labels before it more than once (neighbor join, union,
+    // pointer jump), so an un-landed loop would re-expand every prior
+    // round per reference and the plan would grow geometrically
     val edges = graft.core.Materialize.temp(
       pairs.select(col(idA).as("src"), col(idB).as("dst"))
         .union(pairs.select(col(idB).as("src"), col(idA).as("dst"))),
       "graft-cc-edges")._1
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-    for (i <- 1 to maxIter) {
-      val nbr = edges
-        .join(labels.withColumnRenamed("id", "src"), Seq("src"))
-        .select(col("dst").as("id"), col("label"))
-      val l1 = nbr.unionByName(labels)
-        .groupBy(col("id")).agg(min(col("label")).as("label"))
-      // pointer jump: label := label(label)
-      val jumped = l1.as("x")
-        .join(l1.select(col("id").as("label"), col("label").as("__ll")),
-          Seq("label"), "left")
-        .select(col("id"), coalesce(col("__ll"), col("label")).as("label"))
-      // land every second round: between cuts the subtree grows at
-      // most 9x (two rounds of 3 self-references), which analysis
-      // absorbs; per-round landing doubles the parquet round-trips
-      labels = if (i % 2 == 0 || i == maxIter)
-        graft.core.Materialize.temp(jumped, "graft-cc")._1 else jumped
+    if (maxIter < 1)
+      return edges.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("cluster_id"))
+    // (id, label, __old) → pointer jump: label := label(label); the
+    // label a round started from rides along as __old
+    def jump(l1: DataFrame): DataFrame = l1
+      .join(l1.select(col("id").as("label"), col("label").as("__ll")),
+        Seq("label"), "left")
+      .select(col("id"), coalesce(col("__ll"), col("label")).as("label"),
+        col("__old"))
+    // lands (id, label); the landing job counts the changed labels
+    def land(round: DataFrame): (DataFrame, Long) = {
+      val changed = Observation()
+      val landed = graft.core.Materialize.temp(round
+        .observe(changed, count_if(!(col("label") <=> col("__old"))).as("n"))
+        .select(col("id"), col("label")), "graft-cc")._1
+      (landed, changed.get("n").asInstanceOf[Long])
     }
-    labels.select(col("id"), col("label").as("cluster_id"))
+    // rounds 2 on: min over own and neighbor labels, one plan shape
+    def next(labels: DataFrame): DataFrame = {
+      val old = labels.withColumn("__old", col("label"))
+      val nbr = edges.join(labels.withColumnRenamed("id", "src"), Seq("src"))
+        .select(col("dst").as("id"), col("label"),
+          lit(null).cast(old.schema("__old").dataType).as("__old"))
+      nbr.unionByName(old).groupBy(col("id"))
+        .agg(min(col("label")).as("label"), min(col("__old")).as("__old"))
+    }
+    @scala.annotation.tailrec
+    def loop(labels: DataFrame, changed: Long, round: Int): DataFrame =
+      if (changed == 0 || round == maxIter) labels
+      else {
+        val (landed, n) = land(jump(next(labels)))
+        loop(landed, n, round + 1)
+      }
+    val first = edges.groupBy(col("src").as("id"))
+      .agg(min(col("dst")).as("__m"))
+      .select(col("id"), least(col("id"), col("__m")).as("label"),
+        col("id").as("__old"))
+    val (labels, changed) = land(jump(first))
+    loop(labels, changed, 1)
+      .select(col("id"), col("label").as("cluster_id"))
   }
 }

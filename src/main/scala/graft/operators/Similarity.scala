@@ -253,8 +253,7 @@ object Similarity {
     *    the unique id for the k seed vectors. `cent_id` = seed rank in
     *    (hash ASC, id ASC) order.
     *  - A FIXED number of Lloyd iterations (no driver-side convergence
-    *    loop — the iteration count bounds the plan like
-    *    `Dedup.connectedComponents`): assign every vector to its
+    *    loop — the iteration count bounds the plan): assign every vector to its
     *    nearest centroid (the zero-shuffle [[ivfCells]] nProbe = 1
     *    election), then recompute each centroid as the element-wise
     *    mean of its members — `AuthorVectors.ArraySumAgg` map-side

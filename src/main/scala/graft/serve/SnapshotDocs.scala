@@ -26,19 +26,12 @@ object SnapshotDocs {
     * expression — one fused code-point pass instead of two interpreted
     * Unicode-class regex scans plus a trim (the works doc projection
     * is too wide for whole-stage codegen, so every regex ran
-    * interpreted per row). [[sanitizeNameSpec]] keeps the Column chain
-    * as the executable spec; SnapshotDocsSpec asserts parity over a
-    * Unicode battery. */
+    * interpreted per row). The Column chain lives on as the test-scope
+    * spec (ChainSpecs); SnapshotDocsSpec asserts parity over a Unicode
+    * battery. */
   def sanitizeName(c: Column): Column =
     org.apache.spark.sql.GraftExpr.column(graft.plans.SanitizeName(
       org.apache.spark.sql.GraftExpr.expression(c)))
-
-  /** The pre-r18 regex-chain form of [[sanitizeName]] — the executable
-    * spec the parity test runs the native expression against. */
-  private[graft] def sanitizeNameSpec(c: Column): Column =
-    trim(regexp_replace(
-      regexp_replace(c, "[^\\p{L}\\p{N}\\p{P}\\p{S}\\p{Z}]", ""),
-      "\\s+", " "))
 
   /** sanitize_string: cap to `maxLen` chars, null stays null. */
   def sanitizeString(c: Column, maxLen: Int = 32000): Column =

@@ -177,10 +177,10 @@ class AwardKeysSpec extends AnyFunSuite {
     val out = crossed.select(col("funder_id"), col("raw"), col("reg"),
       AwardKeys.sharpKeyNorm(col("funder_id"), col("n"), col("reg"))
         .as("sk_native"),
-      AwardKeys.sharpKeyNormSpec(col("funder_id"), col("n"), col("reg"))
+      ChainSpecs.sharpKeyNorm(col("funder_id"), col("n"), col("reg"))
         .as("sk_spec"),
       AwardKeys.isWeakNorm(col("funder_id"), col("n")).as("w_native"),
-      AwardKeys.isWeakNormSpec(col("funder_id"), col("n")).as("w_spec"))
+      ChainSpecs.isWeakNorm(col("funder_id"), col("n")).as("w_spec"))
     val bad = out.filter(!(col("sk_native") <=> col("sk_spec")) ||
       !(col("w_native") <=> col("w_spec"))).collect()
     assert(bad.isEmpty, s"${bad.length} mismatches, first 10:\n" +

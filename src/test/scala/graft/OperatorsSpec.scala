@@ -89,7 +89,7 @@ class OperatorsSpec extends AnyFunSuite {
     for (hashed <- Seq(false, true)) {
       val sh = Dedup.shingles(docs, "doc_id", "text", 3)
       val ids = Dedup.withShingleIds(sh, hashed)
-      val sig = Dedup.minHashSignature(ids.select(col("doc_id"), col("sid")), "doc_id", 16)
+      val sig = Dedup.signatureWithSets(ids.select(col("doc_id"), col("sid")), "doc_id", 16)
       val cand = Dedup.lshCandidates(sig, "doc_id", 4, 4)
       val pairs = Dedup.jaccardForPairs(cand, sh, "doc_id")
         .filter(col("jaccard") >= 0.5)

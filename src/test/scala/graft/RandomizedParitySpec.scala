@@ -130,6 +130,140 @@ class RandomizedParitySpec extends AnyFunSuite {
     }
   }
 
+  /** `actual` equals `spec` on names, data types and nullability, and
+    * on every row counted with multiplicity, with and without
+    * codegen. */
+  private def assertSameFrames(what: String)(
+      pairs: => Seq[(String, DataFrame, DataFrame)]): Unit =
+    for ((mode, confs) <- Seq("codegen" -> Codegen,
+        "no-codegen" -> NoCodegen)) withConfs(confs) {
+      def bag(df: DataFrame) =
+        df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+      for ((name, actual, spec) <- pairs) {
+        assert(actual.schema == spec.schema, s"$mode $what $name schema:\n" +
+          s"${actual.schema.treeString}vs\n${spec.schema.treeString}")
+        assert(bag(actual) == bag(spec), s"$mode $what $name rows")
+      }
+    }
+
+  test("signatureWithSets: kernel slots equal the per-slot min " +
+    "aggregate on duplicate, null and negative sids and repeated doc ids") {
+    import graft.operators.Dedup
+    for (seed <- Seq(111L, 112L)) {
+      val r = rng(seed)
+      val pool: Seq[java.lang.Long] = Seq[java.lang.Long](null, 0L, 1L, -1L,
+        Dedup.Prime, -Dedup.Prime, Dedup.Prime + 5, -(Dedup.Prime + 5),
+        Long.MaxValue, Long.MinValue, (1L << 56) - 1, -(1L << 55)) ++
+        Seq.fill(40)(java.lang.Long.valueOf(r.nextLong() >> r.nextInt(60)))
+      val docs: Seq[java.lang.Long] = null +: (1L to 30L).map(Long.box)
+      val random = Seq.fill(400)(Row(docs(r.nextInt(docs.size)),
+        pool(r.nextInt(pool.size))))
+      // doc 90: only null sids; doc 91: one sid repeated; doc 92: the
+      // same (doc, sid) rows twice over
+      val planted = Seq(Row(90L, null), Row(90L, null), Row(91L, -7L),
+        Row(91L, -7L), Row(92L, 3L), Row(92L, -3L), Row(92L, 3L),
+        Row(92L, -3L))
+      val longs = frame(random ++ planted, StructType(Seq(
+        StructField("doc_id", LongType), StructField("sid", LongType))))
+      val ints = longs.select(col("doc_id"),
+        (col("sid") % Int.MaxValue).cast("int").as("sid"))
+      val strict = frame((random ++ planted).filter(_.get(1) != null),
+        StructType(Seq(StructField("doc_id", LongType),
+          StructField("sid", LongType, nullable = false))))
+      assertSameFrames(s"seed=$seed")(Seq(
+        ("long16", Dedup.signatureWithSets(longs, "doc_id", 16),
+          DedupSpecs.signatureWithSets(longs, "doc_id", 16)),
+        ("long3", Dedup.signatureWithSets(longs, "doc_id", 3),
+          DedupSpecs.signatureWithSets(longs, "doc_id", 3)),
+        ("int16", Dedup.signatureWithSets(ints, "doc_id", 16),
+          DedupSpecs.signatureWithSets(ints, "doc_id", 16)),
+        ("nonNullSid", Dedup.signatureWithSets(strict, "doc_id", 16),
+          DedupSpecs.signatureWithSets(strict, "doc_id", 16))))
+    }
+  }
+
+  test("connectedComponents: stopping at the fixpoint equals the " +
+    "fixed-round loop on chains past the cap, rings, stars, self-loops, " +
+    "duplicate and reversed pairs, null endpoints, INT and STRING ids") {
+    import graft.operators.Dedup
+    val r = rng(121L)
+    def chain(from: Int, n: Int) = (from until from + n - 1).map(i => (i, i + 1))
+    def ring(from: Int, n: Int) = chain(from, n) :+ (from + n - 1, from)
+    val star = (1 to 12).map(i =>
+      if (i % 2 == 0) (300, 300 + i) else (300 + i, 300))
+    val loops = Seq((400, 400), (401, 401), (401, 402))
+    val dupRev = Seq((500, 501), (501, 500), (500, 501), (502, 501))
+    val random = Seq.fill(60)((600 + r.nextInt(50), 600 + r.nextInt(50)))
+    // chain of 40: diameter 39 needs 6 rounds, so maxIter 2 and 4 cap
+    val edges: Seq[(Integer, Integer)] = (chain(100, 40) ++ ring(200, 9) ++
+        star ++ loops ++ dupRev ++ random)
+      .map { case (a, b) => (Int.box(a), Int.box(b)) } ++
+      Seq[(Integer, Integer)]((700, null), (null, 701), (null, null),
+        (700, 702), (null, 702))
+    // reversed node order in the STRING graph: min ids differ from INT
+    val ints = frame(edges.map { case (a, b) => Row(a, b) },
+      StructType(Seq(StructField("da", IntegerType),
+        StructField("db", IntegerType))))
+    val strings = ints.select(
+      concat(lit("n"), (lit(1000) - col("da")).cast("string")).as("a"),
+      concat(lit("n"), (lit(1000) - col("db")).cast("string")).as("b"))
+    val empty = ints.filter(lit(false))
+    assertSameFrames("components")(Seq(2, 4, 8).flatMap(m => Seq(
+      (s"int maxIter=$m", Dedup.connectedComponents(ints, maxIter = m),
+        DedupSpecs.connectedComponents(ints, maxIter = m)),
+      (s"string maxIter=$m",
+        Dedup.connectedComponents(strings, "a", "b", maxIter = m),
+        DedupSpecs.connectedComponents(strings, "a", "b", maxIter = m)))) ++
+      Seq(1, 8).map(m => (s"empty maxIter=$m",
+        Dedup.connectedComponents(empty, maxIter = m),
+        DedupSpecs.connectedComponents(empty, maxIter = m))))
+    // the cap binds on the chain, and the fixpoint holds at 8 rounds
+    val capped = Dedup.connectedComponents(ints, maxIter = 2)
+      .filter(col("id").between(100, 139)).select(col("cluster_id"))
+      .distinct().count()
+    assert(capped > 1)
+    val whole = Dedup.connectedComponents(ints, maxIter = 8)
+      .filter(col("id").between(100, 139)).select(col("cluster_id"))
+      .as[Int].collect().toSet
+    assert(whole == Set(100))
+  }
+
+  test("contaminationPairs: (doc, shingle) hits counted per (doc, bench) " +
+    "equal the count-distinct on repeated and null shingles and null " +
+    "doc and bench ids, minCommon 1 to 4") {
+    import graft.operators.Dedup
+    for (seed <- Seq(131L, 132L)) {
+      val r = rng(seed)
+      val vocab: Seq[String] = null +: Seq.tabulate(14)(i => s"w$i x$i")
+      def pick[T](xs: Seq[T]) = xs(r.nextInt(xs.size))
+      val docIds: Seq[java.lang.Long] = null +: (1L to 25L).map(Long.box)
+      val benchIds: Seq[java.lang.Long] = null +: (100L to 105L).map(Long.box)
+      // doc 50 shares exactly two shingles, one of them twice, with
+      // the null bench id
+      val planted = Seq(Row(50L, "only one"), Row(50L, "only two"),
+        Row(50L, "only one"))
+      val docs = frame(Seq.fill(300)(Row(pick(docIds), pick(vocab))) ++ planted,
+        StructType(Seq(StructField("doc_id", LongType),
+          StructField("shingle", StringType))))
+      val bench = frame(Seq.fill(60)(Row(pick(benchIds), pick(vocab))) ++
+          Seq(Row(null, "only one"), Row(null, "only two")),
+        StructType(Seq(StructField("doc_id", LongType),
+          StructField("shingle", StringType))))
+      val strict = bench.filter(col("doc_id").isNotNull).select(
+        coalesce(col("doc_id"), lit(0L)).as("doc_id"), col("shingle"))
+      assertSameFrames(s"seed=$seed")((1 to 4).flatMap(m => Seq(
+        (s"minCommon=$m",
+          Dedup.contaminationPairs(docs, bench, "doc_id", m),
+          DedupSpecs.contaminationPairs(docs, bench, "doc_id", m)),
+        (s"non-null bench ids minCommon=$m",
+          Dedup.contaminationPairs(docs, strict, "doc_id", m),
+          DedupSpecs.contaminationPairs(docs, strict, "doc_id", m)))))
+      assert(Dedup.contaminationPairs(docs, bench, "doc_id", 2)
+        .filter(col("doc_id") === 50L && col("bench_id").isNull)
+        .select(col("n_common")).as[Long].collect().toSeq == Seq(2L))
+    }
+  }
+
   test("TopK buffers survive evaluation without codegen: topKRows and " +
     "topKDouble equal the codegen run") {
     val r = rng(101L)

@@ -171,7 +171,7 @@ class SnapshotDocsSpec extends AnyFunSuite {
       "", " ", "   ", "\t\n", null)
     val out = battery.toDF("s").select(
       SnapshotDocs.sanitizeName(col("s")).as("native"),
-      SnapshotDocs.sanitizeNameSpec(col("s")).as("spec"))
+      ChainSpecs.sanitizeName(col("s")).as("spec"))
     val bad = out.filter(!(col("native") <=> col("spec"))).collect()
     assert(bad.isEmpty, s"${bad.length} mismatches: ${bad.take(5).toSeq}")
   }
