@@ -16,6 +16,9 @@ import scala.util.control.NonFatal
   *  - the record keeps both pass times, the 1-min loadavg at query
   *    start and the task metrics of the fastest pass, so host
   *    contention can be told from a regression;
+  *  - it also keeps the first (cold) pass's Janino compiles and their
+  *    seconds (`codegen_classes`, `codegen_s`): the compile cost a
+  *    fresh process pays, which the warm pass mostly hides;
   *  - `spark.catalog.clearCache()` runs between queries, and any query
   *    that leaves persistent RDDs behind is reported under `leaked`
   *    (registered queries are contractually cache-free; QueriesSmokeSpec
@@ -72,10 +75,12 @@ object Bench {
   private def obj(kvs: (String, Any)*) =
     kvs.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
 
-  /** One query's record: pass times, loadavg at start, and the fastest
-    * pass's jobs, driver gap, task totals and top 14 stages by run time. */
+  /** One query's record: pass times, loadavg at start, the first pass's
+    * codegen compiles, and the fastest pass's jobs, driver gap, task
+    * totals and top 14 stages by run time. */
   private[graft] def queryJson(r: Result): String = {
     val b = r.best
+    val cold = r.passes.head
     val stages = b.stages.take(14).map(s => obj("id" -> s.id,
       "wall_s" -> s.wallMs / 1e3, "tasks" -> s.tasks, "run_s" -> s.runMs / 1e3,
       "cpu_s" -> s.cpuMs / 1e3, "gc_s" -> s.gcMs / 1e3,
@@ -89,7 +94,9 @@ object Bench {
       "shuffle_read_records" -> b.shuffleReadRecords,
       "shuffle_write_bytes" -> b.shuffleWriteBytes,
       "shuffle_write_records" -> b.shuffleWriteRecords,
-      "max_task_s" -> b.maxTaskMs / 1e3, "stages" -> arr(stages))
+      "max_task_s" -> b.maxTaskMs / 1e3,
+      "codegen_classes" -> cold.codegenClasses, "codegen_s" -> r3(cold.codegenS),
+      "stages" -> arr(stages))
   }
 
   /** The full record written to `bench_results_verbose.json`. */

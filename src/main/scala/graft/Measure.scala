@@ -1,7 +1,9 @@
 package graft
 
 import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.{DataFrame, GraftListenerBus, SparkSession}
 import scala.jdk.CollectionConverters._
 
@@ -15,12 +17,15 @@ object Measure {
     cpuMs: Long, gcMs: Long, inputBytes: Long, shuffleReadBytes: Long,
     shuffleWriteBytes: Long)
 
-  /** What one run cost: wall time, the union of its job intervals, and
-    * task metrics summed over every stage (times in ms). */
+  /** What one run cost: wall time, the union of its job intervals,
+    * task metrics summed over every stage (times in ms), and the
+    * generated classes Janino compiled during the run with their
+    * compile seconds (driver and task threads: local mode is one JVM). */
   final case class Reading(wallS: Double, jobs: Int, jobWallMs: Long,
       taskRunMs: Long, taskCpuMs: Long, gcMs: Long, shuffleReadBytes: Long,
       shuffleReadRecords: Long, shuffleWriteBytes: Long,
-      shuffleWriteRecords: Long, maxTaskMs: Long, stages: Seq[Stage]) {
+      shuffleWriteRecords: Long, maxTaskMs: Long, stages: Seq[Stage],
+      codegenClasses: Long = 0L, codegenS: Double = 0.0) {
     /** Wall time no job covers: planning and driver work between jobs. */
     def driverGapS: Double = math.max(0.0, wallS - jobWallMs / 1e3)
   }
@@ -98,15 +103,21 @@ object Measure {
 
   /** Build `df` and run it to the `noop` sink (so projection-only plans
     * are fully computed); the reading covers construction too, which
-    * includes eager `Materialize` landings. */
+    * includes eager `Materialize` landings. The codegen counts are
+    * deltas of Spark's process-wide compile counters, so they hold only
+    * while one run at a time is measured. */
   def run(spark: SparkSession, listener: Listener)(df: => DataFrame): Reading = {
     drain(spark)
     listener.reset()
+    val classes0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     val t0 = System.nanoTime()
     df.write.format("noop").mode("overwrite").save()
     val wallS = (System.nanoTime() - t0) / 1e9
     drain(spark)
-    listener.reading(wallS)
+    listener.reading(wallS).copy(
+      codegenClasses = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - classes0,
+      codegenS = (CodeGenerator.compileTime - compileNs0) / 1e9)
   }
 
   /** The registered queries a comma-separated `only` names, each by its

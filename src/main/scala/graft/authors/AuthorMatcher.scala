@@ -68,7 +68,13 @@ object AuthorMatcher {
     // shuffle. Level 1 dedups per candidate author (O(1) state; a
     // duplicate candidate row OR-folds its signals via max), level 2 is
     // then plain counts — no Expand anywhere, same tier semantics.
+    // Both levels group by keys that start with (work_id, author_seq):
+    // the pairs are partitioned on that prefix once, before level 1, and
+    // level 2 reuses it (one exchange for the chain, not two).
     val perCandidate = pairs
+      .select(col("work_id"), col("author_seq"), col("author_id"),
+        col("__instHit"), col("__srcHit"))
+      .repartition(col("work_id"), col("author_seq"))
       .groupBy(col("work_id"), col("author_seq"), col("author_id"))
       .agg(max(col("__instHit")).as("__instHit"),
         max(col("__srcHit")).as("__srcHit"))

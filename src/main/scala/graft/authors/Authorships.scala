@@ -7,7 +7,10 @@ import org.apache.spark.sql.functions._
   * CreateWorkAuthorships.ipynb:20-448 — matched authors + institution
   * lineage + corresponding flags folded into one ordered array per
   * work). One shuffle on work_id; the institutions dimension is
-  * broadcast.
+  * broadcast. The per-authorship aggregate, the last-seat window and
+  * the per-work aggregate all group by keys that start with work_id,
+  * so the authorships are partitioned on work_id once, before the
+  * first of them, and all three reuse it.
   */
 object Authorships {
 
@@ -21,6 +24,9 @@ object Authorships {
         col("institution_id").as("id"), col("display_name"),
         col("country_code"), col("lineage")).as("inst")))
     val withInst = matched
+      .select(col("work_id"), col("author_seq"), col("author_id"),
+        col("raw_name"), col("is_corresponding"), col("institution_ids"))
+      .repartition(col("work_id"))
       .select(col("work_id"), col("author_seq"), col("author_id"),
         col("raw_name"), col("is_corresponding"),
         explode_outer(col("institution_ids")).as("institution_id"))

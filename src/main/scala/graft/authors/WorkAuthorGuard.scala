@@ -96,6 +96,8 @@ object WorkAuthorGuard {
       .join(drift, col("id") === col("work_id"), "left").drop("work_id")
       .filter((col("updated_date") > maxUpdated || col("__drift")) &&
         col("authorships").isNotNull && size(col("authorships")) > 0)
+    // the distinct and the per-seat aggregate both group by keys that
+    // start with work_id: one exchange on work_id serves both
     admitted
       .select(col("id").as("work_id"), col("updated_date"),
         posexplode(col("authorships")).as(Seq("author_sequence", "__a")))
@@ -103,6 +105,7 @@ object WorkAuthorGuard {
         col("__a.raw_author_name").as("raw_author_name"),
         explode_outer(col("__a.raw_affiliation_strings"))
           .as("raw_affiliation_string"))
+      .repartition(col("work_id"))
       .distinct()
       .groupBy(col("work_id"), col("author_sequence"),
         col("raw_author_name"))

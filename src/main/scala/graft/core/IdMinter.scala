@@ -15,6 +15,10 @@ import org.apache.spark.sql.expressions.Window
   * keys pass through a single partition: that is fine because minting
   * batches are the day's *new* entities (thousands-to-millions), never
   * the full corpus; the existing-id side stays fully distributed.
+  * Callers that join the minted ids back onto a wide frame land them
+  * first (`WorkIdResolver.resolve` uses `Materialize.temp`): the landed
+  * table is sized from its files, so the join-back broadcasts and the
+  * single-partition window stays out of the consuming plan.
   */
 object IdMinter {
   val DefaultFloor = 6600000000L

@@ -10,12 +10,17 @@ import org.apache.spark.sql.expressions.Window
   * no-op suppression; notebooks/end2end/CreateWorksEnriched.ipynb:88,164,
   * 205,608 — enrichment upserts).
   *
-  * Design (Spark-first): one full-outer join on null-safe key equality,
-  * then per-column `when` resolution — the whole merge is a single
-  * Catalyst plan (one shuffle on the merge key; AQE handles skew), not a
-  * row-at-a-time upsert. At 100 TB the target should be stored bucketed /
-  * range-partitioned on `keys` so this join is co-located; the operator
-  * itself is storage-agnostic.
+  * Design (Spark-first): one outer join on null-safe key equality, then
+  * per-column `when` resolution — the whole merge is a single Catalyst
+  * plan, not a row-at-a-time upsert. The join is no wider than the
+  * clauses: only a `whenNotMatchedInsert*` clause can keep a source-only
+  * row, so without one the join is LEFT outer (target rows survive,
+  * source rows only meet them). A left outer join can broadcast a small
+  * source, so the target never shuffles, and AQE can split skewed keys
+  * under it; a full outer join can do neither. With an insert clause it
+  * is one full-outer shuffle on the merge key. At 100 TB the target
+  * should be stored bucketed / range-partitioned on `keys` so that join
+  * is co-located; the operator itself is storage-agnostic.
   *
   * Clause semantics (the subset the reference uses):
   *   - whenMatchedUpdate(set, cond):  MATCHED [AND cond] THEN UPDATE SET …
@@ -31,18 +36,13 @@ import org.apache.spark.sql.expressions.Window
   * that QUALIFY idiom.
   */
 final class MergeInto(
-    target: DataFrame,
-    source: DataFrame,
-    keys: Seq[String]) {
+    private[core] val target: DataFrame,
+    private[core] val source: DataFrame,
+    private[core] val keys: Seq[String]) {
+  import MergeInto._
 
-  private sealed trait Clause
-  private case class MatchedUpdate(cond: Column, set: Map[String, Column]) extends Clause
-  private case class MatchedDelete(cond: Column) extends Clause
-  private case class NotMatchedInsert(cond: Column, values: Option[Map[String, Column]]) extends Clause
-  private case class NotMatchedBySourceDelete(cond: Column) extends Clause
-
-  private var clauses: Vector[Clause] = Vector.empty
-  private var sourceDedup: Option[Seq[Column]] = None
+  private[core] var clauses: Vector[Clause] = Vector.empty
+  private[core] var sourceDedup: Option[Seq[Column]] = None
 
   def whenMatchedUpdate(set: Map[String, Column], condition: Column = lit(true)): MergeInto = {
     clauses :+= MatchedUpdate(condition, set); this
@@ -88,7 +88,8 @@ final class MergeInto(
     // Null-safe key equality: the reference's MERGE conditions use
     // `IS NOT DISTINCT FROM` (CreateLocationsMapped.sql:330-349).
     val joinCond = keys.map(k => col(s"__tgt.$k") <=> col(s"__src.$k")).reduce(_ && _)
-    val joined = t.join(s, joinCond, "full_outer")
+    val inserts = clauses.exists(_.isInstanceOf[NotMatchedInsert])
+    val joined = t.join(s, joinCond, if (inserts) "full_outer" else "left_outer")
 
     val matched = col("__tgt.__t_exists").isNotNull && col("__src.__s_exists").isNotNull
     val notMatched = col("__tgt.__t_exists").isNull && col("__src.__s_exists").isNotNull
@@ -147,6 +148,12 @@ final class MergeInto(
 }
 
 object MergeInto {
+  private[core] sealed trait Clause
+  private[core] case class MatchedUpdate(cond: Column, set: Map[String, Column]) extends Clause
+  private[core] case class MatchedDelete(cond: Column) extends Clause
+  private[core] case class NotMatchedInsert(cond: Column, values: Option[Map[String, Column]]) extends Clause
+  private[core] case class NotMatchedBySourceDelete(cond: Column) extends Clause
+
   def apply(target: DataFrame, source: DataFrame, keys: String*): MergeInto =
     new MergeInto(target, source, keys)
 }

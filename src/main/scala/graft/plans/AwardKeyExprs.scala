@@ -24,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * once per JVM instead of per codegen instance.
   *
   * SEMANTICS are a 1:1 port of the Column chain; the original Column
-  * implementations are kept as `*Spec` methods in AwardKeys and
+  * implementations are kept in test scope (SharpRules, ChainSpecs) and
   * AwardKeysSpec asserts per-row parity over every configured funder ×
   * an adversarial string battery (plus the DuckDB oracle on the six
   * consumer queries). The Spark built-ins being ported (regexp_extract
@@ -79,7 +79,7 @@ object AwardKeyRules {
     * (never null when called). Either side may return null (no key). */
   final case class Rule(registry: String => String, deposited: String => String)
 
-  // ---- rule bodies, in AwardKeys.rules order ------------------------
+  // ---- rule bodies, in SharpRules.rules order ------------------------
 
   private val anrReg = P("^ANR-(\\d{2})-([A-Z0-9]{2,6})-(\\d{4})")
   private val anrDep = P("(?:ANR-?)?(\\d{2})-([A-Z0-9]{2,6})-(\\d{4})")
@@ -238,7 +238,7 @@ object AwardKeyRules {
     Rule(f, f)
   }
 
-  /** (funderId, Rule) in AwardKeys.rules order; first entry wins on a
+  /** (funderId, Rule) in SharpRules.rules order; first entry wins on a
     * duplicated funder id, exactly like the `when` chain. */
   private val ruleSeq: Seq[(Long, Rule)] = Seq(
     4320320883L -> Rule(

@@ -98,12 +98,12 @@ class AwardKeysSpec extends AnyFunSuite {
   }
 
   test("rule table covers all 50 distinct AwardNormKey funders") {
-    assert(AwardKeys.rules.map(_.funderId).distinct.size == 50)
+    assert(SharpRules.rules.map(_.funderId).distinct.size == 50)
   }
 
   test("native expression rule table covers the same funders") {
     assert(graft.plans.AwardKeyRules.configuredFunders.sorted ===
-      AwardKeys.rules.map(_.funderId).distinct.sorted)
+      SharpRules.rules.map(_.funderId).distinct.sorted)
   }
 
   test("native sharp-key / is-weak expressions match the Column-chain " +
@@ -111,7 +111,7 @@ class AwardKeysSpec extends AnyFunSuite {
     // every configured funder + every weak-bare funder + an
     // unconfigured id + a null funder
     val funders: Seq[java.lang.Long] =
-      (AwardKeys.rules.map(_.funderId) ++ AwardKeys.weakBare.map(_._1))
+      (SharpRules.rules.map(_.funderId) ++ AwardKeys.weakBare.map(_._1))
         .distinct.map(java.lang.Long.valueOf) ++ Seq(
         java.lang.Long.valueOf(999L), null)
     // strings exercising every grammar shape, salvage tier, label

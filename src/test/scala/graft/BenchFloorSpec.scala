@@ -71,6 +71,33 @@ class BenchFloorSpec extends AnyFunSuite {
     assert(stages.get(0).get("input_bytes").asLong === (1L << 20))
   }
 
+  test("codegen counts: the cold pass's compiles, read around Measure.run") {
+    val cold = reading(2.0).copy(codegenClasses = 17, codegenS = 0.4321)
+    val warm = reading(1.5).copy(codegenClasses = 1, codegenS = 0.01)
+    val q = new ObjectMapper().readTree(Bench.record(
+      Seq(Bench.Result("q01_ok", Seq(cold, warm), 0.8, None)), Nil, Nil, Nil,
+      Nil, "/sf")).get("queries").get("q01_ok")
+    // the fastest pass gives the timings, the first pass the compiles
+    assert(q.get("best_s").asDouble === 1.5)
+    assert(q.get("codegen_classes").asLong === 17)
+    assert(q.get("codegen_s").asDouble === 0.432)
+
+    // live: a plan no earlier run generated (a fresh constant in the
+    // generated source) compiles at least one class; re-running the
+    // same plan hits Spark's codegen cache
+    val spark = TestSpark.spark
+    val listener = Measure.attach(spark)
+    try {
+      val salt = System.nanoTime()
+      def fresh = spark.range(1000).selectExpr(s"id * $salt + 7 as v")
+        .filter(s"v % 5 = ${salt % 5}")
+      val first = Measure.run(spark, listener)(fresh)
+      assert(first.codegenClasses >= 1 && first.codegenS > 0, first)
+      val again = Measure.run(spark, listener)(fresh)
+      assert(again.codegenClasses < first.codegenClasses, again)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("a query that fails is recorded as failed, not timed") {
     val spark = TestSpark.spark
     val listener = Measure.attach(spark)

@@ -27,7 +27,7 @@ object ChainSpecs {
   /** Column-chain form of [[AwardKeys.sharpKeyNorm]]. */
   def sharpKeyNorm(funderId: Column, n: Column,
       registrySide: Column): Column =
-    AwardKeys.rules.map { r =>
+    SharpRules.rules.map { r =>
       when(funderId === r.funderId,
         when(registrySide, r.registry(n)).otherwise(r.deposited(n)))
     }.reduceRight(_.otherwise(_))
