@@ -1,22 +1,30 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{GraftListenerBus, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Partial, PartialMerge}
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-import org.apache.spark.sql.execution.{LocalLimitExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{ExplainMode, LocalLimitExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan auditor: prints formatted physical plans for representative
   * queries so pushdown/broadcast/codegen regressions are visible.
-  * Checks (exit 1 on failure):
+  * [[run]] makes the checks (ExplainAuditSpec gates them in the test
+  * suite; `main` prints the plans and exits 1 on any failure):
   *  - q02: parquet scan carries PushedFilters + pruned ReadSchema
   *  - q03: nation/region joined via BroadcastHashJoin
   *  - q01: partial (map-side) aggregation before the shuffle
   *  - q37/q115/q122/q124: no `lambdafunction` (the text hot paths stay
   *    on the native kernels, never interpreted higher-order functions)
   *  - q37: MinHash slots come from the native `minhash_slots` kernel
-  *  - q115: no `count(distinct` and no `Expand` in the overlap count
+  *  - q115: no `count(distinct` and no `Expand` in the overlap count,
+  *    and no SortMergeJoin (the flags are landed before their join)
+  *  - q115/q134: the checks read the plans of the landings the query
+  *    wrote as well as its own (the overlap count and the URL election
+  *    run inside landings)
   *  - EVERY registered query: no `Exchange SinglePartition` in the plan
   *    (the round-1 sorted-dictionary windows funneled whole vocabularies
   *    through one task), read from the physical plan; a global
@@ -47,18 +55,62 @@ object ExplainAudit extends AdaptiveSparkPlanHelper {
 
   /** Exact number of `check(...)` calls a full run performs (named
     * checks + the generic per-query single-partition screen). */
-  val ExpectedChecks = 267
+  val ExpectedChecks = 268
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = Session.local("graft-explain", 4)
+    val result = run(spark, sfDir, println)
+    // Pin the total so doc claims can't drift: adding/removing a check
+    // (or a registered query, via the generic screen) must also bump
+    // this constant — the audit itself fails otherwise.
+    println(s"[audit] TOTAL ${result.checks} checks")
+    val countOk = result.checks == ExpectedChecks
+    if (!countOk)
+      println(s"[audit] FAIL expected $ExpectedChecks checks, " +
+        s"ran ${result.checks} — update ExplainAudit.ExpectedChecks")
+    spark.stop()
+    if (result.failures.nonEmpty || !countOk) sys.exit(1)
+  }
+
+  /** What one audit run found: the message of every failed check, and
+    * how many checks ran. */
+  final case class Result(failures: Seq[String], checks: Int)
+
+  /** Plans the audited queries over `sfDir` in `spark` and makes every
+    * check. `log` receives each formatted plan and each check's verdict
+    * line. The checks hold for the session `main` builds, `local[4]`
+    * with 4 shuffle partitions; another session shape can plan
+    * differently. */
+  def run(spark: SparkSession, sfDir: String,
+      log: String => Unit = _ => ()): Result = {
+
+    def formatted(qe: QueryExecution): String =
+      qe.explainString(ExplainMode.fromString("formatted"))
 
     def plan(name: String): String = {
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val s = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      println(s"===== $name =====\n$s")
+      val s = formatted(SparkEntry.queries(name)(spark, sfDir).queryExecution)
+      log(s"===== $name =====\n$s")
       s
+    }
+
+    // A `Materialize` landing leaves only a file scan in the query's
+    // own plan; this one also returns the plans of the landings the
+    // query's construction wrote, so checks can read what they compute.
+    def planWithLandings(name: String): String = {
+      val landed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          landed.add(formatted(qe))
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        val p = plan(name)
+        GraftListenerBus.drain(spark.sparkContext, 60000L)
+        landed.asScala.foreach(l => log(s"===== $name (landing) =====\n$l"))
+        (landed.asScala.toSeq :+ p).mkString("\n")
+      } finally spark.listenerManager.unregister(listener)
     }
 
     // Hash shuffles in a formatted plan: a shuffle's node line reads
@@ -68,11 +120,12 @@ object ExplainAudit extends AdaptiveSparkPlanHelper {
       """\(\d+\) Exchange\n(?:(?!Arguments: )[^\n]*\n)*Arguments: hashpartitioning""".r
         .findAllMatchIn(p).size
 
-    var ok = true
+    val failures = Seq.newBuilder[String]
     var nChecks = 0
     def check(cond: Boolean, msg: String): Unit = {
-      println(s"[audit] ${if (cond) "OK " else "FAIL"} $msg")
-      ok &= cond; nChecks += 1
+      log(s"[audit] ${if (cond) "OK " else "FAIL"} $msg")
+      if (!cond) failures += msg
+      nChecks += 1
     }
 
     val p02 = plan("q02_filter_pushdown_projection")
@@ -180,9 +233,7 @@ object ExplainAudit extends AdaptiveSparkPlanHelper {
           java.sql.Timestamp, java.sql.Timestamp)]
         .toDF("key_type", "key", "fulltext", "fulltext_length",
           "raw_length", "src_ingested_at", "updated_at")
-      val pk = graft.works.WorkFulltext.keysDelta(pdf, ek).queryExecution
-        .explainString(org.apache.spark.sql.execution.ExplainMode
-          .fromString("formatted"))
+      val pk = formatted(graft.works.WorkFulltext.keysDelta(pdf, ek).queryExecution)
       check(pk.contains("windowspecdefinition(key_type"),
         "q103 keysDelta window partitions by (key_type, key) — " +
           "per-key winners, never a corpus-wide sort")
@@ -511,7 +562,7 @@ object ExplainAudit extends AdaptiveSparkPlanHelper {
     check(!p135.contains("CartesianProduct"),
       "q135 has no cartesian product")
 
-    val p134 = plan("q134_url_ccnet_dedup")
+    val p134 = planWithLandings("q134_url_ccnet_dedup")
     check(p134.contains("graft-url-dedup"),
       "q134 lands the URL winner election at a Materialize boundary " +
         "(the canonical-url election runs once, not per consumer)")
@@ -548,7 +599,7 @@ object ExplainAudit extends AdaptiveSparkPlanHelper {
     check(!p112.contains("CartesianProduct"),
       "q112 has no cartesian product")
 
-    val p115 = plan("q115_decontamination")
+    val p115 = planWithLandings("q115_decontamination")
     check(p115.contains("BroadcastHashJoin"),
       "q115 contamination join broadcasts the eval side — the corpus " +
         "never shuffles for the screen")
@@ -559,6 +610,9 @@ object ExplainAudit extends AdaptiveSparkPlanHelper {
         "count-distinct (no three-key distinct shuffle)")
     check(!p115.contains("Expand"),
       "q115 has no Expand")
+    check(!p115.contains("SortMergeJoin"),
+      "q115 documents meet the landed flags in a broadcast join (the " +
+        "documents scan never shuffles to meet a few flag rows)")
 
     // The curation hot paths run on the native text kernels
     // (plans/TextKernels): a higher-order function creeping back into
@@ -627,17 +681,6 @@ object ExplainAudit extends AdaptiveSparkPlanHelper {
       }
     }
 
-    // Pin the total so doc claims can't drift: adding/removing a check
-    // (or a registered query, via the generic screen) must also bump
-    // this constant — the audit itself fails otherwise.
-    println(s"[audit] TOTAL $nChecks checks")
-    if (nChecks != ExpectedChecks) {
-      println(s"[audit] FAIL expected $ExpectedChecks checks, " +
-        s"ran $nChecks — update ExplainAudit.ExpectedChecks")
-      ok = false
-    }
-
-    spark.stop()
-    if (!ok) sys.exit(1)
+    Result(failures.result(), nChecks)
   }
 }

@@ -1,10 +1,16 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`dev/check_oracle.py`).
+  * Usage: `graft.Verify <sfDir> <outDir>`; other arguments exit 2. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val (sfDir, outDir) = args match {
+      case Array(sf, out) => (sf, out)
+      case _ =>
+        System.err.println("usage: graft.Verify <sfDir> <outDir>")
+        sys.exit(2)
+    }
     // SPARK_GRAFT_ONLY narrows the dump for dev runs; unset, every
     // query is dumped.
     val selected = Measure.selected()

@@ -24,10 +24,12 @@ import org.apache.spark.sql.DataFrame
   * the same boundary the reference puts between pipeline stages as
   * Delta tables (notebooks/works/CreateWorksEnriched.ipynb staging).
   *
-  * Registered oracle queries stay single-plan (Verify writes each
-  * result exactly once — a boundary would only add I/O); Materialize
-  * is for multi-consumer pipelines: PipelineDemo, StreamDemo, and any
-  * driver program composing these operators.
+  * It is also how a derived frame gets a real size before a join plans
+  * against it: a landed lookup is sized from its files, so a small one
+  * broadcasts instead of shuffling the big side to meet it
+  * (WorkIdResolver's key map, q115's flags). Callers: the composed
+  * curation queries (q116, q126, q134, q138, q150, …), the resolver,
+  * and any driver program composing these operators.
   */
 object Materialize {
 

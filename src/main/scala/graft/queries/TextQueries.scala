@@ -284,8 +284,10 @@ object TextQueries {
       Dedup.shingles(d, "doc_id", "text", 3),
       Dedup.shingles(bench, "doc_id", "text", 3),
       "doc_id", minCommon = 3)
-    val flags = pairs.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bench"), max(col("n_common")).as("max_common"))
+    // landed, so the join below is planned from the few flag rows'
+    // file size and broadcasts instead of shuffling every document
+    val flags = graft.core.Materialize.temp(pairs.groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_bench"), max(col("n_common")).as("max_common")))._1
     d.select(col("doc_id"), col("lang"))
       .join(flags, Seq("doc_id"), "left")
       .select(col("doc_id"), col("lang"),

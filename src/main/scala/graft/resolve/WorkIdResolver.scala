@@ -11,30 +11,18 @@ import graft.core.{IdMinter, Materialize}
   * length > 20 and ≤ 3 distinct candidate ids — :961,:967), else mint a
   * new id above the 6.6B floor (identity-column semantics, :69).
   *
-  * TWO physical strategies, same semantics (equivalence asserted in
-  * DomainSliceSpec):
-  *  - [[resolve]] — four sequential per-tier left joins. The canonical
-  *    key map and the minted-id table are LANDED (`Materialize.temp`)
-  *    before the joins that read them, so those joins are planned from
-  *    real file sizes: on a rebuild the map is empty and on a daily
-  *    delta it holds the day's keys, so every tier and the mint join
-  *    broadcast and the location set never shuffles. Without the
-  *    landings the planner cannot size a derived map before both join
-  *    sides start their shuffles, and every tier shipped whole
-  *    location rows to meet an empty lookup. The key-map landing also
-  *    counts the map's keys per tier, and a tier with none is left out
-  *    of the plan (a rebuild's empty map joins nothing); it carries
-  *    each key's largest id, so the minter's base comes from the
-  *    landing too and the map is read once.
-  *  - [[resolveFused]] — the tiers as ONE union-keyed equijoin:
-  *    explode each location into its available (key_type, key) pairs
-  *    (≤4, usually 1-2), join the canonicalized map once, pick the
-  *    winning tier by priority argmin (`min_by` skips null orderings,
-  *    so a missed doi falls through to a hit pmid — first-match-wins).
-  *    When the key map CANNOT broadcast (full-corpus backfill against
-  *    billions of keys), the sequential path degrades to four
-  *    shuffles of the full wide frame; this path does one.
-  * Pick by key-map size; the daily default is [[resolve]].
+  * [[resolve]] runs four sequential per-tier left joins. The canonical
+  * key map and the minted-id table are LANDED (`Materialize.temp`)
+  * before the joins that read them, so those joins are planned from
+  * real file sizes: on a rebuild the map is empty and on a daily delta
+  * it holds the day's keys, so every tier and the mint join broadcast
+  * and the location set never shuffles. Without the landings the
+  * planner cannot size a derived map before both join sides start
+  * their shuffles, and every tier shipped whole location rows to meet
+  * an empty lookup. The key-map landing also counts the map's keys per
+  * tier, and a tier with none is left out of the plan (a rebuild's
+  * empty map joins nothing); it carries each key's largest id, so the
+  * minter's base comes from the landing too and the map is read once.
   */
 object WorkIdResolver {
 
@@ -134,41 +122,5 @@ object WorkIdResolver {
     // the day's new keys only; landing them costs one re-run of the
     // broadcast tier joins and lets the mint join broadcast as well
     withMinted(adopted, Materialize.temp(mintedIds(adopted, stats), "graft-minted")._1)
-  }
-
-  /** Single-shuffle variant for non-broadcastable key maps — see the
-    * class doc for the tradeoff. */
-  def resolveFused(locations: DataFrame, idMap: DataFrame): DataFrame = {
-    val stats = keyStats(idMap)
-    val perKey = canonicalPerKey(stats)
-    val keyStructs = array(
-      struct(lit(1).as("p"), lit("doi").as("t"), col("merge_key.doi").as("k")),
-      struct(lit(2).as("p"), lit("pmid").as("t"), col("merge_key.pmid").as("k")),
-      struct(lit(3).as("p"), lit("arxiv").as("t"), col("merge_key.arxiv").as("k")),
-      struct(lit(4).as("p"), lit("title_author").as("t"),
-        when(taGuard, col("merge_key.title_author")).as("k")))
-    // one row per (location, available key); explode_outer keeps
-    // keyless rows alive for the mint path. The row id is computed
-    // once inside one linear lineage (explode → join → groupBy), so
-    // it is stable; original columns ride along and come back via
-    // first() — no join-back against the location set.
-    val cols = locations.columns
-    val pairs = locations
-      .withColumn("__rid", monotonically_increasing_id())
-      .select(col("__rid"), col("*"),
-        explode_outer(filter(keyStructs, x => x.getField("k").isNotNull)).as("e"))
-    val firstAggs = cols.map(c => first(col(c)).as(c))
-    // min_by skips null orderings → argmin over HITS only; an all-miss
-    // group yields a null best → the mint path
-    val bestAgg = min_by(struct(col("work_id"), col("e.t").as("work_id_source")),
-      when(col("work_id").isNotNull, col("e.p"))).as("__best")
-    val adopted = pairs
-      .join(perKey, col("e.t") === col("key_type") && col("e.k") === col("key"), "left")
-      .groupBy(col("__rid"))
-      .agg(firstAggs.head, (firstAggs.tail :+ bestAgg): _*)
-      .select(cols.map(col) :+
-        col("__best.work_id").as("work_id") :+
-        col("__best.work_id_source").as("work_id_source"): _*)
-    withMinted(adopted, mintedIds(adopted, stats))
   }
 }

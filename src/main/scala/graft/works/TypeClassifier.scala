@@ -3,12 +3,14 @@ package graft.works
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Rules-table work-type classifier — the open shape of the reference's
-  * frozen 163-rule cascade (notebooks/end2end/CreateLocationsWithTypes
-  * .sql:14-694): an ordered Seq of (condition, type) evaluated
-  * first-match-wins, compiled into one `when` chain (single codegen'd
-  * expression, no join, no UDF). Rules are data, so parity work is
-  * adding rows, not code.
+/** Rules-table work-type classifier: an ordered Seq of (condition,
+  * type) evaluated first-match-wins, compiled into one `when` chain
+  * (single codegen'd expression, no join, no UDF). The rules are the
+  * reference's frozen 163-rule cascade
+  * (notebooks/end2end/CreateLocationsWithTypes.sql:14-694), which
+  * [[TypeRules.fullRules]] transliterates; [[TypeRules.finalType]]
+  * applies them with the ingest-dict fallback and the final verdict
+  * selection.
   */
 object TypeClassifier {
 
@@ -18,101 +20,4 @@ object TypeClassifier {
   def classify(rules: Seq[Rule], default: String = "article"): Column =
     rules.foldRight(lit(default): Column)((r, acc) =>
       when(r.cond, r.workType).otherwise(acc))
-
-  /** A representative subset of the reference cascade over the usual
-    * feature columns (raw_native_type, source_type, title, n_refs,
-    * has_journal, is_preprint_server). */
-  def defaultRules: Seq[Rule] = Seq(
-    Rule("explicit-retraction", lower(coalesce(col("title"), lit("")))
-      .startsWith("retraction:"), "retraction"),
-    Rule("explicit-erratum", lower(coalesce(col("title"), lit("")))
-      .rlike("^(erratum|corrigendum)"), "erratum"),
-    Rule("editorial-native", lower(coalesce(col("raw_native_type"), lit("")))
-      .isin("editorial", "editorial-material"), "editorial"),
-    Rule("letter-native", lower(coalesce(col("raw_native_type"), lit(""))) === "letter",
-      "letter"),
-    Rule("dataset-source", col("source_type") === "dataset-repository", "dataset"),
-    Rule("preprint-host", coalesce(col("is_preprint_server"), lit(false)), "preprint"),
-    Rule("book-chapter", lower(coalesce(col("raw_native_type"), lit("")))
-      .isin("book-chapter", "chapter"), "book-chapter"),
-    Rule("book", lower(coalesce(col("raw_native_type"), lit("")))
-      .isin("book", "monograph"), "book"),
-    Rule("proceedings", lower(coalesce(col("raw_native_type"), lit("")))
-      .contains("proceedings"), "proceedings-article"),
-    Rule("review-title", lower(coalesce(col("title"), lit("")))
-      .rlike("^(a |an )?(systematic )?review of") && col("n_refs") >= 20, "review"))
-
-  private def lc(c: String): Column = lower(coalesce(col(c), lit("")))
-
-  /** Round-1 summary cascade over a simplified feature frame — kept for
-    * its callers/tests. The FULL 163-rule transliteration (plus the
-    * 221-entry ingest-dict fallback and final verdict selection) lives
-    * in [[TypeRules]]; use that for reference parity. */
-  def referenceRules: Seq[Rule] = Seq(
-    // tier 0: retraction/erratum signals dominate everything
-    Rule("retracted-flag", coalesce(col("is_retracted"), lit(false)), "retraction"),
-    Rule("retraction-title", lc("title").rlike("^retract(ion|ed)[:. ]"), "retraction"),
-    Rule("erratum-title", lc("title").rlike("^(erratum|corrigendum|correction to)"), "erratum"),
-    // tier 1: explicit crossref types
-    Rule("cr-dissertation", lc("raw_native_type") === "dissertation", "dissertation"),
-    Rule("cr-reference", lc("raw_native_type")
-      .isin("reference-entry", "reference-book"), "reference-entry"),
-    Rule("cr-standard", lc("raw_native_type") === "standard", "standard"),
-    Rule("cr-report", lc("raw_native_type")
-      .isin("report", "report-component"), "report"),
-    Rule("cr-editorial", lc("raw_native_type")
-      .isin("editorial", "editorial-material"), "editorial"),
-    Rule("cr-letter", lc("raw_native_type") === "letter", "letter"),
-    Rule("cr-peer-review", lc("raw_native_type") === "peer-review", "peer-review"),
-    Rule("cr-book-chapter", lc("raw_native_type")
-      .isin("book-chapter", "chapter"), "book-chapter"),
-    Rule("cr-book", lc("raw_native_type")
-      .isin("book", "monograph", "edited-book"), "book"),
-    Rule("cr-proceedings", lc("raw_native_type")
-      .isin("proceedings-article", "proceedings-paper"), "proceedings-article"),
-    Rule("cr-dataset", lc("raw_native_type") === "dataset", "dataset"),
-    // tier 2: subtype
-    Rule("subtype-preprint", lc("subtype") === "preprint", "preprint"),
-    // tier 3: host allowlists (url-derived)
-    Rule("host-preprint", lc("host")
-      .isin("osf.io", "www.researchsquare.com"), "preprint"),
-    Rule("host-dataset", lc("host")
-      .isin("www.encodeproject.org", "www.rcsb.org", "www.wwpdb.org"), "dataset"),
-    Rule("host-peer-review", lc("host")
-      .isin("facultyopinions.com", "publons.com", "www.webofscience.com"), "peer-review"),
-    Rule("host-dissertation", lc("host")
-      .isin("theses.fr", "theses.hal.science"), "dissertation"),
-    Rule("host-conf-abstract", lc("host")
-      .isin("meetingorganizer.copernicus.org", "www.morressier.com"),
-      "conference-abstract"),
-    // tier 4: source-name table
-    Rule("src-preprint", lc("source_name")
-      .isin("research square", "ssrn electronic journal"), "preprint"),
-    Rule("src-data-paper", lc("source_name") === "data in brief", "data-paper"),
-    Rule("src-software-paper", lc("source_name")
-      .isin("softwarex", "the journal of open source software"), "software-paper"),
-    Rule("src-report", lc("source_name") === "national bureau of economic research",
-      "report"),
-    Rule("src-editorial", lc("source_name") === "synfacts", "editorial"),
-    // tier 5: source-context LIKEs
-    Rule("sc-rxiv", lc("source_name").contains("rxiv") ||
-      lc("source_name").contains("preprint"), "preprint"),
-    Rule("sc-datasets", lc("source_name").contains("datasets"), "dataset"),
-    Rule("sc-reference", lc("source_name").contains("encyclopedia") ||
-      lc("source_name").contains("dictionary") ||
-      lc("source_name").contains("lexicon"), "reference-entry"),
-    Rule("sc-conf-abstract", lc("source_name").contains("meeting abstracts"),
-      "conference-abstract"),
-    Rule("sc-conf-paper", lc("source_name").contains("web of conferences") ||
-      lc("source_name").contains("spie proceedings") ||
-      lc("source_name").contains("sae technical paper"), "conference-paper"),
-    // tier 6: host-type context (group-window features upstream)
-    Rule("src-type-dataset", lc("source_type") === "dataset-repository", "dataset"),
-    Rule("preprint-server", coalesce(col("is_preprint_server"), lit(false)), "preprint"),
-    // tier 7: shape heuristics
-    Rule("single-page-no-refs-abstractless", coalesce(col("single_page"), lit(false)) &&
-      col("n_refs") === 0 && !coalesce(col("has_abstract"), lit(false)) &&
-      lc("source_type") === "journal", "paratext"),
-    Rule("review-title", lc("title").rlike("^(a |an )?systematic review") &&
-      col("n_refs") >= 20, "review"))
 }

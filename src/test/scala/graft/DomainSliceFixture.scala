@@ -1,29 +1,24 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.authors.AuthorMatcher
 import graft.ingest.CrossrefParser
 import graft.resolve.WorkIdResolver
-import graft.serve.{Guardrails, SnapshotDocs, SnapshotExport, SnapshotSmoke, SnapshotWriter}
+import graft.serve.{Guardrails, SnapshotDocs, SnapshotSmoke}
 import graft.works.{TypeRules, WorksBase}
 
-/** Consumer-style driver for the walden-domain slice (SURVEY §7.2):
-  * raw multi-source records → parse → merge key → work-id resolution
-  * (adoption + minting) → survivorship → type classification → author
-  * matching → guardrails → JSON snapshot export. Prints stage counts
-  * and a sample export line; exit 1 if any stage loses rows unexpectedly
-  * or a guardrail fails.
+/** The walden-domain slice (SURVEY §7.2) composed over hand-typed
+  * records, for DomainSliceSpec: raw multi-source records → parse →
+  * merge key → work-id resolution (adoption + minting) → survivorship
+  * → type classification → location, affiliation and SDG enrichment →
+  * the nightly tail (curations, references, fulltext, registry sync,
+  * API builds, awards, snapshot docs, guardrails and smoke verdicts).
   */
-object PipelineDemo {
+object DomainSliceFixture {
 
   /** Fixture records → parsed+keyed walden rows → resolved work ids
-    * (adoption via the doi map + minting). Shared by main() and
-    * DomainSliceSpec so the composed path is exercised identically in
-    * both. Returns (walden, resolved). */
-  def demoResolved(spark: SparkSession): (org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame) = {
+    * (adoption via the doi map + minting). Returns (walden, resolved). */
+  def resolved(spark: SparkSession): (DataFrame, DataFrame) = {
     val s = spark; import s.implicits._
     val raw = spark.read.json(Seq(
       """{"doi":"10.9/alpha","title":["The Alpha Paper On Spark Engines"],"author":[{"given":"Jo","family":"Smith","orcid":"https://orcid.org/0000-0002-1825-0097","affiliation":[{"name":"MIT"}],"sequence":"first"}],"issued":{"date_parts":[[2023,4]]},"type":"journal-article","license":[{"url":"https://creativecommons.org/licenses/by/4.0"}],"container_title":["J Spark"],"publisher":"P","abstract":"a1","updated":"2024-01-02 00:00:00"}""",
@@ -42,8 +37,7 @@ object PipelineDemo {
     * rows attach through the ISSN tier, the beta row (book raw type,
     * unmatched name) through the ebook-platform publisher MERGE, and
     * the standalone punctuated-name row only after normalization. */
-  def demoLocations(spark: SparkSession,
-      resolved: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  def locations(spark: SparkSession, resolved: DataFrame): DataFrame = {
     val s = spark; import s.implicits._
     import graft.resolve.{SourceMatcher, SuperLocations}
     val scraped = Seq(
@@ -98,9 +92,8 @@ object PipelineDemo {
     SourceMatcher.attachSourcesFull(locations, sources, endpointToSource)
   }
 
-  /** Survivorship + the full type cascade over the resolved rows —
-    * shared by main() and DomainSliceSpec. */
-  def demoTyped(spark: SparkSession, resolved: DataFrame): DataFrame = {
+  /** Survivorship + the full type cascade over the resolved rows. */
+  def typed(spark: SparkSession, resolved: DataFrame): DataFrame = {
     val prio = when(col("provenance") === "crossref", 1).otherwise(9)
     val best = WorksBase.survivorship(
       resolved.withColumn("native_num", xxhash64(col("native_id"))),
@@ -138,8 +131,7 @@ object PipelineDemo {
 
   /** Affiliation matcher + refinement cascade over the resolved
     * authorships — returns (matcher output, refined). */
-  def demoAffiliations(spark: SparkSession,
-      resolved: DataFrame): (DataFrame, DataFrame) = {
+  def affiliations(spark: SparkSession, resolved: DataFrame): (DataFrame, DataFrame) = {
     val sess = spark; import sess.implicits._
     val affils = resolved.select(col("work_id"),
         posexplode(col("authors")).as(Seq("author_seq", "a")))
@@ -158,7 +150,7 @@ object PipelineDemo {
   }
 
   /** SDG frontfill → shape → merge source over the typed works. */
-  def demoSdg(spark: SparkSession, typed: DataFrame): DataFrame = {
+  def sdg(spark: SparkSession, typed: DataFrame): DataFrame = {
     val sess = spark; import sess.implicits._
     import graft.llm.SdgPipeline
     val sdgWorks = typed.select(col("work_id"), col("title"),
@@ -175,8 +167,7 @@ object PipelineDemo {
       shaped2.limit(0).select(col("work_id"), col("sdg")), shaped2)
   }
 
-  /** Every frame the composed nightly tail lands, so main() and
-    * DomainSliceSpec assert on the identical DAG. */
+  /** Every frame the composed nightly tail lands. */
   final case class NightlyOut(curated: DataFrame, references: DataFrame,
       fulltext: DataFrame, registry: DataFrame, worksEnriched: DataFrame,
       sourcesApi: DataFrame, publishersApi: DataFrame,
@@ -191,10 +182,10 @@ object PipelineDemo {
     * Publishers / Institutions API builds + the topic-hierarchy
     * rollup → the works snapshot doc → Guardrails + SnapshotSmoke
     * verdicts as the release gate. Every stage consumes REAL upstream
-    * output of the demo (resolved works, attached locations, matched
+    * output of this slice (resolved works, attached locations, matched
     * authorships, refined institutions, SDG tags) — registries are the
     * only synthesized inputs, as in production. */
-  def demoNightlyTail(spark: SparkSession, resolved: DataFrame,
+  def nightlyTail(spark: SparkSession, resolved: DataFrame,
       typed: DataFrame, attached: DataFrame, refined: DataFrame,
       sdgMerged: DataFrame): NightlyOut = {
     val s = spark; import s.implicits._
@@ -678,299 +669,5 @@ object PipelineDemo {
     NightlyOut(curated, references, fulltext, registry, worksEnriched,
       sourcesApi, publishersApi, institutionsApi, domainCounts,
       worksDocs, awardAliases, awards, smokeVerdicts, checks)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = Session.local("graft-pipeline-demo", 4)
-    import spark.implicits._
-
-    var ok = true
-    def stage(name: String, n: Long, expect: Long => Boolean): Unit = {
-      println(s"[pipe] $name: $n rows")
-      if (!expect(n)) { println(s"[pipe] UNEXPECTED at $name"); ok = false }
-    }
-
-    // two sources describing overlapping works (same DOI from a second
-    // provenance and a brand-new DOI) — fixtures in demoResolved so
-    // DomainSliceSpec drives the identical composed path
-    val (walden, resolved) = demoResolved(spark)
-    stage("parsed+keyed", walden.count(), _ == 3)
-    stage("resolved", resolved.count(), _ == 3)
-    resolved.select("native_id", "work_id", "work_id_source").show(false)
-    val distinctIds = resolved.select("work_id").distinct().count()
-    stage("distinct work ids", distinctIds, _ == 2)
-
-    // survivorship + full 163-rule type cascade (shared helper)
-    val typed = demoTyped(spark, resolved)
-    stage("works (survived+typed)", typed.count(), _ == 2)
-    typed.select("work_id", "title", "work_type", "classified_rule").show(false)
-
-    val incoming = resolved.select(col("work_id"),
-        posexplode(col("authors")).as(Seq("author_seq", "a")))
-      .select(col("work_id"), col("author_seq"),
-        col("a.author_key").as("block_key"), col("a.orcid").as("orcid"),
-        transform(col("a.affiliations"), x => x.getField("name")).as("institution_ids"),
-        lit(0L).as("source_id"))
-    val candidates = Seq(
-      (5001L, "smith;j", "0000-0002-1825-0097", Seq("MIT"), Seq.empty[Long]))
-      .toDF("author_id", "block_key", "orcid", "institution_ids", "source_ids")
-    val matched = AuthorMatcher.matchAuthors(incoming, candidates)
-    matched.select("work_id", "author_seq", "block_key", "author_id", "match_tier").show(false)
-    stage("authorships matched", matched.filter(col("author_id").isNotNull).count(),
-      _ == incoming.count())
-
-    val checks = Seq(
-      Guardrails.churn(typed, lit(true), maxChanged = 10),
-      Guardrails.attributeLoss(typed, "abstract", baseline = 1, 0, 0.05),
-      Guardrails.referential(matched, "work_id", typed, "work_id"))
-    checks.foreach(c => println(s"[pipe] guardrail ${c.name}: " +
-      (if (c.passed) "PASS" else s"FAIL (${c.detail})")))
-    ok &= Guardrails.runAll(checks).isRight
-
-    val outDir = Files.createTempDirectory("graft-snapshot").toString
-    val shaped = SnapshotExport.capStrings(typed, Map("abstract" -> 32000))
-      .withColumn("json", to_json(struct(col("work_id"), col("title"),
-        col("work_type"), col("abstract")), Map("ignoreNullFields" -> "true")))
-    SnapshotExport.writeJson(shaped, col("work_id"), "json", outDir, 1, 1000)
-    val exported = spark.read.text(outDir)
-    stage("exported json lines", exported.count(), _ == 2)
-    println("[pipe] sample: " + exported.as[String].collect().min)
-
-    // enrichment: affiliation rules, stub embeddings, bulk indexing
-    // matcher + refinement cascade (shared helper; no demo string
-    // triggers a real refine rule, so matched ids pass through and
-    // no-match rows pick up the -1 sentinel)
-    val (insts, refined) = demoAffiliations(spark, resolved)
-    stage("authorships with institutions",
-      insts.filter(size(col("institution_ids")) > 0).count(), _ == 1)
-    stage("refined keeps the matched row",
-      refined.filter(array_contains(col("institution_ids"), 42L)).count(), _ == 1)
-    stage("refined sentinels the no-match rows",
-      refined.filter(array_contains(col("institution_ids"), -1L)).count(),
-      _ == insts.count() - 1)
-
-    val emb = graft.llm.LlmOps.embed(
-      typed.select(col("work_id").as("id"), col("title").as("text"))
-        .as[graft.llm.LlmOps.EmbedIn],
-      () => new graft.llm.LlmOps.StubClient, dim = 8, batchSize = 16,
-      guard = Some(graft.llm.LlmOps.CostGuard(unitCostMicros = 1, budgetMicros = 1000)),
-      rowEstimate = Some(2)) // guard meters the estimate — no count scan
-    stage("embeddings", emb.count(), _ == 2)
-
-    val bulkFailures = graft.serve.BulkSink.index(
-      shaped, "work_id", "json",
-      () => new graft.serve.BulkSink.BulkClient {
-        def sendBulk(chunk: Seq[String]): Int = { chunk.foreach(_ => ()); 0 }
-      }, partitions = 1, chunkSize = 10)
-    stage("bulk-index failures", bulkFailures, _ == 0)
-
-    val layoutDir = Files.createTempDirectory("graft-layout").toString
-    graft.core.LayoutWriter.writeClustered(typed.drop("published_date"),
-      layoutDir, 1, Seq(col("work_id")))
-    stage("clustered layout rows", spark.read.parquet(layoutDir).count(), _ == 2)
-
-    // dedup pipeline with the production materialization boundary: the
-    // one-pass signature+set frame (widest frame in the pipeline) is
-    // written to parquet once, and BOTH consumers — LSH candidate
-    // generation and exact-Jaccard verification — re-read it instead
-    // of recomputing the explode+aggregate (and instead of a cache()
-    // that would pin executor storage for the session's lifetime).
-    val docs = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog again and again"),
-      (2L, "the quick brown fox jumps over the lazy dog again and again today"),
-      (3L, "completely different text with no overlap whatsoever in any shingle"))
-      .toDF("doc_id", "text")
-    val sid = graft.operators.Dedup.withShingleIds(
-      graft.operators.Dedup.shingles(docs, "doc_id", "text", 3))
-    val (sets, setsDir) = graft.core.Materialize.temp(
-      graft.operators.Dedup.signatureWithSets(
-        sid.select(col("doc_id"), col("sid")), "doc_id", 16))
-    val pairs = graft.operators.Dedup.jaccardForSets(
-      graft.operators.Dedup.lshCandidates(sets, "doc_id", 4, 4), sets, "doc_id")
-    stage("near-dup pairs via materialized boundary",
-      pairs.filter(col("jaccard") >= 0.5).count(), _ == 1)
-    stage("no pinned storage after dedup",
-      spark.sparkContext.getPersistentRDDs.size.toLong, _ == 0)
-    println(s"[pipe] materialized candidate stage at $setsDir")
-
-    // OAI repository helpers: version detection + dc:identifier extraction
-    val oai = Seq(
-      (1L, "info:eu-repo/semantics/acceptedVersion",
-        Seq("https://doi.org/10.9/alpha", "oai:arXiv.org:2101.00001")),
-      (2L, "author preprint", Seq("https://repo.example.org/2")))
-      .toDF("rec", "meta", "identifiers")
-      .select(col("rec"),
-        graft.ingest.OaiFunctions.detectVersion(col("meta")).as("version"),
-        graft.ingest.OaiFunctions.extractIds(col("identifiers")).as("ids"))
-    oai.show(false)
-    stage("oai records with derived ids",
-      oai.filter(size(col("ids")) > 0).count(), _ == 2)
-    stage("oai accepted-version detected",
-      oai.filter(col("version") === "acceptedVersion").count(), _ == 1)
-
-    // round-6 composed path in DAG order: SuperLocations best-URL
-    // attach → SourceMatcher full cascade (CTAS tiers + post-CTAS
-    // ebook/normalized passes) → source-id coverage parity
-    val attached = demoLocations(spark, resolved)
-    attached.select("native_id", "provenance", "source_id", "source_name")
-      .show(false)
-    stage("locations with source_id",
-      attached.filter(col("source_id").isNotNull).count(),
-      _ == attached.count())
-    stage("issn-tier attach (alpha rows)", attached.filter(
-      col("best_doi") === "10.9/alpha" && col("source_id") === 9001L).count(),
-      _ == 2)
-    stage("post-CTAS ebook-publisher attach (beta)", attached.filter(
-      col("best_doi") === "10.9/beta" && col("source_id") === 9002L).count(),
-      _ == 1)
-    stage("post-CTAS normalized-name attach (gamma)", attached.filter(
-      col("native_id") === "L-gamma" && col("source_id") === 9001L).count(),
-      _ == 1)
-
-    // enrichment fan-out: SDG frontfill over the typed works — only the
-    // eligible-typed article with enough text reaches the classifier;
-    // the 0.4 score floor drops the weak goal; merge source carries the
-    // surviving top goal
-    val sdgMerged = demoSdg(spark, typed)
-    stage("sdg merge source rows", sdgMerged.count(), _ == 1)
-    stage("sdg goals above the 0.4 floor",
-      sdgMerged.select(size(col("sdg"))).as[Int].head().toLong, _ == 1)
-
-    // round-7 composed path: work-author seat maintenance — the
-    // watermarked batch admits the changed work, the guard judges the
-    // crossed-seat swap (observation only: both seats INCOMPATIBLE,
-    // each rebind hypothesis re-homes the other's freed author), the
-    // seat MERGE refreshes names without touching bindings, and a
-    // curator claim then rebinds one seat explicitly
-    import graft.authors.{WorkAuthorCurations, WorkAuthorGuard}
-    def gAu(n: String) = s"named_struct('raw_author_name', '$n', " +
-      "'raw_affiliation_strings', array('MIT'), 'is_corresponding', false)"
-    val gBase = Seq(1L).toDF("id").selectExpr("id",
-      "TIMESTAMP '2024-02-01' AS updated_date",
-      s"array(${gAu("Bob Kim")}, ${gAu("Ann Park")}) AS authorships")
-    def gSeat(sq: Int, name: String, auth: Long) = Seq(1L).toDF("work_id")
-      .selectExpr("work_id", s"$sq AS author_sequence",
-        s"CAST($auth AS BIGINT) AS author_id", s"'$name' AS raw_author_name",
-        "array('MIT') AS raw_affiliation_strings",
-        "false AS is_corresponding",
-        "TIMESTAMP '2023-10-01' AS created_at",
-        "TIMESTAMP '2023-12-01' AS updated_at")
-    val gSeats = gSeat(0, "Ann Park", 70L).unionByName(gSeat(1, "Bob Kim", 71L))
-    val gNames = Seq(("Ann Park", "park", "ann"), ("Bob Kim", "kim", "bob"))
-      .toDF("raw_author_name", "match_last", "match_first")
-      .withColumn("parsed_last", col("match_last"))
-      .withColumn("parsed_first", col("match_first"))
-    val gProf = Seq((70L, "Ann Park"), (71L, "Bob Kim"))
-      .toDF("id", "display_name").withColumn("full_name", col("display_name"))
-    val gEmptyClaims = Seq.empty[(Long, String)]
-      .toDF("work_id", "raw_author_name")
-    val gEmptyRemoves = Seq.empty[(Long, Long)].toDF("work_id", "author_id")
-    val gEmptyLegacy = Seq.empty[(Long, Int, String, Long)]
-      .toDF("work_id", "author_sequence", "raw_author_name", "author_id")
-    val gBatch = WorkAuthorGuard.updateBatch(gBase, gSeats,
-      lit("2024-01-15").cast("timestamp"))
-    val gGuard = WorkAuthorGuard.guardBatch(gBatch, gSeats, gNames,
-      gEmptyClaims, gEmptyRemoves, gProf, gProf.drop("full_name"),
-      gEmptyLegacy)
-    stage("guard: crossed seats both judged incompatible",
-      gGuard.filter(col("verdict") === "INCOMPATIBLE").count(), _ == 2)
-    stage("guard: each hypothesis re-homes the other's freed author",
-      gGuard.filter(col("rebind_author_id") ===
-        lit(71L) - col("author_sequence")).count(), _ == 2)
-    val gApplied = WorkAuthorGuard.applyBatch(gSeats, gBatch, gBase, gNames,
-      gEmptyLegacy, lit("2024-06-01").cast("timestamp"))
-    stage("apply: names refreshed, bindings untouched",
-      gApplied.filter(col("raw_author_name") === "Bob Kim" &&
-        col("author_id") === 70L).count(), _ == 1)
-    val gClaimSrc = Seq((1L, "Bob Kim", 99L, "2024-06-02", 1L))
-      .toDF("work_id", "raw_author_name", "author_id", "c", "curation_id")
-      .withColumn("created", col("c").cast("timestamp")).drop("c")
-    // ── SyncWorkAuthorCurations cell 5: the decline-guard screens the
-    // sync BEFORE any apply — its MERGE carries a not-matched-by-source
-    // DELETE, so an empty/short source must abort, not mass-delete
-    val syncGate = graft.serve.Guardrails.syncDeclineGuard(
-      Seq(gClaimSrc, gEmptyRemoves), Seq(gClaimSrc, gEmptyRemoves),
-      allowedDecline = 10, overrideGuard = false)
-    stage("sync decline-guard: healthy source passes both checks",
-      syncGate.count(_.passed).toLong, _ == 2)
-    stage("sync decline-guard: empty source vs non-empty target " +
-      "hard-fails (override does not apply)",
-      graft.serve.Guardrails.syncDeclineGuard(0L, 5L,
-        allowedDecline = 10, overrideGuard = true)
-        .count(c => c.name == "sync_empty_source" && !c.passed).toLong,
-      _ == 1)
-    stage("sync decline-guard: both-zero startup is legitimate",
-      graft.serve.Guardrails.syncDeclineGuard(0L, 0L)
-        .count(_.passed).toLong, _ == 2)
-    val gClaimed = WorkAuthorCurations.applyClaims(gApplied, gClaimSrc,
-      lit("2024-06-02").cast("timestamp"))
-    stage("curation claim rebinds the seat",
-      gClaimed.filter(col("raw_author_name") === "Bob Kim" &&
-        col("author_id") === 99L).count(), _ == 1)
-
-    // ── the round-7 nightly tail in reference task order, gated by
-    // Guardrails + SnapshotSmoke (walden_end2end.yaml runs smoke LAST)
-    val tail = demoNightlyTail(spark, resolved, typed, attached, refined,
-      sdgMerged)
-    stage("curations: beta pdf replaced", tail.curated.filter(
-      col("pdf_url") === "https://curated.example/beta.pdf").count(), _ == 1)
-    stage("curations: gamma landing nulled", tail.curated.filter(
-      col("native_id") === "L-gamma" && col("landing_page_url").isNull)
-      .count(), _ == 1)
-    stage("references: alpha cites beta (resolved)",
-      tail.references.count(), _ == 1)
-    stage("fulltext: beta work keyed by DOI", tail.fulltext.count(), _ >= 1)
-    stage("ror sync: new lab minted past max id", tail.registry.filter(
-      col("display_name") === "New Lab" && col("id") > 42).count(), _ == 1)
-    stage("ror sync: MIT fields refreshed", tail.registry.filter(
-      col("display_name") === "MIT" &&
-        col("city") === "Cambridge").count(), _ == 1)
-    stage("works enriched", tail.worksEnriched.count(), _ == 2)
-    stage("sources api entities", tail.sourcesApi.count(), _ == 2)
-    stage("publishers api entities", tail.publishersApi.count(), _ == 2)
-    stage("institutions api entities", tail.institutionsApi.count(), _ == 2)
-    stage("topic-hierarchy level counts", tail.domainCounts.count(), _ >= 1)
-    stage("works snapshot docs", tail.worksDocs.count(), _ == 2)
-    stage("award shell aliased to the minted prize",
-      tail.awardAliases.count(), _ == 1)
-    stage("consolidated awards (shell collapsed)",
-      tail.awards.count(), _ == 2)
-    stage("funded outputs resolve through the alias", tail.awards.filter(
-      col("funder_award_id") === "abel-2022-demo" &&
-        col("funded_outputs_count") === 2).count(), _ == 1)
-
-    // export the docs through the partitioned snapshot writer
-    val snapDir = Files.createTempDirectory("graft-snapshot-full").toString
-    val (jm, pm) = SnapshotWriter.exportAllFormats(spark, tail.worksDocs,
-      snapDir, "works", salt = false)
-    SnapshotWriter.writeCombinedManifest(snapDir, "2024-05-02", "jsonl",
-      Seq(jm))
-    stage("snapshot export jsonl records", jm.recordCount, _ == 2)
-    stage("snapshot export parquet records", pm.recordCount, _ == 2)
-    val instDocs = SnapshotDocs.institutionsDoc(
-      tail.institutionsApi.withColumn("display_name_acronyms",
-        col("display_name_acronyms")))
-    stage("institutions docs id-prefixed", instDocs.filter(
-      col("id").startsWith("https://openalex.org/I")).count(), _ == 2)
-    // the consolidated awards flow through the same doc+export path
-    val awardDocs = SnapshotDocs.awardsDoc(tail.awards)
-    stage("awards docs id-prefixed (shell never exported)",
-      awardDocs.filter(col("id").startsWith("https://openalex.org/G"))
-        .count(), _ == 2)
-
-    tail.guardrails.foreach(c => println(s"[pipe] guardrail ${c.name}: " +
-      (if (c.passed) "PASS" else s"FAIL (${c.detail})")))
-    ok &= Guardrails.runAll(tail.guardrails).isRight
-    val verdicts = tail.smokeVerdicts
-      .filter(col("passed").isNotNull).select(col("check"), col("passed"))
-      .collect().map(r => (r.getString(0), r.getInt(1)))
-    verdicts.foreach { case (c, p) =>
-      println(s"[pipe] smoke $c: ${if (p == 1) "PASS" else "FAIL"}") }
-    stage("smoke release gate all-PASS",
-      verdicts.count(_._2 == 0).toLong, _ == 0)
-
-    println(s"[pipe] RESULT: ${if (ok) "ALL OK" else "FAILED"}")
-    spark.stop()
-    if (!ok) sys.exit(1)
   }
 }

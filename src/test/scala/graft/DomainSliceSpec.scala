@@ -84,23 +84,18 @@ class DomainSliceSpec extends AnyFunSuite {
       ("title_author", "a discriminative long title|smith", 302L)) ++
       (1 to 4).map(i => ("title_author", amb, 400L + i)))
       .toDF("key_type", "key", "work_id")
-    // BOTH physical strategies must produce identical results: the
-    // sequential broadcast-friendly tiers and the fused single-shuffle
-    // union-keyed join (see WorkIdResolver doc for the crossover)
-    Seq(WorkIdResolver.resolve _, WorkIdResolver.resolveFused _).foreach { f =>
-      val out = f(locations, idMap)
-        .select(col("loc"), col("work_id"), col("work_id_source"))
-        .as[(String, Long, String)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-      assert(out("l1") == ((100L, "doi")))
-      assert(out("l2") == ((200L, "pmid")))
-      assert(out("l3") == ((301L, "title_author")))
-      assert(out("l4")._2 == "minted" && out("l4")._1 > 6600000000L)
-      assert(out("l5")._2 == "minted")
-      assert(out("l6") == out("l7")) // same key ⇒ same minted id
-      assert(Set(out("l4")._1, out("l5")._1, out("l6")._1).size == 3)
-      assert(out("l8") == ((200L, "pmid"))) // missed doi falls through
-      assert(out("l9") == ((100L, "doi")))  // priority among multiple hits
-    }
+    val out = WorkIdResolver.resolve(locations, idMap)
+      .select(col("loc"), col("work_id"), col("work_id_source"))
+      .as[(String, Long, String)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(out("l1") == ((100L, "doi")))
+    assert(out("l2") == ((200L, "pmid")))
+    assert(out("l3") == ((301L, "title_author")))
+    assert(out("l4")._2 == "minted" && out("l4")._1 > 6600000000L)
+    assert(out("l5")._2 == "minted")
+    assert(out("l6") == out("l7")) // same key ⇒ same minted id
+    assert(Set(out("l4")._1, out("l5")._1, out("l6")._1).size == 3)
+    assert(out("l8") == ((200L, "pmid"))) // missed doi falls through
+    assert(out("l9") == ((100L, "doi")))  // priority among multiple hits
   }
 
   test("WorksBase: survivorship by priority, location ranking, OA status") {
@@ -131,21 +126,25 @@ class DomainSliceSpec extends AnyFunSuite {
   }
 
   test("TypeClassifier: first-match-wins cascade with default") {
+    import TypeClassifier.Rule
+    val rules = Seq(
+      Rule("retraction-title", col("title").startsWith("Retraction:"), "retraction"),
+      Rule("letter-native", col("raw_native_type") === "letter", "letter"),
+      Rule("dataset-native", col("raw_native_type") === "dataset", "dataset"))
     val df = Seq(
-      ("Retraction: bad paper", "journal-article", "journal", 5, false),
-      ("Regular paper", "letter", "journal", 5, false),
-      ("Data descriptor", "misc", "dataset-repository", 0, false),
-      ("On arXiv", "misc", "repository", 0, true),
-      ("Plain", "journal-article", "journal", 3, false))
-      .toDF("title", "raw_native_type", "source_type_raw", "n_refs", "is_preprint_server")
-      .withColumn("source_type", col("source_type_raw"))
-    val out = df.withColumn("wtype", TypeClassifier.classify(TypeClassifier.defaultRules))
+      ("Retraction: bad paper", "journal-article"),
+      ("Retraction: of a letter", "letter"),
+      ("Regular paper", "letter"),
+      ("Data descriptor", "dataset"),
+      ("Plain", "journal-article"))
+      .toDF("title", "raw_native_type")
+    val out = df.withColumn("wtype", TypeClassifier.classify(rules))
       .select("title", "wtype").as[(String, String)].collect().toMap
     assert(out("Retraction: bad paper") == "retraction")
+    assert(out("Retraction: of a letter") == "retraction") // first match wins
     assert(out("Regular paper") == "letter")
     assert(out("Data descriptor") == "dataset")
-    assert(out("On arXiv") == "preprint")
-    assert(out("Plain") == "article")
+    assert(out("Plain") == "article") // no match → default
   }
 
   test("AuthorMatcher: orcid tier, duplicate-orcid skip, unique tiers, minting") {
@@ -263,33 +262,6 @@ class DomainSliceSpec extends AnyFunSuite {
     assert(out.getAs[Boolean]("has_corresponding"))
   }
 
-  test("TypeClassifier.referenceRules: tiered cascade over the rich feature frame") {
-    val base = Seq(
-      // (title, raw_type, subtype, host, source_name, source_type, n_refs,
-      //  single_page, has_abstract, is_retracted, is_preprint_server, expect)
-      ("Retracted: bad", "journal-article", null, null, "nature", "journal", 10, false, true, false, false),
-      ("Fine but flagged", "journal-article", null, null, "nature", "journal", 10, false, true, true, false),
-      ("Plain", "dissertation", null, null, null, null, 0, false, false, false, false),
-      ("Plain", "journal-article", "preprint", null, null, "journal", 5, false, true, false, false),
-      ("Plain", "posted-content", null, "osf.io", null, null, 0, false, false, false, false),
-      ("Plain", "journal-article", null, null, "SSRN Electronic Journal", "journal", 0, false, false, false, false),
-      ("Plain", "journal-article", null, null, "Data in Brief", "journal", 3, false, true, false, false),
-      ("Plain", "journal-article", null, null, "bioRxiv", "repository", 0, false, true, false, true),
-      ("Plain", "journal-article", null, null, "Encyclopedia of Things", "journal", 0, false, false, false, false),
-      ("Masthead", "journal-article", null, null, "some journal", "journal", 0, true, false, false, false),
-      ("Normal paper", "journal-article", null, null, "some journal", "journal", 12, false, true, false, false))
-      .toDF("title", "raw_native_type", "subtype", "host", "source_name",
-        "source_type", "n_refs", "single_page", "has_abstract", "is_retracted",
-        "is_preprint_server")
-    val out = base.withColumn("wtype",
-        TypeClassifier.classify(TypeClassifier.referenceRules))
-      .select("source_name", "title", "wtype").collect()
-    val expected = Seq("retraction", "retraction", "dissertation", "preprint",
-      "preprint", "preprint", "data-paper", "preprint", "reference-entry",
-      "paratext", "article")
-    assert(out.map(_.getString(2)).toSeq == expected)
-  }
-
   test("LandingPageParser: error filter, signal filter, join-key ids, positional corresponding") {
     import graft.ingest.LandingPageParser
     val raw = spark.read.json(Seq(
@@ -350,8 +322,8 @@ class DomainSliceSpec extends AnyFunSuite {
 
   test("demo composed path SuperLocations→SourceMatcher: source_id " +
     "coverage parity, one attach per tier") {
-    val (_, resolved) = PipelineDemo.demoResolved(spark)
-    val attached = PipelineDemo.demoLocations(spark, resolved)
+    val (_, resolved) = DomainSliceFixture.resolved(spark)
+    val attached = DomainSliceFixture.locations(spark, resolved)
     // parity: every location row leaves the cascade with a source_id
     assert(attached.filter(col("source_id").isNull).count() == 0)
     assert(attached.count() == 4)
@@ -368,13 +340,18 @@ class DomainSliceSpec extends AnyFunSuite {
 
   test("composed nightly tail: curations → references → fulltext → ROR " +
     "sync → API builds → snapshot docs, SnapshotSmoke all-PASS gate") {
-    val (_, resolved) = PipelineDemo.demoResolved(spark)
-    val typed = PipelineDemo.demoTyped(spark, resolved)
-    val (_, refined) = PipelineDemo.demoAffiliations(spark, resolved)
-    val attached = PipelineDemo.demoLocations(spark, resolved)
-    val sdgMerged = PipelineDemo.demoSdg(spark, typed)
-    val tail = PipelineDemo.demoNightlyTail(spark, resolved, typed,
+    val (_, resolved) = DomainSliceFixture.resolved(spark)
+    val typed = DomainSliceFixture.typed(spark, resolved)
+    val (_, refined) = DomainSliceFixture.affiliations(spark, resolved)
+    val attached = DomainSliceFixture.locations(spark, resolved)
+    val sdgMerged = DomainSliceFixture.sdg(spark, typed)
+    val tail = DomainSliceFixture.nightlyTail(spark, resolved, typed,
       attached, refined, sdgMerged)
+
+    // SDG frontfill: only the eligible article reaches the classifier,
+    // and the 0.4 score floor drops its weak goal
+    assert(sdgMerged.count() == 1)
+    assert(sdgMerged.select(size(col("sdg"))).as[Int].head() == 1)
 
     // location curation: the curator's pdf replacement lands and syncs
     // the urls array; the nulled landing page disappears

@@ -37,13 +37,8 @@ class SpineExchangeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         lit(null).cast("string").as("arxiv"),
         col("ta").as("title_author")).as("merge_key"))
 
-  private val strategies = Seq(
-    "resolve" -> (WorkIdResolver.resolve _),
-    "resolveFused" -> (WorkIdResolver.resolveFused _))
-
-  private def resolved(f: (DataFrame, DataFrame) => DataFrame,
-      locs: DataFrame, idMap: DataFrame): Map[String, (Long, String)] =
-    f(locs, idMap).select(col("loc"), col("work_id"), col("work_id_source"))
+  private def resolved(locs: DataFrame, idMap: DataFrame): Map[String, (Long, String)] =
+    WorkIdResolver.resolve(locs, idMap).select(col("loc"), col("work_id"), col("work_id_source"))
       .as[(String, Long, String)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
 
   test("WorkIdResolver: an empty key map mints an id for every location") {
@@ -52,15 +47,13 @@ class SpineExchangeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       (null, null, "a long enough title for the guard|smith"),
       (null, null, "short|x"), ("10.1/b", "pm2", null))
     val empty = Seq.empty[(String, String, Long)].toDF("key_type", "key", "work_id")
-    strategies.foreach { case (name, f) =>
-      val out = resolved(f, locs, empty)
-      assert(out.size === 6, name)
-      assert(out.values.forall(_._2 == "minted"), s"$name: $out")
-      // same key, same id; five distinct keys, ids floor+1 … floor+5
-      assert(out("l0") === out("l1"), name)
-      assert(out.values.map(_._1).toSet ===
-        (1L to 5L).map(_ + graft.core.IdMinter.DefaultFloor).toSet, name)
-    }
+    val out = resolved(locs, empty)
+    assert(out.size === 6)
+    assert(out.values.forall(_._2 == "minted"), out)
+    // same key, same id; five distinct keys, ids floor+1 … floor+5
+    assert(out("l0") === out("l1"))
+    assert(out.values.map(_._1).toSet ===
+      (1L to 5L).map(_ + graft.core.IdMinter.DefaultFloor).toSet)
   }
 
   test("WorkIdResolver: a title_author key with 4 candidate ids adopts nothing") {
@@ -70,12 +63,10 @@ class SpineExchangeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val idMap = ((1 to 3).map(i => ("title_author", three, 100L + i)) ++
       (1 to 4).map(i => ("title_author", four, 200L + i)))
       .toDF("key_type", "key", "work_id")
-    strategies.foreach { case (name, f) =>
-      val out = resolved(f, locs, idMap)
-      assert(out("l0") === ((101L, "title_author")), name)
-      assert(out("l1")._2 === "minted" &&
-        out("l1")._1 > graft.core.IdMinter.DefaultFloor, name)
-    }
+    val out = resolved(locs, idMap)
+    assert(out("l0") === ((101L, "title_author")))
+    assert(out("l1")._2 === "minted" &&
+      out("l1")._1 > graft.core.IdMinter.DefaultFloor)
   }
 
   test("WorkIdResolver.resolve: the landed key map and minted ids broadcast, " +

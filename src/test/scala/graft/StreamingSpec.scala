@@ -367,4 +367,53 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed == batch && streamed.nonEmpty,
       s"streamed=${streamed.size} batch=${batch.size}")
   }
+
+  test("out-of-order micro-batches: hourly windows, sessionize and scd1 " +
+    "converge to batch") {
+    // three files split by event id, one per micro-batch: every batch
+    // spans the whole time range, so later batches fill gaps in the
+    // state the earlier ones built
+    val d = Files.createTempDirectory("graft-events-ooo").toString
+    val ev = Tables(spark, sfDir, "events")
+    (0 until 3).foreach(i => ev.filter(pmod(col("event_id"), lit(3)) === i)
+      .coalesce(1).write.mode("append").parquet(d))
+    def events(): DataFrame = Streams.readEvents(spark, d, Some(1))
+
+    val hw = Streams.hourlyWindows(events()).writeStream.format("memory")
+      .queryName("hw_ooo").outputMode("complete").start()
+    hw.processAllAvailable(); hw.stop()
+    val batchHw = ev.withColumn("tsm", expr("timestamp_micros(ts div 1000)"))
+      .groupBy(window(col("tsm"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .select(date_format(col("w.start"), "yyyy-MM-dd HH"), col("event_type"), col("n"))
+      .as[(String, String, Long)].collect().toSet
+    assert(spark.table("hw_ooo").as[(String, String, Long)].collect().toSet == batchHw)
+
+    // a batch can overcount a user's sessions until a later batch fills
+    // the gap between them, so each user's LAST emission is compared
+    val last = scala.collection.mutable.Map[Long, (Long, Long)]()
+    val sess = Streams.sessionize(
+        events().selectExpr("event_id", "ts", "user_id", "event_type", "value")
+          .as[Streams.RawEvent], 6L * 3600 * 1000000000L)
+      .writeStream.outputMode("update").foreachBatch {
+        (b: org.apache.spark.sql.Dataset[Streams.SessOut], _: Long) =>
+          b.collect().foreach(r =>
+            last(r.user_id) = (r.n_sessions, r.max_session_events))
+      }.start()
+    sess.processAllAvailable(); sess.stop()
+    val batchSess = graft.SparkEntry.queries("q25_sessionize_users")(spark, sfDir)
+      .select(col("user_id"), col("n_sessions"), col("max_session_events"))
+      .as[(Long, Long, Long)].collect().toSet
+    assert(last.map { case (u, (n, m)) => (u, n, m) }.toSet == batchSess)
+
+    val states = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    Streams.scd1Sink(events(), () => states.lastOption, next => states += next.cache())
+    assert(states.size == 3)
+    val batchScd = Scd1Upsert.latest(ev, Seq("user_id"), col("ts"),
+        Seq(col("event_id")), deleteWhen = Some(col("event_type") === "error"))
+      .select("user_id", "event_id").as[(Long, Long)].collect().toSet
+    assert(Scd1Upsert.current(states.last).select("user_id", "event_id")
+      .as[(Long, Long)].collect().toSet == batchScd)
+    states.foreach(_.unpersist())
+  }
 }

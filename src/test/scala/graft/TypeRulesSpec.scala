@@ -148,7 +148,14 @@ class TypeRulesSpec extends AnyFunSuite {
     Loc(ingest_type = "report", expect = "report"),
     Loc(title = "Plain paper", preprint_registrant = true, expect = "preprint"),
     Loc(title = "A perfectly ordinary empirical study", n_refs = 18,
-      has_abstract = true, expect = "article"))
+      has_abstract = true, expect = "article"),
+    // subtype over a journal type, a bare masthead title, a raw
+    // (non-crossref) dissertation type
+    Loc(title = "Plain", cr_type = "journal-article", cr_subtype = "preprint",
+      source_type = "journal", n_refs = 5, has_abstract = true, expect = "preprint"),
+    Loc(title = "Masthead", single_page = true, source_name = "some journal",
+      source_type = "journal", expect = "paratext"),
+    Loc(title = "Plain", raw_type = "dissertation", expect = "dissertation"))
 
   test("full cascade + fallbacks: one pinned verdict per corpus row") {
     val df = corpus.toDF().withColumnRenamed("abstract_text", "abstract")
