@@ -18,21 +18,8 @@ import org.apache.spark.sql.functions._
   *     [[FunderIngest.transform]]
   */
 object FunderConfigs {
-  import FunderIngest.nullInvestigator
-
-  private def affIds: String =
-    "array<struct<id:string,type:string,asserted_by:string>>"
-
-  private def investigator(given: Column, family: Column, orcid: Column,
-      roleStart: Column, affName: Column, affCountry: Column,
-      ids: Column): Column =
-    struct(given.as("given_name"), family.as("family_name"),
-      orcid.as("orcid"), roleStart.as("role_start"),
-      struct(affName.as("name"), affCountry.as("country"),
-        ids.as("ids")).as("affiliation"))
-
-  private def d(c: Column): Column =
-    to_date(try_to_timestamp(c, lit("yyyy-MM-dd")))
+  import FunderIngest.{affIds, d, investigator, likeCascade,
+    nullInvestigator, nzt}
 
   // ---------------------------------------------------------------
   // Single-funder cross-join archetype
@@ -44,20 +31,13 @@ object FunderConfigs {
     * from the source row. */
   def kaken: FunderIngestConfig = {
     val cat = lower(col("category"))
-    val fundingType =
-      when(cat.like("%fellow%"), "fellowship")
-        .when(cat.like("%young%"), "fellowship")
-        .when(cat.like("%early-career%"), "fellowship")
-        .when(cat.like("%encouragement%"), "fellowship")
-        .when(cat.like("%start%"), "fellowship")
-        .when(cat.like("%specially promoted%"), "research")
-        .when(cat.like("%scientific research%"), "research")
-        .when(cat.like("%challenging%"), "research")
-        .when(cat.like("%transformative%"), "research")
-        .when(cat.like("%pioneering%"), "research")
-        .when(cat.like("%international%"), "research")
-        .when(cat.like("%publication%"), "other")
-        .otherwise("grant")
+    val fundingType = likeCascade(cat, Seq(
+      "fellow" -> "fellowship", "young" -> "fellowship",
+      "early-career" -> "fellowship", "encouragement" -> "fellowship",
+      "start" -> "fellowship", "specially promoted" -> "research",
+      "scientific research" -> "research", "challenging" -> "research",
+      "transformative" -> "research", "pioneering" -> "research",
+      "international" -> "research", "publication" -> "other"), "grant")
     val nridIds = when(col("pi_nrid").isNotNull,
       array(struct(
         concat(lit("https://nrid.nii.ac.jp/nrid/"), col("pi_nrid")).as("id"),
@@ -65,11 +45,10 @@ object FunderConfigs {
       .otherwise(lit(null).cast(affIds))
     val lead = when(col("pi_family_name").isNotNull,
       investigator(col("pi_given_name"), col("pi_family_name"),
-        lit(null).cast("string"), lit(null).cast("date"),
         coalesce(col("institution"), col("pi_affiliation")), lit("Japan"),
-        nridIds))
-    FunderIngestConfig(
-      funderId = 4320334764L, provenance = "kaken", priority = 10,
+        ids = nridIds))
+    FunderIngestConfig(4320334764L, AwardFieldMap(
+      provenance = "kaken", priority = 10,
       mintKey = lower(col("project_id")),
       funderAwardId = col("project_id"),
       displayName = col("title"), description = col("abstract"),
@@ -80,9 +59,8 @@ object FunderConfigs {
       endYear = year(d(col("end_date"))),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("project_id").isNotNull &&
-        trim(col("project_id")) =!= "")
+        trim(col("project_id")) =!= ""))
   }
 
   /** DFG / GEPRIS (CreateDFGAwards.ipynb cell 7, ~144K projects):
@@ -90,35 +68,26 @@ object FunderConfigs {
     * fallbacks, institution-only lead investigator. */
   def dfg: FunderIngestConfig = {
     val prog = lower(col("program_type"))
-    val fundingType =
-      when(prog.like("%emmy noether%"), "fellowship")
-        .when(prog.like("%heisenberg%"), "fellowship")
-        .when(prog.like("%walter benjamin%"), "fellowship")
-        .when(prog.like("%research fellowship%"), "fellowship")
-        .when(prog.like("%stipend%"), "fellowship")
-        .when(prog.like("%graduiertenkolleg%"), "training")
-        .when(prog.like("%research training%"), "training")
-        .when(prog.like("%collaborative research%"), "research")
-        .when(prog.like("%sonderforschungsbereich%"), "research")
-        .when(prog.like("%priority programme%"), "research")
-        .when(prog.like("%schwerpunktprogramm%"), "research")
-        .when(prog.like("%forschergruppe%"), "research")
-        .when(prog.like("%research unit%"), "research")
-        .when(prog.like("%cluster%"), "research")
-        .when(prog.like("%excellence%"), "research")
-        .when(prog.like("%infrastructure%"), "infrastructure")
-        .when(prog.like("%equipment%"), "infrastructure")
-        .otherwise("grant")
+    val fundingType = likeCascade(prog, Seq(
+      "emmy noether" -> "fellowship", "heisenberg" -> "fellowship",
+      "walter benjamin" -> "fellowship", "research fellowship" -> "fellowship",
+      "stipend" -> "fellowship", "graduiertenkolleg" -> "training",
+      "research training" -> "training", "collaborative research" -> "research",
+      "sonderforschungsbereich" -> "research",
+      "priority programme" -> "research", "schwerpunktprogramm" -> "research",
+      "forschergruppe" -> "research", "research unit" -> "research",
+      "cluster" -> "research", "excellence" -> "research",
+      "infrastructure" -> "infrastructure",
+      "equipment" -> "infrastructure"), "grant")
     val sd = coalesce(d(col("start_date")),
       d(concat(col("start_year"), lit("-01-01"))))
     val ed = coalesce(d(col("end_date")),
       d(concat(col("end_year"), lit("-12-31"))))
     val lead = when(col("lead_inst").isNotNull && trim(col("lead_inst")) =!= "",
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("lead_inst"), lit("Germany"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320879L, provenance = "gepris", priority = 18,
+        col("lead_inst"), lit("Germany")))
+    FunderIngestConfig(4320320879L, AwardFieldMap(
+      provenance = "gepris", priority = 18,
       mintKey = lower(col("project_id")),
       funderAwardId = col("project_id"),
       displayName = col("title"), description = col("description"),
@@ -132,9 +101,8 @@ object FunderConfigs {
       leadInvestigator = lead,
       landingPageUrl = concat(lit("https://gepris.dfg.de/gepris/projekt/"),
         col("project_id")),
-      doi = lit(null).cast("string"),
       rowFilter = col("project_id").isNotNull &&
-        trim(col("project_id").cast("string")) =!= "")
+        trim(col("project_id").cast("string")) =!= ""))
   }
 
   /** SSHRC open data (CreateSSHRCAwards.ipynb cell 6, ~114K): CAD,
@@ -143,51 +111,36 @@ object FunderConfigs {
     * portal-level landing URL. */
   def sshrc: FunderIngestConfig = {
     val prog = lower(col("program"))
-    val fundingType =
-      when(prog.like("%doctoral%"), "fellowship")
-        .when(prog.like("%postdoctoral%"), "fellowship")
-        .when(prog.like("%fellowship%"), "fellowship")
-        .when(prog.like("%scholarship%"), "fellowship")
-        .when(prog.like("%vanier%"), "fellowship")
-        .when(prog.like("%banting%"), "fellowship")
-        .when(prog.like("%talent%"), "fellowship")
-        .when(prog.like("%canada research chair%"), "fellowship")
-        .when(prog.like("%partnership%"), "research")
-        .when(prog.like("%insight%"), "research")
-        .when(prog.like("%connection%"), "research")
-        .when(prog.like("%aid%"), "research")
-        .when(prog.like("%savoir%"), "research")
-        .when(prog.like("%sshrc %grant%"), "grant")
-        .when(prog.like("%general research%"), "research")
-        .when(prog.like("%major collaborative%"), "research")
-        .when(prog.like("%standard research%"), "research")
-        .when(prog.like("%strategic%"), "research")
-        .otherwise("grant")
+    val fundingType = likeCascade(prog, Seq(
+      "doctoral" -> "fellowship", "postdoctoral" -> "fellowship",
+      "fellowship" -> "fellowship", "scholarship" -> "fellowship",
+      "vanier" -> "fellowship", "banting" -> "fellowship",
+      "talent" -> "fellowship", "canada research chair" -> "fellowship",
+      "partnership" -> "research", "insight" -> "research",
+      "connection" -> "research", "aid" -> "research", "savoir" -> "research",
+      "sshrc %grant" -> "grant", "general research" -> "research",
+      "major collaborative" -> "research", "standard research" -> "research",
+      "strategic" -> "research"), "grant")
     val lead = when(col("applicant_name").isNotNull &&
         trim(col("applicant_name")) =!= "",
       investigator(lit(null).cast("string"), trim(col("applicant_name")),
-        lit(null).cast("string"), lit(null).cast("date"),
-        trim(col("institution")), lit("Canada"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320334617L, provenance = "sshrc_opendata", priority = 5,
+        trim(col("institution")), lit("Canada")))
+    FunderIngestConfig(4320334617L, AwardFieldMap(
+      provenance = "sshrc_opendata", priority = 5,
       mintKey = lower(trim(col("file_number"))),
       funderAwardId = trim(col("file_number")),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("double"), currency = lit("CAD"),
       fundingType = fundingType, funderScheme = col("program"),
       startDate = when(col("start_year").isNotNull,
         d(concat(col("start_year").try_cast("int").cast("string"),
           lit("-04-01")))),
-      endDate = lit(null).cast("date"),
       startYear = col("start_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = lit("https://open.canada.ca/data/en/dataset/" +
         "b4e2b302-9bc6-4b33-b880-6496f8cef0f1"),
-      doi = lit(null).cast("string"),
       rowFilter = col("file_number").isNotNull &&
-        trim(col("file_number")) =!= "")
+        trim(col("file_number")) =!= ""))
   }
 
   /** SNSF Data Portal (CreateSNSFAwards.ipynb cell 6, ~90K): CHF,
@@ -223,12 +176,10 @@ object FunderConfigs {
       .otherwise(col("responsible_applicant"))
     val lead = when(col("responsible_applicant").isNotNull && nm =!= "",
       investigator(given, family,
-        lit(null).cast("string"), lit(null).cast("date"),
         coalesce(col("research_institution"), col("institute")),
-        coalesce(col("institute_country"), lit("Switzerland")),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320924L, provenance = "snsf", priority = 14,
+        coalesce(col("institute_country"), lit("Switzerland"))))
+    FunderIngestConfig(4320320924L, AwardFieldMap(
+      provenance = "snsf", priority = 14,
       mintKey = lower(col("grant_number")),
       funderAwardId = col("grant_number"),
       displayName = coalesce(col("title_english"), col("title")),
@@ -241,9 +192,8 @@ object FunderConfigs {
       leadInvestigator = lead,
       landingPageUrl = concat(lit("https://data.snf.ch/grants/grant/"),
         col("grant_number")),
-      doi = lit(null).cast("string"),
       rowFilter = col("grant_number").isNotNull &&
-        trim(col("grant_number")) =!= "")
+        trim(col("grant_number")) =!= ""))
   }
 
   /** CIHR open data (CreateCIHRAwards.ipynb cell 7, ~82K): CAD,
@@ -282,11 +232,9 @@ object FunderConfigs {
     val lead = when(col("family_name").isNotNull &&
         trim(col("family_name")) =!= "",
       investigator(trim(col("first_name")), trim(col("family_name")),
-        lit(null).cast("string"), sd,
-        trim(col("research_institution_name")), lit("Canada"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320334506L, provenance = "cihr_opendata", priority = 7,
+        trim(col("research_institution_name")), lit("Canada"), roleStart = sd))
+    FunderIngestConfig(4320334506L, AwardFieldMap(
+      provenance = "cihr_opendata", priority = 7,
       mintKey = lower(trim(col("funding_reference_number"))),
       funderAwardId = trim(col("funding_reference_number")),
       displayName = col("application_title"),
@@ -301,9 +249,8 @@ object FunderConfigs {
       leadInvestigator = lead,
       landingPageUrl = lit("https://open.canada.ca/data/en/dataset/" +
         "49edb1d7-5cb4-4fa7-897c-515d1aad5da3"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funding_reference_number").isNotNull &&
-        trim(col("funding_reference_number")) =!= "")
+        trim(col("funding_reference_number")) =!= ""))
   }
 
   /** NSF Award Search (CreateNSFAwards.ipynb cell 8, 1960-present):
@@ -313,19 +260,15 @@ object FunderConfigs {
     * constant below, which the registry precheck re-asserts. */
   def nsf: FunderIngestConfig = {
     val instr = lower(col("awd_istr_txt"))
-    val fundingType =
-      when(instr.like("%fellowship%"), "fellowship")
-        .when(instr.like("%cooperative%"), "cooperative_agreement")
-        .when(instr.like("%contract%"), "contract")
-        .when(instr.like("%continuing%"), "grant")
-        .when(instr.like("%standard%"), "grant")
-        .otherwise("grant")
+    val fundingType = likeCascade(instr, Seq(
+      "fellowship" -> "fellowship", "cooperative" -> "cooperative_agreement",
+      "contract" -> "contract", "continuing" -> "grant",
+      "standard" -> "grant"), "grant")
     val lead = when(col("pi_last_name").isNotNull,
-      investigator(col("pi_first_name"), col("pi_last_name"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("inst_name"), col("inst_country_name"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306076L, provenance = "nsf_award_search", priority = 3,
+      investigator(col("pi_first_name"), col("pi_last_name"), col("inst_name"),
+        col("inst_country_name")))
+    FunderIngestConfig(4320306076L, AwardFieldMap(
+      provenance = "nsf_award_search", priority = 3,
       mintKey = lower(col("awd_id")),
       funderAwardId = lower(col("awd_id")),
       displayName = col("awd_titl_txt"),
@@ -339,8 +282,7 @@ object FunderConfigs {
       landingPageUrl = concat(
         lit("https://www.nsf.gov/awardsearch/showAward?AWD_ID="),
         col("awd_id")),
-      doi = lit(null).cast("string"),
-      rowFilter = col("awd_id").isNotNull && trim(col("awd_id")) =!= "")
+      rowFilter = col("awd_id").isNotNull && trim(col("awd_id")) =!= ""))
   }
 
   /** DOD via USAspending (CreateDODAwards.ipynb cell 8, ~78K): the
@@ -458,12 +400,9 @@ object FunderConfigs {
     val family = when(hasComma, trim(element_at(split(firstPi, ","), 1)))
       .otherwise(trim(firstPi))
     val lead = when(firstPi.isNotNull,
-      investigator(given, family,
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("org_name"), col("org_country"), lit(null).cast(affIds)))
-    ResolvedFunderIngestConfig(
+      investigator(given, family, col("org_name"), col("org_country")))
+    ResolvedFunderIngestConfig(resolved, AwardFieldMap(
       provenance = "nih_exporter", priority = 3,
-      resolvedFunderId = resolved,
       mintKey = lower(col("full_project_num")),
       funderAwardId = lower(col("full_project_num")),
       displayName = col("project_title"),
@@ -478,9 +417,8 @@ object FunderConfigs {
       landingPageUrl = concat(
         lit("https://reporter.nih.gov/project-details/"),
         col("application_id")),
-      doi = lit(null).cast("string"),
       rowFilter = col("full_project_num").isNotNull &&
-        trim(col("full_project_num")) =!= "")
+        trim(col("full_project_num")) =!= ""))
   }
 
   /** GTR's grant-reference prefix → council map
@@ -545,11 +483,9 @@ object FunderConfigs {
     val futureDated = year(col("start_date")) > currentYear + 1
     val lead = when(col("pi_family_name").isNotNull,
       investigator(col("pi_given_name"), col("pi_family_name"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("lead_org_name"), lit("United Kingdom"), lit(null).cast(affIds)))
-    ResolvedFunderIngestConfig(
+        col("lead_org_name"), lit("United Kingdom")))
+    ResolvedFunderIngestConfig(resolved, AwardFieldMap(
       provenance = "gateway_to_research", priority = 30,
-      resolvedFunderId = resolved,
       mintKey = lower(ref),
       funderAwardId = ref,
       displayName = col("title"), description = col("abstract"),
@@ -564,8 +500,7 @@ object FunderConfigs {
       leadInvestigator = lead,
       landingPageUrl = concat(lit("https://gtr.ukri.org/projects?ref="),
         ref),
-      doi = lit(null).cast("string"),
-      rowFilter = ref.isNotNull)
+      rowFilter = ref.isNotNull))
   }
 
   /** The ERC inline funder lookup (CreateERCAwards.ipynb cell 7's
@@ -595,22 +530,15 @@ object FunderConfigs {
         "HORIZON" -> 4320338453L)), col("framework_programme")),
       lit(4320334678L))
     val fs = upper(col("funding_scheme"))
-    val fundingType =
-      when(fs.like("%STG%"), "fellowship")
-        .when(fs.like("%COG%"), "fellowship")
-        .when(fs.like("%ADG%"), "fellowship")
-        .when(fs.like("%SYG%"), "research")
-        .when(fs.like("%POC%"), "commercialization")
-        .when(fs.like("%LVG%"), "travel")
-        .otherwise("research")
+    val fundingType = likeCascade(fs, Seq(
+      "STG" -> "fellowship", "COG" -> "fellowship", "ADG" -> "fellowship",
+      "SYG" -> "research", "POC" -> "commercialization",
+      "LVG" -> "travel"), "research")
     val lead = when(col("host_institution").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("host_institution"), col("host_country"),
-        lit(null).cast(affIds)))
-    ResolvedFunderIngestConfig(
+        col("host_institution"), col("host_country")))
+    ResolvedFunderIngestConfig(resolved, AwardFieldMap(
       provenance = "erc", priority = 21,
-      resolvedFunderId = resolved,
       mintKey = lower(col("project_id")),
       funderAwardId = col("project_id"),
       displayName = col("title"), description = col("abstract"),
@@ -627,7 +555,7 @@ object FunderConfigs {
       doi = when(col("grant_doi").isNotNull && trim(col("grant_doi")) =!= "",
         col("grant_doi")),
       rowFilter = col("project_id").isNotNull &&
-        trim(col("project_id")) =!= "")
+        trim(col("project_id")) =!= ""))
   }
 
   /** Gates Foundation committed grants (CreateGatesAwards.ipynb
@@ -642,11 +570,9 @@ object FunderConfigs {
       .otherwise(col("purpose"))
     val lead = when(col("grantee_name").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("grantee_name"), col("grantee_country"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306137L, provenance = "gates_foundation",
+        col("grantee_name"), col("grantee_country")))
+    FunderIngestConfig(4320306137L, AwardFieldMap(
+      provenance = "gates_foundation",
       priority = 4,
       mintKey = lower(col("grant_id")),
       funderAwardId = col("grant_id"),
@@ -671,8 +597,7 @@ object FunderConfigs {
       landingPageUrl = concat(
         lit("https://www.gatesfoundation.org/about/committed-grants?q="),
         col("grant_id")),
-      doi = lit(null).cast("string"),
-      rowFilter = col("grant_id").isNotNull && trim(col("grant_id")) =!= "")
+      rowFilter = col("grant_id").isNotNull && trim(col("grant_id")) =!= ""))
   }
 
   /** BMBF / Förderkatalog (CreateBMBFAwards.ipynb cell 8, ~46K,
@@ -688,25 +613,19 @@ object FunderConfigs {
     val lead = when(col("zuwendungsempfaenger").isNotNull &&
         trim(col("zuwendungsempfaenger")) =!= "",
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("zuwendungsempfaenger"),
-        coalesce(col("staat"), lit("Germany")), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320321114L, provenance = "foerderkatalog",
+        col("zuwendungsempfaenger"), coalesce(col("staat"), lit("Germany"))))
+    FunderIngestConfig(4320321114L, AwardFieldMap(
+      provenance = "foerderkatalog",
       priority = 36,
       mintKey = lower(col("fkz")),
       funderAwardId = col("fkz"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("double"),
       currency = coalesce(col("currency"), lit("EUR")),
-      fundingType = when(fa.like("%stipend%"), "fellowship")
-        .when(fa.like("%ausbildung%"), "training")
-        .when(fa.like("%infrastruktur%"), "infrastructure")
-        .when(fa.like("%zuwendung%"), "grant")
-        .when(fa.like("%zuschuss%"), "grant")
-        .when(fa.like("%darlehen%"), "grant")
-        .otherwise("grant"),
+      fundingType = likeCascade(fa, Seq(
+        "stipend" -> "fellowship", "ausbildung" -> "training",
+        "infrastruktur" -> "infrastructure", "zuwendung" -> "grant",
+        "zuschuss" -> "grant", "darlehen" -> "grant"), "grant"),
       funderScheme = col("foerderprofil"),
       startDate = sd, endDate = d(col("end_date")),
       startYear = when(futureDated, lit(null).cast("int"))
@@ -715,8 +634,7 @@ object FunderConfigs {
         .otherwise(year(d(col("end_date")))),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("fkz").isNotNull && trim(col("fkz")) =!= "")
+      rowFilter = col("fkz").isNotNull && trim(col("fkz")) =!= ""))
   }
 
   /** CONAHCYT / SECIHTI SNII appointments (CreateCONAHCYTAwards.ipynb
@@ -736,15 +654,10 @@ object FunderConfigs {
         .when(col("institution").isNotNull,
           concat(lit("SNII appointment at "), col("institution"), lit(".")))
         .otherwise("SNII appointment.")
-    val lead = struct(
-      col("given_name").as("given_name"),
-      col("family_name").as("family_name"),
-      lit(null).cast("string").as("orcid"),
-      d(col("start_date")).as("role_start"),
-      struct(col("institution").as("name"), lit("MX").as("country"),
-        lit(null).cast(affIds).as("ids")).as("affiliation"))
-    FunderIngestConfig(
-      funderId = 4320321739L, provenance = "conahcyt_snii_ckan",
+    val lead = investigator(col("given_name"), col("family_name"),
+      col("institution"), lit("MX"), roleStart = d(col("start_date")))
+    FunderIngestConfig(4320321739L, AwardFieldMap(
+      provenance = "conahcyt_snii_ckan",
       priority = 83,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -761,9 +674,8 @@ object FunderConfigs {
       endYear = substring(col("end_date"), 1, 4).try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("cvu").isNotNull && col("snii_level").isNotNull)
+        col("cvu").isNotNull && col("snii_level").isNotNull))
   }
 
   /** ANID Chile (CreateANIDAwards.ipynb cell 7, ~47K, priority 35):
@@ -783,26 +695,18 @@ object FunderConfigs {
       lit(null).cast("string").as("orcid"),
       lit(null).cast("date").as("role_start"),
       aff.as("affiliation")))
-      .when(col("institution").isNotNull, struct(
-        lit(null).cast("string").as("given_name"),
-        lit(null).cast("string").as("family_name"),
-        lit(null).cast("string").as("orcid"),
-        lit(null).cast("date").as("role_start"),
-        struct(col("institution").as("name"), lit("Chile").as("country"),
-          lit(null).cast(affIds).as("ids")).as("affiliation")))
-    FunderIngestConfig(
-      funderId = 4320331146L, provenance = "anid_github", priority = 35,
+      .when(col("institution").isNotNull, investigator(lit(null).cast("string"),
+        lit(null).cast("string"), col("institution"), lit("Chile")))
+    FunderIngestConfig(4320331146L, AwardFieldMap(
+      provenance = "anid_github", priority = 35,
       mintKey = lower(col("project_code")),
       funderAwardId = col("project_code"),
       displayName = when(trim(col("title")) =!= "", trim(col("title"))),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("double"), currency = lit("CLP"),
-      fundingType = when(prog.like("%POSTDOC%"), "fellowship")
-        .when(prog.like("%DOCTORADO%"), "fellowship")
-        .when(prog.like("%BECAS%"), "fellowship")
-        .when(prog.like("%EQUIPAMIENTO%"), "equipment")
-        .when(prog.like("%INFRAESTRUCTURA%"), "infrastructure")
-        .otherwise("research"),
+      fundingType = likeCascade(prog, Seq(
+        "POSTDOC" -> "fellowship", "DOCTORADO" -> "fellowship",
+        "BECAS" -> "fellowship", "EQUIPAMIENTO" -> "equipment",
+        "INFRAESTRUCTURA" -> "infrastructure"), "research"),
       funderScheme = when(col("instrument").isNotNull,
         concat(coalesce(col("program"), lit("")), lit(" - "),
           col("instrument"))).otherwise(col("program")),
@@ -814,9 +718,8 @@ object FunderConfigs {
       endYear = col("end_year").try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("source_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("project_code").isNotNull &&
-        trim(col("project_code")) =!= "")
+        trim(col("project_code")) =!= ""))
   }
 
   /** Nobel's category → awarding-body map (CreateNobelAwards.ipynb
@@ -846,10 +749,10 @@ object FunderConfigs {
       .otherwise(amt)
     val awarded = coalesce(d(col("date_awarded")),
       d(concat(col("award_year"), lit("-12-10"))))
-    ResolvedFunderIngestConfig(
+    val resolved = element_at(typedlit(nobelCategoryFunderMap),
+      col("category_code"))
+    ResolvedFunderIngestConfig(resolved, AwardFieldMap(
       provenance = "nobelprize_api", priority = 42,
-      resolvedFunderId = element_at(typedlit(nobelCategoryFunderMap),
-        col("category_code")),
       mintKey = concat(lit("nobel:"), col("category_code"), lit(":"),
         col("award_year"), lit(":"), col("laureate_id")),
       funderAwardId = concat(col("category_code"), lit("-"),
@@ -863,19 +766,13 @@ object FunderConfigs {
       startDate = awarded, endDate = awarded,
       startYear = col("award_year").try_cast("int"),
       endYear = col("award_year").try_cast("int"),
-      leadInvestigator = struct(
-        col("laureate_given_name").as("given_name"),
-        col("laureate_family_name").as("family_name"),
-        lit(null).cast("string").as("orcid"),
-        lit(null).cast("date").as("role_start"),
-        struct(col("affiliation_name").as("name"),
-          col("affiliation_country").as("country"),
-          lit(null).cast(affIds).as("ids")).as("affiliation")),
+      leadInvestigator = investigator(col("laureate_given_name"),
+        col("laureate_family_name"), col("affiliation_name"),
+        col("affiliation_country")),
       landingPageUrl = concat(lit("https://www.nobelprize.org/prizes/"),
         col("category_code"), lit("/"), col("award_year"),
         lit("/summary/")),
-      doi = lit(null).cast("string"),
-      rowFilter = col("laureate_id").isNotNull)
+      rowFilter = col("laureate_id").isNotNull))
   }
 
   /** GrantConnect's agency → funder map (CreateGrantConnectAwards
@@ -965,29 +862,22 @@ object FunderConfigs {
     val lead = when(recipient.isNotNull && recipient =!= "" &&
         !upper(recipient).isin("ABN EXEMPT", "CONFIDENTIAL", "WITHHELD",
           "N/A"),
-      struct(lit(null).cast("string").as("given_name"),
-        lit(null).cast("string").as("family_name"),
-        lit(null).cast("string").as("orcid"),
-        lit(null).cast("date").as("role_start"),
-        struct(recipient.as("name"),
-          col("recipient_country").as("country"),
-          lit(null).cast(affIds).as("ids")).as("affiliation")))
+      investigator(lit(null).cast("string"), lit(null).cast("string"),
+        recipient, col("recipient_country")))
     def d10(c: Column) = d(substring(c, 1, 10))
-    ResolvedFunderIngestConfig(
+    val resolved = coalesce(
+      element_at(typedlit(grantConnectAgencyMap), col("agency")),
+      lit(4320315885L))
+    ResolvedFunderIngestConfig(resolved, AwardFieldMap(
       provenance = "grantconnect", priority = 415,
-      resolvedFunderId = coalesce(
-        element_at(typedlit(grantConnectAgencyMap), col("agency")),
-        lit(4320315885L)),
       mintKey = lower(col("ga_id")),
       funderAwardId = col("ga_id"),
       displayName = title,
       description = when(trim(col("purpose")) =!= "", trim(col("purpose"))),
       amount = col("value_aud").try_cast("double"), currency = lit("AUD"),
-      fundingType = when(lower(col("grant_program")).like("%fellowship%"),
-        "fellowship")
-        .when(lower(col("grant_program")).like("%scholarship%"),
-          "fellowship")
-        .otherwise("research"),
+      fundingType = likeCascade(lower(col("grant_program")), Seq(
+        "fellowship" -> "fellowship", "scholarship" -> "fellowship"),
+        "research"),
       funderScheme = when(trim(col("grant_program")) =!= "",
         trim(col("grant_program"))),
       startDate = d10(col("start_date")), endDate = d10(col("end_date")),
@@ -997,9 +887,8 @@ object FunderConfigs {
       landingPageUrl = concat(
         lit("https://www.grants.gov.au/Search/KeywordSearch?keyword="),
         col("ga_id")),
-      doi = lit(null).cast("string"),
       rowFilter = grantConnectScope && col("ga_id").isNotNull &&
-        trim(col("ga_id")) =!= "")
+        trim(col("ga_id")) =!= ""))
   }
 
   /** HHS TAGGS obligation-action rollup (CreateHHSTaggsAwards.ipynb
@@ -1060,23 +949,20 @@ object FunderConfigs {
     * [[hhsTaggsRollup]] output — OPDIV resolves the real funder,
     * positive obligation sums only, no PI/landing/description in the
     * export by design. */
-  def hhsTaggs: ResolvedFunderIngestConfig = ResolvedFunderIngestConfig(
-    provenance = "hhs_taggs", priority = 417,
-    resolvedFunderId = element_at(typedlit(hhsTaggsOpdivMap), col("opdiv")),
-    mintKey = lower(col("award_number")),
-    funderAwardId = col("award_number"),
-    displayName = col("award_title"),
-    description = lit(null).cast("string"),
-    amount = when(col("total_obligated") > 0, col("total_obligated")),
-    currency = lit("USD"),
-    fundingType = lit("grant"),
-    funderScheme = col("assistance_listing"),
-    startDate = col("start_dt"), endDate = lit(null).cast("date"),
-    startYear = year(col("start_dt")), endYear = lit(null).cast("int"),
-    leadInvestigator = FunderIngest.nullInvestigator,
-    landingPageUrl = lit(null).cast("string"),
-    doi = lit(null).cast("string"),
-    rowFilter = col("award_number").isNotNull)
+  def hhsTaggs: ResolvedFunderIngestConfig =
+    ResolvedFunderIngestConfig(
+      element_at(typedlit(hhsTaggsOpdivMap), col("opdiv")), AwardFieldMap(
+      provenance = "hhs_taggs", priority = 417,
+      mintKey = lower(col("award_number")),
+      funderAwardId = col("award_number"),
+      displayName = col("award_title"),
+      amount = when(col("total_obligated") > 0, col("total_obligated")),
+      currency = lit("USD"),
+      fundingType = lit("grant"),
+      funderScheme = col("assistance_listing"),
+      startDate = col("start_dt"),
+      startYear = year(col("start_dt")),
+      rowFilter = col("award_number").isNotNull))
 
   val swecrisFunderIds: Seq[Long] = Seq(4320321031L, 4320322579L,
     4320321759L, 4320316858L, 4320325984L)
@@ -1093,17 +979,12 @@ object FunderConfigs {
     def nz(c: Column) = when(trim(c) =!= "", trim(c))
     val lead = when(col("pi_family_name").isNotNull &&
         trim(col("pi_family_name")) =!= "",
-      struct(nz(col("pi_given_name")).as("given_name"),
-        trim(col("pi_family_name")).as("family_name"),
-        nz(col("pi_orcid")).as("orcid"),
-        lit(null).cast("date").as("role_start"),
-        struct(nz(col("coordinating_organisation")).as("name"),
-          lit("Sweden").as("country"),
-          lit(null).cast("array<struct<id:string,type:string," +
-            "asserted_by:string>>").as("ids")).as("affiliation")))
-    ResolvedFunderIngestConfig(
+      investigator(nz(col("pi_given_name")), trim(col("pi_family_name")),
+        nz(col("coordinating_organisation")), lit("Sweden"),
+        orcid = nz(col("pi_orcid"))))
+    val resolved = col("openalex_funder_id").try_cast("bigint")
+    ResolvedFunderIngestConfig(resolved, AwardFieldMap(
       provenance = "swecris", priority = 437,
-      resolvedFunderId = col("openalex_funder_id").try_cast("bigint"),
       mintKey = lower(stripped),
       funderAwardId = stripped,
       displayName = coalesce(nz(col("title_english")), nz(col("title"))),
@@ -1112,12 +993,10 @@ object FunderConfigs {
       amount = when(col("amount").try_cast("double") =!= 0,
         col("amount").try_cast("double")),
       currency = lit("SEK"),
-      fundingType = when(ta.like("%fellow%"), "fellowship")
-        .when(ta.like("%stipend%"), "fellowship")
-        .when(ta.like("%position%"), "fellowship")
-        .when(ta.like("%infrastructure%"), "infrastructure")
-        .when(ta.like("%project%"), "research")
-        .otherwise("grant"),
+      fundingType = likeCascade(ta, Seq(
+        "fellow" -> "fellowship", "stipend" -> "fellowship",
+        "position" -> "fellowship", "infrastructure" -> "infrastructure",
+        "project" -> "research"), "grant"),
       funderScheme = nz(col("type_of_award")),
       startDate = d(col("start_date")), endDate = d(col("end_date")),
       startYear = year(d(col("start_date"))),
@@ -1125,9 +1004,8 @@ object FunderConfigs {
       leadInvestigator = lead,
       landingPageUrl = concat(lit("https://www.vr.se/swecris#/project/"),
         trim(col("project_id"))),
-      doi = lit(null).cast("string"),
       rowFilter = col("project_id").isNotNull &&
-        trim(col("project_id")) =!= "")
+        trim(col("project_id")) =!= ""))
   }
 
   /** The EC inline funder lookup (CreateEuropeanCommissionAwards
@@ -1180,12 +1058,9 @@ object FunderConfigs {
         .otherwise("grant")
     val lead = when(col("coordinator_name").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("coordinator_name"), col("coordinator_country"),
-        lit(null).cast(affIds)))
-    ResolvedFunderIngestConfig(
+        col("coordinator_name"), col("coordinator_country")))
+    ResolvedFunderIngestConfig(resolved, AwardFieldMap(
       provenance = "cordis", priority = 27,
-      resolvedFunderId = resolved,
       mintKey = lower(col("cordis_project_id")),
       funderAwardId = col("cordis_project_id"),
       displayName = col("title"), description = col("objective"),
@@ -1206,7 +1081,7 @@ object FunderConfigs {
         !coalesce(upper(col("funding_scheme")), lit(""))
           .like("ERC-%") &&
         !coalesce(upper(col("funding_scheme")), lit(""))
-          .like("HORIZON-ERC%"))
+          .like("HORIZON-ERC%")))
   }
 
   // ---------------------------------------------------------------
@@ -1223,25 +1098,16 @@ object FunderConfigs {
     * first-word fallbacks otherwise). */
   def wellcome: FunderIngestConfig = {
     val gp = lower(col("grant_programme"))
-    val fundingType =
-      when(gp.like("%phd%"), "fellowship")
-        .when(gp.like("%studentship%"), "fellowship")
-        .when(gp.like("%fellowship%"), "fellowship")
-        .when(gp.like("%scholarship%"), "fellowship")
-        .when(gp.like("%training%"), "training")
-        .when(gp.like("%career%"), "fellowship")
-        .when(gp.like("%investigator%"), "research")
-        .when(gp.like("%project%"), "research")
-        .when(gp.like("%strategic%"), "research")
-        .when(gp.like("%collaborative%"), "research")
-        .when(gp.like("%seed%"), "research")
-        .when(gp.like("%discovery%"), "research")
-        .when(gp.like("%equipment%"), "infrastructure")
-        .when(gp.like("%capital%"), "infrastructure")
-        .when(gp.like("%building%"), "infrastructure")
-        .when(gp.like("%open access%"), "other")
-        .when(gp.like("%vacation%"), "fellowship")
-        .otherwise("grant")
+    val fundingType = likeCascade(gp, Seq(
+      "phd" -> "fellowship", "studentship" -> "fellowship",
+      "fellowship" -> "fellowship", "scholarship" -> "fellowship",
+      "training" -> "training", "career" -> "fellowship",
+      "investigator" -> "research", "project" -> "research",
+      "strategic" -> "research", "collaborative" -> "research",
+      "seed" -> "research", "discovery" -> "research",
+      "equipment" -> "infrastructure", "capital" -> "infrastructure",
+      "building" -> "infrastructure", "open access" -> "other",
+      "vacation" -> "fellowship"), "grant")
     val nm = col("lead_applicant_name")
     val sn = col("applicant_surname")
     val given =
@@ -1252,12 +1118,10 @@ object FunderConfigs {
         .when(instr(nm, ",") > 0,
           trim(nm.substr(instr(nm, ",") + 1, length(nm))))
         .when(instr(nm, " ") > 0, trim(nm.substr(lit(1), instr(nm, " ") - 1)))
-    val lead = when(nm.isNotNull, investigator(
-      given, sn, lit(null).cast("string"), lit(null).cast("date"),
-      col("recipient_org_name"), col("recipient_orgcountry"),
-      lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320311904L, provenance = "wellcome_trust", priority = 22,
+    val lead = when(nm.isNotNull, investigator(given, sn,
+      col("recipient_org_name"), col("recipient_orgcountry")))
+    FunderIngestConfig(4320311904L, AwardFieldMap(
+      provenance = "wellcome_trust", priority = 22,
       mintKey = lower(col("grant_ref")),
       funderAwardId = col("grant_ref"),
       displayName = col("title"), description = col("description"),
@@ -1270,9 +1134,8 @@ object FunderConfigs {
       leadInvestigator = lead,
       landingPageUrl = concat(lit("https://wellcome.org/grant-funding/" +
         "people-and-projects/grants-awarded?q="), col("grant_ref")),
-      doi = lit(null).cast("string"),
       rowFilter = col("grant_ref").isNotNull &&
-        trim(col("grant_ref")) =!= "" && !col("grant_ref").like("360G-%"))
+        trim(col("grant_ref")) =!= "" && !col("grant_ref").like("360G-%")))
   }
 
   /** The shared "Family, Given" / "Title Given Family" PI parse of the
@@ -1303,21 +1166,14 @@ object FunderConfigs {
     * parse with ORCID + optional ROR affiliation id. */
   def nhmrc: FunderIngestConfig = {
     val gt = lower(coalesce(col("grant_type"), col("grant_sub_type")))
-    val fundingType =
-      when(gt.like("%investigator%"), "research")
-        .when(gt.like("%ideas%"), "research")
-        .when(gt.like("%synergy%"), "research")
-        .when(gt.like("%fellowship%"), "fellowship")
-        .when(gt.like("%scholarship%"), "fellowship")
-        .when(gt.like("%postgraduate%"), "fellowship")
-        .when(gt.like("%clinical trial%"), "research")
-        .when(gt.like("%cohort%"), "research")
-        .when(gt.like("%project%"), "research")
-        .when(gt.like("%program%"), "research")
-        .when(gt.like("%centre%"), "infrastructure")
-        .when(gt.like("%equipment%"), "infrastructure")
-        .when(gt.like("%development%"), "research")
-        .otherwise("grant")
+    val fundingType = likeCascade(gt, Seq(
+      "investigator" -> "research", "ideas" -> "research",
+      "synergy" -> "research", "fellowship" -> "fellowship",
+      "scholarship" -> "fellowship", "postgraduate" -> "fellowship",
+      "clinical trial" -> "research", "cohort" -> "research",
+      "project" -> "research", "program" -> "research",
+      "centre" -> "infrastructure", "equipment" -> "infrastructure",
+      "development" -> "research"), "grant")
     def ts(c: Column) = coalesce(
       to_date(try_to_timestamp(c, lit("yyyy-MM-dd HH:mm:ss"))),
       to_date(try_to_timestamp(c, lit("yyyy-MM-dd"))))
@@ -1333,11 +1189,11 @@ object FunderConfigs {
         lit("ror").as("type"), lit("nhmrc").as("asserted_by"))))
       .otherwise(lit(null).cast(affIds))
     val lead = when(col("cia_name").isNotNull && trim(col("cia_name")) =!= "",
-      investigator(given, family, col("cia_orcid"), lit(null).cast("date"),
-        col("administering_institution"), lit("Australia"), rorIds))
+      investigator(given, family, col("administering_institution"),
+        lit("Australia"), orcid = col("cia_orcid"), ids = rorIds))
     val aid = coalesce(col("grant_id"), col("app_id"))
-    FunderIngestConfig(
-      funderId = 4320334705L, provenance = "nhmrc", priority = 12,
+    FunderIngestConfig(4320334705L, AwardFieldMap(
+      provenance = "nhmrc", priority = 12,
       mintKey = lower(aid),
       funderAwardId = aid,
       displayName = coalesce(col("grant_title"), col("simplified_title")),
@@ -1352,9 +1208,7 @@ object FunderConfigs {
       endYear = coalesce(col("end_year").try_cast("int"),
         year(ts(col("end_date")))),
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
-      rowFilter = aid.isNotNull && trim(aid) =!= "")
+      rowFilter = aid.isNotNull && trim(aid) =!= ""))
   }
 
   /** The NHMRC historical-extension dedup (CreateNHMRCAwards cell 11's
@@ -1393,15 +1247,12 @@ object FunderConfigs {
     val ey = col("end_year").try_cast("double").cast("int")
     val (given, family) = titledNameParse(col("pi_name"), titleRe)
     val lead = when(col("pi_name").isNotNull && trim(col("pi_name")) =!= "",
-      investigator(given, family, lit(null).cast("string"),
-        lit(null).cast("date"), col("institution"), lit("Australia"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320334705L, provenance = "nhmrc", priority = 12,
+      investigator(given, family, col("institution"), lit("Australia")))
+    FunderIngestConfig(4320334705L, AwardFieldMap(
+      provenance = "nhmrc", priority = 12,
       mintKey = lower(col("award_id")),
       funderAwardId = col("award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("budget_total").try_cast("double"),
       currency = lit("AUD"),
       fundingType = fundingType, funderScheme = col("grant_type"),
@@ -1411,9 +1262,7 @@ object FunderConfigs {
         d(concat(ey.cast("string"), lit("-12-31")))),
       startYear = sy, endYear = ey,
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("award_id").isNotNull && trim(col("award_id")) =!= "")
+      rowFilter = col("award_id").isNotNull && trim(col("award_id")) =!= ""))
   }
 
   private val ArcTitleRe = "^(Dr|Prof|Professor|Associate Professor|" +
@@ -1453,12 +1302,10 @@ object FunderConfigs {
       .otherwise(trim(element_at(split(stripped, " "), 1)))
     val family = when(instr(li, ",") > 0, trim(substring_index(li, ",", 1)))
       .otherwise(trim(element_at(split(stripped, " "), -1)))
-    val lead = when(!empty, investigator(
-      given, family,
-      lit(null).cast("string"), lit(null).cast("date"),
-      col("grantee"), lit("Australia"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320334704L, provenance = "arc", priority = 20,
+    val lead = when(!empty, investigator(given, family, col("grantee"),
+      lit("Australia")))
+    FunderIngestConfig(4320334704L, AwardFieldMap(
+      provenance = "arc", priority = 20,
       mintKey = lower(col("code")),
       funderAwardId = col("code"),
       displayName = col("title"), description = col("summary"),
@@ -1473,8 +1320,7 @@ object FunderConfigs {
       leadInvestigator = lead,
       landingPageUrl = concat(
         lit("https://dataportal.arc.gov.au/RGS/Web/Grants/"), col("code")),
-      doi = lit(null).cast("string"),
-      rowFilter = col("code").isNotNull && trim(col("code")) =!= "")
+      rowFilter = col("code").isNotNull && trim(col("code")) =!= ""))
   }
 
   /** The NSERC co-applicants rollup (CreateNSERCAwards.ipynb cell 8's
@@ -1489,16 +1335,12 @@ object FunderConfigs {
     val hasComma = nm.contains(",")
     coapplicants.filter(col("applicationid").isNotNull)
       .groupBy(col("applicationid"))
-      .agg(collect_list(struct(
+      .agg(collect_list(investigator(
         when(hasComma, trim(element_at(split(nm, ","), 2)))
-          .otherwise(lit(null).cast("string")).as("given_name"),
+          .otherwise(lit(null).cast("string")),
         when(hasComma, trim(element_at(split(nm, ","), 1)))
-          .otherwise(trim(nm)).as("family_name"),
-        lit(null).cast("string").as("orcid"),
-        lit(null).cast("date").as("role_start"),
-        struct(col("coappinstitution_etablissement").as("name"),
-          col("countryen").as("country"),
-          lit(null).cast(affIds).as("ids")).as("affiliation")))
+          .otherwise(trim(nm)), col("coappinstitution_etablissement"),
+        col("countryen")))
         .as("investigators"))
   }
 
@@ -1511,27 +1353,21 @@ object FunderConfigs {
     * placeholder id screen. */
   def nserc: FunderIngestConfig = {
     val grp = lower(col("groupen"))
-    val fundingType =
-      when(grp.like("%discovery%"), "research")
-        .when(grp.like("%fellowship%"), "fellowship")
-        .when(grp.like("%scholarship%"), "fellowship")
-        .when(grp.like("%research partnership%"), "research")
-        .when(grp.like("%training%"), "training")
-        .when(grp.like("%equipment%"), "equipment")
-        .when(grp.like("%supplement%"), "supplement")
-        .otherwise("grant")
+    val fundingType = likeCascade(grp, Seq(
+      "discovery" -> "research", "fellowship" -> "fellowship",
+      "scholarship" -> "fellowship", "research partnership" -> "research",
+      "training" -> "training", "equipment" -> "equipment",
+      "supplement" -> "supplement"), "grant")
     val fy = col("fiscalyear_exercice_financier")
     val nm = col("name_nom")
     val hasComma = nm.contains(",")
     val lead = when(nm.isNotNull && trim(nm) =!= "", investigator(
       when(hasComma, trim(element_at(split(nm, ","), 2))),
       when(hasComma, trim(element_at(split(nm, ","), 1)))
-        .otherwise(trim(nm)),
-      lit(null).cast("string"), lit(null).cast("date"),
-      col("institution_etablissement"), col("countryen"),
-      lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320334593L, provenance = "nserc_open_data", priority = 3,
+        .otherwise(trim(nm)), col("institution_etablissement"),
+      col("countryen")))
+    FunderIngestConfig(4320334593L, AwardFieldMap(
+      provenance = "nserc_open_data", priority = 3,
       mintKey = lower(trim(col("applicationid"))),
       funderAwardId = lower(trim(col("applicationid"))),
       displayName = col("applicationtitle"),
@@ -1548,11 +1384,10 @@ object FunderConfigs {
       leadInvestigator = lead,
       landingPageUrl = concat(lit("https://www.nserc-crsng.gc.ca/" +
         "ase-oro/Details-Detailles_eng.asp?id="), col("applicationid")),
-      doi = lit(null).cast("string"),
       rowFilter = col("applicationid").isNotNull &&
         trim(col("applicationid")) =!= "" &&
         trim(col("applicationid")) =!= "NA",
-      investigators = col("investigators"))
+      investigators = col("investigators")))
   }
 
   /** Cancer Research UK (CreateCRUKAwards.ipynb cell 7, Path A, 154
@@ -1561,27 +1396,19 @@ object FunderConfigs {
     * scraped landing URL, and the NULL works_api_url deviation (the
     * notebook emits CAST(NULL AS STRING), not the mint-derived URL). */
   def cruk: FunderIngestConfig = {
-    val lead = when(col("pi_family").isNotNull, investigator(
-      col("pi_given"), col("pi_family"), lit(null).cast("string"),
-      lit(null).cast("date"), col("institution"), lit("United Kingdom"),
-      lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320319985L, provenance = "cruk", priority = 342,
+    val lead = when(col("pi_family").isNotNull, investigator(col("pi_given"),
+      col("pi_family"), col("institution"), lit("United Kingdom")))
+    FunderIngestConfig(4320319985L, AwardFieldMap(
+      provenance = "cruk", priority = 342,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("research"),
       funderScheme = col("funder_scheme"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
-      startYear = lit(null).cast("int"), endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Academy of Finland via the Research.fi API
@@ -1592,25 +1419,19 @@ object FunderConfigs {
     * PI name only (affiliation fields are all NULL in the source). */
   def academyOfFinland: FunderIngestConfig = {
     val ft = lower(col("funding_type"))
-    val fundingType =
-      when(ft.like("%fellowship%"), "fellowship")
-        .when(ft.like("%postdoctoral%"), "fellowship")
-        .when(ft.like("%research fellow%"), "fellowship")
-        .when(ft.like("%academy professor%"), "fellowship")
-        .when(ft.like("%centre of excellence%"), "research")
-        .when(ft.like("%flagship%"), "research")
-        .when(ft.like("%infrastructure%"), "infrastructure")
-        .when(ft.like("%strategic%"), "research")
-        .when(ft.like("%academy project%"), "grant")
-        .otherwise("grant")
+    val fundingType = likeCascade(ft, Seq(
+      "fellowship" -> "fellowship", "postdoctoral" -> "fellowship",
+      "research fellow" -> "fellowship", "academy professor" -> "fellowship",
+      "centre of excellence" -> "research", "flagship" -> "research",
+      "infrastructure" -> "infrastructure", "strategic" -> "research",
+      "academy project" -> "grant"), "grant")
     def enOr(en: Column, fi: Column) =
       coalesce(when(trim(en) =!= "", trim(en)), fi)
     val lead = when(col("pi_family_name").isNotNull, investigator(
-      col("pi_given_name"), col("pi_family_name"),
-      lit(null).cast("string"), lit(null).cast("date"),
-      lit(null).cast("string"), lit("Finland"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320321108L, provenance = "researchfi", priority = 24,
+      col("pi_given_name"), col("pi_family_name"), lit(null).cast("string"),
+      lit("Finland")))
+    FunderIngestConfig(4320321108L, AwardFieldMap(
+      provenance = "researchfi", priority = 24,
       mintKey = lower(col("project_id").cast("string")),
       funderAwardId = col("funder_project_number"),
       displayName = enOr(col("title_en"), col("title_fi")),
@@ -1624,8 +1445,7 @@ object FunderConfigs {
       leadInvestigator = lead,
       landingPageUrl = concat(lit("https://research.fi/en/results/funding/"),
         col("project_id").cast("string")),
-      doi = lit(null).cast("string"),
-      rowFilter = col("project_id").isNotNull)
+      rowFilter = col("project_id").isNotNull))
   }
 
   /** FWF / Austrian Science Fund via OpenAIRE
@@ -1638,25 +1458,17 @@ object FunderConfigs {
     * lifted from the source (the 10.55776/... forms), no PI data. */
   def fwf: FunderIngestConfig = {
     val fp = lower(col("funding_program"))
-    val fundingType =
-      when(fp.like("%start%"), "fellowship")
-        .when(fp.like("%hertha firnberg%"), "fellowship")
-        .when(fp.like("%elise richter%"), "fellowship")
-        .when(fp.like("%lise meitner%"), "fellowship")
-        .when(fp.like("%schr%dinger%"), "fellowship")
-        .when(fp.like("%doctoral%"), "training")
-        .when(fp.like("%doktorat%"), "training")
-        .when(fp.like("%wittgenstein%"), "prize")
-        .when(fp.like("%special research%"), "center")
-        .when(fp.like("%spezialforschung%"), "center")
-        .when(fp.like("%sfb%"), "center")
-        .when(fp.like("%cluster%"), "center")
-        .when(fp.like("%infrastructure%"), "infrastructure")
-        .when(fp.like("%einzelprojekt%"), "grant")
-        .when(fp.like("%principal investigator%"), "grant")
-        .otherwise("grant")
-    FunderIngestConfig(
-      funderId = 4320321181L, provenance = "openaire_fwf", priority = 29,
+    val fundingType = likeCascade(fp, Seq(
+      "start" -> "fellowship", "hertha firnberg" -> "fellowship",
+      "elise richter" -> "fellowship", "lise meitner" -> "fellowship",
+      "schr%dinger" -> "fellowship", "doctoral" -> "training",
+      "doktorat" -> "training", "wittgenstein" -> "prize",
+      "special research" -> "center", "spezialforschung" -> "center",
+      "sfb" -> "center", "cluster" -> "center",
+      "infrastructure" -> "infrastructure", "einzelprojekt" -> "grant",
+      "principal investigator" -> "grant"), "grant")
+    FunderIngestConfig(4320321181L, AwardFieldMap(
+      provenance = "openaire_fwf", priority = 29,
       mintKey = lower(col("project_code")),
       funderAwardId = col("project_code"),
       displayName = col("title"), description = col("keywords"),
@@ -1666,11 +1478,10 @@ object FunderConfigs {
       startDate = d(col("start_date")), endDate = d(col("end_date")),
       startYear = year(d(col("start_date"))),
       endYear = year(d(col("end_date"))),
-      leadInvestigator = nullInvestigator,
       landingPageUrl = col("website_url"),
       doi = col("doi"),
       rowFilter = col("project_code").isNotNull &&
-        trim(col("project_code")) =!= "")
+        trim(col("project_code")) =!= ""))
   }
 
   /** FAPESP Biblioteca Virtual (CreateFAPESPAwards.ipynb cell 7,
@@ -1681,36 +1492,28 @@ object FunderConfigs {
     * process-number landing URL with slashes dashed. */
   def fapesp: FunderIngestConfig = {
     val sm = lower(col("support_modality"))
-    val fundingType =
-      when(sm.like("%bolsa%"), "fellowship")
-        .when(sm.like("%jovens pesquisadores%"), "fellowship")
-        .when(sm.like("%young investigators%"), "fellowship")
-        .when(sm.like("%pesquisador visitante%"), "fellowship")
-        .when(sm.like("%visiting researcher%"), "fellowship")
-        .when(sm.like("%infraestrutura%"), "infrastructure")
-        .when(sm.like("%equipamentos%"), "infrastructure")
-        .when(sm.like("%reunião%"), "conference")
-        .when(sm.like("%organização%"), "conference")
-        .when(sm.like("%publicações%"), "publication")
-        .when(sm.like("%pipe%"), "innovation")
-        .when(sm.like("%pite%"), "innovation")
-        .when(sm.like("%inovativa%"), "innovation")
-        .when(sm.like("%temático%"), "research")
-        .when(sm.like("%thematic%"), "research")
-        .otherwise("grant")
+    val fundingType = likeCascade(sm, Seq(
+      "bolsa" -> "fellowship", "jovens pesquisadores" -> "fellowship",
+      "young investigators" -> "fellowship",
+      "pesquisador visitante" -> "fellowship",
+      "visiting researcher" -> "fellowship",
+      "infraestrutura" -> "infrastructure", "equipamentos" -> "infrastructure",
+      "reunião" -> "conference", "organização" -> "conference",
+      "publicações" -> "publication", "pipe" -> "innovation",
+      "pite" -> "innovation", "inovativa" -> "innovation",
+      "temático" -> "research", "thematic" -> "research"), "grant")
     def enOr(en: Column, pt: Column) =
       coalesce(when(trim(en) =!= "", trim(en)), pt)
     val lead = when(col("pi_family_name").isNotNull, investigator(
-      col("pi_given_name"), col("pi_family_name"),
-      lit(null).cast("string"), lit(null).cast("date"),
-      col("institution"), lit("Brazil"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320997L, provenance = "fapesp_bv", priority = 19,
+      col("pi_given_name"), col("pi_family_name"), col("institution"),
+      lit("Brazil")))
+    FunderIngestConfig(4320320997L, AwardFieldMap(
+      provenance = "fapesp_bv", priority = 19,
       mintKey = lower(col("process_number")),
       funderAwardId = col("process_number"),
       displayName = enOr(col("title_en"), col("title_pt")),
       description = enOr(col("abstract_en"), col("abstract_pt")),
-      amount = lit(null).cast("double"), currency = lit("BRL"),
+      currency = lit("BRL"),
       fundingType = fundingType, funderScheme = col("support_modality"),
       startDate = d(col("start_date")), endDate = d(col("end_date")),
       startYear = year(d(col("start_date"))),
@@ -1718,9 +1521,8 @@ object FunderConfigs {
       leadInvestigator = lead,
       landingPageUrl = concat(lit("https://bv.fapesp.br/en/auxilios/"),
         regexp_replace(col("process_number"), "/", "-"), lit("/")),
-      doi = lit(null).cast("string"),
       rowFilter = col("process_number").isNotNull &&
-        trim(col("process_number")) =!= "")
+        trim(col("process_number")) =!= ""))
   }
 
   /** NCN / Polish National Science Centre via RAD-on
@@ -1732,16 +1534,12 @@ object FunderConfigs {
     * name, and the NULL works_api_url deviation. */
   def ncn: FunderIngestConfig = {
     val amt = col("amount").try_cast("decimal(18,2)")
-    val lead = when(col("pi_family").isNotNull, investigator(
-      col("pi_given"), col("pi_family"), lit(null).cast("string"),
-      lit(null).cast("date"), col("institution"), lit("Poland"),
-      lit(null).cast(affIds)))
-      .when(col("institution").isNotNull, investigator(
-        lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("Poland"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320322511L, provenance = "ncn", priority = 32,
+    val lead = when(col("pi_family").isNotNull, investigator(col("pi_given"),
+      col("pi_family"), col("institution"), lit("Poland")))
+      .when(col("institution").isNotNull, investigator(lit(null).cast("string"),
+        lit(null).cast("string"), col("institution"), lit("Poland")))
+    FunderIngestConfig(4320322511L, AwardFieldMap(
+      provenance = "ncn", priority = 32,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = coalesce(
@@ -1756,9 +1554,8 @@ object FunderConfigs {
       endYear = year(d(col("end_date_raw"))),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull,
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   // ---------------------------------------------------------------
@@ -1775,11 +1572,9 @@ object FunderConfigs {
   def erasmusPlus: FunderIngestConfig = {
     val lead = when(col("coordinator_name").isNotNull, investigator(
       lit(null).cast("string"), lit(null).cast("string"),
-      lit(null).cast("string"), lit(null).cast("date"),
-      col("coordinator_name"), col("coordinator_country"),
-      lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320335551L, provenance = "erasmus_plus", priority = 427,
+      col("coordinator_name"), col("coordinator_country")))
+    FunderIngestConfig(4320335551L, AwardFieldMap(
+      provenance = "erasmus_plus", priority = 427,
       mintKey = lower(col("project_reference")),
       funderAwardId = col("project_reference"),
       displayName = col("project_title"),
@@ -1794,9 +1589,8 @@ object FunderConfigs {
       endYear = year(d(col("end_date"))),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("project_reference").isNotNull &&
-        trim(col("project_reference")) =!= "")
+        trim(col("project_reference")) =!= ""))
   }
 
   /** NSFC completed-project database (CreateNSFCAwards.ipynb cell 7,
@@ -1809,26 +1603,19 @@ object FunderConfigs {
     * crossref/datacite shells). */
   def nsfc: FunderIngestConfig = {
     val sch = col("funder_scheme")
-    val fundingType =
-      when(sch.like("%杰出青年%"), "fellowship")
-        .when(sch.like("%优秀青年%"), "fellowship")
-        .when(sch.like("%创新研究群体%"), "research")
-        .when(sch.like("%基础科学中心%"), "research")
-        .when(sch.like("%重点%"), "research")
-        .when(sch.like("%重大%"), "research")
-        .otherwise("grant")
+    val fundingType = likeCascade(sch, Seq(
+      "杰出青年" -> "fellowship", "优秀青年" -> "fellowship", "创新研究群体" -> "research",
+      "基础科学中心" -> "research", "重点" -> "research", "重大" -> "research"), "grant")
     val lead = when(
       (col("family_name").isNotNull && trim(col("family_name")) =!= "") ||
         (col("institution").isNotNull && trim(col("institution")) =!= ""),
-      investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("China"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320321001L, provenance = "nsfc_kd", priority = 209,
+      investigator(col("given_name"), col("family_name"), col("institution"),
+        lit("China")))
+    FunderIngestConfig(4320321001L, AwardFieldMap(
+      provenance = "nsfc_kd", priority = 209,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("display_name"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("double"),
       currency = when(col("amount").try_cast("double") > 0, "CNY"),
       fundingType = fundingType, funderScheme = sch,
@@ -1839,9 +1626,8 @@ object FunderConfigs {
       leadInvestigator = lead,
       landingPageUrl = concat(lit("https://kd.nsfc.cn/finalDetails?id="),
         col("project_id")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        trim(col("funder_award_id").cast("string")) =!= "")
+        trim(col("funder_award_id").cast("string")) =!= ""))
   }
 
   /** Junta de Andalucía bulk subsidies, research-scoped
@@ -1856,10 +1642,9 @@ object FunderConfigs {
     val lead = when(col("institution_name").isNotNull &&
         trim(col("institution_name")) =!= "",
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution_name"), lit("Spain"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320326754L, provenance = "andalucia", priority = 421,
+        col("institution_name"), lit("Spain")))
+    FunderIngestConfig(4320326754L, AwardFieldMap(
+      provenance = "andalucia", priority = 421,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("announcement"),
@@ -1873,15 +1658,12 @@ object FunderConfigs {
       funderScheme = when(trim(col("name_program")) =!= "",
         trim(col("name_program"))),
       startDate = d(col("grant_date")),
-      endDate = lit(null).cast("date"),
       startYear = coalesce(year(d(col("grant_date"))),
         col("award_year").try_cast("int")),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = lit("https://www.juntadeandalucia.es/datosabiertos/" +
         "portal/dataset/subvenciones-otorgadas-por-la-junta-de-andalucia"),
-      doi = lit(null).cast("string"),
-      rowFilter = lit(true))
+      rowFilter = lit(true)))
   }
 
   /** NWO / Dutch Research Council via NWOpen
@@ -1892,31 +1674,22 @@ object FunderConfigs {
     * URL. */
   def nwo: FunderIngestConfig = {
     val gc = lower(col("grant_category"))
-    val fundingType =
-      when(gc.like("%veni%"), "fellowship")
-        .when(gc.like("%vidi%"), "fellowship")
-        .when(gc.like("%vici%"), "fellowship")
-        .when(gc.like("%fellowship%"), "fellowship")
-        .when(gc.like("%promotiebeurs%"), "fellowship")
-        .when(gc.like("%onderzoekstalent%"), "fellowship")
-        .when(gc.like("%graduate%"), "training")
-        .when(gc.like("%spinoza%"), "prize")
-        .when(gc.like("%stevin%"), "prize")
-        .when(gc.like("%gravitation%"), "research")
-        .when(gc.like("%zwaartekracht%"), "research")
-        .when(gc.like("%infrastructuur%"), "infrastructure")
-        .when(gc.like("%infrastructure%"), "infrastructure")
-        .otherwise("grant")
+    val fundingType = likeCascade(gc, Seq(
+      "veni" -> "fellowship", "vidi" -> "fellowship", "vici" -> "fellowship",
+      "fellowship" -> "fellowship", "promotiebeurs" -> "fellowship",
+      "onderzoekstalent" -> "fellowship", "graduate" -> "training",
+      "spinoza" -> "prize", "stevin" -> "prize", "gravitation" -> "research",
+      "zwaartekracht" -> "research", "infrastructuur" -> "infrastructure",
+      "infrastructure" -> "infrastructure"), "grant")
     val lead = when(col("pi_family_name").isNotNull, investigator(
-      col("pi_given_name"), col("pi_family_name"), col("pi_id"),
-      lit(null).cast("date"), col("lead_org_name"), lit("Netherlands"),
-      lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320321800L, provenance = "nwopen", priority = 11,
+      col("pi_given_name"), col("pi_family_name"), col("lead_org_name"),
+      lit("Netherlands"), orcid = col("pi_id")))
+    FunderIngestConfig(4320321800L, AwardFieldMap(
+      provenance = "nwopen", priority = 11,
       mintKey = lower(col("project_id")),
       funderAwardId = col("project_id"),
       displayName = col("title"), description = col("abstract"),
-      amount = lit(null).cast("double"), currency = lit("EUR"),
+      currency = lit("EUR"),
       fundingType = fundingType, funderScheme = col("grant_category"),
       startDate = d(col("start_date")), endDate = d(col("end_date")),
       startYear = year(d(col("start_date"))),
@@ -1924,9 +1697,8 @@ object FunderConfigs {
       leadInvestigator = lead,
       landingPageUrl = concat(lit("https://www.nwo.nl/projecten/"),
         regexp_replace(col("project_id"), "\\.", "-")),
-      doi = lit(null).cast("string"),
       rowFilter = col("project_id").isNotNull &&
-        trim(col("project_id")) =!= "")
+        trim(col("project_id")) =!= ""))
   }
 
   /** NIHR Open Data (CreateNIHRAwards.ipynb cell 7, ~10.8K after the
@@ -1937,32 +1709,23 @@ object FunderConfigs {
     * 'United Kingdom'. */
   def nihr: FunderIngestConfig = {
     val prog = lower(col("programme"))
-    val fundingType =
-      when(prog.like("%fellowship%"), "fellowship")
-        .when(prog.like("%senior investigator%"), "fellowship")
-        .when(prog.like("%academic%"), "fellowship")
-        .when(prog.like("%bridging%"), "fellowship")
-        .when(prog.like("%health technology%"), "research")
-        .when(prog.like("%research for patient%"), "research")
-        .when(prog.like("%programme grant%"), "research")
-        .when(prog.like("%efficacy%"), "research")
-        .when(prog.like("%public health%"), "research")
-        .when(prog.like("%policy%"), "research")
-        .when(prog.like("%global health%"), "research")
-        .when(prog.like("%delivery%"), "research")
-        .when(prog.like("%invention%"), "research")
-        .when(prog.like("%infrastructure%"), "infrastructure")
-        .otherwise("grant")
+    val fundingType = likeCascade(prog, Seq(
+      "fellowship" -> "fellowship", "senior investigator" -> "fellowship",
+      "academic" -> "fellowship", "bridging" -> "fellowship",
+      "health technology" -> "research", "research for patient" -> "research",
+      "programme grant" -> "research", "efficacy" -> "research",
+      "public health" -> "research", "policy" -> "research",
+      "global health" -> "research", "delivery" -> "research",
+      "invention" -> "research", "infrastructure" -> "infrastructure"), "grant")
     val country = coalesce(
       when(size(col("institution_country")) > 0,
         element_at(col("institution_country"), 1)),
       lit("United Kingdom"))
     val lead = when(col("pi_family_name").isNotNull, investigator(
-      col("pi_given_name"), col("pi_family_name"), col("orcid"),
-      lit(null).cast("date"), col("contracted_organisation"), country,
-      lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320319990L, provenance = "nihr", priority = 13,
+      col("pi_given_name"), col("pi_family_name"),
+      col("contracted_organisation"), country, orcid = col("orcid")))
+    FunderIngestConfig(4320319990L, AwardFieldMap(
+      provenance = "nihr", priority = 13,
       mintKey = lower(col("project_id")),
       funderAwardId = col("project_id"),
       displayName = col("title"),
@@ -1976,9 +1739,8 @@ object FunderConfigs {
       endYear = year(d(col("end_date"))),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("project_id").isNotNull &&
-        trim(col("project_id")) =!= "")
+        trim(col("project_id")) =!= ""))
   }
 
   /** Innovate UK funded projects (CreateInnovateUKAwards.ipynb
@@ -2004,11 +1766,9 @@ object FunderConfigs {
     val pn = col("project_number").cast("string")
     val lead = when(col("participant_name").isNotNull, investigator(
       lit(null).cast("string"), lit(null).cast("string"),
-      lit(null).cast("string"), lit(null).cast("date"),
-      col("participant_name"), lit("United Kingdom"),
-      lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320335087L, provenance = "innovate_uk", priority = 28,
+      col("participant_name"), lit("United Kingdom")))
+    FunderIngestConfig(4320335087L, AwardFieldMap(
+      provenance = "innovate_uk", priority = 28,
       mintKey = pn,
       funderAwardId = pn,
       displayName = col("project_title"),
@@ -2022,8 +1782,7 @@ object FunderConfigs {
       leadInvestigator = lead,
       landingPageUrl = concat(lit("https://gtr.ukri.org/projects?ref="),
         pn),
-      doi = lit(null).cast("string"),
-      rowFilter = col("project_number").isNotNull)
+      rowFilter = col("project_number").isNotNull))
   }
 
   /** AEI via the Spanish BDNS subsidies register
@@ -2036,27 +1795,22 @@ object FunderConfigs {
   def aei: FunderIngestConfig = {
     val orgName = trim(regexp_replace(col("beneficiary"),
       "^[A-Z0-9]+\\s+", ""))
-    FunderIngestConfig(
-      funderId = 4320335598L, provenance = "bdns_aei", priority = 31,
+    FunderIngestConfig(4320335598L, AwardFieldMap(
+      provenance = "bdns_aei", priority = 31,
       mintKey = lower(col("grant_code")),
       funderAwardId = col("grant_code"),
       displayName = col("call_title"), description = col("call_title"),
       amount = col("amount").try_cast("double"), currency = lit("EUR"),
-      fundingType = when(col("instrument_type").like("%PRÉSTAMO%"), "loan")
-        .when(col("instrument_type").like("%SUBVENCI%"), "grant")
-        .otherwise("grant"),
+      fundingType = likeCascade(col("instrument_type"), Seq(
+        "PRÉSTAMO" -> "loan", "SUBVENCI" -> "grant"), "grant"),
       funderScheme = col("instrument_type"),
-      startDate = d(col("grant_date")), endDate = lit(null).cast("date"),
+      startDate = d(col("grant_date")),
       startYear = col("grant_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = investigator(lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("date"), orgName, lit("ES"),
-        lit(null).cast(affIds)),
+        lit(null).cast("string"), orgName, lit("ES")),
       landingPageUrl = col("legal_basis_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("grant_code").isNotNull &&
-        trim(col("grant_code")) =!= "")
+        trim(col("grant_code")) =!= ""))
   }
 
   /** The SweCRIS citable-id strip (the 2026-07-31 award-id audit):
@@ -2073,22 +1827,17 @@ object FunderConfigs {
     * keeps the RAW suffixed id. */
   def swedishResearchCouncil: FunderIngestConfig = {
     val ta = lower(col("type_of_award"))
-    val fundingType =
-      when(ta.like("%positions%"), "fellowship")
-        .when(ta.like("%stipend%"), "fellowship")
-        .when(ta.like("%infrastructure%"), "infrastructure")
-        .when(ta.like("%environment%"), "research")
-        .when(ta.like("%project%"), "research")
-        .when(ta.like("%international%"), "research")
-        .otherwise("grant")
+    val fundingType = likeCascade(ta, Seq(
+      "positions" -> "fellowship", "stipend" -> "fellowship",
+      "infrastructure" -> "infrastructure", "environment" -> "research",
+      "project" -> "research", "international" -> "research"), "grant")
     val lead = when(col("pi_family_name").isNotNull &&
         trim(col("pi_family_name")) =!= "",
       investigator(col("pi_given_name"), col("pi_family_name"),
-        col("pi_orcid"), lit(null).cast("date"),
         col("coordinating_organisation"), lit("Sweden"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320322581L, provenance = "swedish_research_council",
+        orcid = col("pi_orcid")))
+    FunderIngestConfig(4320322581L, AwardFieldMap(
+      provenance = "swedish_research_council",
       priority = 15,
       mintKey = lower(swecrisBareId(col("project_id"))),
       funderAwardId = swecrisBareId(col("project_id")),
@@ -2102,9 +1851,8 @@ object FunderConfigs {
       leadInvestigator = lead,
       landingPageUrl = concat(lit("https://www.vr.se/swecris#/project/"),
         col("project_id")),
-      doi = lit(null).cast("string"),
       rowFilter = col("project_id").isNotNull &&
-        trim(col("project_id")) =!= "")
+        trim(col("project_id")) =!= ""))
   }
 
   /** Vinnova via SweCRIS (CreateVinnovaAwards.ipynb cell 7, ~24K):
@@ -2116,11 +1864,10 @@ object FunderConfigs {
         =!= "", concat(lit("https://orcid.org/"), trim(col("pi_orcid"))))
     val lead = when(col("pi_name").isNotNull && trim(col("pi_name")) =!= "",
       investigator(lit(null).cast("string"), trim(col("pi_name")),
-        orcid, d(col("projectstartdate")),
         trim(col("coordinatingorganisationnameen")), lit("Sweden"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320321030L, provenance = "swecris_vinnova", priority = 9,
+        orcid = orcid, roleStart = d(col("projectstartdate"))))
+    FunderIngestConfig(4320321030L, AwardFieldMap(
+      provenance = "swecris_vinnova", priority = 9,
       mintKey = lower(swecrisBareId(col("projectid"))),
       funderAwardId = swecrisBareId(col("projectid")),
       displayName = coalesce(col("projecttitleen"), col("projecttitlesv")),
@@ -2136,9 +1883,8 @@ object FunderConfigs {
       endYear = year(d(col("projectenddate"))),
       leadInvestigator = lead,
       landingPageUrl = lit("https://www.vr.se/english/swecris.html"),
-      doi = lit(null).cast("string"),
       rowFilter = col("projectid").isNotNull &&
-        trim(col("projectid")) =!= "")
+        trim(col("projectid")) =!= ""))
   }
 
   /** FCT / Fundação para a Ciência e a Tecnologia
@@ -2149,16 +1895,12 @@ object FunderConfigs {
     * works_api_url deviation. */
   def fct: FunderIngestConfig = {
     val amt = col("amount").try_cast("decimal(18,2)")
-    val lead = when(col("pi_family").isNotNull, investigator(
-      col("pi_given"), col("pi_family"), lit(null).cast("string"),
-      lit(null).cast("date"), col("institution"), lit("Portugal"),
-      lit(null).cast(affIds)))
-      .when(col("institution").isNotNull, investigator(
-        lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("Portugal"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320334779L, provenance = "fct", priority = 385,
+    val lead = when(col("pi_family").isNotNull, investigator(col("pi_given"),
+      col("pi_family"), col("institution"), lit("Portugal")))
+      .when(col("institution").isNotNull, investigator(lit(null).cast("string"),
+        lit(null).cast("string"), col("institution"), lit("Portugal")))
+    FunderIngestConfig(4320334779L, AwardFieldMap(
+      provenance = "fct", priority = 385,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = coalesce(
@@ -2174,9 +1916,8 @@ object FunderConfigs {
       endYear = year(d(col("end_date_raw"))),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull,
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Research Council of Norway Project Bank
@@ -2206,12 +1947,10 @@ object FunderConfigs {
     val full = nz(col("lead_name"))
     val aff = nz(col("primary_organization"))
     val amt = col("total_funding").try_cast("double")
-    val lead = when(full.isNotNull || aff.isNotNull, investigator(
-      given, coalesce(family, full), lit(null).cast("string"),
-      vd(col("start_date")), aff,
-      when(aff.isNotNull, lit("NO")), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320323299L,
+    val lead = when(full.isNotNull || aff.isNotNull, investigator(given,
+      coalesce(family, full), aff, when(aff.isNotNull, lit("NO")),
+      roleStart = vd(col("start_date"))))
+    FunderIngestConfig(4320323299L, AwardFieldMap(
       provenance = "research_council_norway_project_bank", priority = 130,
       mintKey = lower(trim(col("funder_award_id"))),
       funderAwardId = col("funder_award_id"),
@@ -2225,9 +1964,8 @@ object FunderConfigs {
       startYear = vy(col("start_year")), endYear = vy(col("end_year")),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("display_name").isNotNull)
+        col("display_name").isNotNull))
   }
 
   // ---------------------------------------------------------------
@@ -2253,10 +1991,9 @@ object FunderConfigs {
         .otherwise("grant")
     val lead = when(col("pi_family_name").isNotNull,
       investigator(col("pi_given_name"), col("pi_family_name"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("ES"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320334923L, provenance = "portal_fis_isciii",
+        col("institution"), lit("ES")))
+    FunderIngestConfig(4320334923L, AwardFieldMap(
+      provenance = "portal_fis_isciii",
       priority = 33,
       mintKey = lower(pid),
       funderAwardId = pid,
@@ -2269,8 +2006,7 @@ object FunderConfigs {
       endYear = year(d(col("end_date"))),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
-      rowFilter = pid.isNotNull && trim(pid) =!= "")
+      rowFilter = pid.isNotNull && trim(pid) =!= ""))
   }
 
   /** The FRIS project archetype (the Flanders Research Information
@@ -2287,16 +2023,12 @@ object FunderConfigs {
     val future = year(sd) > currentYear + 1
     def promoter(g: Column, fam: Column): Column =
       when(g.isNotNull || fam.isNotNull,
-        investigator(g, fam, lit(null).cast("string"),
-          lit(null).cast("date"), col("institution_name"), col("country"),
-          lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = funderId, provenance = provenance, priority = priority,
+        investigator(g, fam, col("institution_name"), col("country")))
+    FunderIngestConfig(funderId, AwardFieldMap(
+      provenance = provenance, priority = priority,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"), description = col("abstract"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = col("funding_type"),
       funderScheme = col("funder_scheme"),
       startDate = sd, endDate = ed,
@@ -2307,8 +2039,7 @@ object FunderConfigs {
       coLeadInvestigator =
         promoter(col("colead_given_name"), col("colead_family_name")),
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("funder_award_id").isNotNull)
+      rowFilter = col("funder_award_id").isNotNull))
   }
 
   /** FWO / Research Foundation - Flanders via FRIS
@@ -2350,14 +2081,13 @@ object FunderConfigs {
         col("lead_family_name").isNotNull ||
         col("institution_name").isNotNull,
       investigator(col("lead_given_name"), col("lead_family_name"),
-        col("lead_orcid"), lit(null).cast("date"),
-        col("institution_name"), col("country"), rorIds))
-    FunderIngestConfig(
-      funderId = 4320320847L, provenance = "sfi_open_data", priority = 169,
+        col("institution_name"), col("country"), orcid = col("lead_orcid"),
+        ids = rorIds))
+    FunderIngestConfig(4320320847L, AwardFieldMap(
+      provenance = "sfi_open_data", priority = 169,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = amt,
       currency = when(amt.isNotNull, col("currency")),
       fundingType = col("funding_type"),
@@ -2366,9 +2096,7 @@ object FunderConfigs {
       startYear = when(!future, year(sd)),
       endYear = when(!future, year(ed)),
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("funder_award_id").isNotNull)
+      rowFilter = col("funder_award_id").isNotNull))
   }
 
   /** Marie Curie (UK) fellowship register
@@ -2378,27 +2106,20 @@ object FunderConfigs {
     * works_api_url deviation; no row filter in the reference. */
   def marieCurie: FunderIngestConfig = {
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United Kingdom"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320217L, provenance = "marie_curie", priority = 261,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United Kingdom")))
+    FunderIngestConfig(4320320217L, AwardFieldMap(
+      provenance = "marie_curie", priority = 261,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = lit(null).cast("decimal(18,2)"),
-      currency = lit(null).cast("string"),
       fundingType = lit("grant"),
       funderScheme = col("programme"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
-      startYear = lit(null).cast("int"), endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** The MRFF funder row is MISSING from the registry (the
@@ -2417,11 +2138,10 @@ object FunderConfigs {
     * works_api_url; no row filter in the reference. */
   def mrff: FunderIngestConfig = {
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("Australia"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4906014721L, provenance = "mrff", priority = 351,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("Australia")))
+    FunderIngestConfig(4906014721L, AwardFieldMap(
+      provenance = "mrff", priority = 351,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = coalesce(nullif(trim(col("title")), lit("")),
@@ -2438,9 +2158,8 @@ object FunderConfigs {
       endYear = year(d(col("end_date_raw"))),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** The Business Finland / Tekes era-funder pair
@@ -2455,9 +2174,9 @@ object FunderConfigs {
     * zero-amount NULL, decision-year-only dates, no investigators. */
   def businessFinland: ResolvedFunderIngestConfig = {
     val diary = trim(col("diary_number"))
-    ResolvedFunderIngestConfig(
+    val resolved = col("openalex_funder_id").try_cast("bigint")
+    ResolvedFunderIngestConfig(resolved, AwardFieldMap(
       provenance = "business_finland", priority = 433,
-      resolvedFunderId = col("openalex_funder_id").try_cast("bigint"),
       mintKey = lower(diary),
       funderAwardId = diary,
       displayName = concat(
@@ -2477,13 +2196,8 @@ object FunderConfigs {
       funderScheme = coalesce(nullif(trim(col("funding_service")), lit("")),
         nullif(trim(col("program")), lit(""))),
       startDate = d(concat(col("decision_year"), lit("-01-01"))),
-      endDate = lit(null).cast("date"),
       startYear = col("decision_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
-      leadInvestigator = nullInvestigator,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("diary_number").isNotNull && diary =!= "")
+      rowFilter = col("diary_number").isNotNull && diary =!= ""))
   }
 
   /** The TRDizin other-investigators JSON shape
@@ -2506,30 +2220,26 @@ object FunderConfigs {
       .otherwise(py)
     val sd = d(col("start_date"))
     val ed = d(col("end_date"))
-    def nzt(c: Column) = nullif(trim(c), lit(""))
     val lead = when(col("lead_name").isNotNull &&
         trim(col("lead_name")) =!= "",
-      investigator(nzt(col("lead_given_name")),
-        nzt(col("lead_family_name")), nzt(col("lead_orcid")), sd,
+      investigator(nzt(col("lead_given_name")), nzt(col("lead_family_name")),
         lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast(affIds)))
+        orcid = nzt(col("lead_orcid")), roleStart = sd))
     val oc = from_json(col("other_investigators_json"),
       org.apache.spark.sql.types.DataType.fromDDL(trdizinContributors))
     val invs = when(oc.isNotNull && size(oc) > 0,
       transform(oc, c => investigator(nzt(c.getField("given_name")),
-        nzt(c.getField("family_name")), nzt(c.getField("orcid")), sd,
-        lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast(affIds))))
+        nzt(c.getField("family_name")), lit(null).cast("string"),
+        lit(null).cast("string"), orcid = nzt(c.getField("orcid")),
+        roleStart = sd)))
       .otherwise(FunderIngest.nullInvestigators)
-    FunderIngestConfig(
-      funderId = 4320322626L, provenance = "trdizin_tubitak_projects",
+    FunderIngestConfig(4320322626L, AwardFieldMap(
+      provenance = "trdizin_tubitak_projects",
       priority = 200,
       mintKey = lower(trim(col("funder_award_id"))),
       funderAwardId = trim(col("funder_award_id")),
       displayName = trim(col("display_name")),
       description = nzt(col("description")),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("research"),
       funderScheme = coalesce(nzt(col("project_group")),
         lit("TRDizin PROJECT")),
@@ -2538,11 +2248,10 @@ object FunderConfigs {
       endYear = coalesce(year(ed), pubYear),
       leadInvestigator = lead,
       landingPageUrl = nzt(col("landing_page_url")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull && trim(col("display_name")) =!= "",
-      investigators = invs)
+      investigators = invs))
   }
 
   /** NCBR / Narodowe Centrum Badań i Rozwoju (CreateNCBRAwards.ipynb
@@ -2550,17 +2259,14 @@ object FunderConfigs {
     * manager lead with the manager→leader institution fallback,
     * 'Poland' country, NULL landing page. */
   def ncbr: FunderIngestConfig = {
-    def nzt(c: Column) = nullif(trim(c), lit(""))
     val lead = when(col("manager_last_name").isNotNull &&
         trim(col("manager_last_name")) =!= "",
       investigator(nzt(col("manager_first_name")),
-        trim(col("manager_last_name")), lit(null).cast("string"),
-        lit(null).cast("date"),
+        trim(col("manager_last_name")),
         coalesce(nzt(col("manager_institution")),
-          nzt(col("leader_institution"))),
-        lit("Poland"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320335039L, provenance = "ncbr", priority = 431,
+          nzt(col("leader_institution"))), lit("Poland")))
+    FunderIngestConfig(4320335039L, AwardFieldMap(
+      provenance = "ncbr", priority = 431,
       mintKey = lower(trim(col("project_number"))),
       funderAwardId = trim(col("project_number")),
       displayName = coalesce(nzt(col("title_en")), nzt(col("title_pl"))),
@@ -2574,10 +2280,8 @@ object FunderConfigs {
       startYear = year(d(col("start_date"))),
       endYear = year(d(col("end_date"))),
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
       rowFilter = col("project_number").isNotNull &&
-        trim(col("project_number")) =!= "")
+        trim(col("project_number")) =!= ""))
   }
 
   /** The shared IS VaVaI CEP open-data shape (the Czech research
@@ -2597,12 +2301,11 @@ object FunderConfigs {
       .otherwise(lit(null).cast(affIds))
     val lead = when(col("institution_name").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
         col("institution_name"),
         when(col("institution_country") === "CZ", "Czech Republic")
-          .otherwise(col("institution_country")), rorIds))
-    FunderIngestConfig(
-      funderId = funderId, provenance = provenance, priority = priority,
+          .otherwise(col("institution_country")), ids = rorIds))
+    FunderIngestConfig(funderId, AwardFieldMap(
+      provenance = provenance, priority = priority,
       mintKey = lower(col("project_code")),
       funderAwardId = col("project_code"),
       displayName = coalesce(nullif(trim(col("title_en")), lit("")),
@@ -2622,8 +2325,7 @@ object FunderConfigs {
       endYear = col("end_year").try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("project_code").isNotNull)
+      rowFilter = col("project_code").isNotNull))
   }
 
   /** GACR / Grantová Agentura České Republiky via IS VaVaI CEP
@@ -2675,22 +2377,17 @@ object FunderConfigs {
     * in the landing URL. */
   def formas: FunderIngestConfig = {
     val ta = lower(col("type_of_award"))
-    val fundingType =
-      when(ta.like("%positions%"), "fellowship")
-        .when(ta.like("%stipend%"), "fellowship")
-        .when(ta.like("%infrastructure%"), "infrastructure")
-        .when(ta.like("%environment%"), "research")
-        .when(ta.like("%project%"), "research")
-        .when(ta.like("%international%"), "research")
-        .otherwise("grant")
+    val fundingType = likeCascade(ta, Seq(
+      "positions" -> "fellowship", "stipend" -> "fellowship",
+      "infrastructure" -> "infrastructure", "environment" -> "research",
+      "project" -> "research", "international" -> "research"), "grant")
     val lead = when(col("pi_family_name").isNotNull &&
         trim(col("pi_family_name")) =!= "",
       investigator(col("pi_given_name"), col("pi_family_name"),
-        col("pi_orcid"), lit(null).cast("date"),
         col("coordinating_organisation"), lit("Sweden"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320321033L, provenance = "formas", priority = 16,
+        orcid = col("pi_orcid")))
+    FunderIngestConfig(4320321033L, AwardFieldMap(
+      provenance = "formas", priority = 16,
       mintKey = lower(swecrisBareId(col("project_id"))),
       funderAwardId = swecrisBareId(col("project_id")),
       displayName = coalesce(col("title_english"), col("title")),
@@ -2703,9 +2400,8 @@ object FunderConfigs {
       leadInvestigator = lead,
       landingPageUrl = concat(lit("https://www.vr.se/swecris#/project/"),
         col("project_id")),
-      doi = lit(null).cast("string"),
       rowFilter = col("project_id").isNotNull &&
-        trim(col("project_id")) =!= "")
+        trim(col("project_id")) =!= ""))
   }
 
   // ---------------------------------------------------------------
@@ -2721,28 +2417,24 @@ object FunderConfigs {
   def pcori: FunderIngestConfig = {
     val sy = col("start_year").try_cast("int")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United States"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320308927L, provenance = "pcori", priority = 345,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United States")))
+    FunderIngestConfig(4320308927L, AwardFieldMap(
+      provenance = "pcori", priority = 345,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = lit("USD"),
       fundingType = lit("research"),
       funderScheme = col("funder_scheme"),
       startDate = when(sy.isNotNull,
         d(concat(sy.cast("string"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
-      startYear = sy, endYear = lit(null).cast("int"),
+      startYear = sy,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Ministère des Affaires sociales et de la Santé (France), SIRANO
@@ -2752,28 +2444,23 @@ object FunderConfigs {
   def minSanteFr: FunderIngestConfig = {
     val sy = col("start_year").try_cast("int")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("France"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320322734L, provenance = "min_sante_fr", priority = 333,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("France")))
+    FunderIngestConfig(4320322734L, AwardFieldMap(
+      provenance = "min_sante_fr", priority = 333,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = lit("EUR"),
       fundingType = lit("grant"),
       funderScheme = col("funder_scheme"),
       startDate = when(sy.isNotNull,
         d(concat(sy.cast("string"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
-      startYear = sy, endYear = lit(null).cast("int"),
+      startYear = sy,
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** RFBR / Russian Foundation for Basic Research legacy portal
@@ -2786,27 +2473,20 @@ object FunderConfigs {
     val lead = when(col("lead_family_name").isNotNull &&
         col("lead_family_name") =!= "",
       investigator(nullif(trim(col("lead_given_name")), lit("")),
-        trim(col("lead_family_name")), lit(null).cast("string"),
-        lit(null).cast("date"), lit(null).cast("string"), lit("RU"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320321079L, provenance = "rfbr", priority = 401,
+        trim(col("lead_family_name")), lit(null).cast("string"), lit("RU")))
+    FunderIngestConfig(4320321079L, AwardFieldMap(
+      provenance = "rfbr", priority = 401,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("display_name"),
       description = col("description"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("research"),
       funderScheme = col("funder_scheme"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = col("start_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("display_name").isNotNull && col("status") === "поддержана")
+        col("display_name").isNotNull && col("status") === "поддержана"))
   }
 
   /** FMFC / Financial Markets Foundation for Children
@@ -2815,26 +2495,20 @@ object FunderConfigs {
     * NULL works_api_url; no row filter in the reference. */
   def fmfc: FunderIngestConfig = {
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("Australia"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320323274L, provenance = "fmfc", priority = 329,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("Australia")))
+    FunderIngestConfig(4320323274L, AwardFieldMap(
+      provenance = "fmfc", priority = 329,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = lit("AUD"),
       fundingType = lit("grant"),
-      funderScheme = lit(null).cast("string"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
-      startYear = lit(null).cast("int"), endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** NEH / National Endowment for the Humanities bulk open data
@@ -2852,10 +2526,9 @@ object FunderConfigs {
     val lead = when(col("lead_full_name").isNotNull &&
         col("lead_full_name") =!= "",
       investigator(col("lead_given_name"), col("lead_family_name"),
-        lit(null).cast("string"), sd,
-        col("institution"), col("inst_country"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306100L, provenance = "neh_open_data", priority = 81,
+        col("institution"), col("inst_country"), roleStart = sd))
+    FunderIngestConfig(4320306100L, AwardFieldMap(
+      provenance = "neh_open_data", priority = 81,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("project_title"),
@@ -2869,9 +2542,8 @@ object FunderConfigs {
       endYear = substring(col("end_grant"), 1, 4).try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("project_title").isNotNull)
+        col("project_title").isNotNull))
   }
 
   /** The RWJF surrogate-id stage (CreateRWJFAwards.ipynb cell 9's
@@ -2900,18 +2572,14 @@ object FunderConfigs {
     * last 'City, ST' token as country, and the page-anchored landing
     * URL. */
   def rwjf: FunderIngestConfig = {
-    val lead = investigator(lit(null).cast("string"),
-      lit(null).cast("string"), lit(null).cast("string"),
-      lit(null).cast("date"), lit(null).cast("string"),
-      element_at(split(col("location"), ", "), -1),
-      lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320306139L, provenance = "rwjf_grants_explorer",
+    val lead = investigator(lit(null).cast("string"), lit(null).cast("string"),
+      lit(null).cast("string"), element_at(split(col("location"), ", "), -1))
+    FunderIngestConfig(4320306139L, AwardFieldMap(
+      provenance = "rwjf_grants_explorer",
       priority = 46,
       mintKey = concat(lit("rwj:"), col("surrogate_id").cast("string")),
       funderAwardId = col("surrogate_id").cast("string"),
       displayName = col("grant_title"),
-      description = lit(null).cast("string"),
       amount = col("amount_usd"),
       currency = lit("USD"),
       fundingType = lit("grant"),
@@ -2928,8 +2596,7 @@ object FunderConfigs {
       landingPageUrl = concat(
         lit("https://www.rwjf.org/en/grants/awarded-grants.html?s="),
         col("page").cast("string")),
-      doi = lit(null).cast("string"),
-      rowFilter = lit(true))
+      rowFilter = lit(true)))
   }
 
   /** Humboldt / Alexander von Humboldt-Stiftung network DB
@@ -2941,15 +2608,13 @@ object FunderConfigs {
   def humboldt: FunderIngestConfig = {
     val amt = col("amount").try_cast("decimal(18,2)")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("Germany"), lit(null).cast(affIds)))
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("Germany")))
       .when(col("institution").isNotNull,
         investigator(lit(null).cast("string"), lit(null).cast("string"),
-          lit(null).cast("string"), lit(null).cast("date"),
-          col("institution"), lit("Germany"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320308269L, provenance = "humboldt", priority = 383,
+          col("institution"), lit("Germany")))
+    FunderIngestConfig(4320308269L, AwardFieldMap(
+      provenance = "humboldt", priority = 383,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = coalesce(nullif(trim(col("title")), lit("")),
@@ -2959,14 +2624,11 @@ object FunderConfigs {
       currency = when(amt > 0, col("currency")),
       fundingType = lit("grant"),
       funderScheme = col("scheme"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = year(d(col("start_date_raw"))),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull,
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** CDMRP / Congressionally Directed Medical Research Programs via
@@ -2980,13 +2642,11 @@ object FunderConfigs {
     val sd = d(substring(col("start_date"), 1, 10))
     val ed = d(substring(col("end_date"), 1, 10))
     val lead = when(col("pi_last_name").isNotNull,
-      investigator(initcap(col("pi_first_name")),
-        initcap(col("pi_last_name")), lit(null).cast("string"),
-        lit(null).cast("date"),
+      investigator(initcap(col("pi_first_name")), initcap(col("pi_last_name")),
         coalesce(col("institution"), col("pi_affiliation")),
-        col("institution_country"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320338273L, provenance = "dimensions_cdmrp",
+        col("institution_country")))
+    FunderIngestConfig(4320338273L, AwardFieldMap(
+      provenance = "dimensions_cdmrp",
       priority = 237,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -3001,9 +2661,8 @@ object FunderConfigs {
       startYear = year(sd), endYear = year(ed),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   // ---------------------------------------------------------------
@@ -3021,11 +2680,10 @@ object FunderConfigs {
   def macArthurFellows: FunderIngestConfig = {
     val sd = d(col("start_date"))
     val lead = when(col("name").isNotNull && col("name") =!= "",
-      investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), sd,
-        col("affiliation"), col("country"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306142L, provenance = "macarthur_fellows",
+      investigator(col("given_name"), col("family_name"), col("affiliation"),
+        col("country"), roleStart = sd))
+    FunderIngestConfig(4320306142L, AwardFieldMap(
+      provenance = "macarthur_fellows",
       priority = 104,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -3040,9 +2698,8 @@ object FunderConfigs {
       endYear = substring(col("end_date"), 1, 4).try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("name").isNotNull)
+        col("name").isNotNull))
   }
 
   /** Guggenheim Fellowship directory
@@ -3055,11 +2712,9 @@ object FunderConfigs {
     val lead = when(col("family_name").isNotNull ||
         col("given_name").isNotNull,
       investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320308774L, provenance = "guggenheim_fellowship",
+        lit(null).cast("string"), lit(null).cast("string")))
+    FunderIngestConfig(4320308774L, AwardFieldMap(
+      provenance = "guggenheim_fellowship",
       priority = 163,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -3068,18 +2723,11 @@ object FunderConfigs {
         when(col("start_year").isNotNull,
           concat(lit(" ("), col("start_year"), lit(")")))
           .otherwise(lit(""))),
-      description = lit(null).cast("string"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("fellowship"),
-      funderScheme = lit(null).cast("string"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = col("start_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("funder_award_id").isNotNull)
+      rowFilter = col("funder_award_id").isNotNull))
   }
 
   /** The MINCYT fuente→funder trio
@@ -3100,16 +2748,14 @@ object FunderConfigs {
       coalesce(to_date(try_to_timestamp(s, lit("yyyy/MM/dd"))),
         to_date(try_to_timestamp(s, lit("yyyy-MM-dd"))))
     }
-    val lead = investigator(lit(null).cast("string"),
-      lit(null).cast("string"), lit(null).cast("string"),
-      lit(null).cast("date"), lit(null).cast("string"), lit("AR"),
-      lit(null).cast(affIds))
-    ResolvedFunderIngestConfig(
+    val lead = investigator(lit(null).cast("string"), lit(null).cast("string"),
+      lit(null).cast("string"), lit("AR"))
+    val resolved = when(col("proyecto_fuente") === "ANPCYT",
+        4320334832L)
+      .when(col("proyecto_fuente") === "CONICET", 4320321594L)
+      .when(col("proyecto_fuente") === "INTA", 4320326565L)
+    ResolvedFunderIngestConfig(resolved, AwardFieldMap(
       provenance = "argentina_mincyt", priority = 43,
-      resolvedFunderId = when(col("proyecto_fuente") === "ANPCYT",
-          4320334832L)
-        .when(col("proyecto_fuente") === "CONICET", 4320321594L)
-        .when(col("proyecto_fuente") === "INTA", 4320326565L),
       mintKey = lower(col("proyecto_id").cast("string")),
       funderAwardId = coalesce(col("codigo_identificacion"),
         col("proyecto_id").cast("string")),
@@ -3127,8 +2773,7 @@ object FunderConfigs {
       landingPageUrl = concat(lit("https://datos.gob.ar/dataset/" +
         "mincyt-proyectos-ciencia-tecnologia-innovacion/archivo/" +
         "proyectos_"), col("_source_year").cast("string")),
-      doi = lit(null).cast("string"),
-      rowFilter = col("proyecto_id").isNotNull)
+      rowFilter = col("proyecto_id").isNotNull))
   }
 
   /** RSCF / Russian Science Foundation project cards
@@ -3140,28 +2785,21 @@ object FunderConfigs {
     val lead = when(col("lead_family_name").isNotNull &&
         col("lead_family_name") =!= "",
       investigator(nullif(trim(col("lead_given_name")), lit("")),
-        trim(col("lead_family_name")), lit(null).cast("string"),
-        lit(null).cast("date"),
-        nullif(trim(col("organization")), lit("")), lit("RU"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320324099L, provenance = "rscf", priority = 399,
+        trim(col("lead_family_name")),
+        nullif(trim(col("organization")), lit("")), lit("RU")))
+    FunderIngestConfig(4320324099L, AwardFieldMap(
+      provenance = "rscf", priority = 399,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("display_name"),
       description = col("description"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("research"),
       funderScheme = col("funder_scheme"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = col("start_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("display_name").isNotNull)
+        col("display_name").isNotNull))
   }
 
   /** CFI / Canada Foundation for Innovation dashboard
@@ -3177,11 +2815,9 @@ object FunderConfigs {
         trim(col("team_leaders")) =!= "",
       investigator(lit(null).cast("string"),
         trim(element_at(split(col("team_leaders"), "\\|"), 1)),
-        lit(null).cast("string"), sd,
-        trim(col("lead_institution")), lit("Canada"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320995L, provenance = "cfi_opendata", priority = 8,
+        trim(col("lead_institution")), lit("Canada"), roleStart = sd))
+    FunderIngestConfig(4320320995L, AwardFieldMap(
+      provenance = "cfi_opendata", priority = 8,
       mintKey = lower(regexp_replace(
         concat(col("decision_year"), lit("_"), col("lead_institution"),
           lit("_"), substring(col("project_title"), 1, 50)),
@@ -3190,20 +2826,17 @@ object FunderConfigs {
         (abs(hash(concat(col("lead_institution"), col("project_title"))))
           % 1000000).cast("string")),
       displayName = col("project_title"),
-      description = lit(null).cast("string"),
       amount = col("cfi_contribution").try_cast("double"),
       currency = lit("CAD"),
       fundingType = lit("infrastructure"),
       funderScheme = col("fund_type"),
-      startDate = sd, endDate = lit(null).cast("date"),
+      startDate = sd,
       startYear = col("decision_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = lit("https://www.innovation.ca/projects-results/" +
         "funded-projects-dashboard"),
-      doi = lit(null).cast("string"),
       rowFilter = col("project_title").isNotNull &&
-        trim(col("project_title")) =!= "")
+        trim(col("project_title")) =!= ""))
   }
 
   /** Hewlett Foundation grants DB (CreateHewlettAwards.ipynb cell 12,
@@ -3218,10 +2851,9 @@ object FunderConfigs {
       "Effective Philanthropy", "Gender Equity and Governance")
     val lead = when(col("grantee").isNotNull && col("grantee") =!= "",
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), sd,
-        col("grantee"), lit("US"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320307873L, provenance = "hewlett_facetwp",
+        col("grantee"), lit("US"), roleStart = sd))
+    FunderIngestConfig(4320307873L, AwardFieldMap(
+      provenance = "hewlett_facetwp",
       priority = 86,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -3242,9 +2874,8 @@ object FunderConfigs {
       endYear = substring(col("end_date"), 1, 4).try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("grantee_website"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("grantee").isNotNull)
+        col("grantee").isNotNull))
   }
 
   private def affType: String =
@@ -3294,15 +2925,13 @@ object FunderConfigs {
             lit("Slovenia").as("country"),
             lit(null).cast(affIds).as("ids")))
           .otherwise(lit(null).cast(affType)).as("affiliation")))
-    FunderIngestConfig(
-      funderId = 4320322554L, provenance = "aris_ecris", priority = 423,
+    FunderIngestConfig(4320322554L, AwardFieldMap(
+      provenance = "aris_ecris", priority = 423,
       mintKey = lower(col("code")),
       funderAwardId = col("code"),
       displayName = coalesce(nullif(trim(col("title_en")), lit("")),
         col("title_sl")),
       description = nullif(trim(col("keywords")), lit("")),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = when(prg === "Z", "fellowship").otherwise("research"),
       funderScheme = coalesce(scheme, prg),
       startDate = d(col("start_date")), endDate = d(col("end_date")),
@@ -3310,8 +2939,7 @@ object FunderConfigs {
       endYear = year(d(col("end_date"))),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
-      rowFilter = lit(true))
+      rowFilter = lit(true)))
   }
 
   /** AMED's registry-tolerant funder lookup
@@ -3346,12 +2974,10 @@ object FunderConfigs {
     val leaderName = nullif(trim(col("lead_researcher_name")), lit(""))
     val leaderAff = nullif(trim(col("lead_affiliation_name")), lit(""))
     val lead = when(leaderName.isNotNull || leaderAff.isNotNull,
-      investigator(lit(null).cast("string"), leaderName,
-        lit(null).cast("string"), lit(null).cast("date"),
-        leaderAff, when(leaderAff.isNotNull, "JP"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320311405L, provenance = "amed_amedfind",
+      investigator(lit(null).cast("string"), leaderName, leaderAff,
+        when(leaderAff.isNotNull, "JP")))
+    FunderIngestConfig(4320311405L, AwardFieldMap(
+      provenance = "amed_amedfind",
       priority = 207,
       mintKey = lower(trim(col("funder_award_id"))),
       funderAwardId = col("funder_award_id"),
@@ -3367,9 +2993,8 @@ object FunderConfigs {
       startYear = vy(col("start_year")), endYear = vy(col("end_year")),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("display_name").isNotNull)
+        col("display_name").isNotNull))
   }
 
   /** AHA / American Heart Association report builder
@@ -3382,8 +3007,8 @@ object FunderConfigs {
     val arr = from_json(col("investigators_json"),
       org.apache.spark.sql.types.DataType.fromDDL(
         s"array<${FunderIngest.InvestigatorType}>"))
-    FunderIngestConfig(
-      funderId = 4320306230L, provenance = "aha_report_builder",
+    FunderIngestConfig(4320306230L, AwardFieldMap(
+      provenance = "aha_report_builder",
       priority = 397,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -3399,10 +3024,9 @@ object FunderConfigs {
       endYear = col("end_year").try_cast("int"),
       leadInvestigator = element_at(arr, 1),
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         col("title").isNotNull,
-      investigators = arr)
+      investigators = arr))
   }
 
   /** Carnegie Corporation of New York grants DB
@@ -3414,11 +3038,9 @@ object FunderConfigs {
     val lead = when(col("grantee_org").isNotNull &&
         col("grantee_org") =!= "",
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("grantee_org"), lit(null).cast("string"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306125L, provenance = "carnegie_corporation",
+        col("grantee_org"), lit(null).cast("string")))
+    FunderIngestConfig(4320306125L, AwardFieldMap(
+      provenance = "carnegie_corporation",
       priority = 141,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -3427,19 +3049,15 @@ object FunderConfigs {
         col("grantee_org"),
         when(col("year").isNotNull,
           concat(lit(" ("), col("year"), lit(")"))).otherwise(lit(""))),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("double"),
       currency = col("currency"),
       fundingType = lit("grant"),
       funderScheme = col("program"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = col("year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("grantee_org").isNotNull)
+        col("grantee_org").isNotNull))
   }
 
   // ---------------------------------------------------------------
@@ -3454,14 +3072,11 @@ object FunderConfigs {
     * and the TRIMMED raw id kept in the landing URL. */
   def energimyndigheten: FunderIngestConfig = {
     val ta = lower(coalesce(col("type_of_award"), lit("")))
-    val fundingType =
-      when(ta.like("%fellow%"), "fellowship")
-        .when(ta.like("%stipend%"), "fellowship")
-        .when(ta.like("%infrastructure%"), "infrastructure")
-        .when(ta.like("%project%"), "research")
-        .otherwise("grant")
-    FunderIngestConfig(
-      funderId = 4320322711L, provenance = "energimyndigheten",
+    val fundingType = likeCascade(ta, Seq(
+      "fellow" -> "fellowship", "stipend" -> "fellowship",
+      "infrastructure" -> "infrastructure", "project" -> "research"), "grant")
+    FunderIngestConfig(4320322711L, AwardFieldMap(
+      provenance = "energimyndigheten",
       priority = 435,
       mintKey = lower(swecrisBareId(col("project_id"))),
       funderAwardId = swecrisBareId(col("project_id")),
@@ -3476,12 +3091,10 @@ object FunderConfigs {
       startDate = d(col("start_date")), endDate = d(col("end_date")),
       startYear = year(d(col("start_date"))),
       endYear = year(d(col("end_date"))),
-      leadInvestigator = nullInvestigator,
       landingPageUrl = concat(lit("https://www.vr.se/swecris#/project/"),
         trim(col("project_id"))),
-      doi = lit(null).cast("string"),
       rowFilter = col("project_id").isNotNull &&
-        trim(col("project_id")) =!= "")
+        trim(col("project_id")) =!= ""))
   }
 
   /** Forte / Swedish Research Council for Health, Working Life and
@@ -3490,20 +3103,16 @@ object FunderConfigs {
     * cascade. */
   def forte: FunderIngestConfig = {
     val ta = lower(col("type_of_award"))
-    val fundingType =
-      when(ta.like("%positions%"), "fellowship")
-        .when(ta.like("%stipend%"), "fellowship")
-        .when(ta.like("%infrastructure%"), "infrastructure")
-        .when(ta.like("%project%"), "research")
-        .otherwise("grant")
+    val fundingType = likeCascade(ta, Seq(
+      "positions" -> "fellowship", "stipend" -> "fellowship",
+      "infrastructure" -> "infrastructure", "project" -> "research"), "grant")
     val lead = when(col("pi_family_name").isNotNull &&
         trim(col("pi_family_name")) =!= "",
       investigator(col("pi_given_name"), col("pi_family_name"),
-        col("pi_orcid"), lit(null).cast("date"),
         col("coordinating_organisation"), lit("Sweden"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320324004L, provenance = "forte", priority = 17,
+        orcid = col("pi_orcid")))
+    FunderIngestConfig(4320324004L, AwardFieldMap(
+      provenance = "forte", priority = 17,
       mintKey = lower(swecrisBareId(col("project_id"))),
       funderAwardId = swecrisBareId(col("project_id")),
       displayName = coalesce(col("title_english"), col("title")),
@@ -3516,9 +3125,8 @@ object FunderConfigs {
       leadInvestigator = lead,
       landingPageUrl = concat(lit("https://www.vr.se/swecris#/project/"),
         col("project_id")),
-      doi = lit(null).cast("string"),
       rowFilter = col("project_id").isNotNull &&
-        trim(col("project_id")) =!= "")
+        trim(col("project_id")) =!= ""))
   }
 
   /** The beneficiary-register archetype (HK ITC / CSA Canada / AGAUR
@@ -3539,11 +3147,10 @@ object FunderConfigs {
     val inst = col("institution_name")
     val lead = when(inst.isNotNull && inst =!= instPlaceholder &&
         trim(inst) =!= "",
-      investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        inst, country, lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = funderId, provenance = provenance, priority = priority,
+      investigator(lit(null).cast("string"), lit(null).cast("string"), inst,
+        country))
+    FunderIngestConfig(funderId, AwardFieldMap(
+      provenance = provenance, priority = priority,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = display, description = description,
@@ -3559,9 +3166,8 @@ object FunderConfigs {
       startYear = sy, endYear = ey,
       leadInvestigator = lead,
       landingPageUrl = lit(landing),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        trim(col("funder_award_id").cast("string")) =!= "")
+        trim(col("funder_award_id").cast("string")) =!= ""))
   }
 
   /** HK ITC / Innovation and Technology Commission ITF register
@@ -3619,28 +3225,23 @@ object FunderConfigs {
     val amt = col("amount").try_cast("decimal(18,2)")
     val lead = when(col("institution").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("Slovakia"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320323251L, provenance = "apvv", priority = 367,
+        col("institution"), lit("Slovakia")))
+    FunderIngestConfig(4320323251L, AwardFieldMap(
+      provenance = "apvv", priority = 367,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = coalesce(nullif(trim(col("title")), lit("")),
         concat(lit("APVV grant "), col("funder_award_id"))),
-      description = lit(null).cast("string"),
       amount = when(amt > 0, amt),
       currency = when(amt > 0, col("currency")),
       fundingType = lit("grant"),
       funderScheme = col("scheme"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = regexp_extract(col("scheme"), "([0-9]{4})", 1)
         .try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Moore Foundation grants DB (CreateMooreAwards.ipynb, ~4.5K):
@@ -3651,28 +3252,22 @@ object FunderConfigs {
     val amt = col("amount").try_cast("double")
     val lead = when(col("grantee_org").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("grantee_org"), lit(null).cast("string"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306202L, provenance = "moore_foundation",
+        col("grantee_org"), lit(null).cast("string")))
+    FunderIngestConfig(4320306202L, AwardFieldMap(
+      provenance = "moore_foundation",
       priority = 161,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = coalesce(col("title"),
         concat(lit("Moore Foundation grant "), col("funder_award_id"))),
-      description = lit(null).cast("string"),
       amount = when(amt > 0, amt),
       currency = when(amt > 0, "USD"),
       fundingType = lit("grant"),
       funderScheme = col("program"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = col("start_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("funder_award_id").isNotNull)
+      rowFilter = col("funder_award_id").isNotNull))
   }
 
   /** Doris Duke Foundation (CreateDorisDukeAwards.ipynb, ~4.3K): the
@@ -3688,14 +3283,12 @@ object FunderConfigs {
     val sd = d(col("approved_on"))
     val lead = when(orgArm && col("grantee_org").isNotNull,
         investigator(lit(null).cast("string"), lit(null).cast("string"),
-          lit(null).cast("string"), sd,
-          col("grantee_org"), lit("US"), lit(null).cast(affIds)))
+          col("grantee_org"), lit("US"), roleStart = sd))
       .when(col("recipient_name").isNotNull,
         investigator(col("given_name"), col("family_name"),
-          lit(null).cast("string"), lit(null).cast("date"),
-          lit(null).cast("string"), lit("US"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306134L, provenance = "doris_duke", priority = 143,
+          lit(null).cast("string"), lit("US")))
+    FunderIngestConfig(4320306134L, AwardFieldMap(
+      provenance = "doris_duke", priority = 143,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = when(orgArm,
@@ -3708,14 +3301,12 @@ object FunderConfigs {
       currency = col("currency"),
       fundingType = col("funding_type"),
       funderScheme = col("scheme"),
-      startDate = sd, endDate = lit(null).cast("date"),
+      startDate = sd,
       startYear = col("year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        (col("grantee_org").isNotNull || col("recipient_name").isNotNull))
+        (col("grantee_org").isNotNull || col("recipient_name").isNotNull)))
   }
 
   /** HMRF / Health and Medical Research Fund (Hong Kong)
@@ -3727,11 +3318,9 @@ object FunderConfigs {
     val cy = col("call_year").try_cast("int")
     val lead = when(col("lead_family_name").isNotNull,
       investigator(col("lead_given_name"), col("lead_family_name"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("lead_affiliation"), lit("Hong Kong"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320335055L, provenance = "hmrf", priority = 322,
+        col("lead_affiliation"), lit("Hong Kong")))
+    FunderIngestConfig(4320335055L, AwardFieldMap(
+      provenance = "hmrf", priority = 322,
       mintKey = lower(col("ref_no")),
       funderAwardId = col("ref_no"),
       displayName = col("project_title"),
@@ -3743,13 +3332,10 @@ object FunderConfigs {
       funderScheme = col("fund"),
       startDate = when(cy.isNotNull,
         d(concat(cy.cast("string"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
-      startYear = cy, endYear = lit(null).cast("int"),
+      startYear = cy,
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Sloan Foundation grants DB (CreateSloanAwards.ipynb, ~3.4K):
@@ -3759,11 +3345,10 @@ object FunderConfigs {
   def sloan: FunderIngestConfig = {
     val lead = when(col("grantee_org").isNotNull ||
         col("investigator").isNotNull,
-      investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("grantee_org"), col("country"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306151L, provenance = "sloan_foundation",
+      investigator(col("given_name"), col("family_name"), col("grantee_org"),
+        col("country")))
+    FunderIngestConfig(4320306151L, AwardFieldMap(
+      provenance = "sloan_foundation",
       priority = 149,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -3776,14 +3361,11 @@ object FunderConfigs {
       currency = col("currency"),
       fundingType = lit("grant"),
       funderScheme = col("program"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = col("year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("permalink_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("grantee_org").isNotNull)
+        col("grantee_org").isNotNull))
   }
 
   /** Independent Research Fund Denmark via Forskningsportal
@@ -3794,13 +3376,10 @@ object FunderConfigs {
     * 'funder'-asserted ROR ids, and a REAL grant DOI. */
   def irfDenmark: FunderIngestConfig = {
     val ft = lower(col("funding_type"))
-    val fundingType =
-      when(ft.like("%fellowship%"), "fellowship")
-        .when(ft.like("%postdoctoral%"), "fellowship")
-        .when(ft.like("%sapere aude%"), "fellowship")
-        .when(ft.like("%individual%"), "grant")
-        .when(ft.like("%research project%"), "grant")
-        .otherwise("grant")
+    val fundingType = likeCascade(ft, Seq(
+      "fellowship" -> "fellowship", "postdoctoral" -> "fellowship",
+      "sapere aude" -> "fellowship", "individual" -> "grant",
+      "research project" -> "grant"), "grant")
     val rorIds = when(col("organisation_ror").isNotNull,
       array(struct(col("organisation_ror").as("id"),
         lit("ror").as("type"), lit("funder").as("asserted_by"))))
@@ -3808,10 +3387,10 @@ object FunderConfigs {
     val lead = when(col("last_name").isNotNull &&
         col("person_role") === "Principal Investigator",
       investigator(col("first_name"), col("last_name"),
-        nullif(trim(col("orcid")), lit("")), lit(null).cast("date"),
-        col("organisation_name"), col("organisation_country"), rorIds))
-    FunderIngestConfig(
-      funderId = 4320322928L, provenance = "forskningsportal_dk",
+        col("organisation_name"), col("organisation_country"),
+        orcid = nullif(trim(col("orcid")), lit("")), ids = rorIds))
+    FunderIngestConfig(4320322928L, AwardFieldMap(
+      provenance = "forskningsportal_dk",
       priority = 30,
       mintKey = lower(col("grant_id").cast("string")),
       funderAwardId = col("grant_id"),
@@ -3830,7 +3409,7 @@ object FunderConfigs {
       landingPageUrl = col("project_url"),
       doi = nullif(trim(col("grant_doi")), lit("")),
       rowFilter = col("grant_id").isNotNull &&
-        col("person_role") === "Principal Investigator")
+        col("person_role") === "Principal Investigator"))
   }
 
   // ---------------------------------------------------------------
@@ -3847,13 +3426,12 @@ object FunderConfigs {
     * the grantee org and a NULL country. */
   def templeton: FunderIngestConfig = {
     val lead = investigator(lit(null).cast("string"),
-      col("grant_project_leader"), lit(null).cast("string"),
-      lit(null).cast("date"), col("grant_grantee"),
-      lit(null).cast("string"), lit(null).cast(affIds))
+      col("grant_project_leader"), col("grant_grantee"),
+      lit(null).cast("string"))
     val sd = d(substring(col("grant_start_date"), 1, 10))
     val ed = d(substring(col("grant_end_date"), 1, 10))
-    FunderIngestConfig(
-      funderId = 4320306193L, provenance = "templeton_wp", priority = 39,
+    FunderIngestConfig(4320306193L, AwardFieldMap(
+      provenance = "templeton_wp", priority = 39,
       mintKey = lower(col("grant_id")),
       funderAwardId = col("grant_id"),
       displayName = coalesce(nullif(col("title"), lit("")),
@@ -3863,14 +3441,12 @@ object FunderConfigs {
       amount = col("grant_amount_raw").try_cast("double"),
       currency = lit("USD"),
       fundingType = lit("research"),
-      funderScheme = lit(null).cast("string"),
       startDate = sd, endDate = ed,
       startYear = year(sd), endYear = year(ed),
       leadInvestigator = lead,
       landingPageUrl = col("url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("grant_id").isNotNull &&
-        trim(col("grant_id")) =!= "")
+        trim(col("grant_id")) =!= ""))
   }
 
   /** The ETIS (Estonian Research Information System) grant shape —
@@ -3882,11 +3458,10 @@ object FunderConfigs {
       priority: Int, fallbackLabel: String): FunderIngestConfig = {
     val amt = col("amount").try_cast("decimal(18,2)")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("Estonia"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = funderId, provenance = provenance, priority = priority,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("Estonia")))
+    FunderIngestConfig(funderId, AwardFieldMap(
+      provenance = provenance, priority = priority,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = coalesce(nullif(trim(col("title")), lit("")),
@@ -3901,9 +3476,8 @@ object FunderConfigs {
       endYear = year(d(col("end_date_raw"))),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** ETAg / Estonian Research Council via ETIS
@@ -3931,14 +3505,12 @@ object FunderConfigs {
     val yr = col("ano_convocatoria").try_cast("int")
     val awardId = coalesce(nullif(trim(col("codigo_proyecto")), lit("")),
       concat(lit("minciencias-"), col("proyecto_id")))
-    val lead = investigator(lit(null).cast("string"),
-      lit(null).cast("string"), lit(null).cast("string"),
-      lit(null).cast("date"), col("entidad_ejecuta"), lit("CO"),
-      lit(null).cast(affIds))
-    ResolvedFunderIngestConfig(
+    val lead = investigator(lit(null).cast("string"), lit(null).cast("string"),
+      col("entidad_ejecuta"), lit("CO"))
+    val resolved = when(yr >= 2019, 3277441329L)
+      .when(yr < 2019, 4320309955L)
+    ResolvedFunderIngestConfig(resolved, AwardFieldMap(
       provenance = "datos_gov_co_minciencias", priority = 52,
-      resolvedFunderId = when(yr >= 2019, 3277441329L)
-        .when(yr < 2019, 4320309955L),
       mintKey = lower(awardId),
       funderAwardId = awardId,
       displayName = col("titulo_proyecto"),
@@ -3948,13 +3520,11 @@ object FunderConfigs {
       fundingType = lit("research"),
       funderScheme = col("nme_prog_cti"),
       startDate = d(substring(col("fecha_aprobacion"), 1, 10)),
-      endDate = lit(null).cast("date"),
-      startYear = yr, endYear = lit(null).cast("int"),
+      startYear = yr,
       leadInvestigator = lead,
       landingPageUrl = col("source_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("slug").isNotNull &&
-        col("ano_convocatoria").isNotNull)
+        col("ano_convocatoria").isNotNull))
   }
 
   /** Telethon Foundation (Italy) grants DB
@@ -3965,15 +3535,13 @@ object FunderConfigs {
   def telethon: FunderIngestConfig = {
     val amt = col("amount").try_cast("decimal(18,2)")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("Italy"), lit(null).cast(affIds)))
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("Italy")))
       .when(col("institution").isNotNull,
         investigator(lit(null).cast("string"), lit(null).cast("string"),
-          lit(null).cast("string"), lit(null).cast("date"),
-          col("institution"), lit("Italy"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320321179L, provenance = "telethon", priority = 218,
+          col("institution"), lit("Italy")))
+    FunderIngestConfig(4320321179L, AwardFieldMap(
+      provenance = "telethon", priority = 218,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = coalesce(nullif(trim(col("title")), lit("")),
@@ -3988,9 +3556,8 @@ object FunderConfigs {
       endYear = year(d(col("end_date_raw"))),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull,
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Sweden-America Foundation fellows
@@ -4001,11 +3568,10 @@ object FunderConfigs {
     * destination). */
   def swedenAmericaFdn: FunderIngestConfig = {
     val lead = when(col("name").isNotNull && col("name") =!= "",
-      investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("US"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320938L, provenance = "sweden_america_foundation",
+      investigator(col("given_name"), col("family_name"), col("institution"),
+        lit("US")))
+    FunderIngestConfig(4320320938L, AwardFieldMap(
+      provenance = "sweden_america_foundation",
       priority = 145,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -4013,18 +3579,14 @@ object FunderConfigs {
         col("start_year"), lit("-"), col("end_year"), lit(": "),
         col("name")),
       description = col("description"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("fellowship"),
       funderScheme = lit("Sweden-America Foundation Fellowship"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = col("start_year").try_cast("int"),
       endYear = col("end_year").try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("name").isNotNull)
+        col("name").isNotNull))
   }
 
   /** Arnold Ventures via the Algolia grants index
@@ -4035,12 +3597,10 @@ object FunderConfigs {
   def arnoldVentures: FunderIngestConfig = {
     val sy = col("start_year")
     val ey = col("end_year")
-    val lead = investigator(lit(null).cast("string"),
-      lit(null).cast("string"), lit(null).cast("string"),
-      lit(null).cast("date"), nullif(col("grantee_name"), lit("")),
-      lit(null).cast("string"), lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320315359L, provenance = "arnold_ventures_algolia",
+    val lead = investigator(lit(null).cast("string"), lit(null).cast("string"),
+      nullif(col("grantee_name"), lit("")), lit(null).cast("string"))
+    FunderIngestConfig(4320315359L, AwardFieldMap(
+      provenance = "arnold_ventures_algolia",
       priority = 41,
       mintKey = lower(col("objectID")),
       funderAwardId = col("objectID"),
@@ -4058,9 +3618,8 @@ object FunderConfigs {
       startYear = sy.try_cast("int"), endYear = ey.try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("objectID").isNotNull &&
-        trim(col("objectID")) =!= "")
+        trim(col("objectID")) =!= ""))
   }
 
   /** Alzheimer's Association grants (CreateAlzAssociationAwards
@@ -4071,30 +3630,24 @@ object FunderConfigs {
   def alzAssociation: FunderIngestConfig = {
     val sy = col("start_year").try_cast("int")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), col("country"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306219L, provenance = "alz_association",
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        col("country")))
+    FunderIngestConfig(4320306219L, AwardFieldMap(
+      provenance = "alz_association",
       priority = 269,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
       description = col("description"),
       amount = lit(null).cast("decimal(18,2)"),
-      currency = lit(null).cast("string"),
       fundingType = lit("research"),
       funderScheme = col("programme"),
       startDate = when(sy.between(2000, 2027),
         d(concat(col("start_year"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
       startYear = when(sy.between(1980, 2030), sy),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   // ---------------------------------------------------------------
@@ -4124,13 +3677,8 @@ object FunderConfigs {
     val ey = col("end_year").try_cast("int")
     val future = sy > currentYear + 1
     def person(g: Column, fam: Column, aff: Column): Column =
-      struct(nullif(trim(g), lit("")).as("given_name"),
-        nullif(trim(fam), lit("")).as("family_name"),
-        lit(null).cast("string").as("orcid"),
-        lit(null).cast("date").as("role_start"),
-        struct(nullif(trim(aff), lit("")).as("name"),
-          lit(null).cast("string").as("country"),
-          lit(null).cast(affIds).as("ids")).as("affiliation"))
+      investigator(nullif(trim(g), lit("")), nullif(trim(fam), lit("")),
+        nullif(trim(aff), lit("")), lit(null).cast("string"))
     val coLead0 = from_json(col("co_lead_json"),
       org.apache.spark.sql.types.DataType.fromDDL(grbPerson))
     val coLead = when(coLead0.isNotNull,
@@ -4143,8 +3691,8 @@ object FunderConfigs {
       transform(invs0, x => person(x.getField("given_name"),
         x.getField("family_name"), x.getField("affiliation_name"))))
       .otherwise(FunderIngest.nullInvestigators)
-    FunderIngestConfig(
-      funderId = funderId, provenance = provenance, priority = priority,
+    FunderIngestConfig(funderId, AwardFieldMap(
+      provenance = provenance, priority = priority,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("display_name"),
@@ -4154,17 +3702,15 @@ object FunderConfigs {
       fundingType = lit("research"),
       funderScheme = coalesce(nullif(trim(col("research_method")),
         lit("")), lit(schemeFallback)),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = when(future, lit(null)).otherwise(sy),
       endYear = when(future, lit(null)).otherwise(ey),
       leadInvestigator = person(col("lead_given_name"),
         col("lead_family_name"), col("executing_institution")),
       coLeadInvestigator = coLead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "",
-      investigators = invs)
+      investigators = invs))
   }
 
   /** Taiwan MOST via GRB (CreateTaiwanMOSTGRBAwards.ipynb, ~177K
@@ -4233,13 +3779,13 @@ object FunderConfigs {
           lit(null).cast("date").as("role_start"),
           lit(null).cast(affType).as("affiliation"))))
       .otherwise(FunderIngest.nullInvestigators)
-    ResolvedFunderIngestConfig(
+    val resolved = when(sd >= lit("2015-09-01").cast("date"),
+        4320326762L)
+      .when(sd.isNotNull, 4320321994L)
+      .when(col("num").try_cast("int") >= 115000, 4320326762L)
+      .otherwise(4320321994L)
+    ResolvedFunderIngestConfig(resolved, AwardFieldMap(
       provenance = "otka_nkfih", priority = 429,
-      resolvedFunderId = when(sd >= lit("2015-09-01").cast("date"),
-          4320326762L)
-        .when(sd.isNotNull, 4320321994L)
-        .when(col("num").try_cast("int") >= 115000, 4320326762L)
-        .otherwise(4320321994L),
       mintKey = lower(col("identifier")),
       funderAwardId = col("identifier"),
       displayName = coalesce(nullif(trim(col("title_en")), lit("")),
@@ -4258,9 +3804,8 @@ object FunderConfigs {
       startYear = year(sd), endYear = year(d(col("end_date"))),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      investigators = invs)
+      investigators = invs))
   }
 
   /** UCOP / University of California RGPO
@@ -4280,19 +3825,14 @@ object FunderConfigs {
     val sd = dd(col("startdate"))
     def contact(i: Int): Column = {
       val e = element_at(contacts, i)
-      struct(nullif(trim(e.getField("firstname")), lit(""))
-          .as("given_name"),
-        nullif(trim(e.getField("lastname")), lit("")).as("family_name"),
-        lit(null).cast("string").as("orcid"),
-        sd.as("role_start"),
-        struct(nullif(trim(e.getField("institution")), lit(""))
-            .as("name"),
-          lit(null).cast("string").as("country"),
-          lit(null).cast(affIds).as("ids")).as("affiliation"))
+      investigator(nullif(trim(e.getField("firstname")), lit("")),
+        nullif(trim(e.getField("lastname")), lit("")),
+        nullif(trim(e.getField("institution")), lit("")),
+        lit(null).cast("string"), roleStart = sd)
     }
     val at = lower(coalesce(col("awardtype"), lit("")))
-    FunderIngestConfig(
-      funderId = 4320333677L, provenance = "ucop_grants", priority = 106,
+    FunderIngestConfig(4320333677L, AwardFieldMap(
+      provenance = "ucop_grants", priority = 106,
       mintKey = lower(col("applicationid")),
       funderAwardId = col("applicationid"),
       displayName = col("title"),
@@ -4315,10 +3855,9 @@ object FunderConfigs {
         contact(1)),
       coLeadInvestigator = when(contacts.isNotNull && size(contacts) >= 2,
         contact(2)),
-      landingPageUrl = lit(null).cast("string"),
       doi = nullif(trim(col("grant_doi")), lit("")),
       rowFilter = col("applicationid").isNotNull &&
-        trim(col("applicationid")) =!= "")
+        trim(col("applicationid")) =!= ""))
   }
 
   /** HRSA Data Warehouse (CreateHRSAAwards.ipynb, ~72K award-year
@@ -4335,8 +3874,8 @@ object FunderConfigs {
       lit("MM/dd/yyyy")))
     val sd = m(col("project_period_start_date"))
     val ed = m(col("grant_project_period_end_date"))
-    FunderIngestConfig(
-      funderId = 4320332175L, provenance = "hrsa_data_warehouse",
+    FunderIngestConfig(4320332175L, AwardFieldMap(
+      provenance = "hrsa_data_warehouse",
       priority = 57,
       mintKey = rowId,
       funderAwardId = rowId,
@@ -4360,14 +3899,11 @@ object FunderConfigs {
         nullif(trim(col("hrsa_program_area_name")), lit(""))),
       startDate = sd, endDate = ed,
       startYear = year(sd), endYear = year(ed),
-      leadInvestigator = nullInvestigator,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
       rowFilter = col("grant_number").isNotNull &&
         trim(col("grant_number")) =!= "" &&
         col("award_year").isNotNull && trim(col("award_year")) =!= "" &&
         col("source_row_hash").isNotNull &&
-        trim(col("source_row_hash")) =!= "")
+        trim(col("source_row_hash")) =!= ""))
   }
 
   /** IES / Institute of Education Sciences official API
@@ -4378,8 +3914,8 @@ object FunderConfigs {
   def ies: FunderIngestConfig = {
     val ct = lower(trim(col("mcontenttype")))
     val sd = d(substring(col("mdateprimary"), 1, 10))
-    FunderIngestConfig(
-      funderId = 4320332210L, provenance = "ies_official", priority = 61,
+    FunderIngestConfig(4320332210L, AwardFieldMap(
+      provenance = "ies_official", priority = 61,
       mintKey = lower(trim(col("mid"))),
       funderAwardId = trim(col("mid")),
       displayName = nullif(trim(col("mtitle")), lit("")),
@@ -4391,15 +3927,13 @@ object FunderConfigs {
         .when(ct === "cooperative agreement", "cooperative_agreement")
         .otherwise("grant"),
       funderScheme = nullif(trim(col("lprogram")), lit("")),
-      startDate = sd, endDate = lit(null).cast("date"),
-      startYear = year(sd), endYear = lit(null).cast("int"),
-      leadInvestigator = nullInvestigator,
+      startDate = sd,
+      startYear = year(sd),
       landingPageUrl = when(col("landing_page_url")
           .rlike("^https?://"), col("landing_page_url"))
         .when(col("murl").isNotNull && trim(col("murl")) =!= "",
           concat(lit("https://ies.ed.gov"), col("murl"))),
-      doi = lit(null).cast("string"),
-      rowFilter = col("mid").isNotNull && trim(col("mid")) =!= "")
+      rowFilter = col("mid").isNotNull && trim(col("mid")) =!= ""))
   }
 
   /** The rich SweCRIS foundation shape (IFAU / Östersjöstiftelsen —
@@ -4410,22 +3944,18 @@ object FunderConfigs {
   private def swecrisRich(funderId: Long, provenance: String,
       priority: Int): FunderIngestConfig = {
     val ta = lower(coalesce(col("type_of_award"), lit("")))
-    val fundingType =
-      when(ta.like("%fellow%"), "fellowship")
-        .when(ta.like("%stipend%"), "fellowship")
-        .when(ta.like("%position%"), "fellowship")
-        .when(ta.like("%infrastructure%"), "infrastructure")
-        .when(ta.like("%project%"), "research")
-        .otherwise("grant")
+    val fundingType = likeCascade(ta, Seq(
+      "fellow" -> "fellowship", "stipend" -> "fellowship",
+      "position" -> "fellowship", "infrastructure" -> "infrastructure",
+      "project" -> "research"), "grant")
     val lead = when(col("pi_family_name").isNotNull &&
         trim(col("pi_family_name")) =!= "",
       investigator(nullif(trim(col("pi_given_name")), lit("")),
         trim(col("pi_family_name")),
-        nullif(trim(col("pi_orcid")), lit("")), lit(null).cast("date"),
-        nullif(trim(col("coordinating_organisation")), lit("")),
-        lit("Sweden"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = funderId, provenance = provenance, priority = priority,
+        nullif(trim(col("coordinating_organisation")), lit("")), lit("Sweden"),
+        orcid = nullif(trim(col("pi_orcid")), lit(""))))
+    FunderIngestConfig(funderId, AwardFieldMap(
+      provenance = provenance, priority = priority,
       mintKey = lower(swecrisBareId(col("project_id"))),
       funderAwardId = swecrisBareId(col("project_id")),
       displayName = coalesce(nullif(trim(col("title_english")), lit("")),
@@ -4442,9 +3972,8 @@ object FunderConfigs {
       leadInvestigator = lead,
       landingPageUrl = concat(lit("https://www.vr.se/swecris#/project/"),
         trim(col("project_id"))),
-      doi = lit(null).cast("string"),
       rowFilter = col("project_id").isNotNull &&
-        trim(col("project_id")) =!= "")
+        trim(col("project_id")) =!= ""))
   }
 
   /** IFAU via SweCRIS (CreateIFAUAwards.ipynb, 131 labour-market
@@ -4464,33 +3993,24 @@ object FunderConfigs {
     * UNCONDITIONAL trimmed 'US' lead with role_start = Jan 1. */
   def czi: FunderIngestConfig = {
     val sd = d(concat(col("start_year"), lit("-01-01")))
-    val lead = struct(
-      nullif(trim(col("pi_given_name")), lit("")).as("given_name"),
-      nullif(trim(col("pi_family_name")), lit("")).as("family_name"),
-      lit(null).cast("string").as("orcid"),
-      sd.as("role_start"),
-      struct(nullif(trim(col("pi_affiliation")), lit("")).as("name"),
-        lit("US").as("country"),
-        lit(null).cast(affIds).as("ids")).as("affiliation"))
-    FunderIngestConfig(
-      funderId = 4320315474L, provenance = "czi_grants", priority = 120,
+    val lead = investigator(nullif(trim(col("pi_given_name")), lit("")),
+      nullif(trim(col("pi_family_name")), lit("")),
+      nullif(trim(col("pi_affiliation")), lit("")), lit("US"), roleStart = sd)
+    FunderIngestConfig(4320315474L, AwardFieldMap(
+      provenance = "czi_grants", priority = 120,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
       description = col("description"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("research"),
       funderScheme = coalesce(nullif(trim(col("program_label")),
         lit("")), lit("CZI Grant")),
-      startDate = sd, endDate = lit(null).cast("date"),
+      startDate = sd,
       startYear = col("start_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("title").isNotNull && trim(col("title")) =!= "" &&
-        col("funder_award_id").isNotNull)
+        col("funder_award_id").isNotNull))
   }
 
   // ---------------------------------------------------------------
@@ -4498,15 +4018,6 @@ object FunderConfigs {
   // 11 provincial NSFs + the national NSSFC — all fed by the shared
   // cn_provincial harvest framework, in TWO sub-shapes)
   // ---------------------------------------------------------------
-
-  /** An ordered LIKE cascade (the CN notebooks' scheme→type CASE):
-    * first matching arm wins, `default` otherwise — NULL input falls
-    * to the default exactly as SQL CASE does. */
-  private def likeCascade(c: Column, arms: Seq[(String, String)],
-      default: String): Column =
-    arms.reverse.foldLeft(lit(default): Column) { case (acc, (pat, v)) =>
-      when(c.like(s"%$pat%"), v).otherwise(acc)
-    }
 
   /** CN roster sub-shape A (Chongqing / Fujian / Hainan /
     * Heilongjiang / Zhejiang): the harvest framework emits a
@@ -4526,16 +4037,13 @@ object FunderConfigs {
         (col("institution").isNotNull && trim(col("institution")) =!= ""),
       investigator(nullif(trim(col("given_name")), lit("")),
         nullif(trim(col("family_name")), lit("")),
-        lit(null).cast("string"), lit(null).cast("date"),
-        nullif(trim(col("institution")), lit("")), lit("China"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = funderId, provenance = provenance, priority = priority,
+        nullif(trim(col("institution")), lit("")), lit("China")))
+    FunderIngestConfig(funderId, AwardFieldMap(
+      provenance = provenance, priority = priority,
       mintKey = coalesce(lower(nullif(trim(col("funder_award_id")),
         lit(""))), col("row_key")),
       funderAwardId = nullif(trim(col("funder_award_id")), lit("")),
       displayName = col("display_name"),
-      description = lit(null).cast("string"),
       amount = if (hasAmounts) amt else lit(null).cast("double"),
       currency = if (hasAmounts) when(amt > 0, "CNY")
         else lit(null).cast("string"),
@@ -4546,8 +4054,7 @@ object FunderConfigs {
       endYear = col("end_year").try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
-      rowFilter = lit(true))
+      rowFilter = lit(true)))
   }
 
   /** CN roster sub-shape B (Guangdong / Hunan / Jiangxi / Liaoning /
@@ -4567,17 +4074,14 @@ object FunderConfigs {
         (col("institution").isNotNull && trim(col("institution")) =!= ""),
       investigator(lit(null).cast("string"),
         nullif(trim(col("lead_family_name")), lit("")),
-        lit(null).cast("string"), lit(null).cast("date"),
-        nullif(trim(col("institution")), lit("")), lit("China"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = funderId, provenance = provenance, priority = priority,
+        nullif(trim(col("institution")), lit("")), lit("China")))
+    FunderIngestConfig(funderId, AwardFieldMap(
+      provenance = provenance, priority = priority,
       mintKey = coalesce(nullif(lower(trim(col("funder_award_id"))),
         lit("")), concat(lower(trim(col("display_name"))), lit("|"),
         lower(trim(coalesce(col("institution"), lit("")))))),
       funderAwardId = nullif(trim(col("funder_award_id")), lit("")),
       displayName = col("display_name"),
-      description = lit(null).cast("string"),
       amount = if (wanYuanAmounts) amt0 * 10000
         else lit(null).cast("double"),
       currency = if (wanYuanAmounts) when(amt0.isNotNull, "CNY")
@@ -4586,13 +4090,11 @@ object FunderConfigs {
       funderScheme = nullif(trim(col("funder_scheme")), lit("")),
       startDate = when(sy.isNotNull,
         d(concat(sy.cast("string"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
-      startYear = sy, endYear = lit(null).cast("int"),
+      startYear = sy,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   private val cnArmsStar: Seq[(String, String)] = Seq(
@@ -4698,17 +4200,14 @@ object FunderConfigs {
   def kavliPrize: FunderIngestConfig = {
     val (sd, ed, sy, ey) = prizeYear(col("year"))
     val lead = investigator(col("given_name"), col("family_name"),
-      lit(null).cast("string"), lit(null).cast("date"),
-      nullif(col("institution"), lit("")),
-      element_at(col("countries"), 1), lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320306399L, provenance = "kavli_nextdata", priority = 49,
+      nullif(col("institution"), lit("")), element_at(col("countries"), 1))
+    FunderIngestConfig(4320306399L, AwardFieldMap(
+      provenance = "kavli_nextdata", priority = 49,
       mintKey = concat(lit("kavli:"), lower(col("kavli_laureate_id"))),
       funderAwardId = col("kavli_laureate_id"),
       displayName = concat(lit("Kavli Prize in "), initcap(col("field")),
         lit(" "), col("year").cast("string"), lit(" — "), col("name")),
       description = nullif(col("citation"), lit("")),
-      amount = lit(null).cast("double"),
       currency = lit("USD"),
       fundingType = lit("prize"),
       funderScheme = initcap(col("field")),
@@ -4716,9 +4215,8 @@ object FunderConfigs {
       leadInvestigator = lead,
       landingPageUrl = concat(lit("https://kavliprize.org/laureates/"),
         coalesce(col("slug"), col("kavli_laureate_id"))),
-      doi = lit(null).cast("string"),
       rowFilter = col("kavli_laureate_id").isNotNull &&
-        col("year").isNotNull)
+        col("year").isNotNull))
   }
 
   /** Wolf Prize laureates (CreateWolfPrizeAwards.ipynb): the ':wolf:'
@@ -4727,26 +4225,22 @@ object FunderConfigs {
   def wolfPrize: FunderIngestConfig = {
     val (sd, ed, sy, ey) = prizeYear(col("year"))
     val lead = investigator(col("given_name"), col("family_name"),
-      lit(null).cast("string"), lit(null).cast("date"),
-      nullif(col("affiliation"), lit("")), lit(null).cast("string"),
-      lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320320951L, provenance = "wolf_prize_wp", priority = 47,
+      nullif(col("affiliation"), lit("")), lit(null).cast("string"))
+    FunderIngestConfig(4320320951L, AwardFieldMap(
+      provenance = "wolf_prize_wp", priority = 47,
       mintKey = concat(lit("wolf:"), lower(col("slug"))),
       funderAwardId = col("slug"),
       displayName = concat(lit("Wolf Prize in "),
         coalesce(col("field"), lit("Various")), lit(" "),
         col("year").cast("string"), lit(" — "), col("name")),
       description = nullif(col("citation"), lit("")),
-      amount = lit(null).cast("double"),
       currency = lit("USD"),
       fundingType = lit("prize"),
       funderScheme = col("field"),
       startDate = sd, endDate = ed, startYear = sy, endYear = ey,
       leadInvestigator = lead,
       landingPageUrl = col("url"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("slug").isNotNull && col("year").isNotNull)
+      rowFilter = col("slug").isNotNull && col("year").isNotNull))
   }
 
   /** The Brain Prize (CreateBrainPrizeAwards.ipynb): the
@@ -4759,11 +4253,10 @@ object FunderConfigs {
     val total = col("source_total_award_amount").try_cast("double")
     val n = col("laureate_count").try_cast("int")
     val lead = investigator(nullif(col("given_name"), lit("")),
-      nullif(col("family_name"), lit("")), lit(null).cast("string"),
-      lit(null).cast("date"), nullif(col("affiliation"), lit("")),
-      lit(null).cast("string"), lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320321999L, provenance = "brain_prize", priority = 84,
+      nullif(col("family_name"), lit("")), nullif(col("affiliation"), lit("")),
+      lit(null).cast("string"))
+    FunderIngestConfig(4320321999L, AwardFieldMap(
+      provenance = "brain_prize", priority = 84,
       mintKey = concat(lit("brain-prize:"),
         lower(col("funder_award_id"))),
       funderAwardId = col("funder_award_id"),
@@ -4778,9 +4271,8 @@ object FunderConfigs {
       startDate = sd, endDate = ed, startYear = sy, endYear = ey,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull && yr.isNotNull &&
-        col("laureate_name").isNotNull)
+        col("laureate_name").isNotNull))
   }
 
   /** Crafoord Prize (CreateCrafoordPrizeAwards.ipynb): the category
@@ -4789,11 +4281,10 @@ object FunderConfigs {
     val yr = col("award_year").try_cast("int")
     val (sd, ed, sy, ey) = prizeYear(col("award_year"))
     val lead = investigator(nullif(col("given_name"), lit("")),
-      nullif(col("family_name"), lit("")), lit(null).cast("string"),
-      lit(null).cast("date"), nullif(col("affiliation"), lit("")),
-      lit(null).cast("string"), lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320320936L, provenance = "crafoord_prize", priority = 69,
+      nullif(col("family_name"), lit("")), nullif(col("affiliation"), lit("")),
+      lit(null).cast("string"))
+    FunderIngestConfig(4320320936L, AwardFieldMap(
+      provenance = "crafoord_prize", priority = 69,
       mintKey = concat(lit("crafoord-prize:"),
         lower(col("funder_award_id"))),
       funderAwardId = col("funder_award_id"),
@@ -4808,9 +4299,8 @@ object FunderConfigs {
       startDate = sd, endDate = ed, startYear = sy, endYear = ey,
       leadInvestigator = lead,
       landingPageUrl = nullif(col("landing_page_url"), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull && yr.isNotNull &&
-        col("laureate_name").isNotNull)
+        col("laureate_name").isNotNull))
   }
 
   /** Balzan Prize (CreateBalzanPrizeAwards.ipynb): the award-field
@@ -4825,8 +4315,8 @@ object FunderConfigs {
       lit(null).cast("string").as("orcid"),
       lit(null).cast("date").as("role_start"),
       lit(null).cast(affType).as("affiliation"))
-    FunderIngestConfig(
-      funderId = 4320310930L, provenance = "balzan_prize", priority = 76,
+    FunderIngestConfig(4320310930L, AwardFieldMap(
+      provenance = "balzan_prize", priority = 76,
       mintKey = concat(lit("balzan-prize:"),
         lower(col("funder_award_id"))),
       funderAwardId = col("funder_award_id"),
@@ -4841,9 +4331,8 @@ object FunderConfigs {
       startDate = sd, endDate = ed, startYear = sy, endYear = ey,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull && yr.isNotNull &&
-        col("laureate_name").isNotNull)
+        col("laureate_name").isNotNull))
   }
 
   /** Millennium Technology Prize (CreateMillenniumPrizeAwards
@@ -4854,10 +4343,9 @@ object FunderConfigs {
     val (sd, ed, sy, ey) = prizeYear(col("award_year"))
     val lead = investigator(nullif(col("given_name"), lit("")),
       nullif(col("family_name"), lit("")), lit(null).cast("string"),
-      lit(null).cast("date"), lit(null).cast("string"),
-      nullif(col("country"), lit("")), lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320324443L, provenance = "millennium_prize",
+      nullif(col("country"), lit("")))
+    FunderIngestConfig(4320324443L, AwardFieldMap(
+      provenance = "millennium_prize",
       priority = 67,
       mintKey = concat(lit("millennium-prize:"),
         lower(col("funder_award_id"))),
@@ -4873,9 +4361,8 @@ object FunderConfigs {
       startDate = sd, endDate = ed, startYear = sy, endYear = ey,
       leadInvestigator = lead,
       landingPageUrl = nullif(col("landing_page_url"), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull && yr.isNotNull &&
-        col("laureate_name").isNotNull)
+        col("laureate_name").isNotNull))
   }
 
   /** King Faisal Prize (CreateKingFaisalPrizeAwards.ipynb): the
@@ -4885,12 +4372,10 @@ object FunderConfigs {
     val yr = col("parsed_award_year").try_cast("int")
     val (sd, ed, sy, ey) = prizeYear(col("parsed_award_year"))
     val lead = investigator(nullif(col("laureate_given_name"), lit("")),
-      nullif(col("laureate_family_name"), lit("")),
-      lit(null).cast("string"), lit(null).cast("date"),
-      lit(null).cast("string"), lit(null).cast("string"),
-      lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320323301L, provenance = "king_faisal_prize",
+      nullif(col("laureate_family_name"), lit("")), lit(null).cast("string"),
+      lit(null).cast("string"))
+    FunderIngestConfig(4320323301L, AwardFieldMap(
+      provenance = "king_faisal_prize",
       priority = 87,
       mintKey = concat(lit("king_faisal_prize:"),
         lower(trim(col("funder_award_id")))),
@@ -4907,8 +4392,7 @@ object FunderConfigs {
       startDate = sd, endDate = ed, startYear = sy, endYear = ey,
       leadInvestigator = lead,
       landingPageUrl = nullif(col("landing_page_url"), lit("")),
-      doi = lit(null).cast("string"),
-      rowFilter = lit(true))
+      rowFilter = lit(true)))
   }
 
   /** Dan David Prize (CreateDanDavidPrizeAwards.ipynb): the
@@ -4917,11 +4401,10 @@ object FunderConfigs {
     val yr = col("award_year").try_cast("int")
     val (sd, ed, sy, ey) = prizeYear(col("award_year"))
     val lead = investigator(nullif(col("given_name"), lit("")),
-      nullif(col("family_name"), lit("")), lit(null).cast("string"),
-      lit(null).cast("date"), nullif(col("affiliation"), lit("")),
-      lit(null).cast("string"), lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320320949L, provenance = "dan_david_prize",
+      nullif(col("family_name"), lit("")), nullif(col("affiliation"), lit("")),
+      lit(null).cast("string"))
+    FunderIngestConfig(4320320949L, AwardFieldMap(
+      provenance = "dan_david_prize",
       priority = 68,
       mintKey = concat(lit("dan-david-prize:"),
         lower(col("funder_award_id"))),
@@ -4937,9 +4420,8 @@ object FunderConfigs {
       startDate = sd, endDate = ed, startYear = sy, endYear = ey,
       leadInvestigator = lead,
       landingPageUrl = nullif(col("landing_page_url"), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull && yr.isNotNull &&
-        col("laureate_name").isNotNull)
+        col("laureate_name").isNotNull))
   }
 
   // ---------------------------------------------------------------
@@ -4963,11 +4445,10 @@ object FunderConfigs {
         trim(col("coordinator")) =!= "",
       investigator(nullif(trim(col("coordinator_given_name")), lit("")),
         nullif(trim(col("coordinator_family_name")), lit("")),
-        lit(null).cast("string"), sd,
-        nullif(trim(col("instituicaoexecutora_nome")), lit("")),
-        lit("BR"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320322980L, provenance = "fapemig_projetos_contratados",
+        nullif(trim(col("instituicaoexecutora_nome")), lit("")), lit("BR"),
+        roleStart = sd))
+    FunderIngestConfig(4320322980L, AwardFieldMap(
+      provenance = "fapemig_projetos_contratados",
       priority = 142,
       mintKey = lower(nativeId),
       funderAwardId = nativeId,
@@ -4985,10 +4466,9 @@ object FunderConfigs {
       endYear = coalesce(year(ed), py),
       leadInvestigator = lead,
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
-        col("display_name").isNotNull && trim(col("display_name")) =!= "")
+        col("display_name").isNotNull && trim(col("display_name")) =!= ""))
   }
 
   /** Carlsbergfondet grants DB (CreateCarlsbergFondetAwards.ipynb):
@@ -5001,17 +4481,14 @@ object FunderConfigs {
     val yr = col("year").try_cast("int")
     val lead = when(col("applicant_name").isNotNull &&
         col("applicant_name") =!= "",
-      investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), sd,
-        col("institution"), lit(null).cast("string"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320321504L, provenance = "carlsberg_fondet",
+      investigator(col("given_name"), col("family_name"), col("institution"),
+        lit(null).cast("string"), roleStart = sd))
+    FunderIngestConfig(4320321504L, AwardFieldMap(
+      provenance = "carlsberg_fondet",
       priority = 121,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("display_name"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("double"),
       currency = col("currency"),
       fundingType = lit("grant"),
@@ -5020,9 +4497,8 @@ object FunderConfigs {
       startYear = yr, endYear = yr,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("display_name").isNotNull)
+        col("display_name").isNotNull))
   }
 
   /** The grant-card archetype (Deutsche Krebshilfe / DOE Office of
@@ -5044,17 +4520,15 @@ object FunderConfigs {
     val sdRaw = dFmt(col("start_date_raw"))
     val edRaw = dFmt(col("end_date_raw"))
     val named = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit(country), lit(null).cast(affIds)))
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit(country)))
     val lead = if (orgFallback)
       named.when(col("institution").isNotNull,
         investigator(lit(null).cast("string"), lit(null).cast("string"),
-          lit(null).cast("string"), lit(null).cast("date"),
-          col("institution"), lit(country), lit(null).cast(affIds)))
+          col("institution"), lit(country)))
     else named
-    FunderIngestConfig(
-      funderId = funderId, provenance = provenance, priority = priority,
+    FunderIngestConfig(funderId, AwardFieldMap(
+      provenance = provenance, priority = priority,
       mintKey = mintSalt.foldLeft(lower(col("funder_award_id")))(
         (base, salt) => concat(base, lit(":"), salt)),
       funderAwardId = col("funder_award_id"),
@@ -5074,7 +4548,7 @@ object FunderConfigs {
       doi = if (doiFromRaw) col("doi") else lit(null).cast("string"),
       rowFilter = if (requireId) col("funder_award_id").isNotNull
         else lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Deutsche Krebshilfe (CreateDeutscheKrebshilfeAwards.ipynb): the
@@ -5114,17 +4588,14 @@ object FunderConfigs {
     * works_api_url; no row filter. */
   def embo: FunderIngestConfig = {
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), col("country"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320307844L, provenance = "embo", priority = 241,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        col("country")))
+    FunderIngestConfig(4320307844L, AwardFieldMap(
+      provenance = "embo", priority = 241,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = lit(null).cast("decimal(18,2)"),
-      currency = lit(null).cast("string"),
       fundingType = lit("fellowship"),
       funderScheme = col("programme_name"),
       startDate = when(col("start_year").try_cast("int").isNotNull,
@@ -5135,9 +4606,8 @@ object FunderConfigs {
       endYear = col("end_year").try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** The Wenner-Gren in-source dedup (CreateWennerGrenAwards.ipynb's
@@ -5169,18 +4639,15 @@ object FunderConfigs {
     val sd = d(col("approve_date_iso"))
     val lead = investigator(nullif(trim(col("given_name")), lit("")),
       nullif(trim(col("family_name")), lit("")),
-      lit(null).cast("string"), sd,
-      nullif(trim(col("affiliation")), lit("")),
-      lit(null).cast("string"), lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320306550L, provenance = "wenner_gren_grantees",
+      nullif(trim(col("affiliation")), lit("")), lit(null).cast("string"),
+      roleStart = sd)
+    FunderIngestConfig(4320306550L, AwardFieldMap(
+      provenance = "wenner_gren_grantees",
       priority = 110,
       mintKey = lower(nativeId),
       funderAwardId = nativeId,
       displayName = col("grantee_name"),
       description = col("project_title"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = when(gt.rlike(
           "fellowship|scholarship|postdoc|dissertation|traineeship"),
           "fellowship")
@@ -5188,13 +4655,11 @@ object FunderConfigs {
         .otherwise("research"),
       funderScheme = coalesce(nullif(trim(col("grant_type")), lit("")),
         lit("Wenner-Gren Foundation Grant")),
-      startDate = sd, endDate = lit(null).cast("date"),
+      startDate = sd,
       startYear = col("approve_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
-      rowFilter = lit(true))
+      rowFilter = lit(true)))
   }
 
   /** Fritz Thyssen Stiftung fundings
@@ -5208,29 +4673,22 @@ object FunderConfigs {
         col("pi_family_name").isNull && col("institution").isNull),
       investigator(nullif(trim(col("pi_given_name")), lit("")),
         nullif(trim(col("pi_family_name")), lit("")),
-        lit(null).cast("string"), sd,
-        nullif(trim(col("institution")), lit("")), lit("DE"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320321876L, provenance = "fritz_thyssen_fundings",
+        nullif(trim(col("institution")), lit("")), lit("DE"), roleStart = sd))
+    FunderIngestConfig(4320321876L, AwardFieldMap(
+      provenance = "fritz_thyssen_fundings",
       priority = 117,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("research"),
       funderScheme = coalesce(nullif(trim(col("foerderbereich")),
         lit("")), lit("Fritz Thyssen Funding")),
-      startDate = sd, endDate = lit(null).cast("date"),
+      startDate = sd,
       startYear = col("bewilligung_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("title").isNotNull && trim(col("title")) =!= "" &&
-        col("funder_award_id").isNotNull)
+        col("funder_award_id").isNotNull))
   }
 
   /** Welch Foundation awards (CreateWelchAwards.ipynb): 'prize'
@@ -5240,12 +4698,10 @@ object FunderConfigs {
   def welch: FunderIngestConfig = {
     val sd = d(col("start_date"))
     val lead = when(col("name").isNotNull && col("name") =!= "",
-      investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), sd,
-        col("affiliation"), lit(null).cast("string"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306196L, provenance = "welch_foundation",
+      investigator(col("given_name"), col("family_name"), col("affiliation"),
+        lit(null).cast("string"), roleStart = sd))
+    FunderIngestConfig(4320306196L, AwardFieldMap(
+      provenance = "welch_foundation",
       priority = 102,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -5260,9 +4716,8 @@ object FunderConfigs {
       endYear = substring(col("end_date"), 1, 4).try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("name").isNotNull)
+        col("name").isNotNull))
   }
 
   // ---------------------------------------------------------------
@@ -5279,11 +4734,10 @@ object FunderConfigs {
     val lead = when(col("grant_administrator").isNotNull,
       investigator(nullif(trim(col("pi_given_name")), lit("")),
         nullif(trim(col("pi_family_name")), lit("")),
-        lit(null).cast("string"), sd,
         nullif(trim(col("grant_administrator")), lit("")), lit("SE"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320322659L, provenance = "rj_jubileumsfond_grants",
+        roleStart = sd))
+    FunderIngestConfig(4320322659L, AwardFieldMap(
+      provenance = "rj_jubileumsfond_grants",
       priority = 118,
       mintKey = lower(col("reference_number")),
       funderAwardId = col("reference_number"),
@@ -5294,14 +4748,12 @@ object FunderConfigs {
       fundingType = lit("research"),
       funderScheme = coalesce(nullif(trim(col("funding_program")),
         lit("")), lit("RJ Grant")),
-      startDate = sd, endDate = lit(null).cast("date"),
+      startDate = sd,
       startYear = col("award_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("title").isNotNull && trim(col("title")) =!= "" &&
-        col("funder_award_id").isNotNull)
+        col("funder_award_id").isNotNull))
   }
 
   /** Velux Stiftung projects (CreateVeluxStiftungAwards.ipynb):
@@ -5311,8 +4763,8 @@ object FunderConfigs {
   def veluxStiftung: FunderIngestConfig = {
     val sd = d(concat(col("start_year"), lit("-01-01")))
     val ed = d(concat(col("end_year"), lit("-12-31")))
-    FunderIngestConfig(
-      funderId = 4320309607L, provenance = "velux_stiftung_projects",
+    FunderIngestConfig(4320309607L, AwardFieldMap(
+      provenance = "velux_stiftung_projects",
       priority = 115,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -5326,11 +4778,9 @@ object FunderConfigs {
       startDate = sd, endDate = ed,
       startYear = col("start_year").try_cast("int"),
       endYear = col("end_year").try_cast("int"),
-      leadInvestigator = nullInvestigator,
       landingPageUrl = col("link"),
-      doi = lit(null).cast("string"),
       rowFilter = col("title").isNotNull && trim(col("title")) =!= "" &&
-        col("funder_award_id").isNotNull)
+        col("funder_award_id").isNotNull))
   }
 
   /** Helmsley Charitable Trust grants (CreateHelmsleyAwards.ipynb):
@@ -5339,12 +4789,10 @@ object FunderConfigs {
     * coverage, an UNCONDITIONAL org-level 'US' recipient lead. */
   def helmsley: FunderIngestConfig = {
     val sd = d(col("award_date_iso"))
-    val lead = investigator(lit(null).cast("string"),
-      lit(null).cast("string"), lit(null).cast("string"), sd,
-      nullif(trim(col("recipient")), lit("")), lit("US"),
-      lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320309446L, provenance = "helmsley_grants",
+    val lead = investigator(lit(null).cast("string"), lit(null).cast("string"),
+      nullif(trim(col("recipient")), lit("")), lit("US"), roleStart = sd)
+    FunderIngestConfig(4320309446L, AwardFieldMap(
+      provenance = "helmsley_grants",
       priority = 112,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -5356,15 +4804,13 @@ object FunderConfigs {
       fundingType = lit("grant"),
       funderScheme = coalesce(nullif(trim(col("program")), lit("")),
         lit("Helmsley Charitable Trust Grant")),
-      startDate = sd, endDate = lit(null).cast("date"),
+      startDate = sd,
       startYear = col("award_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("recipient").isNotNull &&
         trim(col("recipient")) =!= "" &&
-        col("funder_award_id").isNotNull)
+        col("funder_award_id").isNotNull))
   }
 
   /** Searle Scholars (CreateSearleScholarsAwards.ipynb): the
@@ -5374,11 +4820,10 @@ object FunderConfigs {
   def searleScholars: FunderIngestConfig = {
     val yr = col("year").try_cast("int")
     val lead = when(col("name").isNotNull && col("name") =!= "",
-      investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("US"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320314849L, provenance = "searle_scholars",
+      investigator(col("given_name"), col("family_name"), col("institution"),
+        lit("US")))
+    FunderIngestConfig(4320314849L, AwardFieldMap(
+      provenance = "searle_scholars",
       priority = 133,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -5389,14 +4834,12 @@ object FunderConfigs {
       currency = col("currency"),
       fundingType = lit("research"),
       funderScheme = lit("Searle Scholars Program"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = yr, endYear = yr + 2,
       leadInvestigator = lead,
       landingPageUrl = coalesce(col("profile_url"),
         col("landing_page_url")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("name").isNotNull)
+        col("name").isNotNull))
   }
 
   /** Rita Allen Foundation Scholars (CreateRitaAllenAwards.ipynb):
@@ -5407,29 +4850,24 @@ object FunderConfigs {
     val sd = d(concat(col("award_year"), lit("-01-01")))
     val lead = investigator(nullif(trim(col("given_name")), lit("")),
       nullif(trim(col("family_name")), lit("")),
-      lit(null).cast("string"), sd,
-      nullif(trim(col("institution")), lit("")),
-      lit(null).cast("string"), lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320306590L, provenance = "rita_allen_scholars",
+      nullif(trim(col("institution")), lit("")), lit(null).cast("string"),
+      roleStart = sd)
+    FunderIngestConfig(4320306590L, AwardFieldMap(
+      provenance = "rita_allen_scholars",
       priority = 107,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("scholar_name"),
       description = col("bio"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("fellowship"),
       funderScheme = lit("Rita Allen Foundation Scholar"),
-      startDate = sd, endDate = lit(null).cast("date"),
+      startDate = sd,
       startYear = col("award_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("scholar_year_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("scholar_name").isNotNull &&
         trim(col("scholar_name")) =!= "" &&
-        col("funder_award_id").isNotNull)
+        col("funder_award_id").isNotNull))
   }
 
   // ---------------------------------------------------------------
@@ -5447,12 +4885,10 @@ object FunderConfigs {
     val ed = d(col("end_date"))
     val prog = trim(col("program"))
     val init = trim(col("initiative"))
-    val lead = investigator(lit(null).cast("string"),
-      lit(null).cast("string"), lit(null).cast("string"), sd,
-      nullif(trim(col("recipient")), lit("")), lit("US"),
-      lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320307861L, provenance = "mott_grants", priority = 113,
+    val lead = investigator(lit(null).cast("string"), lit(null).cast("string"),
+      nullif(trim(col("recipient")), lit("")), lit("US"), roleStart = sd)
+    FunderIngestConfig(4320307861L, AwardFieldMap(
+      provenance = "mott_grants", priority = 113,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
@@ -5470,9 +4906,8 @@ object FunderConfigs {
       endYear = year(ed),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("title").isNotNull && trim(col("title")) =!= "" &&
-        col("funder_award_id").isNotNull)
+        col("funder_award_id").isNotNull))
   }
 
   /** Lister Institute Research Prize Fellowships
@@ -5485,18 +4920,14 @@ object FunderConfigs {
     val sy = col("start_year").try_cast("int")
     val ey = col("end_year").try_cast("int")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United Kingdom"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320615L, provenance = "lister", priority = 255,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United Kingdom")))
+    FunderIngestConfig(4320320615L, AwardFieldMap(
+      provenance = "lister", priority = 255,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = lit(null).cast("decimal(18,2)"),
-      currency = lit(null).cast("string"),
       fundingType = lit("fellowship"),
       funderScheme = lit("Lister Research Prize Fellowship"),
       startDate = when(sy.between(1980, 2027),
@@ -5506,10 +4937,8 @@ object FunderConfigs {
       startYear = when(sy.between(1980, 2027), sy),
       endYear = when(ey.between(1980, 2035), ey),
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Cottrell Scholars (CreateCottrellScholarsAwards.ipynb): the
@@ -5521,11 +4950,10 @@ object FunderConfigs {
   def cottrellScholars: FunderIngestConfig = {
     val yr = col("year").try_cast("int")
     val lead = when(col("name").isNotNull && col("name") =!= "",
-      investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), col("country"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306487L, provenance = "cottrell_scholars",
+      investigator(col("given_name"), col("family_name"), col("institution"),
+        col("country")))
+    FunderIngestConfig(4320306487L, AwardFieldMap(
+      provenance = "cottrell_scholars",
       priority = 135,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -5542,13 +4970,11 @@ object FunderConfigs {
       currency = col("currency"),
       fundingType = lit("research"),
       funderScheme = lit("Cottrell Scholar Award"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = yr, endYear = yr + 2,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("name").isNotNull)
+        col("name").isNotNull))
   }
 
   /** Dreyfus Foundation awards (CreateDreyfusAwards.ipynb): the
@@ -5558,12 +4984,10 @@ object FunderConfigs {
     * eligibility, never inferred). */
   def dreyfus: FunderIngestConfig = {
     val lead = when(col("name").isNotNull && col("name") =!= "",
-      investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit(null).cast("string"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306315L, provenance = "dreyfus_foundation",
+      investigator(col("given_name"), col("family_name"), col("institution"),
+        lit(null).cast("string")))
+    FunderIngestConfig(4320306315L, AwardFieldMap(
+      provenance = "dreyfus_foundation",
       priority = 131,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -5573,14 +4997,11 @@ object FunderConfigs {
       currency = col("currency"),
       fundingType = col("funding_type"),
       funderScheme = col("scheme_label"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = col("year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("name").isNotNull)
+        col("name").isNotNull))
   }
 
   // ---------------------------------------------------------------
@@ -5596,11 +5017,10 @@ object FunderConfigs {
   def lasker: FunderIngestConfig = {
     val (sd, ed, sy, ey) = prizeYear(col("year"))
     val lead = investigator(col("laureate_given_name"),
-      col("laureate_family_name"), lit(null).cast("string"),
-      lit(null).cast("date"), nullif(col("affiliation"), lit("")),
-      lit(null).cast("string"), lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320311370L, provenance = "lasker_wp", priority = 48,
+      col("laureate_family_name"), nullif(col("affiliation"), lit("")),
+      lit(null).cast("string"))
+    FunderIngestConfig(4320311370L, AwardFieldMap(
+      provenance = "lasker_wp", priority = 48,
       mintKey = concat(lit("lasker:"), col("wp_post_id").cast("string"),
         lit(":"), col("laureate_term_id").cast("string")),
       funderAwardId = concat(col("wp_post_id").cast("string"), lit("-"),
@@ -5609,16 +5029,14 @@ object FunderConfigs {
         lit(" Award "), col("year").cast("string"), lit(" — "),
         col("laureate_name")),
       description = nullif(col("achievement_title"), lit("")),
-      amount = lit(null).cast("double"),
       currency = lit("USD"),
       fundingType = lit("prize"),
       funderScheme = col("award_name"),
       startDate = sd, endDate = ed, startYear = sy, endYear = ey,
       leadInvestigator = lead,
       landingPageUrl = col("url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("laureate_name").isNotNull &&
-        col("year").isNotNull)
+        col("year").isNotNull))
   }
 
   /** Blavatnik Awards (CreateBlavatnikAwards.ipynb): the
@@ -5628,19 +5046,16 @@ object FunderConfigs {
     * region/role/status scheme, and SEPTEMBER 1-30 ceremony-month
     * dates. */
   def blavatnik: FunderIngestConfig = {
-    def nzt(c: Column) = nullif(trim(c), lit(""))
     val yr = col("award_year").try_cast("int")
     val region = nzt(col("region"))
     val status = nzt(col("status"))
     val role = nzt(col("role"))
     val citation = nzt(col("citation"))
     val declined = col("declined").try_cast("boolean")
-    val lead = investigator(nzt(col("given_name")),
-      nzt(col("family_name")), lit(null).cast("string"),
-      lit(null).cast("date"), nzt(col("institution")),
-      lit(null).cast("string"), lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320312914L, provenance = "blavatnikawards_org",
+    val lead = investigator(nzt(col("given_name")), nzt(col("family_name")),
+      nzt(col("institution")), lit(null).cast("string"))
+    FunderIngestConfig(4320312914L, AwardFieldMap(
+      provenance = "blavatnikawards_org",
       priority = 64,
       mintKey = concat(lit("blavatnik:"), lower(col("funder_award_id"))),
       funderAwardId = col("funder_award_id"),
@@ -5667,9 +5082,8 @@ object FunderConfigs {
       startYear = yr, endYear = yr,
       leadInvestigator = lead,
       landingPageUrl = col("profile_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull && yr.isNotNull &&
-        nullif(trim(col("laureate_name")), lit("")).isNotNull)
+        nullif(trim(col("laureate_name")), lit("")).isNotNull))
   }
 
   /** Vilcek Foundation prizes (CreateVilcekAwards.ipynb):
@@ -5679,11 +5093,10 @@ object FunderConfigs {
   def vilcek: FunderIngestConfig = {
     val sd = d(col("start_date"))
     val lead = when(col("name").isNotNull && col("name") =!= "",
-      investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), sd,
-        col("affiliation"), col("country"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320307087L, provenance = "vilcek_foundation",
+      investigator(col("given_name"), col("family_name"), col("affiliation"),
+        col("country"), roleStart = sd))
+    FunderIngestConfig(4320307087L, AwardFieldMap(
+      provenance = "vilcek_foundation",
       priority = 105,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -5698,9 +5111,8 @@ object FunderConfigs {
       endYear = substring(col("end_date"), 1, 4).try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("name").isNotNull)
+        col("name").isNotNull))
   }
 
   /** Packard Fellowships for Science and Engineering
@@ -5714,27 +5126,23 @@ object FunderConfigs {
     val lead = when(col("full_name").isNotNull &&
         col("full_name") =!= "",
       investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), sd,
         col("fellowship_institution"), lit(null).cast("string"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306079L, provenance = "packard_fellows_directory",
+        roleStart = sd))
+    FunderIngestConfig(4320306079L, AwardFieldMap(
+      provenance = "packard_fellows_directory",
       priority = 95,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("display_name"),
       description = col("description"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("fellowship"),
       funderScheme = lit("Packard Fellowships for Science and Engineering"),
       startDate = sd, endDate = d(col("end_date")),
       startYear = fy, endYear = fy + 4,
       leadInvestigator = lead,
       landingPageUrl = col("profile_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("full_name").isNotNull)
+        col("full_name").isNotNull))
   }
 
   // ---------------------------------------------------------------
@@ -5753,12 +5161,10 @@ object FunderConfigs {
     val total = col("source_total_award_amount").try_cast("double")
     val n = col("laureate_count").try_cast("double")
     val lead = investigator(nullif(col("laureate_given_name"), lit("")),
-      nullif(col("laureate_family_name"), lit("")),
-      lit(null).cast("string"), lit(null).cast("date"),
-      lit(null).cast("string"), lit(null).cast("string"),
-      lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320312392L, provenance = "gruber_prizes", priority = 85,
+      nullif(col("laureate_family_name"), lit("")), lit(null).cast("string"),
+      lit(null).cast("string"))
+    FunderIngestConfig(4320312392L, AwardFieldMap(
+      provenance = "gruber_prizes", priority = 85,
       mintKey = concat(lit("gruber_prizes:"),
         lower(trim(col("funder_award_id")))),
       funderAwardId = col("funder_award_id"),
@@ -5777,11 +5183,10 @@ object FunderConfigs {
       landingPageUrl = coalesce(
         nullif(col("recipient_profile_url"), lit("")),
         nullif(col("prize_detail_url"), lit(""))),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         col("laureate_name").isNotNull &&
         col("prize_category").isin("Cosmology", "Genetics",
-          "Neuroscience") && yr.isNotNull)
+          "Neuroscience") && yr.isNotNull))
   }
 
   /** Lemelson-MIT Prize/program awards (CreateLemelsonMITAwards
@@ -5791,11 +5196,10 @@ object FunderConfigs {
   def lemelsonMit: FunderIngestConfig = {
     val sd = d(col("start_date"))
     val lead = when(col("name").isNotNull && col("name") =!= "",
-      investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), sd,
-        col("affiliation"), col("country"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320314845L, provenance = "lemelson_mit", priority = 103,
+      investigator(col("given_name"), col("family_name"), col("affiliation"),
+        col("country"), roleStart = sd))
+    FunderIngestConfig(4320314845L, AwardFieldMap(
+      provenance = "lemelson_mit", priority = 103,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("display_name"),
@@ -5809,9 +5213,8 @@ object FunderConfigs {
       endYear = substring(col("end_date"), 1, 4).try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("name").isNotNull)
+        col("name").isNotNull))
   }
 
   /** Warren Alpert Foundation Prize (CreateWarrenAlpertPrizeAwards
@@ -5826,11 +5229,10 @@ object FunderConfigs {
     val py = col("source_year").try_cast("int")
     val lead = investigator(nullif(trim(col("given_name")), lit("")),
       nullif(trim(col("family_name")), lit("")),
-      lit(null).cast("string"), sd,
-      nullif(trim(col("affiliation_raw")), lit("")),
-      lit(null).cast("string"), lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320307125L, provenance = "warren_alpert_prize",
+      nullif(trim(col("affiliation_raw")), lit("")), lit(null).cast("string"),
+      roleStart = sd)
+    FunderIngestConfig(4320307125L, AwardFieldMap(
+      provenance = "warren_alpert_prize",
       priority = 126,
       mintKey = nativeId,
       funderAwardId = nativeId,
@@ -5846,10 +5248,9 @@ object FunderConfigs {
       endYear = coalesce(year(ed), py),
       leadInvestigator = lead,
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
-        col("display_name").isNotNull && trim(col("display_name")) =!= "")
+        col("display_name").isNotNull && trim(col("display_name")) =!= ""))
   }
 
   // ---------------------------------------------------------------
@@ -5862,11 +5263,10 @@ object FunderConfigs {
     * name-gated 'US' lead (the programme's eligibility). */
   def klingensteinSimons: FunderIngestConfig = {
     val lead = when(col("name").isNotNull && col("name") =!= "",
-      investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("US"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306403L, provenance = "klingenstein_simons",
+      investigator(col("given_name"), col("family_name"), col("institution"),
+        lit("US")))
+    FunderIngestConfig(4320306403L, AwardFieldMap(
+      provenance = "klingenstein_simons",
       priority = 147,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -5874,18 +5274,13 @@ object FunderConfigs {
         when(col("year").isNotNull,
           concat(lit(" ("), col("year"), lit(")"))).otherwise(lit(""))),
       description = col("research_title"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("fellowship"),
       funderScheme = col("scheme_label"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = col("year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("name").isNotNull)
+        col("name").isNotNull))
   }
 
   /** BBRF / Brain & Behavior Research Foundation NARSAD grants
@@ -5897,11 +5292,10 @@ object FunderConfigs {
   def bbrf: FunderIngestConfig = {
     val gt = lower(col("grant_type"))
     val lead = when(col("name").isNotNull && col("name") =!= "",
-      investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), col("country"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306147L, provenance = "bbrf_narsad", priority = 137,
+      investigator(col("given_name"), col("family_name"), col("institution"),
+        col("country")))
+    FunderIngestConfig(4320306147L, AwardFieldMap(
+      provenance = "bbrf_narsad", priority = 137,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = concat(lit("BBRF "),
@@ -5930,14 +5324,11 @@ object FunderConfigs {
           "klerman|freedman|prize|award"), "prize")
         .otherwise("research"),
       funderScheme = col("grant_type"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = col("grant_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("name").isNotNull)
+        col("name").isNotNull))
   }
 
   /** Nuffield Foundation grants (CreateNuffieldAwards.ipynb): the
@@ -5952,8 +5343,8 @@ object FunderConfigs {
         lit(null).cast("string").as("orcid"),
         lit(null).cast("date").as("role_start"),
         lit(null).cast(affType).as("affiliation")))
-    FunderIngestConfig(
-      funderId = 4320319997L, provenance = "nuffield_wp_rest",
+    FunderIngestConfig(4320319997L, AwardFieldMap(
+      provenance = "nuffield_wp_rest",
       priority = 80,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -5968,9 +5359,8 @@ object FunderConfigs {
       endYear = substring(col("end_date"), 1, 4).try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("title").isNotNull)
+        col("title").isNotNull))
   }
 
   // ---------------------------------------------------------------
@@ -5998,11 +5388,9 @@ object FunderConfigs {
       nullif(trim(element_at(split(nm, ","), 1)), lit("")))
       .otherwise(nullif(trim(nm), lit("")))
     val lead = investigator(leaderGiven, leaderFamily,
-      lit(null).cast("string"), lit(null).cast("date"),
-      col("leader_affiliation_name"), col("leader_affiliation_country"),
-      lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320326614L, provenance = "prociencia_observatorio",
+      col("leader_affiliation_name"), col("leader_affiliation_country"))
+    FunderIngestConfig(4320326614L, AwardFieldMap(
+      provenance = "prociencia_observatorio",
       priority = 89,
       mintKey = concat(lit("concytec_prociencia:"), col("slug")),
       funderAwardId = col("slug"),
@@ -6018,9 +5406,8 @@ object FunderConfigs {
       startYear = syInt, endYear = eyInt,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("slug").isNotNull &&
-        col("display_name").isNotNull && syInt.isNotNull)
+        col("display_name").isNotNull && syInt.isNotNull))
   }
 
   /** FINEP FUNTTEL contracted projects
@@ -6041,11 +5428,11 @@ object FunderConfigs {
       array(struct(trim(col("recipient_cnpj")).as("id"),
         lit("cnpj").as("type"), lit("source").as("asserted_by"))))
       .otherwise(lit(null).cast(affIds))
-    val lead = investigator(lit(null).cast("string"),
-      lit(null).cast("string"), lit(null).cast("string"), sd,
-      nullif(trim(col("recipient_name")), lit("")), lit("BR"), cnpjIds)
-    FunderIngestConfig(
-      funderId = 4320322904L, provenance = "finep_funttel",
+    val lead = investigator(lit(null).cast("string"), lit(null).cast("string"),
+      nullif(trim(col("recipient_name")), lit("")), lit("BR"), roleStart = sd,
+      ids = cnpjIds)
+    FunderIngestConfig(4320322904L, AwardFieldMap(
+      provenance = "finep_funttel",
       priority = 154,
       mintKey = nativeId,
       funderAwardId = nativeId,
@@ -6062,10 +5449,9 @@ object FunderConfigs {
       endYear = coalesce(year(ed), py),
       leadInvestigator = lead,
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
-        col("display_name").isNotNull && trim(col("display_name")) =!= "")
+        col("display_name").isNotNull && trim(col("display_name")) =!= ""))
   }
 
   // ---------------------------------------------------------------
@@ -6082,11 +5468,9 @@ object FunderConfigs {
     val yr = col("year").try_cast("int")
     val declined = col("declined").try_cast("boolean")
     val lead = investigator(col("laureate_given_name"),
-      col("laureate_family_name"), lit(null).cast("string"),
-      lit(null).cast("date"), lit(null).cast("string"),
-      col("nationality"), lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320323078L, provenance = "holberg_wp_rest",
+      col("laureate_family_name"), lit(null).cast("string"), col("nationality"))
+    FunderIngestConfig(4320323078L, AwardFieldMap(
+      provenance = "holberg_wp_rest",
       priority = 78,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -6108,9 +5492,8 @@ object FunderConfigs {
       startYear = yr, endYear = yr,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull && yr.isNotNull &&
-        col("prize_slug").isNotNull)
+        col("prize_slug").isNotNull))
   }
 
   /** Blue Planet Prize (CreateBluePlanetPrizeAwards.ipynb, Asahi
@@ -6123,17 +5506,13 @@ object FunderConfigs {
     val lead = when(col("recipient_kind") === "individual" &&
         col("name_clean").isNotNull,
       investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), sd,
-        col("affiliation_name"), lit(null).cast("string"),
-        lit(null).cast(affIds)))
+        col("affiliation_name"), lit(null).cast("string"), roleStart = sd))
       .when(col("recipient_kind") === "organization" &&
         col("name_clean").isNotNull,
         investigator(lit(null).cast("string"), lit(null).cast("string"),
-          lit(null).cast("string"), sd,
-          col("name_clean"), lit(null).cast("string"),
-          lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320309996L, provenance = "blue_planet_prize",
+          col("name_clean"), lit(null).cast("string"), roleStart = sd))
+    FunderIngestConfig(4320309996L, AwardFieldMap(
+      provenance = "blue_planet_prize",
       priority = 91,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -6148,9 +5527,8 @@ object FunderConfigs {
       endYear = substring(col("end_date"), 1, 4).try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("name_clean").isNotNull)
+        col("name_clean").isNotNull))
   }
 
   /** Templeton Prize laureates (CreateTempletonPrizeAwards.ipynb —
@@ -6161,11 +5539,9 @@ object FunderConfigs {
     val sd = d(col("start_date"))
     val lead = when(col("name").isNotNull && col("name") =!= "",
       investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), sd,
-        lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306193L, provenance = "templeton_prize",
+        lit(null).cast("string"), lit(null).cast("string"), roleStart = sd))
+    FunderIngestConfig(4320306193L, AwardFieldMap(
+      provenance = "templeton_prize",
       priority = 93,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -6180,9 +5556,8 @@ object FunderConfigs {
       endYear = substring(col("end_date"), 1, 4).try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("name").isNotNull)
+        col("name").isNotNull))
   }
 
   /** Princess of Asturias Awards (CreatePrincessAsturiasAwards
@@ -6191,14 +5566,11 @@ object FunderConfigs {
     * source currency KEPT (the reference's own quirk), year-boundary
     * dates, a names-only laureate lead. */
   def princessAsturias: FunderIngestConfig = {
-    def nzt(c: Column) = nullif(trim(c), lit(""))
     val yr = col("award_year").try_cast("int")
-    val lead = investigator(nzt(col("given_name")),
-      nzt(col("family_name")), lit(null).cast("string"),
-      lit(null).cast("date"), lit(null).cast("string"),
-      lit(null).cast("string"), lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320323780L, provenance = "princess_asturias",
+    val lead = investigator(nzt(col("given_name")), nzt(col("family_name")),
+      lit(null).cast("string"), lit(null).cast("string"))
+    FunderIngestConfig(4320323780L, AwardFieldMap(
+      provenance = "princess_asturias",
       priority = 77,
       mintKey = concat(lit("princess-asturias:"),
         lower(col("funder_award_id"))),
@@ -6206,7 +5578,6 @@ object FunderConfigs {
       displayName = concat(yr.cast("string"), lit(" "),
         nzt(col("prize_title")), lit(" - "), nzt(col("laureate_name"))),
       description = nzt(col("citation")),
-      amount = lit(null).cast("double"),
       currency = nzt(col("currency")),
       fundingType = lit("prize"),
       funderScheme = nzt(col("prize_title")),
@@ -6217,10 +5588,9 @@ object FunderConfigs {
       startYear = yr, endYear = yr,
       leadInvestigator = lead,
       landingPageUrl = nzt(col("landing_page_url")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull && yr.isNotNull &&
         nullif(trim(col("prize_title")), lit("")).isNotNull &&
-        nullif(trim(col("laureate_name")), lit("")).isNotNull)
+        nullif(trim(col("laureate_name")), lit("")).isNotNull))
   }
 
   // ---------------------------------------------------------------
@@ -6233,28 +5603,21 @@ object FunderConfigs {
     * country, NULL works_api_url; no row filter. */
   def acMedSci: FunderIngestConfig = {
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit(null).cast("string"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320241L, provenance = "acmedsci", priority = 323,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit(null).cast("string")))
+    FunderIngestConfig(4320320241L, AwardFieldMap(
+      provenance = "acmedsci", priority = 323,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = lit(null).cast("decimal(18,2)"),
-      currency = lit(null).cast("string"),
       fundingType = when(col("funder_scheme").like("%Fellowship%"),
         "fellowship").otherwise("grant"),
       funderScheme = col("funder_scheme"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
-      startYear = lit(null).cast("int"), endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Ahmanson Foundation grants archive
@@ -6269,13 +5632,11 @@ object FunderConfigs {
     val fy = col("fiscal_year").try_cast("int")
     val sd = when(fy.between(1900, currentYear + 1),
       d(concat(col("fiscal_year"), lit("-01-01"))))
-    val lead = investigator(lit(null).cast("string"),
-      lit(null).cast("string"), lit(null).cast("string"), sd,
+    val lead = investigator(lit(null).cast("string"), lit(null).cast("string"),
       nullif(trim(col("grantee_name")), lit("")),
-      nullif(trim(col("recipient_country")), lit("")),
-      lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320314405L, provenance = "ahmanson_grants_archive",
+      nullif(trim(col("recipient_country")), lit("")), roleStart = sd)
+    FunderIngestConfig(4320314405L, AwardFieldMap(
+      provenance = "ahmanson_grants_archive",
       priority = 166,
       mintKey = nativeId,
       funderAwardId = nativeId,
@@ -6285,14 +5646,13 @@ object FunderConfigs {
       currency = when(amt.isNotNull, "USD"),
       fundingType = lit("grant"),
       funderScheme = nullif(trim(col("program_area")), lit("")),
-      startDate = sd, endDate = lit(null).cast("date"),
-      startYear = fy, endYear = lit(null).cast("int"),
+      startDate = sd,
+      startYear = fy,
       leadInvestigator = lead,
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
-        col("display_name").isNotNull && trim(col("display_name")) =!= "")
+        col("display_name").isNotNull && trim(col("display_name")) =!= ""))
   }
 
   // ---------------------------------------------------------------
@@ -6308,12 +5668,10 @@ object FunderConfigs {
     val amt = col("amount").try_cast("double")
     val lead = when(col("grantee_org").isNotNull ||
         col("given_name").isNotNull,
-      investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("grantee_org"), lit(null).cast("string"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306360L, provenance = "wt_grant_foundation",
+      investigator(col("given_name"), col("family_name"), col("grantee_org"),
+        lit(null).cast("string")))
+    FunderIngestConfig(4320306360L, AwardFieldMap(
+      provenance = "wt_grant_foundation",
       priority = 151,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -6330,13 +5688,11 @@ object FunderConfigs {
       currency = when(amt > 0, col("currency")),
       fundingType = lit("grant"),
       funderScheme = col("program"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = col("start_year").try_cast("int"),
       endYear = col("end_year").try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("funder_award_id").isNotNull)
+      rowFilter = col("funder_award_id").isNotNull))
   }
 
   /** Damon Runyon Cancer Research Foundation
@@ -6353,11 +5709,10 @@ object FunderConfigs {
       .otherwise(lit(""))
     val lead = when(col("scientist_full_name").isNotNull &&
         col("scientist_full_name") =!= "",
-      investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("US"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306271L, provenance = "damon_runyon_drupal",
+      investigator(col("given_name"), col("family_name"), col("institution"),
+        lit("US")))
+    FunderIngestConfig(4320306271L, AwardFieldMap(
+      provenance = "damon_runyon_drupal",
       priority = 73,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -6373,21 +5728,16 @@ object FunderConfigs {
           concat(col("award_type"), lit(" working on "),
             col("cancer_type"), lit("."), mentorSuffix))
         .when(col("award_type").isNotNull, col("award_type")),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = when(at.rlike("fellow"), "fellowship")
         .when(at.rlike("investigator|research|innovation|scholar"),
           "research")
         .when(at.rlike("clinical"), "research")
         .otherwise("other"),
       funderScheme = col("award_type"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
-      startYear = lit(null).cast("int"), endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("scientist_full_name").isNotNull)
+        col("scientist_full_name").isNotNull))
   }
 
   // ---------------------------------------------------------------
@@ -6417,17 +5767,11 @@ object FunderConfigs {
     val co = from_json(col("co_investigators_struct_json"),
       org.apache.spark.sql.types.DataType.fromDDL(rgcPerson))
     def coPerson(x: Column): Column =
-      struct(nullif(trim(x.getField("given_name")), lit(""))
-          .as("given_name"),
-        nullif(trim(x.getField("family_name")), lit(""))
-          .as("family_name"),
-        lit(null).cast("string").as("orcid"),
-        lit(null).cast("date").as("role_start"),
-        struct(lit(null).cast("string").as("name"),
-          lit(null).cast("string").as("country"),
-          lit(null).cast(affIds).as("ids")).as("affiliation"))
-    FunderIngestConfig(
-      funderId = 4320321592L, provenance = "rgc_hk_project_enquiry",
+      investigator(nullif(trim(x.getField("given_name")), lit("")),
+        nullif(trim(x.getField("family_name")), lit("")),
+        lit(null).cast("string"), lit(null).cast("string"))
+    FunderIngestConfig(4320321592L, AwardFieldMap(
+      provenance = "rgc_hk_project_enquiry",
       priority = 198,
       mintKey = nid,
       funderAwardId = nid,
@@ -6438,26 +5782,22 @@ object FunderConfigs {
       fundingType = coalesce(nullif(trim(col("funding_type_hint")),
         lit("")), lit("research")),
       funderScheme = nullif(trim(col("funding_scheme")), lit("")),
-      startDate = lit(null).cast("date"),
       endDate = d(col("completion_date")),
       startYear = when(future, lit(null)).otherwise(sy),
       endYear = when(future, lit(null)).otherwise(ey),
       leadInvestigator = investigator(
         nullif(trim(col("pi_given_name")), lit("")),
         nullif(trim(col("pi_family_name")), lit("")),
-        lit(null).cast("string"), lit(null).cast("date"),
-        nullif(trim(col("institution")), lit("")),
-        lit(null).cast("string"), lit(null).cast(affIds)),
+        nullif(trim(col("institution")), lit("")), lit(null).cast("string")),
       coLeadInvestigator = when(co.isNotNull && size(co) > 0,
         coPerson(element_at(co, 1))),
       investigators = when(co.isNotNull && size(co) > 1,
         transform(slice(co, lit(2), size(co) - 1), x => coPerson(x)))
         .otherwise(FunderIngest.nullInvestigators),
       landingPageUrl = nullif(trim(col("source_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
-        col("title").isNotNull && trim(col("title")) =!= "")
+        col("title").isNotNull && trim(col("title")) =!= ""))
   }
 
   /** ISF / Israel Science Foundation grant search
@@ -6473,8 +5813,8 @@ object FunderConfigs {
     val sd = d(col("start_date")); val ed = d(col("end_date"))
     val sy = col("source_year").try_cast("int")
     val dur = col("years").try_cast("int")
-    FunderIngestConfig(
-      funderId = 4320322252L, provenance = "isf_grant_search",
+    FunderIngestConfig(4320322252L, AwardFieldMap(
+      provenance = "isf_grant_search",
       priority = 146,
       mintKey = nid,
       funderAwardId = nid,
@@ -6495,15 +5835,12 @@ object FunderConfigs {
       leadInvestigator = investigator(
         nullif(trim(col("lead_investigator_given_name")), lit("")),
         nullif(trim(col("lead_investigator_family_name")), lit("")),
-        lit(null).cast("string"), sd,
-        nullif(trim(col("institution")), lit("")), lit("IL"),
-        lit(null).cast(affIds)),
+        nullif(trim(col("institution")), lit("")), lit("IL"), roleStart = sd),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** Villum Fonden / Velux Fonden grants roster
@@ -6518,16 +5855,13 @@ object FunderConfigs {
     val lead = when(col("pi_family_name").isNotNull ||
         col("institution_name").isNotNull,
       investigator(col("pi_given_name"), col("pi_family_name"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution_name"), col("institution_country"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320310490L, provenance = "villum_veluxfonden",
+        col("institution_name"), col("institution_country")))
+    FunderIngestConfig(4320310490L, AwardFieldMap(
+      provenance = "villum_veluxfonden",
       priority = 191,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = when(amt > 0, amt),
       currency = when(amt > 0, "DKK"),
       fundingType = when(lower(col("funder_scheme")).rlike(
@@ -6539,14 +5873,12 @@ object FunderConfigs {
       funderScheme = col("funder_scheme"),
       startDate = when(yr.isNotNull,
         d(concat(col("year"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
-      startYear = yr, endYear = lit(null).cast("int"),
+      startYear = yr,
       leadInvestigator = lead,
       landingPageUrl = coalesce(col("landing_url"),
         lit("https://veluxfonden.dk/en/basic-page/projects-granted")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        trim(col("funder_award_id").cast("string")) =!= "")
+        trim(col("funder_award_id").cast("string")) =!= ""))
   }
 
   /** DOE national user facilities via OSTI
@@ -6592,11 +5924,10 @@ object FunderConfigs {
         lit("source").as("asserted_by"))))
       .otherwise(array().cast(affIds))
     val lead = when(orgName.isNotNull,
-      investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        orgName, orgCountry, rorIds))
-    FunderIngestConfig(
-      funderId = 4320321005L, provenance = "isvavai_msm", priority = 226,
+      investigator(lit(null).cast("string"), lit(null).cast("string"), orgName,
+        orgCountry, ids = rorIds))
+    FunderIngestConfig(4320321005L, AwardFieldMap(
+      provenance = "isvavai_msm", priority = 226,
       mintKey = lower(trim(col("funder_award_id"))),
       funderAwardId = col("funder_award_id"),
       displayName = coalesce(col("title_en"), col("title_original"),
@@ -6612,8 +5943,7 @@ object FunderConfigs {
       endYear = when(future, lit(null)).otherwise(ey),
       leadInvestigator = lead,
       landingPageUrl = col("source_url"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("funder_award_id").isNotNull)
+      rowFilter = col("funder_award_id").isNotNull))
   }
 
   // ---------------------------------------------------------------
@@ -6636,16 +5966,12 @@ object FunderConfigs {
       .otherwise(col("orcid"))
     val lead = when(col("lead_family_name").isNotNull,
       investigator(col("lead_given_name"), col("lead_family_name"),
-        orcid, lit(null).cast("date"),
-        col("contracted_organisation"), lit("GB"),
-        lit(null).cast(affIds)))
+        col("contracted_organisation"), lit("GB"), orcid = orcid))
       .when(col("contracted_organisation").isNotNull,
         investigator(lit(null).cast("string"), lit(null).cast("string"),
-          lit(null).cast("string"), lit(null).cast("date"),
-          col("contracted_organisation"), lit("GB"),
-          lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320319994L, provenance = "nihr_ods_dhsc",
+          col("contracted_organisation"), lit("GB")))
+    FunderIngestConfig(4320319994L, AwardFieldMap(
+      provenance = "nihr_ods_dhsc",
       priority = 425,
       mintKey = lower(col("project_id")),
       funderAwardId = col("project_id"),
@@ -6664,9 +5990,8 @@ object FunderConfigs {
       startYear = year(sd), endYear = year(ed),
       leadInvestigator = lead,
       landingPageUrl = col("funding_and_awards_link"),
-      doi = lit(null).cast("string"),
       rowFilter = col("project_id").isNotNull &&
-        trim(col("project_id")) =!= "")
+        trim(col("project_id")) =!= ""))
   }
 
   /** The six Danish regions whose council labels assert 'DK'
@@ -6686,8 +6011,8 @@ object FunderConfigs {
     val amt = col("amount").try_cast("double")
     val sd = d(col("start_date")); val ed = d(col("end_date"))
     val py = col("published_year").try_cast("int")
-    FunderIngestConfig(
-      funderId = 4320324424L, provenance = "trygfonden_donations_api",
+    FunderIngestConfig(4320324424L, AwardFieldMap(
+      provenance = "trygfonden_donations_api",
       priority = 122,
       mintKey = nid,
       funderAwardId = nid,
@@ -6707,16 +6032,13 @@ object FunderConfigs {
       startYear = coalesce(year(sd), py),
       endYear = coalesce(year(ed), py),
       leadInvestigator = investigator(lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("string"), sd,
-        nullif(trim(col("recipient_name")), lit("")),
-        when(col("council").isin(trygCouncils: _*), "DK"),
-        lit(null).cast(affIds)),
+        lit(null).cast("string"), nullif(trim(col("recipient_name")), lit("")),
+        when(col("council").isin(trygCouncils: _*), "DK"), roleStart = sd),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** NAFOSTED / Vietnam National Foundation for Science and
@@ -6762,11 +6084,10 @@ object FunderConfigs {
       when(name.isNull || trim(name) === "",
         lit(null).cast(FunderIngest.InvestigatorType))
         .otherwise(investigator(nullif(trim(giv), lit("")),
-          nullif(trim(fam), lit("")), lit(null).cast("string"), sd,
-          nullif(trim(inst), lit("")), nullif(trim(ctry), lit("")),
-          lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320338L, provenance = "hfsp_awards_listing",
+          nullif(trim(fam), lit("")), nullif(trim(inst), lit("")),
+          nullif(trim(ctry), lit("")), roleStart = sd))
+    FunderIngestConfig(4320320338L, AwardFieldMap(
+      provenance = "hfsp_awards_listing",
       priority = 124,
       mintKey = nid,
       funderAwardId = nid,
@@ -6774,8 +6095,6 @@ object FunderConfigs {
       description = when(col("description").isNull ||
         trim(col("description")) === "", lit(null).cast("string"))
         .otherwise(trim(col("description"))),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = coalesce(nullif(trim(col("funding_type")), lit("")),
         lit("grant")),
       funderScheme = coalesce(nullif(trim(col("program")), lit("")),
@@ -6794,16 +6113,13 @@ object FunderConfigs {
         .otherwise(transform(awardees, x =>
           investigator(nullif(trim(x.getField("given_name")), lit("")),
             nullif(trim(x.getField("family_name")), lit("")),
-            lit(null).cast("string"), sd,
             nullif(trim(x.getField("institution")), lit("")),
-            nullif(trim(x.getField("country")), lit("")),
-            lit(null).cast(affIds)))),
+            nullif(trim(x.getField("country")), lit("")), roleStart = sd))),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** Wolfson Foundation via 360Giving (CreateWolfsonAwards.ipynb
@@ -6815,11 +6131,9 @@ object FunderConfigs {
     val amt = col("amount").try_cast("double")
     val lead = when(col("recipient_org").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("recipient_org"), col("recipient_country_iso"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320670L, provenance = "wolfson_foundation",
+        col("recipient_org"), col("recipient_country_iso")))
+    FunderIngestConfig(4320320670L, AwardFieldMap(
+      provenance = "wolfson_foundation",
       priority = 155,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -6830,13 +6144,10 @@ object FunderConfigs {
       currency = when(amt > 0, "GBP"),
       fundingType = lit("grant"),
       funderScheme = col("grant_programme"),
-      startDate = d(col("award_date")), endDate = lit(null).cast("date"),
+      startDate = d(col("award_date")),
       startYear = col("start_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("funder_award_id").isNotNull)
+      rowFilter = col("funder_award_id").isNotNull))
   }
 
   // ---------------------------------------------------------------
@@ -6866,11 +6177,10 @@ object FunderConfigs {
     val amt = col("amount").try_cast("decimal(18,2)")
     val sd = d(col("start_date_raw")); val ed = d(col("end_date_raw"))
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit(country), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = funderId, provenance = provenance, priority = priority,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit(country)))
+    FunderIngestConfig(funderId, AwardFieldMap(
+      provenance = provenance, priority = priority,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = coalesce(nullif(trim(col("title")), lit("")),
@@ -6886,9 +6196,8 @@ object FunderConfigs {
       startYear = year(sd), endYear = year(ed),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** MJFF / Michael J. Fox Foundation funded studies
@@ -6908,18 +6217,15 @@ object FunderConfigs {
         .otherwise(col("lead_position_affiliation"))), lit(""))
     val fam = nullif(trim(col("lead_family_name")), lit(""))
     val lead = when(fam.isNotNull,
-      investigator(nullif(trim(col("lead_given_name")), lit("")), fam,
-        lit(null).cast("string"), sd, aff,
-        lit(null).cast("string"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306136L, provenance = "mjff_funded_studies",
+      investigator(nullif(trim(col("lead_given_name")), lit("")), fam, aff,
+        lit(null).cast("string"), roleStart = sd))
+    FunderIngestConfig(4320306136L, AwardFieldMap(
+      provenance = "mjff_funded_studies",
       priority = 129,
       mintKey = nid,
       funderAwardId = nid,
       displayName = trim(col("display_name")),
       description = nullif(trim(col("description")), lit("")),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("research"),
       funderScheme = coalesce(nullif(trim(col("source_program")),
         lit("")), lit("MJFF Funded Study")),
@@ -6928,11 +6234,10 @@ object FunderConfigs {
       startYear = py, endYear = py,
       leadInvestigator = lead,
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** CPRIT / Cancer Prevention and Research Institute of Texas
@@ -6964,8 +6269,8 @@ object FunderConfigs {
     val work = nullif(trim(col("work_title")), lit(""))
     val orgLike = lower(nullif(trim(col("is_organization_like")),
       lit(""))) === "true"
-    FunderIngestConfig(
-      funderId = 4320319951L, provenance = "canada_council_prizes",
+    FunderIngestConfig(4320319951L, AwardFieldMap(
+      provenance = "canada_council_prizes",
       priority = 74,
       mintKey = concat(lit("canada-council:"), lower(aid)),
       funderAwardId = aid,
@@ -6982,7 +6287,6 @@ object FunderConfigs {
         when(nullif(trim(col("raw_entry_text")), lit("")).isNotNull,
           concat(lit("Source entry: "),
             nullif(trim(col("raw_entry_text")), lit(""))))), lit("")),
-      amount = lit(null).cast("double"),
       currency = coalesce(nullif(trim(col("currency")), lit("")),
         lit("CAD")),
       fundingType = lit("prize"),
@@ -6993,13 +6297,10 @@ object FunderConfigs {
       leadInvestigator = investigator(
         when(orgLike, laureate).otherwise(coalesce(giv, laureate)),
         when(orgLike, lit(null).cast("string")).otherwise(fam),
-        lit(null).cast("string"), lit(null).cast("date"),
-        lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast(affIds)),
+        lit(null).cast("string"), lit(null).cast("string")),
       landingPageUrl = nullif(trim(col("prize_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = aid.isNotNull && yr.isNotNull &&
-        prize.isNotNull && laureate.isNotNull)
+        prize.isNotNull && laureate.isNotNull))
   }
 
   /** The GMIS duplicate-row screen (CreateNSFSriLankaAwards.ipynb
@@ -7028,8 +6329,8 @@ object FunderConfigs {
     val srcDesc = nullif(trim(concat_ws(" | ",
       nullif(trim(col("abstract")), lit("")),
       nullif(trim(col("key_research_findings")), lit("")))), lit(""))
-    FunderIngestConfig(
-      funderId = 4320335353L, provenance = "nsf_sri_lanka_gmis",
+    FunderIngestConfig(4320335353L, AwardFieldMap(
+      provenance = "nsf_sri_lanka_gmis",
       priority = 138,
       mintKey = lower(nid),
       funderAwardId = nid,
@@ -7047,14 +6348,12 @@ object FunderConfigs {
       leadInvestigator = investigator(
         nullif(trim(col("lead_investigator_given_name")), lit("")),
         nullif(trim(col("lead_investigator_family_name")), lit("")),
-        lit(null).cast("string"), sd, lit(null).cast("string"),
-        lit("LK"), lit(null).cast(affIds)),
+        lit(null).cast("string"), lit("LK"), roleStart = sd),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("grant_number").isNotNull &&
         trim(col("grant_number")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** The Schmidt Futures funder row is non-F4320* and INLINED by the
@@ -7074,15 +6373,12 @@ object FunderConfigs {
     * name-only lead with role_start = start. */
   def schmidtSciences: FunderIngestConfig = {
     val sd = d(concat(col("start_year"), lit("-01-01")))
-    FunderIngestConfig(
-      funderId = 4026159580L, provenance = "schmidt_sciences_awardees",
+    FunderIngestConfig(4026159580L, AwardFieldMap(
+      provenance = "schmidt_sciences_awardees",
       priority = 108,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("grantee_name"),
-      description = lit(null).cast("string"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("fellowship"),
       funderScheme = coalesce(concat(lit("Schmidt Sciences "),
         nullif(trim(col("program")), lit(""))),
@@ -7091,16 +6387,13 @@ object FunderConfigs {
       endDate = d(concat(col("end_year"), lit("-12-31"))),
       startYear = col("start_year").try_cast("int"),
       endYear = col("end_year").try_cast("int"),
-      leadInvestigator = investigator(
-        nullif(trim(col("given_name")), lit("")),
-        nullif(trim(col("family_name")), lit("")),
-        lit(null).cast("string"), sd, lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast(affIds)),
+      leadInvestigator = investigator(nullif(trim(col("given_name")), lit("")),
+        nullif(trim(col("family_name")), lit("")), lit(null).cast("string"),
+        lit(null).cast("string"), roleStart = sd),
       landingPageUrl = col("grantee_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("grantee_name").isNotNull &&
         trim(col("grantee_name")) =!= "" &&
-        col("funder_award_id").isNotNull)
+        col("funder_award_id").isNotNull))
   }
 
   // ---------------------------------------------------------------
@@ -7119,8 +6412,8 @@ object FunderConfigs {
     val py = col("award_year").try_cast("int")
     val sd = when(py.between(1900, currentYear + 1),
       d(concat(col("award_year"), lit("-01-01"))))
-    FunderIngestConfig(
-      funderId = 4320312534L, provenance = "sepm_science_awards",
+    FunderIngestConfig(4320312534L, AwardFieldMap(
+      provenance = "sepm_science_awards",
       priority = 170,
       mintKey = nid,
       funderAwardId = nid,
@@ -7128,25 +6421,20 @@ object FunderConfigs {
       description = when(col("description").isNull ||
         trim(col("description")) === "", lit(null).cast("string"))
         .otherwise(trim(col("description"))),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("prize"),
       funderScheme = nullif(trim(col("award_name")), lit("")),
-      startDate = sd, endDate = lit(null).cast("date"),
-      startYear = py, endYear = lit(null).cast("int"),
+      startDate = sd,
+      startYear = py,
       leadInvestigator = investigator(
         nullif(trim(col("recipient_given_name")), lit("")),
         nullif(trim(col("recipient_family_name")), lit("")),
-        lit(null).cast("string"), sd,
         nullif(trim(col("affiliation_name")), lit("")),
-        nullif(trim(col("affiliation_country")), lit("")),
-        lit(null).cast(affIds)),
+        nullif(trim(col("affiliation_country")), lit("")), roleStart = sd),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** Sir Jules Thorn Charitable Trust via 360Giving
@@ -7166,10 +6454,9 @@ object FunderConfigs {
       .otherwise(lit(null).cast(affIds))
     val lead = when(col("recipient_org").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("recipient_org"), lit(null).cast("string"), orgIds))
-    FunderIngestConfig(
-      funderId = 4320320000L, provenance = "sir_jules_thorn_360giving",
+        col("recipient_org"), lit(null).cast("string"), ids = orgIds))
+    FunderIngestConfig(4320320000L, AwardFieldMap(
+      provenance = "sir_jules_thorn_360giving",
       priority = 186,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -7180,14 +6467,10 @@ object FunderConfigs {
       amount = when(amt > 0, amt),
       currency = when(amt > 0, col("currency")),
       fundingType = lit("grant"),
-      funderScheme = lit(null).cast("string"),
-      startDate = d(col("award_date")), endDate = lit(null).cast("date"),
+      startDate = d(col("award_date")),
       startYear = when(future, lit(null)).otherwise(sy),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("funder_award_id").isNotNull)
+      rowFilter = col("funder_award_id").isNotNull))
   }
 
   /** Keio Medical Science Prize
@@ -7200,8 +6483,8 @@ object FunderConfigs {
     val nid = lower(trim(col("funder_award_id")))
     val sd = d(col("start_date")); val ed = d(col("end_date"))
     val py = col("source_year").try_cast("int")
-    FunderIngestConfig(
-      funderId = 4320320909L, provenance = "keio_medical_science_prize",
+    FunderIngestConfig(4320320909L, AwardFieldMap(
+      provenance = "keio_medical_science_prize",
       priority = 125,
       mintKey = nid,
       funderAwardId = nid,
@@ -7217,18 +6500,15 @@ object FunderConfigs {
       startDate = sd, endDate = ed,
       startYear = coalesce(year(sd), py),
       endYear = coalesce(year(ed), py),
-      leadInvestigator = investigator(
-        nullif(trim(col("given_name")), lit("")),
+      leadInvestigator = investigator(nullif(trim(col("given_name")), lit("")),
         nullif(trim(col("family_name")), lit("")),
-        lit(null).cast("string"), sd,
-        nullif(trim(col("affiliation_raw")), lit("")),
-        lit(null).cast("string"), lit(null).cast(affIds)),
+        nullif(trim(col("affiliation_raw")), lit("")), lit(null).cast("string"),
+        roleStart = sd),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** HEC Pakistan NRPU (CreateHECPakistanAwards.ipynb cell 17,
@@ -7243,14 +6523,11 @@ object FunderConfigs {
     val lead = when(col("pi_name").isNull ||
       trim(col("pi_name")) === "",
       lit(null).cast(FunderIngest.InvestigatorType))
-      .otherwise(investigator(
-        nullif(trim(col("pi_given_name")), lit("")),
+      .otherwise(investigator(nullif(trim(col("pi_given_name")), lit("")),
         nullif(trim(col("pi_family_name")), lit("")),
-        lit(null).cast("string"), sd,
-        nullif(trim(col("university")), lit("")), lit("PK"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320322799L, provenance = "hec_pakistan_nrpu",
+        nullif(trim(col("university")), lit("")), lit("PK"), roleStart = sd))
+    FunderIngestConfig(4320322799L, AwardFieldMap(
+      provenance = "hec_pakistan_nrpu",
       priority = 140,
       mintKey = nid,
       funderAwardId = nid,
@@ -7269,11 +6546,10 @@ object FunderConfigs {
       endYear = coalesce(year(ed), py),
       leadInvestigator = lead,
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** Ontario MCU research funding (CreateOntarioMCUAwards.ipynb
@@ -7294,10 +6570,9 @@ object FunderConfigs {
     val amt = col("amount").try_cast("decimal(18,2)")
     val lead = when(col("institution").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("Hong Kong"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320326427L, provenance = "itf_hk", priority = 371,
+        col("institution"), lit("Hong Kong")))
+    FunderIngestConfig(4320326427L, AwardFieldMap(
+      provenance = "itf_hk", priority = 371,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = coalesce(nullif(trim(col("title")), lit("")),
@@ -7307,14 +6582,11 @@ object FunderConfigs {
       currency = when(amt > 0, col("currency")),
       fundingType = lit("grant"),
       funderScheme = col("scheme"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = year(d(col("start_date_raw"))),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   // ---------------------------------------------------------------
@@ -7347,27 +6619,20 @@ object FunderConfigs {
     * landing AND works URLs, no row screen. */
   def cirm: FunderIngestConfig = {
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United States"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306171L, provenance = "cirm", priority = 253,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United States")))
+    FunderIngestConfig(4320306171L, AwardFieldMap(
+      provenance = "cirm", priority = 253,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = lit("USD"),
       fundingType = lit("grant"),
       funderScheme = col("programme"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
-      startYear = lit(null).cast("int"), endYear = lit(null).cast("int"),
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Rockefeller Foundation WordPress grants roster
@@ -7377,27 +6642,26 @@ object FunderConfigs {
     * source currency, full dates, and an UNCONDITIONAL org-only lead
     * whose name falls back from grantee to the title (Rockefeller
     * funds organisations). */
-  def rockefeller: FunderIngestConfig = FunderIngestConfig(
-    funderId = 4320306149L, provenance = "rockefeller_wp", priority = 40,
-    mintKey = lower(col("slug")),
-    funderAwardId = col("slug"),
-    displayName = col("title"),
-    description = nullif(col("description_raw"), lit("")),
-    amount = col("amount_usd").try_cast("double"),
-    currency = col("currency"),
-    fundingType = lit("grant"),
-    funderScheme = nullif(col("focus_area_raw"), lit("")),
-    startDate = d(col("start_date")), endDate = d(col("end_date")),
-    startYear = year(d(col("start_date"))),
-    endYear = year(d(col("end_date"))),
-    leadInvestigator = investigator(lit(null).cast("string"),
-      lit(null).cast("string"), lit(null).cast("string"),
-      lit(null).cast("date"),
-      coalesce(nullif(col("grantee_raw"), lit("")), col("title")),
-      lit(null).cast("string"), lit(null).cast(affIds)),
-    landingPageUrl = col("url"),
-    doi = lit(null).cast("string"),
-    rowFilter = col("slug").isNotNull && trim(col("slug")) =!= "")
+  def rockefeller: FunderIngestConfig =
+    FunderIngestConfig(4320306149L, AwardFieldMap(
+      provenance = "rockefeller_wp", priority = 40,
+      mintKey = lower(col("slug")),
+      funderAwardId = col("slug"),
+      displayName = col("title"),
+      description = nullif(col("description_raw"), lit("")),
+      amount = col("amount_usd").try_cast("double"),
+      currency = col("currency"),
+      fundingType = lit("grant"),
+      funderScheme = nullif(col("focus_area_raw"), lit("")),
+      startDate = d(col("start_date")), endDate = d(col("end_date")),
+      startYear = year(d(col("start_date"))),
+      endYear = year(d(col("end_date"))),
+      leadInvestigator = investigator(lit(null).cast("string"),
+        lit(null).cast("string"),
+        coalesce(nullif(col("grantee_raw"), lit("")), col("title")),
+        lit(null).cast("string")),
+      landingPageUrl = col("url"),
+      rowFilter = col("slug").isNotNull && trim(col("slug")) =!= ""))
 
   /** Hertz Foundation fellows directory (CreateHertzAwards.ipynb
     * cell 12, ~1.5K): 'fellowship'/'Hertz Fellowship' constants,
@@ -7410,10 +6674,9 @@ object FunderConfigs {
     val lead = when(col("full_name").isNull || col("full_name") === "",
       lit(null).cast(FunderIngest.InvestigatorType))
       .otherwise(investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), sd, col("current_position"),
-        lit("US"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320308782L, provenance = "hertz_facetwp", priority = 90,
+        col("current_position"), lit("US"), roleStart = sd))
+    FunderIngestConfig(4320308782L, AwardFieldMap(
+      provenance = "hertz_facetwp", priority = 90,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("display_name"),
@@ -7427,9 +6690,8 @@ object FunderConfigs {
       endYear = substring(col("end_date"), 1, 4).try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("profile_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("full_name").isNotNull)
+        col("full_name").isNotNull))
   }
 
   /** JSMF / James S. McDonnell Foundation (CreateJSMFAwards.ipynb
@@ -7441,27 +6703,21 @@ object FunderConfigs {
     val sy = col("start_year").try_cast("int")
     val lead = when(col("recipient").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("recipient"), lit(null).cast("string"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306183L, provenance = "jsmf", priority = 245,
+        col("recipient"), lit(null).cast("string")))
+    FunderIngestConfig(4320306183L, AwardFieldMap(
+      provenance = "jsmf", priority = 245,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = lit("USD"),
       fundingType = lit("grant"),
-      funderScheme = lit(null).cast("string"),
-      startDate = d(col("start_date_raw")), endDate = lit(null).cast("date"),
+      startDate = d(col("start_date_raw")),
       startYear = when(sy.between(1980, 2027), sy),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   // ---------------------------------------------------------------
@@ -7478,29 +6734,24 @@ object FunderConfigs {
     val sy = col("start_year").try_cast("int")
     val inRange = sy.between(2000, 2027)
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("Canada"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320310810L, provenance = "research_manitoba",
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("Canada")))
+    FunderIngestConfig(4320310810L, AwardFieldMap(
+      provenance = "research_manitoba",
       priority = 251,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = lit("CAD"),
       fundingType = lit("grant"),
       funderScheme = col("programme"),
       startDate = when(inRange,
         d(concat(col("start_year"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
-      startYear = when(inRange, sy), endYear = lit(null).cast("int"),
+      startYear = when(inRange, sy),
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Marsden Fund / Royal Society Te Apārangi
@@ -7511,12 +6762,10 @@ object FunderConfigs {
   def marsden: FunderIngestConfig = {
     val amt = col("amount").try_cast("decimal(18,2)")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("New Zealand"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320335369L, provenance = "marsden", priority = 357,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("New Zealand")))
+    FunderIngestConfig(4320335369L, AwardFieldMap(
+      provenance = "marsden", priority = 357,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = coalesce(nullif(trim(col("title")), lit("")),
@@ -7527,14 +6776,11 @@ object FunderConfigs {
       currency = when(amt > 0, col("currency")),
       fundingType = lit("grant"),
       funderScheme = col("scheme"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = col("year_awarded").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** KWF Kankerbestrijding / Dutch Cancer Society
@@ -7545,28 +6791,24 @@ object FunderConfigs {
   def kwf: FunderIngestConfig = {
     val sd = d(col("start_date_raw"))
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("Netherlands"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320322777L, provenance = "kwf", priority = 359,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("Netherlands")))
+    FunderIngestConfig(4320322777L, AwardFieldMap(
+      provenance = "kwf", priority = 359,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = coalesce(nullif(trim(col("title")), lit("")),
         concat(lit("KWF project "), col("funder_award_id"))),
       description = col("description"),
       amount = lit(null).cast("decimal(18,2)"),
-      currency = lit(null).cast("string"),
       fundingType = lit("grant"),
       funderScheme = col("scheme"),
-      startDate = sd, endDate = lit(null).cast("date"),
-      startYear = year(sd), endYear = lit(null).cast("int"),
+      startDate = sd,
+      startYear = year(sd),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** CIFAR appointments via the WordPress REST bios
@@ -7579,8 +6821,8 @@ object FunderConfigs {
   def cifar: FunderIngestConfig = {
     val declined = col("declined").try_cast("boolean") === true
     val role = col("role_name")
-    FunderIngestConfig(
-      funderId = 4320309949L, provenance = "cifar_wp_rest", priority = 79,
+    FunderIngestConfig(4320309949L, AwardFieldMap(
+      provenance = "cifar_wp_rest", priority = 79,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = concat(lit("CIFAR "), col("program_name"),
@@ -7592,8 +6834,6 @@ object FunderConfigs {
           col("program_name"), lit(".")))
         .otherwise(concat(lit("Appointment in CIFAR "),
           col("program_name"), lit("."))),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = when(lower(role).rlike("advisor|advisory|committee"),
         "other")
         .when(lower(role).rlike(
@@ -7602,18 +6842,13 @@ object FunderConfigs {
         .otherwise("other"),
       funderScheme = col("program_name"),
       startDate = d(substring(col("first_seen_date"), 1, 10)),
-      endDate = lit(null).cast("date"),
       startYear = substring(col("first_seen_date"), 1, 4).cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = investigator(col("researcher_given"),
-        col("researcher_family"), lit(null).cast("string"),
-        lit(null).cast("date"), col("institution_name"),
-        col("country_name"), lit(null).cast(affIds)),
+        col("researcher_family"), col("institution_name"), col("country_name")),
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         col("program_name").isNotNull &&
-        col("researcher_full_name").isNotNull)
+        col("researcher_full_name").isNotNull))
   }
 
   /** Brain Canada (CreateBrainCanadaAwards.ipynb cell 6, ~0.8K): >0
@@ -7623,15 +6858,13 @@ object FunderConfigs {
   def brainCanada: FunderIngestConfig = {
     val amt = col("amount").try_cast("decimal(18,2)")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), col("country"), lit(null).cast(affIds)))
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        col("country")))
       .when(col("institution").isNotNull,
         investigator(lit(null).cast("string"), lit(null).cast("string"),
-          lit(null).cast("string"), lit(null).cast("date"),
-          col("institution"), col("country"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320311238L, provenance = "brain_canada", priority = 387,
+          col("institution"), col("country")))
+    FunderIngestConfig(4320311238L, AwardFieldMap(
+      provenance = "brain_canada", priority = 387,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = coalesce(nullif(trim(col("title")), lit("")),
@@ -7641,14 +6874,11 @@ object FunderConfigs {
       currency = when(amt > 0, col("currency")),
       fundingType = lit("grant"),
       funderScheme = col("scheme"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = year(d(col("start_date_raw"))),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull,
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** SCAS / Swedish Collegium for Advanced Study former fellows
@@ -7661,8 +6891,8 @@ object FunderConfigs {
   def scasFellows: FunderIngestConfig = {
     val nid = lower(trim(col("funder_award_id")))
     val sd = d(col("start_date"))
-    FunderIngestConfig(
-      funderId = 4320319588L, provenance = "scas_former_fellows",
+    FunderIngestConfig(4320319588L, AwardFieldMap(
+      provenance = "scas_former_fellows",
       priority = 174,
       mintKey = nid,
       funderAwardId = nid,
@@ -7679,19 +6909,16 @@ object FunderConfigs {
       startDate = sd, endDate = d(col("end_date")),
       startYear = col("start_year").try_cast("int"),
       endYear = col("end_year").try_cast("int"),
-      leadInvestigator = investigator(
-        nullif(trim(col("given_name")), lit("")),
+      leadInvestigator = investigator(nullif(trim(col("given_name")), lit("")),
         nullif(trim(col("family_name")), lit("")),
-        lit(null).cast("string"), sd,
-        nullif(trim(col("affiliation")), lit("")),
-        lit(null).cast("string"), lit(null).cast(affIds)),
+        nullif(trim(col("affiliation")), lit("")), lit(null).cast("string"),
+        roleStart = sd),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
         trim(col("display_name")) =!= "" &&
-        col("name").isNotNull && trim(col("name")) =!= "")
+        col("name").isNotNull && trim(col("name")) =!= ""))
   }
 
   // ---------------------------------------------------------------
@@ -7716,15 +6943,13 @@ object FunderConfigs {
       lit(null).cast("string").as("orcid"),
       sd.as("role_start"),
       lit(null).cast(affStruct).as("affiliation"))
-    FunderIngestConfig(
-      funderId = 4320327917L, provenance = "mercator_fellows",
+    FunderIngestConfig(4320327917L, AwardFieldMap(
+      provenance = "mercator_fellows",
       priority = 116,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("fellow_name"),
       description = col("description"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("fellowship"),
       funderScheme = coalesce(nullif(trim(col("fellowship_program")),
         lit("")), lit("Stiftung Mercator Fellowship")),
@@ -7733,10 +6958,9 @@ object FunderConfigs {
       endYear = col("end_year").try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("fellow_name").isNotNull &&
         trim(col("fellow_name")) =!= "" &&
-        col("funder_award_id").isNotNull)
+        col("funder_award_id").isNotNull))
   }
 
   /** HHMI scientist pages (CreateHHMIAwards.ipynb cell 9, ~1.7K):
@@ -7756,8 +6980,8 @@ object FunderConfigs {
     val giv = when(size(toks) >= 2,
       array_join(slice(toks, lit(1), size(toks) - 1), " "))
       .otherwise(trim(noDegree))
-    FunderIngestConfig(
-      funderId = 4320306082L, provenance = "hhmi_scientist_pages",
+    FunderIngestConfig(4320306082L, AwardFieldMap(
+      provenance = "hhmi_scientist_pages",
       priority = 44,
       mintKey = lower(slug),
       funderAwardId = slug,
@@ -7768,7 +6992,6 @@ object FunderConfigs {
         when(col("term").isNotNull,
           concat(lit(" ("), col("term"), lit(")"))).otherwise(lit(""))),
       description = nullif(col("bio"), lit("")),
-      amount = lit(null).cast("double"),
       currency = lit("USD"),
       fundingType = when(lower(col("role")).like("%fellow%"),
         "fellowship").otherwise("research"),
@@ -7779,14 +7002,11 @@ object FunderConfigs {
         d(concat(col("end_year"), lit("-12-31")))),
       startYear = col("start_year").try_cast("int"),
       endYear = col("end_year").try_cast("int"),
-      leadInvestigator = investigator(giv, fam,
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit(null).cast("string"),
-        lit(null).cast(affIds)),
+      leadInvestigator = investigator(giv, fam, col("institution"),
+        lit(null).cast("string")),
       landingPageUrl = col("url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("name_full").isNotNull && slug.isNotNull &&
-        trim(slug) =!= "")
+        trim(slug) =!= ""))
   }
 
   /** Royal Society grants listing
@@ -7797,30 +7017,24 @@ object FunderConfigs {
   def royalSocietyGrants: FunderIngestConfig = {
     val sy = col("start_year").try_cast("int")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United Kingdom"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320006L, provenance = "royal_society_grants",
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United Kingdom")))
+    FunderIngestConfig(4320320006L, AwardFieldMap(
+      provenance = "royal_society_grants",
       priority = 339,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = lit(null).cast("decimal(18,2)"),
-      currency = lit(null).cast("string"),
       fundingType = lit("fellowship"),
       funderScheme = col("funder_scheme"),
       startDate = when(sy.isNotNull,
         d(concat(sy.cast("string"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
-      startYear = sy, endYear = lit(null).cast("int"),
+      startYear = sy,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** IADB science-and-technology project search
@@ -7833,8 +7047,7 @@ object FunderConfigs {
     val nid = lower(trim(col("funder_award_id")))
     val amt = col("amount").try_cast("double")
     val sd = coalesce(d(col("approved_date")), d(col("signed_date")))
-    FunderIngestConfig(
-      funderId = 4320307862L,
+    FunderIngestConfig(4320307862L, AwardFieldMap(
       provenance = "iadb_project_search_scitech", priority = 156,
       mintKey = nid,
       funderAwardId = nid,
@@ -7847,17 +7060,14 @@ object FunderConfigs {
       funderScheme = coalesce(nullif(trim(col("subsector_name")),
         lit("")), nullif(trim(col("sector_name")), lit("")),
         lit("SCIENCE AND TECHNOLOGY")),
-      startDate = sd, endDate = lit(null).cast("date"),
+      startDate = sd,
       startYear = coalesce(year(sd),
         col("source_year").try_cast("int")),
-      endYear = lit(null).cast("int"),
-      leadInvestigator = nullInvestigator,
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** LPDP RISPRO grantees (CreateLPDPRISPROAwards.ipynb cell 16,
@@ -7868,8 +7078,8 @@ object FunderConfigs {
   def lpdpRispro: FunderIngestConfig = {
     val nid = lower(trim(col("funder_award_id")))
     val sd = d(col("start_date"))
-    FunderIngestConfig(
-      funderId = 4320328515L, provenance = "lpdp_rispro_grantees",
+    FunderIngestConfig(4320328515L, AwardFieldMap(
+      provenance = "lpdp_rispro_grantees",
       priority = 136,
       mintKey = nid,
       funderAwardId = nid,
@@ -7877,26 +7087,20 @@ object FunderConfigs {
       description = when(col("description").isNull ||
         trim(col("description")) === "", lit(null).cast("string"))
         .otherwise(trim(col("description"))),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("research"),
       funderScheme = nullif(trim(col("funder_scheme")), lit("")),
-      startDate = sd, endDate = lit(null).cast("date"),
+      startDate = sd,
       startYear = coalesce(year(sd),
         col("start_year").try_cast("int")),
-      endYear = lit(null).cast("int"),
       leadInvestigator = investigator(
         nullif(trim(col("lead_investigator_given_name")), lit("")),
         nullif(trim(col("lead_investigator_family_name")), lit("")),
-        lit(null).cast("string"), sd,
-        nullif(trim(col("institution")), lit("")), lit("ID"),
-        lit(null).cast(affIds)),
+        nullif(trim(col("institution")), lit("")), lit("ID"), roleStart = sd),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** EKFS / Else Kröner-Fresenius-Stiftung (CreateEKFSAwards.ipynb
@@ -7949,11 +7153,10 @@ object FunderConfigs {
       section("Final report results: ", col("endreport_results")),
       section("Keywords: ", col("keywords_json")))
     val lead = when(leaderName.isNotNull || leaderOrg.isNotNull,
-      investigator(lit(null).cast("string"), leaderName,
-        lit(null).cast("string"), lit(null).cast("date"),
-        leaderOrg, lit(null).cast("string"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320321007L, provenance = "zonmw_projects_jsonapi",
+      investigator(lit(null).cast("string"), leaderName, leaderOrg,
+        lit(null).cast("string")))
+    FunderIngestConfig(4320321007L, AwardFieldMap(
+      provenance = "zonmw_projects_jsonapi",
       priority = 92,
       mintKey = concat(lit("zonmw:"), lower(trim(col("slug")))),
       funderAwardId = col("slug"),
@@ -7970,9 +7173,8 @@ object FunderConfigs {
       startYear = syi, endYear = eyi,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("project_number").isNotNull &&
-        col("display_name").isNotNull && syi.isNotNull)
+        col("display_name").isNotNull && syi.isNotNull))
   }
 
   /** MNiSW / Polish Ministry of Science national programmes
@@ -7984,27 +7186,22 @@ object FunderConfigs {
     val inRange = sy.between(2000, 2027)
     val lead = when(col("institution").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("Poland"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320322733L, provenance = "mnisw", priority = 243,
+        col("institution"), lit("Poland")))
+    FunderIngestConfig(4320322733L, AwardFieldMap(
+      provenance = "mnisw", priority = 243,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = lit("PLN"),
       fundingType = lit("grant"),
       funderScheme = col("programme"),
       startDate = when(inRange,
         d(concat(col("start_year"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
-      startYear = when(inRange, sy), endYear = lit(null).cast("int"),
+      startYear = when(inRange, sy),
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** MBIE 'Who got funded' workbook (CreateMBIEAwards.ipynb
@@ -8021,11 +7218,10 @@ object FunderConfigs {
     val scheme = nullif(trim(col("funder_scheme")), lit(""))
     val org = nullif(trim(col("organisation")), lit(""))
     val lead = when(org.isNotNull,
-      investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"), org,
-        lit(null).cast("string"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320321983L, provenance = "mbie_who_got_funded",
+      investigator(lit(null).cast("string"), lit(null).cast("string"), org,
+        lit(null).cast("string")))
+    FunderIngestConfig(4320321983L, AwardFieldMap(
+      provenance = "mbie_who_got_funded",
       priority = 216,
       mintKey = lower(trim(col("funder_award_id"))),
       funderAwardId = col("funder_award_id"),
@@ -8044,9 +7240,8 @@ object FunderConfigs {
       endYear = when(future, lit(null)).otherwise(year(ed)),
       leadInvestigator = lead,
       landingPageUrl = col("source_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        nullif(trim(col("display_name")), lit("")).isNotNull)
+        nullif(trim(col("display_name")), lit("")).isNotNull))
   }
 
   /** ICMR approved projects (CreateICMRAwards.ipynb cell 11): §6.7
@@ -8060,29 +7255,21 @@ object FunderConfigs {
     val fam = nullif(trim(col("lead_family_name")), lit(""))
     val org = nullif(trim(col("institution")), lit(""))
     val lead = when(fam.isNotNull || org.isNotNull,
-      investigator(giv, fam, lit(null).cast("string"),
-        lit(null).cast("date"), org,
-        when(org.isNotNull, "IN"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320720L, provenance = "icmr_approved_projects",
+      investigator(giv, fam, org, when(org.isNotNull, "IN")))
+    FunderIngestConfig(4320320720L, AwardFieldMap(
+      provenance = "icmr_approved_projects",
       priority = 206,
       mintKey = lower(trim(col("funder_award_id"))),
       funderAwardId = col("funder_award_id"),
       displayName = col("display_name"),
-      description = lit(null).cast("string"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("research"),
       funderScheme = nullif(trim(col("subject_area")), lit("")),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = when(col("start_year").try_cast("int")
         .between(1900, 2100), col("start_year").try_cast("int")),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("source_pdf_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("display_name").isNotNull)
+        col("display_name").isNotNull))
   }
 
   /** The IDRC IATI budget/org/country JSON element types
@@ -8127,8 +7314,8 @@ object FunderConfigs {
       .getField("code")
     val sd = coalesce(d(col("actual_start")), d(col("planned_start")))
     val ed = coalesce(d(col("actual_end")), d(col("planned_end")))
-    FunderIngestConfig(
-      funderId = 4320319949L, provenance = "idrc_iati", priority = 37,
+    FunderIngestConfig(4320319949L, AwardFieldMap(
+      provenance = "idrc_iati", priority = 37,
       mintKey = lower(col("iati_identifier")),
       funderAwardId = col("iati_identifier"),
       displayName = coalesce(col("title_en"), col("title_fr"),
@@ -8138,19 +7325,14 @@ object FunderConfigs {
       amount = when(total > 0, total),
       currency = firstCurrency,
       fundingType = lit("grant"),
-      funderScheme = lit(null).cast("string"),
       startDate = sd, endDate = ed,
       startYear = year(sd), endYear = year(ed),
       leadInvestigator = investigator(lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("date"),
-        coalesce(implOrg.getField("name_en"),
-          implOrg.getField("name_fr"), implOrg.getField("name_es")),
-        country, lit(null).cast(affIds)),
+        lit(null).cast("string"), coalesce(implOrg.getField("name_en"),
+          implOrg.getField("name_fr"), implOrg.getField("name_es")), country),
       landingPageUrl = col("source_xml_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("iati_identifier").isNotNull &&
-        trim(col("iati_identifier")) =!= "")
+        trim(col("iati_identifier")) =!= ""))
   }
 
   /** Novo Nordisk Foundation grants search API
@@ -8165,32 +7347,26 @@ object FunderConfigs {
     val lead = when(col("institution").isNull ||
       trim(col("institution")) === "",
       lit(null).cast(FunderIngest.InvestigatorType))
-      .otherwise(investigator(
-        nullif(trim(col("lead_given_name")), lit("")),
+      .otherwise(investigator(nullif(trim(col("lead_given_name")), lit("")),
         nullif(trim(col("lead_family_name")), lit("")),
-        lit(null).cast("string"), sd,
-        nullif(trim(col("institution")), lit("")),
-        lit(null).cast("string"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320325957L, provenance = "novo_nordisk_fonden_grants",
+        nullif(trim(col("institution")), lit("")), lit(null).cast("string"),
+        roleStart = sd))
+    FunderIngestConfig(4320325957L, AwardFieldMap(
+      provenance = "novo_nordisk_fonden_grants",
       priority = 208,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("display_name"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("double"),
       currency = col("currency"),
       fundingType = lit("research"),
       funderScheme = nullif(trim(col("funder_scheme")), lit("")),
-      startDate = sd, endDate = lit(null).cast("date"),
+      startDate = sd,
       startYear = col("award_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
       rowFilter = col("display_name").isNotNull &&
         trim(col("display_name")) =!= "" &&
-        col("funder_award_id").isNotNull)
+        col("funder_award_id").isNotNull))
   }
 
   // ---------------------------------------------------------------
@@ -8202,25 +7378,21 @@ object FunderConfigs {
     * cell 6, ~0.6K): the minimal grant card — no amounts, NO lead at
     * all, year_awarded-only coverage, NULL works_api_url, no row
     * screen. */
-  def healthFoundation: FunderIngestConfig = FunderIngestConfig(
-    funderId = 4320320265L, provenance = "health_foundation",
-    priority = 353,
-    mintKey = lower(col("funder_award_id")),
-    funderAwardId = col("funder_award_id"),
-    displayName = col("title"),
-    description = col("description"),
-    amount = lit(null).cast("decimal(18,2)"),
-    currency = lit(null).cast("string"),
-    fundingType = lit("grant"),
-    funderScheme = col("scheme"),
-    startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
-    startYear = col("year_awarded").try_cast("int"),
-    endYear = lit(null).cast("int"),
-    leadInvestigator = nullInvestigator,
-    landingPageUrl = col("landing_page_url"),
-    doi = lit(null).cast("string"),
-    rowFilter = lit(true),
-    worksApiUrl = Some(lit(null).cast("string")))
+  def healthFoundation: FunderIngestConfig =
+    FunderIngestConfig(4320320265L, AwardFieldMap(
+      provenance = "health_foundation",
+      priority = 353,
+      mintKey = lower(col("funder_award_id")),
+      funderAwardId = col("funder_award_id"),
+      displayName = col("title"),
+      description = col("description"),
+      amount = lit(null).cast("decimal(18,2)"),
+      fundingType = lit("grant"),
+      funderScheme = col("scheme"),
+      startYear = col("year_awarded").try_cast("int"),
+      landingPageUrl = col("landing_page_url"),
+      rowFilter = lit(true),
+      worksApiUrl = Some(lit(null).cast("string"))))
 
   /** American Academy in Rome — Rome Prize fellows
     * (CreateAARRomePrizeAwards.ipynb cell 17, ~0.6K): 'fellowship'
@@ -8238,10 +7410,9 @@ object FunderConfigs {
     val coGiv = nullif(trim(col("co_lead_given_name")), lit(""))
     val coFam = nullif(trim(col("co_lead_family_name")), lit(""))
     def card(g: Column, fam: Column): Column =
-      investigator(g, fam, lit(null).cast("string"), sd, prof,
-        lit(null).cast("string"), lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320320895L, provenance = "aar_rome_prize_fellows",
+      investigator(g, fam, prof, lit(null).cast("string"), roleStart = sd)
+    FunderIngestConfig(4320320895L, AwardFieldMap(
+      provenance = "aar_rome_prize_fellows",
       priority = 172,
       mintKey = lower(trim(col("funder_award_id"))),
       funderAwardId = lower(trim(col("funder_award_id"))),
@@ -8250,8 +7421,6 @@ object FunderConfigs {
         concat(lit("Rome Prize "), py.cast("string"), lit(" - "),
           nullif(trim(col("recipient_name")), lit("")))),
       description = nullif(trim(col("description")), lit("")),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("fellowship"),
       funderScheme = coalesce(
         nullif(trim(col("fellowship_name")), lit("")),
@@ -8267,11 +7436,10 @@ object FunderConfigs {
       coLeadInvestigator = when(coGiv.isNull && coFam.isNull,
         nullInvestigator).otherwise(card(coGiv, coFam)),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("recipient_name").isNotNull &&
-        trim(col("recipient_name")) =!= "")
+        trim(col("recipient_name")) =!= ""))
   }
 
   /** Fondation des Treilles — Prix jeune chercheur
@@ -8285,8 +7453,7 @@ object FunderConfigs {
     val amt = col("amount").try_cast("double")
     val py = col("award_year").try_cast("int")
     val sd = d(concat(col("award_year"), lit("-01-01")))
-    FunderIngestConfig(
-      funderId = 4320327761L,
+    FunderIngestConfig(4320327761L, AwardFieldMap(
       provenance = "treilles_prix_jeune_chercheur", priority = 178,
       mintKey = nid,
       funderAwardId = nid,
@@ -8301,18 +7468,15 @@ object FunderConfigs {
       startDate = sd,
       endDate = d(concat(col("award_year"), lit("-12-31"))),
       startYear = py, endYear = py,
-      leadInvestigator = investigator(
-        nullif(trim(col("given_name")), lit("")),
-        nullif(trim(col("family_name")), lit("")),
-        lit(null).cast("string"), sd, lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast(affIds)),
+      leadInvestigator = investigator(nullif(trim(col("given_name")), lit("")),
+        nullif(trim(col("family_name")), lit("")), lit(null).cast("string"),
+        lit(null).cast("string"), roleStart = sd),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
         trim(col("display_name")) =!= "" &&
-        col("name").isNotNull && trim(col("name")) =!= "")
+        col("name").isNotNull && trim(col("name")) =!= ""))
   }
 
   /** Ian Potter Foundation grants (CreatePotterFoundationAwards
@@ -8336,8 +7500,8 @@ object FunderConfigs {
     val startPick = coalesce(year(sd), py)
     val futureDate = year(sd) > currentYear + 1
     val futureYear = startPick > currentYear + 1
-    FunderIngestConfig(
-      funderId = 4320314720L, provenance = "potter_foundation_grants",
+    FunderIngestConfig(4320314720L, AwardFieldMap(
+      provenance = "potter_foundation_grants",
       priority = 168,
       mintKey = nid,
       funderAwardId = nid,
@@ -8355,16 +7519,13 @@ object FunderConfigs {
       startYear = when(futureYear, lit(null)).otherwise(startPick),
       endYear = when(futureYear, lit(null)).otherwise(year(ed)),
       leadInvestigator = investigator(lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("string"), sd,
-        nullif(trim(col("recipient_name")), lit("")),
-        nullif(trim(col("recipient_country")), lit("")),
-        lit(null).cast(affIds)),
+        lit(null).cast("string"), nullif(trim(col("recipient_name")), lit("")),
+        nullif(trim(col("recipient_country")), lit("")), roleStart = sd),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** Arcadia Fund via 360Giving (CreateArcadiaAwards.ipynb cell 15,
@@ -8386,8 +7547,8 @@ object FunderConfigs {
         lit("360giving_recipient_org").as("type"),
         lit("source").as("asserted_by"))))
       .otherwise(lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320313262L, provenance = "arcadia_360giving",
+    FunderIngestConfig(4320313262L, AwardFieldMap(
+      provenance = "arcadia_360giving",
       priority = 148,
       mintKey = nid,
       funderAwardId = nid,
@@ -8403,15 +7564,13 @@ object FunderConfigs {
       startYear = coalesce(year(sd), py),
       endYear = coalesce(year(ed), py + dur - 1),
       leadInvestigator = investigator(lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("string"), sd,
-        nullif(trim(col("beneficiary")), lit("")),
-        lit(null).cast("string"), orgIds),
+        lit(null).cast("string"), nullif(trim(col("beneficiary")), lit("")),
+        lit(null).cast("string"), roleStart = sd, ids = orgIds),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** LCRF / Lung Cancer Research Foundation (CreateLCRFAwards.ipynb
@@ -8420,29 +7579,23 @@ object FunderConfigs {
   def lcrf: FunderIngestConfig = {
     val sy = col("start_year").try_cast("int")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United States"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320309412L, provenance = "lcrf", priority = 334,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United States")))
+    FunderIngestConfig(4320309412L, AwardFieldMap(
+      provenance = "lcrf", priority = 334,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = lit(null).cast("decimal(18,2)"),
-      currency = lit(null).cast("string"),
       fundingType = lit("grant"),
       funderScheme = col("funder_scheme"),
       startDate = when(sy.isNotNull,
         d(concat(sy.cast("string"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
-      startYear = sy, endYear = lit(null).cast("int"),
+      startYear = sy,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   // ---------------------------------------------------------------
@@ -8460,8 +7613,8 @@ object FunderConfigs {
     val amt = col("amount").try_cast("double")
     val sd = d(col("start_date")); val ed = d(col("end_date"))
     val py = col("source_year").try_cast("int")
-    FunderIngestConfig(
-      funderId = 4320323478L, provenance = "costech_nfast_projects",
+    FunderIngestConfig(4320323478L, AwardFieldMap(
+      provenance = "costech_nfast_projects",
       priority = 152,
       mintKey = nid,
       funderAwardId = nid,
@@ -8483,14 +7636,12 @@ object FunderConfigs {
       leadInvestigator = investigator(
         nullif(trim(col("lead_investigator_given_name")), lit("")),
         nullif(trim(col("lead_investigator_family_name")), lit("")),
-        lit(null).cast("string"), sd, lit(null).cast("string"),
-        lit("TZ"), lit(null).cast(affIds)),
+        lit(null).cast("string"), lit("TZ"), roleStart = sd),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** The SMRI other-investigators JSON element
@@ -8517,47 +7668,36 @@ object FunderConfigs {
       .between(1900, currentYear + 1), col("award_year").try_cast("int"))
     val invs = from_json(col("other_investigators"),
       org.apache.spark.sql.types.DataType.fromDDL(smriPerson))
-    FunderIngestConfig(
-      funderId = 4320309530L, provenance = "smri_treatment_trials",
+    FunderIngestConfig(4320309530L, AwardFieldMap(
+      provenance = "smri_treatment_trials",
       priority = 214,
       mintKey = nid,
       funderAwardId = trim(col("funder_award_id")),
       displayName = nullif(trim(col("display_name")), lit("")),
       description = nullif(trim(col("description")), lit("")),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("research"),
       funderScheme = lit("Treatment Trials"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = when(two =!= "",
         when(two.cast("int") >= 90, 1900).otherwise(2000)
           + two.cast("int"))
         .otherwise(yearInt),
-      endYear = lit(null).cast("int"),
       leadInvestigator = when(leadName.isNotNull || inst.isNotNull ||
         ctry.isNotNull,
         investigator(nullif(trim(col("lead_given_name")), lit("")),
-          nullif(trim(col("lead_family_name")), lit("")),
-          lit(null).cast("string"), lit(null).cast("date"), inst, ctry,
-          lit(null).cast(affIds))),
+          nullif(trim(col("lead_family_name")), lit("")), inst, ctry)),
       coLeadInvestigator = when(coName.isNotNull,
         investigator(nullif(trim(col("co_lead_given_name")), lit("")),
-          nullif(trim(col("co_lead_family_name")), lit("")),
-          lit(null).cast("string"), lit(null).cast("date"), inst, ctry,
-          lit(null).cast(affIds))),
+          nullif(trim(col("co_lead_family_name")), lit("")), inst, ctry)),
       investigators = when(invs.isNotNull,
         transform(invs, x =>
           investigator(nullif(trim(x.getField("given_name")), lit("")),
-            nullif(trim(x.getField("family_name")), lit("")),
-            lit(null).cast("string"), lit(null).cast("date"), inst,
-            ctry, lit(null).cast(affIds))))
+            nullif(trim(x.getField("family_name")), lit("")), inst, ctry)))
         .otherwise(FunderIngest.nullInvestigators),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** Calouste Gulbenkian Foundation projects
@@ -8571,10 +7711,9 @@ object FunderConfigs {
       trim(col("partners")) === "",
       lit(null).cast(FunderIngest.InvestigatorType))
       .otherwise(investigator(lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("string"), sd,
-        col("partners"), lit("PT"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320323335L, provenance = "gulbenkian_projects",
+        lit(null).cast("string"), col("partners"), lit("PT"), roleStart = sd))
+    FunderIngestConfig(4320323335L, AwardFieldMap(
+      provenance = "gulbenkian_projects",
       priority = 114,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -8590,9 +7729,8 @@ object FunderConfigs {
       endYear = col("end_year").try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("link"),
-      doi = lit(null).cast("string"),
       rowFilter = col("title").isNotNull && trim(col("title")) =!= "" &&
-        col("funder_award_id").isNotNull)
+        col("funder_award_id").isNotNull))
   }
 
   /** Maudsley Charity via 360Giving (CreateMaudsleyAwards.ipynb
@@ -8606,11 +7744,9 @@ object FunderConfigs {
     val future = sy > currentYear + 1
     val lead = when(col("recipient_org").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("recipient_org"), col("recipient_country_iso"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320313345L, provenance = "maudsley_360giving",
+        col("recipient_org"), col("recipient_country_iso")))
+    FunderIngestConfig(4320313345L, AwardFieldMap(
+      provenance = "maudsley_360giving",
       priority = 184,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -8627,8 +7763,7 @@ object FunderConfigs {
         .otherwise(col("end_year").try_cast("int")),
       leadInvestigator = lead,
       landingPageUrl = col("source_url"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("funder_award_id").isNotNull)
+      rowFilter = col("funder_award_id").isNotNull))
   }
 
   /** Ewing Marion Kauffman Foundation (CreateKauffmanAwards.ipynb
@@ -8643,10 +7778,10 @@ object FunderConfigs {
       col("grantee_org") === "",
       lit(null).cast(FunderIngest.InvestigatorType))
       .otherwise(investigator(lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("string"), sd,
-        col("grantee_org"), lit("US"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306140L, provenance = "kauffman_foundation",
+        lit(null).cast("string"), col("grantee_org"), lit("US"),
+        roleStart = sd))
+    FunderIngestConfig(4320306140L, AwardFieldMap(
+      provenance = "kauffman_foundation",
       priority = 139,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -8662,14 +7797,12 @@ object FunderConfigs {
       fundingType = when(lower(col("grant_type")).rlike("research"),
         "research").otherwise("grant"),
       funderScheme = col("strategy"),
-      startDate = sd, endDate = lit(null).cast("date"),
+      startDate = sd,
       startYear = col("start_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("grantee_org").isNotNull)
+        col("grantee_org").isNotNull))
   }
 
   /** W. M. Keck Foundation (CreateKeckAwards.ipynb cell 6, ~0.3K):
@@ -8679,29 +7812,23 @@ object FunderConfigs {
     * row screen. */
   def keck: FunderIngestConfig = {
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United States"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306159L, provenance = "keck", priority = 349,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United States")))
+    FunderIngestConfig(4320306159L, AwardFieldMap(
+      provenance = "keck", priority = 349,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = coalesce(nullif(trim(col("title")), lit("")),
         concat(col("program"), lit(": "), col("institution"))),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = lit("USD"),
       fundingType = lit("grant"),
       funderScheme = col("program"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = col("year_awarded").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   // ---------------------------------------------------------------
@@ -8724,27 +7851,23 @@ object FunderConfigs {
       lit(null).cast("string").as("orcid"),
       sd.as("role_start"),
       lit(null).cast(affStruct).as("affiliation"))
-    FunderIngestConfig(
-      funderId = 4320325957L, provenance = "novo_nordisk_fonden_prizes",
+    FunderIngestConfig(4320325957L, AwardFieldMap(
+      provenance = "novo_nordisk_fonden_prizes",
       priority = 119,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("recipient_name"),
       description = col("credentials"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("prize"),
       funderScheme = coalesce(nullif(trim(col("prize_name")), lit("")),
         lit("Novo Nordisk Fonden Prize")),
-      startDate = sd, endDate = lit(null).cast("date"),
+      startDate = sd,
       startYear = col("award_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("recipient_name").isNotNull &&
         trim(col("recipient_name")) =!= "" &&
-        col("funder_award_id").isNotNull)
+        col("funder_award_id").isNotNull))
   }
 
   /** Gulf of Mexico Research Initiative (CreateGoMRIAwards.ipynb
@@ -8753,27 +7876,21 @@ object FunderConfigs {
     * screen. */
   def gomri: FunderIngestConfig = {
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United States"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320309630L, provenance = "gomri", priority = 331,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United States")))
+    FunderIngestConfig(4320309630L, AwardFieldMap(
+      provenance = "gomri", priority = 331,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
       description = col("description"),
       amount = lit(null).cast("decimal(18,2)"),
-      currency = lit(null).cast("string"),
       fundingType = lit("grant"),
       funderScheme = col("funder_scheme"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
-      startYear = lit(null).cast("int"), endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Vivensa Foundation / Dunhill Medical Trust
@@ -8786,11 +7903,9 @@ object FunderConfigs {
     val ed = d(col("end_date"))
     val lead = when(col("recipient").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("recipient"), lit("United Kingdom"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320080L, provenance = "vivensa", priority = 247,
+        col("recipient"), lit("United Kingdom")))
+    FunderIngestConfig(4320320080L, AwardFieldMap(
+      provenance = "vivensa", priority = 247,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
@@ -8803,10 +7918,8 @@ object FunderConfigs {
       startYear = col("start_year").try_cast("int"),
       endYear = year(ed),
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Carl-Zeiss-Stiftung (CreateCarlZeissAwards.ipynb cell 9,
@@ -8817,8 +7930,8 @@ object FunderConfigs {
   def carlZeiss: FunderIngestConfig = {
     val sd = d(col("start_date")); val ed = d(col("end_date"))
     val tof = lower(col("type_of_funding"))
-    FunderIngestConfig(
-      funderId = 4320309895L, provenance = "carl_zeiss_stiftung",
+    FunderIngestConfig(4320309895L, AwardFieldMap(
+      provenance = "carl_zeiss_stiftung",
       priority = 38,
       mintKey = lower(col("slug")),
       funderAwardId = col("slug"),
@@ -8834,12 +7947,9 @@ object FunderConfigs {
       startDate = sd, endDate = ed,
       startYear = year(sd), endYear = year(ed),
       leadInvestigator = investigator(lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("date"), col("funded_institution"), lit("DE"),
-        lit(null).cast(affIds)),
+        lit(null).cast("string"), col("funded_institution"), lit("DE")),
       landingPageUrl = col("url"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("slug").isNotNull && trim(col("slug")) =!= "")
+      rowFilter = col("slug").isNotNull && trim(col("slug")) =!= ""))
   }
 
   /** Kirby Institute recent grants (CreateKirbyAwards.ipynb cell 16,
@@ -8852,8 +7962,8 @@ object FunderConfigs {
     val py = col("source_year").try_cast("int")
     val sd = when(py.isNotNull, d(concat(col("source_year"),
       lit("-01-01"))))
-    FunderIngestConfig(
-      funderId = 4320314616L, provenance = "kirby_recent_grants",
+    FunderIngestConfig(4320314616L, AwardFieldMap(
+      provenance = "kirby_recent_grants",
       priority = 164,
       mintKey = nid,
       funderAwardId = nid,
@@ -8865,19 +7975,16 @@ object FunderConfigs {
       currency = when(amt.isNotNull, "AUD"),
       fundingType = lit("grant"),
       funderScheme = nullif(trim(col("funder_scheme")), lit("")),
-      startDate = sd, endDate = lit(null).cast("date"),
+      startDate = sd,
       startYear = when(py > currentYear + 1, lit(null)).otherwise(py),
-      endYear = lit(null).cast("int"),
       leadInvestigator = investigator(lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("string"), sd,
-        nullif(trim(col("recipient_name")), lit("")),
-        lit(null).cast("string"), lit(null).cast(affIds)),
+        lit(null).cast("string"), nullif(trim(col("recipient_name")), lit("")),
+        lit(null).cast("string"), roleStart = sd),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** Knut and Alice Wallenberg Foundation projects
@@ -8891,14 +7998,11 @@ object FunderConfigs {
     val lead = when(col("pi_given_name").isNull &&
       col("pi_family_name").isNull && col("institution").isNull,
       lit(null).cast(FunderIngest.InvestigatorType))
-      .otherwise(investigator(
-        nullif(trim(col("pi_given_name")), lit("")),
+      .otherwise(investigator(nullif(trim(col("pi_given_name")), lit("")),
         nullif(trim(col("pi_family_name")), lit("")),
-        lit(null).cast("string"), sd,
-        nullif(trim(col("institution")), lit("")), lit("SE"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320322327L, provenance = "kaw_wallenberg_projects",
+        nullif(trim(col("institution")), lit("")), lit("SE"), roleStart = sd))
+    FunderIngestConfig(4320322327L, AwardFieldMap(
+      provenance = "kaw_wallenberg_projects",
       priority = 111,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -8911,14 +8015,12 @@ object FunderConfigs {
         .otherwise("research"),
       funderScheme = coalesce(nullif(trim(col("program_label")),
         lit("")), lit("KAW Research Project")),
-      startDate = sd, endDate = lit(null).cast("date"),
+      startDate = sd,
       startYear = col("award_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("title").isNotNull && trim(col("title")) =!= "" &&
-        col("funder_award_id").isNotNull)
+        col("funder_award_id").isNotNull))
   }
 
   // ---------------------------------------------------------------
@@ -8952,27 +8054,23 @@ object FunderConfigs {
     val lead = if (orgLead)
       when(col("institution").isNotNull,
         investigator(lit(null).cast("string"), lit(null).cast("string"),
-          lit(null).cast("string"), lit(null).cast("date"),
-          col("institution"), country, lit(null).cast(affIds)))
+          col("institution"), country))
     else when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), country, lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = funderId, provenance = provenance, priority = priority,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        country))
+    FunderIngestConfig(funderId, AwardFieldMap(
+      provenance = provenance, priority = priority,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = amount, currency = currency,
       fundingType = fundingType, funderScheme = funderScheme,
-      startDate = sdOut, endDate = lit(null).cast("date"),
-      startYear = syOut, endYear = lit(null).cast("int"),
+      startDate = sdOut,
+      startYear = syOut,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** The PCHRD funder row carries LITERAL constants in the notebook
@@ -8998,26 +8096,22 @@ object FunderConfigs {
     val lead = when(agency.isNull,
       lit(null).cast(FunderIngest.InvestigatorType))
       .otherwise(investigator(lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("string"), sd,
-        agency, lit("PH"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320335609L, provenance = "pchrd_ongoing_projects",
+        lit(null).cast("string"), agency, lit("PH"), roleStart = sd))
+    FunderIngestConfig(4320335609L, AwardFieldMap(
+      provenance = "pchrd_ongoing_projects",
       priority = 162,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("display_name"),
       description = nullif(trim(col("description")), lit("")),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("research"),
       funderScheme = nullif(trim(col("project_category")), lit("")),
-      startDate = sd, endDate = lit(null).cast("date"),
-      startYear = year(sd), endYear = lit(null).cast("int"),
+      startDate = sd,
+      startYear = year(sd),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("display_name").isNotNull)
+        col("display_name").isNotNull))
   }
 
   /** Autism Science Foundation
@@ -9042,8 +8136,8 @@ object FunderConfigs {
     val nid = lower(trim(col("funder_award_id")))
     val sd = d(col("start_date")); val ed = d(col("end_date"))
     val py = col("source_year").try_cast("int")
-    FunderIngestConfig(
-      funderId = 4320320934L, provenance = "heineken_prizes_wp",
+    FunderIngestConfig(4320320934L, AwardFieldMap(
+      provenance = "heineken_prizes_wp",
       priority = 128,
       mintKey = nid,
       funderAwardId = nid,
@@ -9057,17 +8151,14 @@ object FunderConfigs {
       startDate = sd, endDate = ed,
       startYear = coalesce(year(sd), py),
       endYear = coalesce(year(ed), py),
-      leadInvestigator = investigator(
-        nullif(trim(col("given_name")), lit("")),
-        nullif(trim(col("family_name")), lit("")),
-        lit(null).cast("string"), sd, lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast(affIds)),
+      leadInvestigator = investigator(nullif(trim(col("given_name")), lit("")),
+        nullif(trim(col("family_name")), lit("")), lit(null).cast("string"),
+        lit(null).cast("string"), roleStart = sd),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** Fondation Vaincre Alzheimer (CreateVaincreAlzheimerAwards.ipynb
@@ -9126,8 +8217,8 @@ object FunderConfigs {
     val amt = col("amount").try_cast("double")
     val sd = d(col("start_date")); val ed = d(col("end_date"))
     val py = col("source_year").try_cast("int")
-    FunderIngestConfig(
-      funderId = 4320327344L, provenance = "mmw_wallenberg_grants",
+    FunderIngestConfig(4320327344L, AwardFieldMap(
+      provenance = "mmw_wallenberg_grants",
       priority = 123,
       mintKey = nid,
       funderAwardId = nid,
@@ -9146,15 +8237,12 @@ object FunderConfigs {
       leadInvestigator = investigator(
         nullif(trim(col("lead_investigator_given_name")), lit("")),
         nullif(trim(col("lead_investigator_family_name")), lit("")),
-        lit(null).cast("string"), sd,
-        nullif(trim(col("institution")), lit("")), lit("SE"),
-        lit(null).cast(affIds)),
+        nullif(trim(col("institution")), lit("")), lit("SE"), roleStart = sd),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** NOMIS Foundation projects (CreateNomisAwards.ipynb cell 16,
@@ -9163,25 +8251,20 @@ object FunderConfigs {
     * content prose), the `link` column as landing. */
   def nomis: FunderIngestConfig = {
     val sd = d(concat(col("award_year"), lit("-01-01")))
-    FunderIngestConfig(
-      funderId = 4320325162L, provenance = "nomis_projects",
+    FunderIngestConfig(4320325162L, AwardFieldMap(
+      provenance = "nomis_projects",
       priority = 109,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
       description = col("description"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("research"),
       funderScheme = lit("NOMIS Research Project"),
-      startDate = sd, endDate = lit(null).cast("date"),
+      startDate = sd,
       startYear = col("award_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
-      leadInvestigator = nullInvestigator,
       landingPageUrl = col("link"),
-      doi = lit(null).cast("string"),
       rowFilter = col("title").isNotNull && trim(col("title")) =!= "" &&
-        col("funder_award_id").isNotNull)
+        col("funder_award_id").isNotNull))
   }
 
   /** The Smithsonian SARF funder row is non-F4320* and INLINED by
@@ -9201,32 +8284,26 @@ object FunderConfigs {
     val nid = lower(trim(col("funder_award_id")))
     val sd = d(col("start_date")); val ed = d(col("end_date"))
     val py = col("source_year").try_cast("int")
-    FunderIngestConfig(
-      funderId = 7230414656L, provenance = "smithsonian_sarf",
+    FunderIngestConfig(7230414656L, AwardFieldMap(
+      provenance = "smithsonian_sarf",
       priority = 132,
       mintKey = nid,
       funderAwardId = nid,
       displayName = trim(col("display_name")),
       description = nullif(trim(col("description")), lit("")),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("fellowship"),
       funderScheme = coalesce(nullif(trim(col("funder_scheme")),
         lit("")), lit("Smithsonian Artist Research Fellowship")),
       startDate = sd, endDate = ed,
       startYear = py, endYear = py,
-      leadInvestigator = investigator(
-        nullif(trim(col("given_name")), lit("")),
+      leadInvestigator = investigator(nullif(trim(col("given_name")), lit("")),
         nullif(trim(col("family_name")), lit("")),
-        lit(null).cast("string"), sd,
-        nullif(trim(col("host_unit")), lit("")), lit("US"),
-        lit(null).cast(affIds)),
+        nullif(trim(col("host_unit")), lit("")), lit("US"), roleStart = sd),
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   // ---------------------------------------------------------------
@@ -9241,8 +8318,8 @@ object FunderConfigs {
   def aasArise: FunderIngestConfig = {
     val nid = lower(trim(col("funder_award_id")))
     val sd = d(col("start_date"))
-    FunderIngestConfig(
-      funderId = 4320327323L, provenance = "aas_arise_grantees",
+    FunderIngestConfig(4320327323L, AwardFieldMap(
+      provenance = "aas_arise_grantees",
       priority = 134,
       mintKey = nid,
       funderAwardId = nid,
@@ -9250,27 +8327,21 @@ object FunderConfigs {
       description = when(col("description").isNull ||
         trim(col("description")) === "", lit(null).cast("string"))
         .otherwise(trim(col("description"))),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("grant"),
       funderScheme = nullif(trim(col("funder_scheme")), lit("")),
-      startDate = sd, endDate = lit(null).cast("date"),
+      startDate = sd,
       startYear = coalesce(year(sd),
         col("start_year").try_cast("int")),
-      endYear = lit(null).cast("int"),
       leadInvestigator = investigator(
         nullif(trim(col("lead_investigator_given_name")), lit("")),
         nullif(trim(col("lead_investigator_family_name")), lit("")),
-        lit(null).cast("string"), sd,
         nullif(trim(col("institution")), lit("")),
-        nullif(trim(col("country")), lit("")),
-        lit(null).cast(affIds)),
+        nullif(trim(col("country")), lit("")), roleStart = sd),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** BBVA Foundation Frontiers of Knowledge Awards
@@ -9289,8 +8360,8 @@ object FunderConfigs {
       lit(null).cast("string").as("orcid"),
       lit(null).cast("date").as("role_start"),
       lit(null).cast(affStruct).as("affiliation"))
-    FunderIngestConfig(
-      funderId = 4320309764L, provenance = "bbva_frontiers",
+    FunderIngestConfig(4320309764L, AwardFieldMap(
+      provenance = "bbva_frontiers",
       priority = 66,
       mintKey = concat(lit("bbva-frontiers:"),
         lower(col("funder_award_id"))),
@@ -9311,9 +8382,8 @@ object FunderConfigs {
       startYear = yr, endYear = yr,
       leadInvestigator = lead,
       landingPageUrl = nullif(col("landing_page_url"), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        yr.isNotNull && col("laureate_name").isNotNull)
+        yr.isNotNull && col("laureate_name").isNotNull))
   }
 
   /** AES / American Epilepsy Society (CreateAESAwards.ipynb cell 7,
@@ -9355,8 +8425,8 @@ object FunderConfigs {
         lit(null).cast("string").as("orcid"),
         lit(null).cast("date").as("role_start"),
         aff.as("affiliation")))
-    FunderIngestConfig(
-      funderId = 4320310753L, provenance = "anii_projects_portal",
+    FunderIngestConfig(4320310753L, AwardFieldMap(
+      provenance = "anii_projects_portal",
       priority = 82,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -9370,9 +8440,8 @@ object FunderConfigs {
       startYear = year(sd), endYear = year(ed),
       leadInvestigator = lead,
       landingPageUrl = col("source_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("title").isNotNull)
+        col("title").isNotNull))
   }
 
   /** AOS Kessel/LACCR research awards
@@ -9384,8 +8453,8 @@ object FunderConfigs {
   def aosResearch: FunderIngestConfig = {
     val nid = lower(trim(col("funder_award_id")))
     val sd = d(concat(col("award_year"), lit("-01-01")))
-    FunderIngestConfig(
-      funderId = 4320313553L, provenance = "aos_kessel_laccr_research",
+    FunderIngestConfig(4320313553L, AwardFieldMap(
+      provenance = "aos_kessel_laccr_research",
       priority = 180,
       mintKey = nid,
       funderAwardId = nid,
@@ -9401,20 +8470,17 @@ object FunderConfigs {
       endDate = d(concat(col("award_year"), lit("-12-31"))),
       startYear = col("award_year").try_cast("int"),
       endYear = col("award_year").try_cast("int"),
-      leadInvestigator = investigator(
-        nullif(trim(col("given_name")), lit("")),
+      leadInvestigator = investigator(nullif(trim(col("given_name")), lit("")),
         nullif(trim(col("family_name")), lit("")),
-        lit(null).cast("string"), sd,
-        nullif(trim(col("affiliation")), lit("")),
-        lit(null).cast("string"), lit(null).cast(affIds)),
+        nullif(trim(col("affiliation")), lit("")), lit(null).cast("string"),
+        roleStart = sd),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
         trim(col("display_name")) =!= "" &&
         col("recipient_name").isNotNull &&
-        trim(col("recipient_name")) =!= "")
+        trim(col("recipient_name")) =!= ""))
   }
 
   /** Alcohol Change UK / Alcohol Research UK
@@ -9440,12 +8506,10 @@ object FunderConfigs {
   def alzheimerNl: FunderIngestConfig = {
     val sy = col("start_year").try_cast("int")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("Netherlands"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320326729L, provenance = "alzheimer_nl",
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("Netherlands")))
+    FunderIngestConfig(4320326729L, AwardFieldMap(
+      provenance = "alzheimer_nl",
       priority = 263,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -9455,14 +8519,11 @@ object FunderConfigs {
       currency = lit("EUR"),
       fundingType = lit("grant"),
       funderScheme = col("programme"),
-      startDate = d(col("start_date")), endDate = lit(null).cast("date"),
+      startDate = d(col("start_date")),
       startYear = when(sy.between(1980, 2027), sy),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Autistica (CreateAutisticaAwards.ipynb, ~0.1K): the
@@ -9523,27 +8584,20 @@ object FunderConfigs {
     * works_api_url. */
   def brace: FunderIngestConfig = {
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        lit(null).cast("string"), lit("United Kingdom"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320312938L, provenance = "brace", priority = 337,
+      investigator(col("pi_given"), col("pi_family"), lit(null).cast("string"),
+        lit("United Kingdom")))
+    FunderIngestConfig(4320312938L, AwardFieldMap(
+      provenance = "brace", priority = 337,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = lit(null).cast("decimal(18,2)"),
-      currency = lit(null).cast("string"),
       fundingType = lit("research"),
       funderScheme = col("funder_scheme"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
-      startYear = lit(null).cast("int"), endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   // ---------------------------------------------------------------
@@ -9568,28 +8622,22 @@ object FunderConfigs {
     * works_api_url. */
   def bloodCancerUk: FunderIngestConfig = {
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United Kingdom"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320329013L, provenance = "blood_cancer_uk",
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United Kingdom")))
+    FunderIngestConfig(4320329013L, AwardFieldMap(
+      provenance = "blood_cancer_uk",
       priority = 259,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
       description = col("conditions"),
       amount = lit(null).cast("decimal(18,2)"),
-      currency = lit(null).cast("string"),
       fundingType = lit("grant"),
       funderScheme = col("research_type"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
-      startYear = lit(null).cast("int"), endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Brain Aneurysm Foundation (CreateBrainAneurysmAwards.ipynb,
@@ -9612,27 +8660,23 @@ object FunderConfigs {
     val sy = col("start_year").try_cast("int")
     val ey = col("end_year").try_cast("int")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United Kingdom"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = funderId, provenance = provenance, priority = priority,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United Kingdom")))
+    FunderIngestConfig(funderId, AwardFieldMap(
+      provenance = provenance, priority = priority,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = amount, currency = currency,
       fundingType = lit("grant"),
       funderScheme = col("programme"),
-      startDate = d(col("start_date")), endDate = lit(null).cast("date"),
+      startDate = d(col("start_date")),
       startYear = when(sy.between(1990, 2030), sy),
       endYear = when(ey.between(1990, 2035), ey),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Brain Research UK (CreateBrainResearchUKAwards.ipynb, ~0.1K):
@@ -9656,28 +8700,21 @@ object FunderConfigs {
     * Kingdom' lead, NULL works_api_url. */
   def breastCancerNow: FunderIngestConfig = {
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United Kingdom"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320311542L, provenance = "breast_cancer_now",
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United Kingdom")))
+    FunderIngestConfig(4320311542L, AwardFieldMap(
+      provenance = "breast_cancer_now",
       priority = 297,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = when(col("amount").isNotNull, "GBP"),
       fundingType = lit("grant"),
-      funderScheme = lit(null).cast("string"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
-      startYear = lit(null).cast("int"), endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   // ---------------------------------------------------------------
@@ -9694,24 +8731,21 @@ object FunderConfigs {
       fundingType: Column = lit("grant"),
       startYear: Column = lit(null).cast("int")): FunderIngestConfig = {
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), country, lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = funderId, provenance = provenance, priority = priority,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        country))
+    FunderIngestConfig(funderId, AwardFieldMap(
+      provenance = provenance, priority = priority,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
       description = description,
       amount = amount, currency = currency,
       fundingType = fundingType, funderScheme = funderScheme,
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
-      startYear = startYear, endYear = lit(null).cast("int"),
+      startYear = startYear,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** CHSS / Chest Heart & Stroke Scotland (CreateCHSSAwards.ipynb):
@@ -9745,9 +8779,9 @@ object FunderConfigs {
       amount = when(amt > 0, amt),
       currency = when(amt > 0, col("currency")),
       yearCol = "year_awarded")
-    base.copy(displayName = coalesce(
+    base.copy(fields = base.fields.copy(displayName = coalesce(
       nullif(nullif(trim(col("title")), lit("")), lit("0")),
-      concat(lit("Cariplo grant "), col("funder_award_id"))))
+      concat(lit("Cariplo grant "), col("funder_award_id")))))
   }
 
   /** Crohn's & Colitis UK (CreateCrohnsColitisUKAwards.ipynb): the
@@ -9777,23 +8811,16 @@ object FunderConfigs {
     * 'research' rows with an ALWAYS-NULL lead (the notebook's lead
     * CASE gates on a NULL literal — kept verbatim as a null
     * investigator), no coverage, NULL scheme. */
-  def eruk: FunderIngestConfig = FunderIngestConfig(
-    funderId = 4320320012L, provenance = "eruk", priority = 335,
+  def eruk: FunderIngestConfig = FunderIngestConfig(4320320012L, AwardFieldMap(
+    provenance = "eruk", priority = 335,
     mintKey = lower(col("funder_award_id")),
     funderAwardId = col("funder_award_id"),
     displayName = col("title"),
-    description = lit(null).cast("string"),
     amount = lit(null).cast("decimal(18,2)"),
-    currency = lit(null).cast("string"),
     fundingType = lit("research"),
-    funderScheme = lit(null).cast("string"),
-    startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
-    startYear = lit(null).cast("int"), endYear = lit(null).cast("int"),
-    leadInvestigator = nullInvestigator,
     landingPageUrl = col("landing_page_url"),
-    doi = lit(null).cast("string"),
     rowFilter = lit(true),
-    worksApiUrl = Some(lit(null).cast("string")))
+    worksApiUrl = Some(lit(null).cast("string"))))
 
   // ---------------------------------------------------------------
   // Round-13 eighteenth tranche: Cyprus RIF, EDCTP, Fields Medal,
@@ -9817,11 +8844,9 @@ object FunderConfigs {
     val fam = nullif(trim(col("lead_family_name")), lit(""))
     val aff = nullif(trim(col("lead_affiliation_name")), lit(""))
     val lead = when(fam.isNotNull || aff.isNotNull,
-      investigator(giv, fam, lit(null).cast("string"),
-        lit(null).cast("date"), aff, lit(null).cast("string"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320330084L, provenance = "cyprus_rif_funded_projects",
+      investigator(giv, fam, aff, lit(null).cast("string")))
+    FunderIngestConfig(4320330084L, AwardFieldMap(
+      provenance = "cyprus_rif_funded_projects",
       priority = 212,
       mintKey = lower(trim(aid)),
       funderAwardId = aid,
@@ -9834,14 +8859,13 @@ object FunderConfigs {
         lower(prog).like("%phd%"), "fellowship")
         .otherwise("research"),
       funderScheme = prog,
-      startDate = d(col("start_date")), endDate = lit(null).cast("date"),
+      startDate = d(col("start_date")),
       startYear = when(sy.between(1900, currentYear + 1), sy),
       endYear = when(ey.between(1900, currentYear + 10), ey),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = aid.isNotNull &&
-        nullif(trim(col("display_name")), lit("")).isNotNull)
+        nullif(trim(col("display_name")), lit("")).isNotNull))
   }
 
   /** EDCTP grants portal (CreateEDCTPAwards.ipynb): presence-gated
@@ -9856,11 +8880,9 @@ object FunderConfigs {
     val host = nullif(trim(col("host_institution")), lit(""))
     val hostCountry = nullif(trim(col("host_country")), lit(""))
     val lead = when(fam.isNotNull || host.isNotNull,
-      investigator(giv, fam, lit(null).cast("string"),
-        lit(null).cast("date"), host, hostCountry,
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320338462L, provenance = "edctp_grants_portal",
+      investigator(giv, fam, host, hostCountry))
+    FunderIngestConfig(4320338462L, AwardFieldMap(
+      provenance = "edctp_grants_portal",
       priority = 205,
       mintKey = lower(trim(col("funder_award_id"))),
       funderAwardId = col("funder_award_id"),
@@ -9878,9 +8900,8 @@ object FunderConfigs {
         .between(1800, 2100), col("end_year").try_cast("int")),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("display_name").isNotNull)
+        col("display_name").isNotNull))
   }
 
   /** IMU Fields Medal (CreateFieldsMedalAwards.ipynb): the
@@ -9893,8 +8914,8 @@ object FunderConfigs {
     val yr = col("year").try_cast("int")
     val declined = col("declined")
     val aug = d(concat(yr.cast("string"), lit("-08-01")))
-    FunderIngestConfig(
-      funderId = 4320320877L, provenance = "imu_fields_medal",
+    FunderIngestConfig(4320320877L, AwardFieldMap(
+      provenance = "imu_fields_medal",
       priority = 50,
       mintKey = concat(lit("fields:"), col("slug")),
       funderAwardId = concat(lit("fields-"), col("slug")),
@@ -9904,19 +8925,14 @@ object FunderConfigs {
         concat(lit("Declined the medal. "), col("citation")))
         .when(declined, lit("Declined the medal."))
         .otherwise(col("citation")),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("prize"),
       funderScheme = lit("Fields Medal"),
       startDate = aug, endDate = aug,
       startYear = yr, endYear = yr,
-      leadInvestigator = investigator(col("given_name"),
-        col("family_name"), lit(null).cast("string"),
-        lit(null).cast("date"), col("affiliation_when_awarded"),
-        lit(null).cast("string"), lit(null).cast(affIds)),
+      leadInvestigator = investigator(col("given_name"), col("family_name"),
+        col("affiliation_when_awarded"), lit(null).cast("string")),
       landingPageUrl = col("source_url"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("slug").isNotNull && col("year").isNotNull)
+      rowFilter = col("slug").isNotNull && col("year").isNotNull))
   }
 
   /** Fondation ARC (CreateFondationArcAwards.ipynb): the
@@ -9934,27 +8950,20 @@ object FunderConfigs {
     * affiliation NAME with 'United States'. */
   def gla: FunderIngestConfig = {
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        lit(null).cast("string"), lit("United States"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320315262L, provenance = "gla", priority = 344,
+      investigator(col("pi_given"), col("pi_family"), lit(null).cast("string"),
+        lit("United States")))
+    FunderIngestConfig(4320315262L, AwardFieldMap(
+      provenance = "gla", priority = 344,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
       description = col("description"),
       amount = lit(null).cast("decimal(18,2)"),
-      currency = lit(null).cast("string"),
       fundingType = lit("research"),
-      funderScheme = lit(null).cast("string"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
-      startYear = lit(null).cast("int"), endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** GVA / Generalitat Valenciana subvenciones portal
@@ -9970,15 +8979,13 @@ object FunderConfigs {
     val lead = when(col("institution_name").isNotNull &&
       trim(col("institution_name")) =!= "",
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution_name"), lit("Spain"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320321864L, provenance = "gva", priority = 419,
+        col("institution_name"), lit("Spain")))
+    FunderIngestConfig(4320321864L, AwardFieldMap(
+      provenance = "gva", priority = 419,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = coalesce(nullif(trim(col("titulo_extracto")),
         lit("")), col("convocatoria")),
-      description = lit(null).cast("string"),
       amount = when(amt > 0, amt),
       currency = when(amt > 0, "EUR"),
       fundingType = when(lower(col("convocatoria")).rlike(
@@ -9988,15 +8995,13 @@ object FunderConfigs {
       funderScheme = coalesce(nullif(trim(col("linea")), lit("")),
         nullif(trim(col("linea_agregada")), lit("")),
         col("finalidad")),
-      startDate = sd, endDate = lit(null).cast("date"),
+      startDate = sd,
       startYear = coalesce(year(sd), col("ejercicio").try_cast("int")),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = coalesce(nullif(trim(col("url_publi")), lit("")),
         nullif(trim(col("url_base")), lit("")),
         lit("https://gvaoberta.gva.es/es/buscador-de-subvencions")),
-      doi = lit(null).cast("string"),
-      rowFilter = lit(true))
+      rowFilter = lit(true)))
   }
 
   // ---------------------------------------------------------------
@@ -10017,8 +9022,8 @@ object FunderConfigs {
     val text = coalesce(nullif(col("citation"), lit("")),
       nullif(col("description"), lit("")),
       nullif(col("award_summary"), lit("")))
-    FunderIngestConfig(
-      funderId = 4320313415L, provenance = "gairdner_sitefinity",
+    FunderIngestConfig(4320313415L, AwardFieldMap(
+      provenance = "gairdner_sitefinity",
       priority = 62,
       mintKey = concat(lit("gairdner:"),
         lower(trim(col("funder_award_id")))),
@@ -10030,7 +9035,6 @@ object FunderConfigs {
         concat(lit("Declined the prize. "), text))
         .when(declined, lit("Declined the prize."))
         .otherwise(text),
-      amount = lit(null).cast("double"),
       currency = lit("CAD"),
       fundingType = lit("prize"),
       funderScheme = col("award_name"),
@@ -10042,14 +9046,12 @@ object FunderConfigs {
       leadInvestigator = investigator(
         nullif(col("laureate_given_name"), lit("")),
         nullif(col("laureate_family_name"), lit("")),
-        lit(null).cast("string"), lit(null).cast("date"),
         nullif(col("laureate_position_title"), lit("")),
-        lit(null).cast("string"), lit(null).cast(affIds)),
+        lit(null).cast("string")),
       landingPageUrl = col("laureate_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         col("laureate_name").isNotNull &&
-        col("award_name").isNotNull && col("award_year").isNotNull)
+        col("award_name").isNotNull && col("award_year").isNotNull))
   }
 
   /** Garfield Weston Foundation via 360Giving
@@ -10061,11 +9063,9 @@ object FunderConfigs {
     val amt = col("amount").try_cast("double")
     val lead = when(col("recipient_org").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("recipient_org"), lit(null).cast("string"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320314718L, provenance = "garfield_weston_foundation",
+        col("recipient_org"), lit(null).cast("string")))
+    FunderIngestConfig(4320314718L, AwardFieldMap(
+      provenance = "garfield_weston_foundation",
       priority = 159,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -10077,13 +9077,10 @@ object FunderConfigs {
       currency = when(amt > 0, "GBP"),
       fundingType = lit("grant"),
       funderScheme = col("grant_programme"),
-      startDate = d(col("start_date")), endDate = lit(null).cast("date"),
+      startDate = d(col("start_date")),
       startYear = col("start_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("funder_award_id").isNotNull)
+      rowFilter = col("funder_award_id").isNotNull))
   }
 
   /** Gerber Foundation (CreateGerberAwards.ipynb): the [[yearCard]]
@@ -10110,10 +9107,9 @@ object FunderConfigs {
       .otherwise(lit(null).cast(affIds))
     val lead = when(col("recipient_org").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("recipient_org"), lit(null).cast("string"), orgIds))
-    FunderIngestConfig(
-      funderId = 4320320083L, provenance = "guys_st_thomas_360giving",
+        col("recipient_org"), lit(null).cast("string"), ids = orgIds))
+    FunderIngestConfig(4320320083L, AwardFieldMap(
+      provenance = "guys_st_thomas_360giving",
       priority = 196,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -10125,13 +9121,10 @@ object FunderConfigs {
       currency = when(amt > 0, col("currency")),
       fundingType = lit("grant"),
       funderScheme = col("grant_programme"),
-      startDate = d(col("start_date")), endDate = lit(null).cast("date"),
+      startDate = d(col("start_date")),
       startYear = col("start_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("funder_award_id").isNotNull)
+      rowFilter = col("funder_award_id").isNotNull))
   }
 
   /** HRC / Health Research Council of New Zealand research
@@ -10160,11 +9153,9 @@ object FunderConfigs {
     val host = nullif(trim(col("host_organization")), lit(""))
     val prop = col("proposal_type")
     val lead = when(fam.isNotNull || host.isNotNull,
-      investigator(giv, fam, lit(null).cast("string"),
-        lit(null).cast("date"), host,
-        when(host.isNotNull, "NZ"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320334749L, provenance = "hrc_research_repository",
+      investigator(giv, fam, host, when(host.isNotNull, "NZ")))
+    FunderIngestConfig(4320334749L, AwardFieldMap(
+      provenance = "hrc_research_repository",
       priority = 204,
       mintKey = lower(trim(col("funder_award_id"))),
       funderAwardId = col("funder_award_id"),
@@ -10178,15 +9169,12 @@ object FunderConfigs {
         .when(lower(prop).like("%training%"), "training")
         .otherwise("research"),
       funderScheme = nullif(trim(col("proposal_type")), lit("")),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = when(col("start_year").try_cast("int")
         .between(1800, 2100), col("start_year").try_cast("int")),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("display_name").isNotNull)
+        col("display_name").isNotNull))
   }
 
   /** Conrad N. Hilton Foundation (CreateHiltonAwards.ipynb): the
@@ -10198,11 +9186,9 @@ object FunderConfigs {
     val amt = col("amount").try_cast("double")
     val lead = when(col("grantee_org").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("grantee_org"), lit(null).cast("string"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306180L, provenance = "hilton_foundation",
+        col("grantee_org"), lit(null).cast("string")))
+    FunderIngestConfig(4320306180L, AwardFieldMap(
+      provenance = "hilton_foundation",
       priority = 153,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -10216,13 +9202,11 @@ object FunderConfigs {
       currency = when(amt > 0, col("currency")),
       fundingType = lit("grant"),
       funderScheme = col("program"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = col("start_year").try_cast("int"),
       endYear = col("end_year").try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("funder_award_id").isNotNull)
+      rowFilter = col("funder_award_id").isNotNull))
   }
 
   // ---------------------------------------------------------------
@@ -10240,10 +9224,9 @@ object FunderConfigs {
       year(to_date(try_to_timestamp(c, lit("yyyy"))))
     val lead = when(col("institution").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("France"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320323807L, provenance = "inca", priority = 228,
+        col("institution"), lit("France")))
+    FunderIngestConfig(4320323807L, AwardFieldMap(
+      provenance = "inca", priority = 228,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = coalesce(nullif(trim(col("title")), lit("")),
@@ -10253,14 +9236,12 @@ object FunderConfigs {
       currency = when(amt > 0, col("currency")),
       fundingType = lit("grant"),
       funderScheme = col("scheme"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = yFmt(col("start_date_raw")),
       endYear = yFmt(col("end_date_raw")),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull,
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Irish Cancer Society (CreateIrishCancerSocietyAwards.ipynb):
@@ -10279,28 +9260,22 @@ object FunderConfigs {
   def kruk: FunderIngestConfig = {
     val sy = col("start_year").try_cast("int")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United Kingdom"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320008L, provenance = "kruk", priority = 257,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United Kingdom")))
+    FunderIngestConfig(4320320008L, AwardFieldMap(
+      provenance = "kruk", priority = 257,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = lit("GBP"),
       fundingType = lit("grant"),
       funderScheme = col("programme"),
-      startDate = d(col("start_date")), endDate = lit(null).cast("date"),
+      startDate = d(col("start_date")),
       startYear = when(sy.between(1980, 2027), sy),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Lumina Foundation grants database (CreateLuminaAwards.ipynb):
@@ -10313,8 +9288,8 @@ object FunderConfigs {
     val amt = col("amount").try_cast("double")
     val sd = d(col("start_date")); val ed = d(col("end_date"))
     val py = col("source_year").try_cast("int")
-    FunderIngestConfig(
-      funderId = 4320306409L, provenance = "lumina_grant_database",
+    FunderIngestConfig(4320306409L, AwardFieldMap(
+      provenance = "lumina_grant_database",
       priority = 150,
       mintKey = nid,
       funderAwardId = nid,
@@ -10332,15 +9307,13 @@ object FunderConfigs {
       startYear = coalesce(year(sd), py),
       endYear = coalesce(year(ed), py),
       leadInvestigator = investigator(lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("string"), sd,
-        nullif(trim(col("recipient_name")), lit("")), lit("US"),
-        lit(null).cast(affIds)),
+        lit(null).cast("string"), nullif(trim(col("recipient_name")), lit("")),
+        lit("US"), roleStart = sd),
       landingPageUrl = nullif(trim(col("landing_page_url")), lit("")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** Medical Research Scotland
@@ -10361,34 +9334,28 @@ object FunderConfigs {
     * UK/USA to the long forms and passes anything else through. */
   def mqMentalHealth: FunderIngestConfig = {
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"),
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
         when(col("location") === "UK", "United Kingdom")
           .when(col("location") === "USA", "United States")
-          .otherwise(col("location")),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320312944L, provenance = "mq_mental_health",
+          .otherwise(col("location"))))
+    FunderIngestConfig(4320312944L, AwardFieldMap(
+      provenance = "mq_mental_health",
       priority = 271,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
       description = col("description"),
       amount = lit(null).cast("decimal(18,2)"),
-      currency = lit(null).cast("string"),
       fundingType = lit("grant"),
       funderScheme = col("scheme"),
-      startDate = lit(null).cast("date"), endDate = lit(null).cast("date"),
       startYear = regexp_extract(col("funding_period_raw"),
         "^(\\d{4})", 1).try_cast("int"),
       endYear = regexp_extract(col("funding_period_raw"),
         "(\\d{4})$", 1).try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   // ---------------------------------------------------------------
@@ -10406,16 +9373,13 @@ object FunderConfigs {
     val sd = mFmt(col("start_date_raw"))
     val ed = mFmt(col("end_date_raw"))
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit(null).cast("string"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320307379L, provenance = "npf", priority = 293,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit(null).cast("string")))
+    FunderIngestConfig(4320307379L, AwardFieldMap(
+      provenance = "npf", priority = 293,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = when(col("amount").isNotNull, "USD"),
       fundingType = lit("grant"),
@@ -10424,9 +9388,8 @@ object FunderConfigs {
       startYear = year(sd), endYear = year(ed),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** NTAP / Neurofibromatosis Therapeutic Acceleration Program
@@ -10447,30 +9410,24 @@ object FunderConfigs {
   def onsFoundation: FunderIngestConfig = {
     val sy = col("start_year").try_cast("int")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        lit(null).cast("string"), lit("United States"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320308531L, provenance = "ons_foundation",
+      investigator(col("pi_given"), col("pi_family"), lit(null).cast("string"),
+        lit("United States")))
+    FunderIngestConfig(4320308531L, AwardFieldMap(
+      provenance = "ons_foundation",
       priority = 347,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = lit(null).cast("decimal(18,2)"),
-      currency = lit(null).cast("string"),
       fundingType = lit("grant"),
       funderScheme = col("funder_scheme"),
       startDate = when(sy.isNotNull,
         d(concat(sy.cast("string"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
-      startYear = sy, endYear = lit(null).cast("int"),
+      startYear = sy,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** The OSF surrogate mint (CreateOSFAwards.ipynb's src CTE —
@@ -10496,30 +9453,26 @@ object FunderConfigs {
     * page-anchored landing URL. */
   def osf: FunderIngestConfig = {
     val yr = col("year")
-    FunderIngestConfig(
-      funderId = 4320306189L, provenance = "osf_grants_past",
+    FunderIngestConfig(4320306189L, AwardFieldMap(
+      provenance = "osf_grants_past",
       priority = 45,
       mintKey = concat(lit("osf:"), col("surrogate_id").cast("string")),
       funderAwardId = col("surrogate_id").cast("string"),
       displayName = concat(col("grantee_name"), lit(" ("),
         yr.cast("string"), lit(")")),
-      description = lit(null).cast("string"),
       amount = col("amount_usd"),
       currency = lit("USD"),
       fundingType = lit("grant"),
-      funderScheme = lit(null).cast("string"),
       startDate = d(concat(yr.cast("string"), lit("-01-01"))),
       endDate = d(concat(yr.cast("string"), lit("-12-31"))),
       startYear = yr.cast("int"), endYear = yr.cast("int"),
       leadInvestigator = investigator(lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("date"), col("grantee_name"),
-        lit(null).cast("string"), lit(null).cast(affIds)),
+        lit(null).cast("string"), col("grantee_name"),
+        lit(null).cast("string")),
       landingPageUrl = concat(
         lit("https://www.opensocietyfoundations.org/grants/past?page="),
         col("page").cast("string")),
-      doi = lit(null).cast("string"),
-      rowFilter = lit(true))
+      rowFilter = lit(true)))
   }
 
   /** PBTF / Pediatric Brain Tumor Foundation
@@ -10529,12 +9482,10 @@ object FunderConfigs {
   def pbtf: FunderIngestConfig = {
     val sy = col("start_year").try_cast("int")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United States"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306797L, provenance = "pbtf", priority = 324,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United States")))
+    FunderIngestConfig(4320306797L, AwardFieldMap(
+      provenance = "pbtf", priority = 324,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
@@ -10542,16 +9493,13 @@ object FunderConfigs {
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = lit("USD"),
       fundingType = lit("grant"),
-      funderScheme = lit(null).cast("string"),
       startDate = when(sy.isNotNull,
         d(concat(sy.cast("string"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
-      startYear = sy, endYear = lit(null).cast("int"),
+      startYear = sy,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Parkinson's UK (CreateParkinsonsUKAwards.ipynb): full dates
@@ -10561,17 +9509,14 @@ object FunderConfigs {
   def parkinsonsUk: FunderIngestConfig = {
     val sd = d(col("start_date")); val ed = d(col("end_date"))
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United Kingdom"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320021L, provenance = "parkinsons_uk",
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United Kingdom")))
+    FunderIngestConfig(4320320021L, AwardFieldMap(
+      provenance = "parkinsons_uk",
       priority = 249,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = lit("GBP"),
       fundingType = lit("grant"),
@@ -10581,9 +9526,8 @@ object FunderConfigs {
       endYear = year(ed),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   // ---------------------------------------------------------------
@@ -10602,17 +9546,15 @@ object FunderConfigs {
     * affiliation name only, and the ':breakthrough:' mint over the
     * lowered synthetic key. */
   def breakthroughPrize: FunderIngestConfig = {
-    def nzt(c: Column) = nullif(trim(c), lit(""))
     val yr = col("award_year").try_cast("int")
     val title = nzt(col("prize_title"))
     val citation = nzt(col("citation"))
     val declined = col("declined").try_cast("boolean")
     val lead = investigator(nzt(col("laureate_given_name")),
-      nzt(col("laureate_family_name")), lit(null).cast("string"),
-      lit(null).cast("date"), nzt(col("affiliation")),
-      lit(null).cast("string"), lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320315036L, provenance = "breakthrough_prize",
+      nzt(col("laureate_family_name")), nzt(col("affiliation")),
+      lit(null).cast("string"))
+    FunderIngestConfig(4320315036L, AwardFieldMap(
+      provenance = "breakthrough_prize",
       priority = 63,
       mintKey = concat(lit("breakthrough:"),
         lower(col("funder_award_id"))),
@@ -10632,10 +9574,9 @@ object FunderConfigs {
       startYear = yr, endYear = yr,
       leadInvestigator = lead,
       landingPageUrl = nzt(col("detail_path")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull && yr.isNotNull &&
         nullif(trim(col("prize_title")), lit("")).isNotNull &&
-        nullif(trim(col("laureate_name")), lit("")).isNotNull)
+        nullif(trim(col("laureate_name")), lit("")).isNotNull))
   }
 
   /** Japan Prize (CreateJapanPrizeAwards.ipynb cell 14, ~100
@@ -10648,11 +9589,10 @@ object FunderConfigs {
   def japanPrize: FunderIngestConfig = {
     val yr = col("award_year").try_cast("int")
     val lead = investigator(nullif(col("given_name"), lit("")),
-      nullif(col("family_name"), lit("")), lit(null).cast("string"),
-      lit(null).cast("date"), nullif(col("affiliation"), lit("")),
-      lit(null).cast("string"), lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320322286L, provenance = "japan_prize",
+      nullif(col("family_name"), lit("")), nullif(col("affiliation"), lit("")),
+      lit(null).cast("string"))
+    FunderIngestConfig(4320322286L, AwardFieldMap(
+      provenance = "japan_prize",
       priority = 65,
       mintKey = concat(lit("japan-prize:"),
         lower(col("funder_award_id"))),
@@ -10670,9 +9610,8 @@ object FunderConfigs {
       startYear = yr, endYear = yr,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull && yr.isNotNull &&
-        col("laureate_name").isNotNull)
+        col("laureate_name").isNotNull))
   }
 
   /** Kyoto Prize (CreateKyotoPrizeAwards.ipynb cell 15, ~130
@@ -10686,11 +9625,10 @@ object FunderConfigs {
   def kyotoPrize: FunderIngestConfig = {
     val yr = col("award_year").try_cast("int")
     val lead = investigator(nullif(col("given_name"), lit("")),
-      nullif(col("family_name"), lit("")), lit(null).cast("string"),
-      lit(null).cast("date"), nullif(col("affiliation"), lit("")),
-      lit(null).cast("string"), lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320322210L, provenance = "kyoto_prize",
+      nullif(col("family_name"), lit("")), nullif(col("affiliation"), lit("")),
+      lit(null).cast("string"))
+    FunderIngestConfig(4320322210L, AwardFieldMap(
+      provenance = "kyoto_prize",
       priority = 70,
       mintKey = concat(lit("kyoto-prize:"),
         lower(col("funder_award_id"))),
@@ -10712,9 +9650,8 @@ object FunderConfigs {
       startYear = yr, endYear = yr,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull && yr.isNotNull &&
-        col("laureate_name").isNotNull)
+        col("laureate_name").isNotNull))
   }
 
   /** International Prize for Biology
@@ -10727,16 +9664,12 @@ object FunderConfigs {
     * source dates with year(date)-else-source_year coverage, and an
     * UNCONDITIONAL lead with role_start = start. */
   def internationalBiologyPrize: FunderIngestConfig = {
-    def nzt(c: Column) = nullif(trim(c), lit(""))
     val nid = lower(trim(col("funder_award_id")))
     val sd = d(col("start_date")); val ed = d(col("end_date"))
     val srcYr = col("source_year").try_cast("int")
-    val lead = investigator(nzt(col("given_name")),
-      nzt(col("family_name")), lit(null).cast("string"), sd,
-      nzt(col("affiliation_raw")), lit(null).cast("string"),
-      lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320334764L,
+    val lead = investigator(nzt(col("given_name")), nzt(col("family_name")),
+      nzt(col("affiliation_raw")), lit(null).cast("string"), roleStart = sd)
+    FunderIngestConfig(4320334764L, AwardFieldMap(
       provenance = "international_biology_prize", priority = 127,
       mintKey = nid,
       funderAwardId = nid,
@@ -10752,11 +9685,10 @@ object FunderConfigs {
       endYear = coalesce(year(ed), srcYr),
       leadInvestigator = lead,
       landingPageUrl = nzt(col("landing_page_url")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** Stockholm Water Prize (CreateStockholmWaterPrizeAwards.ipynb
@@ -10773,15 +9705,13 @@ object FunderConfigs {
     val lead = when(col("recipient_kind") === "individual" &&
         col("name").isNotNull,
       investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), sd, lit(null).cast("string"),
-        col("country"), lit(null).cast(affIds)))
+        lit(null).cast("string"), col("country"), roleStart = sd))
       .when(col("recipient_kind") === "organization" &&
         col("name").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), sd, col("name"), col("country"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320937L, provenance = "stockholm_water_prize",
+        col("name"), col("country"), roleStart = sd))
+    FunderIngestConfig(4320320937L, AwardFieldMap(
+      provenance = "stockholm_water_prize",
       priority = 100,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -10796,9 +9726,8 @@ object FunderConfigs {
       endYear = substring(col("end_date"), 1, 4).try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("name").isNotNull)
+        col("name").isNotNull))
   }
 
   /** World Food Prize (CreateWorldFoodPrizeAwards.ipynb cell 12, 39
@@ -10813,10 +9742,9 @@ object FunderConfigs {
     val lead = when(col("name").isNull || col("name") === "",
         nullInvestigator)
       .otherwise(investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), sd, lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320308859L, provenance = "world_food_prize",
+        lit(null).cast("string"), lit(null).cast("string"), roleStart = sd))
+    FunderIngestConfig(4320308859L, AwardFieldMap(
+      provenance = "world_food_prize",
       priority = 101,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -10831,9 +9759,8 @@ object FunderConfigs {
       endYear = substring(col("end_date"), 1, 4).try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("name").isNotNull)
+        col("name").isNotNull))
   }
 
   // ---------------------------------------------------------------
@@ -10848,16 +9775,13 @@ object FunderConfigs {
     * literal scheme, and an UNCONDITIONAL lead with role_start =
     * award date. */
   def lettenPrize: FunderIngestConfig = {
-    def nzt(c: Column) = nullif(trim(c), lit(""))
     val nid = lower(trim(col("funder_award_id")))
     val amt = col("amount").try_cast("double")
     val ad = d(col("award_date"))
-    val lead = investigator(nzt(col("given_name")),
-      nzt(col("family_name")), lit(null).cast("string"), ad,
-      nzt(col("affiliation")), lit(null).cast("string"),
-      lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320328141L, provenance = "letten_prize",
+    val lead = investigator(nzt(col("given_name")), nzt(col("family_name")),
+      nzt(col("affiliation")), lit(null).cast("string"), roleStart = ad)
+    FunderIngestConfig(4320328141L, AwardFieldMap(
+      provenance = "letten_prize",
       priority = 176,
       mintKey = nid,
       funderAwardId = nid,
@@ -10874,13 +9798,12 @@ object FunderConfigs {
       endYear = col("award_year").try_cast("int"),
       leadInvestigator = lead,
       landingPageUrl = nzt(col("landing_page_url")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
         trim(col("display_name")) =!= "" &&
         col("laureate_name").isNotNull &&
-        trim(col("laureate_name")) =!= "")
+        trim(col("laureate_name")) =!= ""))
   }
 
   /** Royal Society Medals (CreateRoyalSocietyMedalsAwards.ipynb cell
@@ -10895,10 +9818,9 @@ object FunderConfigs {
     val yr = col("award_year").try_cast("int")
     val lead = investigator(nullif(col("given_name"), lit("")),
       nullif(col("family_name"), lit("")), lit(null).cast("string"),
-      lit(null).cast("date"), lit(null).cast("string"),
-      lit(null).cast("string"), lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320320006L, provenance = "royal_society_medals",
+      lit(null).cast("string"))
+    FunderIngestConfig(4320320006L, AwardFieldMap(
+      provenance = "royal_society_medals",
       priority = 71,
       mintKey = concat(lit("royal-society-medals:"),
         lower(col("funder_award_id"))),
@@ -10916,9 +9838,8 @@ object FunderConfigs {
       startYear = yr, endYear = yr,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull && yr.isNotNull &&
-        col("laureate_name").isNotNull)
+        col("laureate_name").isNotNull))
   }
 
   /** TWAS Awards (CreateTWASAwards.ipynb cell 14): the
@@ -10929,16 +9850,13 @@ object FunderConfigs {
     * affiliation-or-context name and the country-or-nationality, and
     * a row screen that also requires the award FIELD. */
   def twas: FunderIngestConfig = {
-    def nzt(c: Column) = nullif(trim(c), lit(""))
     val yr = col("award_year").try_cast("int")
     val lead = investigator(nzt(col("laureate_given_name")),
-      nzt(col("laureate_family_name")), lit(null).cast("string"),
-      lit(null).cast("date"),
+      nzt(col("laureate_family_name")),
       nzt(col("laureate_affiliation_or_context")),
-      nzt(col("laureate_country_or_nationality")),
-      lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320321078L, provenance = "twas_awards",
+      nzt(col("laureate_country_or_nationality")))
+    FunderIngestConfig(4320321078L, AwardFieldMap(
+      provenance = "twas_awards",
       priority = 72,
       mintKey = concat(lit("twas-awards:"),
         lower(col("funder_award_id"))),
@@ -10957,11 +9875,10 @@ object FunderConfigs {
       startYear = yr, endYear = yr,
       leadInvestigator = lead,
       landingPageUrl = nzt(col("landing_page_url")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull && yr.isNotNull &&
         nullif(trim(col("award_name")), lit("")).isNotNull &&
         nullif(trim(col("award_field")), lit("")).isNotNull &&
-        nullif(trim(col("laureate_name")), lit("")).isNotNull)
+        nullif(trim(col("laureate_name")), lit("")).isNotNull))
   }
 
   /** Ragnar Söderberg Foundation (CreateRagnarSoderbergAwards.ipynb
@@ -10972,11 +9889,10 @@ object FunderConfigs {
   def ragnarSoderberg: FunderIngestConfig = {
     val sy = col("start_year").try_cast("int")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("Sweden"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320309816L, provenance = "ragnar_soderberg",
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("Sweden")))
+    FunderIngestConfig(4320309816L, AwardFieldMap(
+      provenance = "ragnar_soderberg",
       priority = 326,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -10988,13 +9904,11 @@ object FunderConfigs {
       funderScheme = col("funder_scheme"),
       startDate = when(sy.isNotNull,
         d(concat(sy.cast("string"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
-      startYear = sy, endYear = lit(null).cast("int"),
+      startYear = sy,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** SSF / Swedish Foundation for Strategic Research
@@ -11006,8 +9920,8 @@ object FunderConfigs {
   def ssf: FunderIngestConfig = {
     val sy = col("start_year").try_cast("int")
     val ed = d(col("end_date"))
-    FunderIngestConfig(
-      funderId = 4320320940L, provenance = "ssf", priority = 267,
+    FunderIngestConfig(4320320940L, AwardFieldMap(
+      provenance = "ssf", priority = 267,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
@@ -11019,11 +9933,8 @@ object FunderConfigs {
       startDate = d(col("start_date")), endDate = ed,
       startYear = when(sy.between(1980, 2030), sy),
       endYear = year(ed),
-      leadInvestigator = nullInvestigator,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Shanghai STCSM basic-research rosters
@@ -11052,29 +9963,22 @@ object FunderConfigs {
       (col("institution").isNotNull && trim(col("institution")) =!= ""),
       investigator(lit(null).cast("string"),
         nullif(trim(col("lead_family_name")), lit("")),
-        lit(null).cast("string"), lit(null).cast("date"),
-        nullif(trim(col("institution")), lit("")), lit("China"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320321885L, provenance = "shanghai_stcsm",
+        nullif(trim(col("institution")), lit("")), lit("China")))
+    FunderIngestConfig(4320321885L, AwardFieldMap(
+      provenance = "shanghai_stcsm",
       priority = 449,
       mintKey = mint,
       funderAwardId = nullif(trim(col("funder_award_id")), lit("")),
       displayName = col("display_name"),
-      description = lit(null).cast("string"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = fundingType,
       funderScheme = nullif(trim(col("funder_scheme")), lit("")),
       startDate = when(sy.isNotNull,
         d(concat(col("start_year"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
-      startYear = sy, endYear = lit(null).cast("int"),
+      startYear = sy,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   // ---------------------------------------------------------------
@@ -11091,30 +9995,25 @@ object FunderConfigs {
   def pewBiomed: FunderIngestConfig = {
     val sy = col("start_year").try_cast("int")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United States"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306148L, provenance = "pew_biomed",
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United States")))
+    FunderIngestConfig(4320306148L, AwardFieldMap(
+      provenance = "pew_biomed",
       priority = 328,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
       description = col("description"),
       amount = lit(null).cast("decimal(18,2)"),
-      currency = lit(null).cast("string"),
       fundingType = lit("fellowship"),
       funderScheme = col("funder_scheme"),
       startDate = when(sy.isNotNull,
         d(concat(sy.cast("string"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
-      startYear = sy, endYear = lit(null).cast("int"),
+      startYear = sy,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Pew Biomedical Scholars via the official Sitecore directory
@@ -11129,26 +10028,21 @@ object FunderConfigs {
     val lead = when(col("full_name").isNull || col("full_name") === "",
         nullInvestigator)
       .otherwise(investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), sd, col("institution"),
-        lit(null).cast("string"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320306148L,
+        col("institution"), lit(null).cast("string"), roleStart = sd))
+    FunderIngestConfig(4320306148L, AwardFieldMap(
       provenance = "pew_biomedical_scholars_directory", priority = 97,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("display_name"),
       description = col("description"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("fellowship"),
       funderScheme = lit("Pew Biomedical Scholars"),
       startDate = sd, endDate = d(col("end_date")),
       startYear = yr, endYear = yr + lit(3),
       leadInvestigator = lead,
       landingPageUrl = col("profile_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("full_name").isNotNull && col("award_year").isNotNull)
+        col("full_name").isNotNull && col("award_year").isNotNull))
   }
 
   /** Prostate Cancer UK (CreateProstateCancerUKAwards.ipynb cell 7):
@@ -11161,31 +10055,25 @@ object FunderConfigs {
     val ey = col("end_year").try_cast("int")
     val inBand = sy.between(1990, 2030)
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United Kingdom"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320292L, provenance = "prostate_cancer_uk",
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United Kingdom")))
+    FunderIngestConfig(4320320292L, AwardFieldMap(
+      provenance = "prostate_cancer_uk",
       priority = 275,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = lit("GBP"),
       fundingType = lit("grant"),
-      funderScheme = lit(null).cast("string"),
       startDate = when(inBand,
         d(concat(col("start_year"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
       startYear = when(inBand, sy),
       endYear = when(ey.between(1990, 2035), ey),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** RNID / Action on Hearing Loss (CreateRNIDAwards.ipynb cell 7,
@@ -11196,29 +10084,21 @@ object FunderConfigs {
     * grantee institutions are international. */
   def rnid: FunderIngestConfig = {
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit(null).cast("string"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320250L, provenance = "rnid", priority = 315,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit(null).cast("string")))
+    FunderIngestConfig(4320320250L, AwardFieldMap(
+      provenance = "rnid", priority = 315,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = lit(null).cast("decimal(18,2)"),
-      currency = lit(null).cast("string"),
       fundingType = lit("grant"),
       funderScheme = col("theme"),
-      startDate = lit(null).cast("date"),
-      endDate = lit(null).cast("date"),
       startYear = col("year_awarded").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Radcliffe Fellowship (CreateRadcliffeAwards.ipynb cell 12,
@@ -11231,11 +10111,9 @@ object FunderConfigs {
     val lead = when(col("family_name").isNotNull ||
         col("given_name").isNotNull,
       investigator(col("given_name"), col("family_name"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320332388L, provenance = "radcliffe_fellowship",
+        lit(null).cast("string"), lit(null).cast("string")))
+    FunderIngestConfig(4320332388L, AwardFieldMap(
+      provenance = "radcliffe_fellowship",
       priority = 165,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -11244,19 +10122,11 @@ object FunderConfigs {
         when(col("start_year").isNotNull,
           concat(lit(" ("), col("start_year"), lit(")")))
           .otherwise(lit(""))),
-      description = lit(null).cast("string"),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = lit("fellowship"),
-      funderScheme = lit(null).cast("string"),
-      startDate = lit(null).cast("date"),
-      endDate = lit(null).cast("date"),
       startYear = col("start_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("funder_award_id").isNotNull)
+      rowFilter = col("funder_award_id").isNotNull))
   }
 
   /** RZS NSW research grants
@@ -11269,7 +10139,6 @@ object FunderConfigs {
     * years, AND the lead's role_start — while the UNCONDITIONAL lead
     * itself survives — plus a source DOI passthrough. */
   def rzsnsw(currentYear: Int): FunderIngestConfig = {
-    def nzt(c: Column) = nullif(trim(c), lit(""))
     val nid = lower(trim(col("funder_award_id")))
     val yr = col("award_year").try_cast("int")
     // CASE-faithful future gate: a NULL year falls to the ELSE arm
@@ -11280,12 +10149,10 @@ object FunderConfigs {
       .otherwise(d(concat(col("award_year"), lit("-01-01"))))
     val ed = when(future, lit(null).cast("date"))
       .otherwise(d(concat(col("award_year"), lit("-12-31"))))
-    val lead = investigator(nzt(col("given_name")),
-      nzt(col("family_name")), lit(null).cast("string"), sd,
-      nzt(col("affiliation")), nzt(col("country")),
-      lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320331891L, provenance = "rzsnsw_research_grants",
+    val lead = investigator(nzt(col("given_name")), nzt(col("family_name")),
+      nzt(col("affiliation")), nzt(col("country")), roleStart = sd)
+    FunderIngestConfig(4320331891L, AwardFieldMap(
+      provenance = "rzsnsw_research_grants",
       priority = 182,
       mintKey = nid,
       funderAwardId = nid,
@@ -11308,7 +10175,7 @@ object FunderConfigs {
         col("display_name").isNotNull &&
         trim(col("display_name")) =!= "" &&
         col("recipient_name").isNotNull &&
-        trim(col("recipient_name")) =!= "")
+        trim(col("recipient_name")) =!= ""))
   }
 
   // ---------------------------------------------------------------
@@ -11329,11 +10196,10 @@ object FunderConfigs {
       .when(col("institution").ilike("%Mexico%"), "Mexico")
       .otherwise("United States")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"), col("orcid"),
-        lit(null).cast("date"), col("institution"), country,
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320313002L, provenance = "shriners", priority = 287,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        country, orcid = col("orcid")))
+    FunderIngestConfig(4320313002L, AwardFieldMap(
+      provenance = "shriners", priority = 287,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
@@ -11346,9 +10212,8 @@ object FunderConfigs {
       startYear = year(sd), endYear = year(ed),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Sparks / GOSH Charity national calls (CreateSparksAwards.ipynb
@@ -11357,29 +10222,22 @@ object FunderConfigs {
     * lead. */
   def sparks: FunderIngestConfig = {
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United Kingdom"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320345L, provenance = "sparks", priority = 291,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United Kingdom")))
+    FunderIngestConfig(4320320345L, AwardFieldMap(
+      provenance = "sparks", priority = 291,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = lit("GBP"),
       fundingType = lit("grant"),
       funderScheme = col("call"),
-      startDate = lit(null).cast("date"),
-      endDate = lit(null).cast("date"),
       startYear = col("year_awarded").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Stroke Association UK (CreateStrokeAssociationAwards.ipynb
@@ -11397,11 +10255,10 @@ object FunderConfigs {
     val ed = dmy(col("end_date_raw"))
     val lead = when(nullif(col("pi_family"), lit("N/A")).isNotNull,
       investigator(nullif(col("pi_given"), lit("N/A")),
-        nullif(col("pi_family"), lit("N/A")), lit(null).cast("string"),
-        lit(null).cast("date"), nullif(col("institution"), lit("N/A")),
-        lit("United Kingdom"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320068L, provenance = "stroke_association",
+        nullif(col("pi_family"), lit("N/A")),
+        nullif(col("institution"), lit("N/A")), lit("United Kingdom")))
+    FunderIngestConfig(4320320068L, AwardFieldMap(
+      provenance = "stroke_association",
       priority = 239,
       mintKey = lower(nid),
       funderAwardId = nid,
@@ -11417,9 +10274,8 @@ object FunderConfigs {
       endYear = year(ed),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Tenovus Cancer Care (CreateTenovusAwards.ipynb cell 7): GBP,
@@ -11429,29 +10285,24 @@ object FunderConfigs {
     val sy = col("start_year").try_cast("int")
     val ey = col("end_year").try_cast("int")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United Kingdom"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320320264L, provenance = "tenovus", priority = 265,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United Kingdom")))
+    FunderIngestConfig(4320320264L, AwardFieldMap(
+      provenance = "tenovus", priority = 265,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = lit("GBP"),
       fundingType = lit("grant"),
       funderScheme = col("programme"),
       startDate = d(col("start_date")),
-      endDate = lit(null).cast("date"),
       startYear = when(sy.between(1980, 2030), sy),
       endYear = when(ey.between(1980, 2035), ey),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Tourettes Action (CreateTourettesAwards.ipynb cell 7):
@@ -11460,29 +10311,23 @@ object FunderConfigs {
   def tourettes: FunderIngestConfig = {
     val sy = col("start_year").try_cast("int")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United Kingdom"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320312907L, provenance = "tourettes", priority = 336,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United Kingdom")))
+    FunderIngestConfig(4320312907L, AwardFieldMap(
+      provenance = "tourettes", priority = 336,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = lit("GBP"),
       fundingType = lit("research"),
-      funderScheme = lit(null).cast("string"),
       startDate = when(sy.isNotNull,
         d(concat(sy.cast("string"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
-      startYear = sy, endYear = lit(null).cast("int"),
+      startYear = sy,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Versus Arthritis (CreateVersusArthritisAwards.ipynb cell 7, 61
@@ -11494,28 +10339,24 @@ object FunderConfigs {
     val sd = to_date(try_to_timestamp(col("start_date_raw"),
       lit("d MMMM yyyy")))
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("United Kingdom"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320327444L, provenance = "versus_arthritis",
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("United Kingdom")))
+    FunderIngestConfig(4320327444L, AwardFieldMap(
+      provenance = "versus_arthritis",
       priority = 313,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = lit("GBP"),
       fundingType = lit("grant"),
       funderScheme = col("scheme"),
-      startDate = sd, endDate = lit(null).cast("date"),
-      startYear = year(sd), endYear = lit(null).cast("int"),
+      startDate = sd,
+      startYear = year(sd),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   // ---------------------------------------------------------------
@@ -11531,18 +10372,15 @@ object FunderConfigs {
     * year(date)-else-source-year coverage on BOTH ends, and a
     * beneficiary-gated lead with the 'BR' ISO country. */
   def capesCooperation: FunderIngestConfig = {
-    def nzt(c: Column) = nullif(trim(c), lit(""))
     val nid = lower(trim(col("funder_award_id")))
     val amt = col("amount").try_cast("double")
     val sd = d(col("start_date")); val ed = d(col("end_date"))
     val lead = when(col("beneficiary_name").isNull ||
         trim(col("beneficiary_name")) === "", nullInvestigator)
       .otherwise(investigator(nzt(col("beneficiary_given_name")),
-        nzt(col("beneficiary_family_name")), lit(null).cast("string"),
-        sd, nzt(col("institution_name")), lit("BR"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320321091L,
+        nzt(col("beneficiary_family_name")), nzt(col("institution_name")),
+        lit("BR"), roleStart = sd))
+    FunderIngestConfig(4320321091L, AwardFieldMap(
       provenance = "capes_cooperacao_internacional", priority = 144,
       mintKey = nid,
       funderAwardId = nid,
@@ -11562,11 +10400,10 @@ object FunderConfigs {
         col("source_end_year").try_cast("int")),
       leadInvestigator = lead,
       landingPageUrl = nzt(col("landing_page_url")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** CAPES DRI scholarships (CreateCAPESDRIAwards.ipynb cell 8,
@@ -11579,15 +10416,13 @@ object FunderConfigs {
     val amt = col("amount").try_cast("decimal(18,2)")
     val sd = d(col("start_date_raw")); val ed = d(col("end_date_raw"))
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("Brazil"), lit(null).cast(affIds)))
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("Brazil")))
       .when(col("institution").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("Brazil"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320321091L, provenance = "capes_dri", priority = 455,
+        col("institution"), lit("Brazil")))
+    FunderIngestConfig(4320321091L, AwardFieldMap(
+      provenance = "capes_dri", priority = 455,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = coalesce(nullif(trim(col("title")), lit("")),
@@ -11601,9 +10436,8 @@ object FunderConfigs {
       startYear = year(sd), endYear = year(ed),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull,
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Lloyd's Register Foundation via 360Giving
@@ -11617,11 +10451,9 @@ object FunderConfigs {
     val amt = col("amount").try_cast("double")
     val lead = when(col("recipient_org").isNotNull,
       investigator(lit(null).cast("string"), lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("recipient_org"), col("recipient_country_iso"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320310833L, provenance = "lloyds_register_foundation",
+        col("recipient_org"), col("recipient_country_iso")))
+    FunderIngestConfig(4320310833L, AwardFieldMap(
+      provenance = "lloyds_register_foundation",
       priority = 157,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
@@ -11632,15 +10464,12 @@ object FunderConfigs {
       amount = when(amt > 0, amt),
       currency = when(amt > 0, lit("GBP")),
       fundingType = lit("grant"),
-      funderScheme = lit(null).cast("string"),
       startDate = col("start_date").try_cast("date"),
       endDate = col("end_date").try_cast("date"),
       startYear = col("start_year").try_cast("int"),
       endYear = col("end_year").try_cast("int"),
       leadInvestigator = lead,
-      landingPageUrl = lit(null).cast("string"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("funder_award_id").isNotNull)
+      rowFilter = col("funder_award_id").isNotNull))
   }
 
   /** The PCAARRD registry-gap inline funder row
@@ -11667,11 +10496,10 @@ object FunderConfigs {
       lit(""))
     val lead = when(agency.isNull, nullInvestigator)
       .otherwise(investigator(lit(null).cast("string"),
-        lit(null).cast("string"), lit(null).cast("string"), sd,
-        agency, lit("PH"), lit(null).cast(affIds)))
-    ResolvedFunderIngestConfig(
+        lit(null).cast("string"), agency, lit("PH"), roleStart = sd))
+    val resolved = col("funder_id").try_cast("bigint")
+    ResolvedFunderIngestConfig(resolved, AwardFieldMap(
       provenance = "pcaarrd_gia_projects", priority = 160,
-      resolvedFunderId = col("funder_id").try_cast("bigint"),
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("display_name"),
@@ -11684,9 +10512,8 @@ object FunderConfigs {
       startYear = year(sd), endYear = year(ed),
       leadInvestigator = lead,
       landingPageUrl = col("source_pdf_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("display_name").isNotNull)
+        col("display_name").isNotNull))
   }
 
   /** POGO / Pediatric Oncology Group of Ontario
@@ -11696,12 +10523,10 @@ object FunderConfigs {
   def pogo: FunderIngestConfig = {
     val sy = col("start_year").try_cast("int")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        lit(null).cast("string"), lit("Canada"),
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320319937L, provenance = "pogo", priority = 341,
+      investigator(col("pi_given"), col("pi_family"), lit(null).cast("string"),
+        lit("Canada")))
+    FunderIngestConfig(4320319937L, AwardFieldMap(
+      provenance = "pogo", priority = 341,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
@@ -11709,16 +10534,13 @@ object FunderConfigs {
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = lit("CAD"),
       fundingType = lit("grant"),
-      funderScheme = lit(null).cast("string"),
       startDate = when(sy.isNotNull,
         d(concat(sy.cast("string"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
-      startYear = sy, endYear = lit(null).cast("int"),
+      startYear = sy,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   /** Research NB / New Brunswick Health Research Foundation
@@ -11728,28 +10550,24 @@ object FunderConfigs {
   def researchNb: FunderIngestConfig = {
     val sy = col("start_year").try_cast("int")
     val lead = when(col("pi_family").isNotNull,
-      investigator(col("pi_given"), col("pi_family"),
-        lit(null).cast("string"), lit(null).cast("date"),
-        col("institution"), lit("Canada"), lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320314075L, provenance = "researchnb", priority = 340,
+      investigator(col("pi_given"), col("pi_family"), col("institution"),
+        lit("Canada")))
+    FunderIngestConfig(4320314075L, AwardFieldMap(
+      provenance = "researchnb", priority = 340,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("decimal(18,2)"),
       currency = lit("CAD"),
       fundingType = lit("grant"),
       funderScheme = col("funder_scheme"),
       startDate = when(sy.isNotNull,
         d(concat(sy.cast("string"), lit("-01-01")))),
-      endDate = lit(null).cast("date"),
-      startYear = sy, endYear = lit(null).cast("int"),
+      startYear = sy,
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = lit(true),
-      worksApiUrl = Some(lit(null).cast("string")))
+      worksApiUrl = Some(lit(null).cast("string"))))
   }
 
   // ---------------------------------------------------------------
@@ -11764,37 +10582,28 @@ object FunderConfigs {
     * type→'research' and scheme→area→literal-Round-1 cascades,
     * source_year-only coverage, and an UNCONDITIONAL 'BD' lead. */
   def ugcBdIcsetep: FunderIngestConfig = {
-    def nzt(c: Column) = nullif(trim(c), lit(""))
     val nid = lower(trim(col("funder_award_id")))
     val lead = investigator(nzt(col("pi_given_name")),
-      nzt(col("pi_family_name")), lit(null).cast("string"),
-      lit(null).cast("date"), nzt(col("pi_affiliation")), lit("BD"),
-      lit(null).cast(affIds))
-    FunderIngestConfig(
-      funderId = 4320316035L, provenance = "ugc_bd_icsetep_rdg",
+      nzt(col("pi_family_name")), nzt(col("pi_affiliation")), lit("BD"))
+    FunderIngestConfig(4320316035L, AwardFieldMap(
+      provenance = "ugc_bd_icsetep_rdg",
       priority = 158,
       mintKey = nid,
       funderAwardId = nid,
       displayName = trim(col("display_name")),
       description = nzt(col("description")),
-      amount = lit(null).cast("double"),
-      currency = lit(null).cast("string"),
       fundingType = coalesce(nzt(col("funding_type")),
         lit("research")),
       funderScheme = coalesce(nzt(col("funder_scheme")),
         nzt(col("area_label")),
         lit("ICSETEP Research and Development Grant - Round 1")),
-      startDate = lit(null).cast("date"),
-      endDate = lit(null).cast("date"),
       startYear = col("source_year").try_cast("int"),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = nzt(col("landing_page_url")),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
         trim(col("funder_award_id")) =!= "" &&
         col("display_name").isNotNull &&
-        trim(col("display_name")) =!= "")
+        trim(col("display_name")) =!= ""))
   }
 
   /** British Heart Foundation annual-report archive
@@ -11815,29 +10624,23 @@ object FunderConfigs {
       lit(null).cast("string")).otherwise(lit("GB"))
     val lead = when(col("lead_family_name").isNull ||
         col("lead_family_name") === "", nullInvestigator)
-      .otherwise(investigator(col("lead_given_name"),
-        col("lead_family_name"), lit(null).cast("string"),
-        lit(null).cast("date"), col("institution"), country,
-        lit(null).cast(affIds)))
-    FunderIngestConfig(
-      funderId = 4320319992L, provenance = "bhf_annual_reports",
+      .otherwise(investigator(col("lead_given_name"), col("lead_family_name"),
+        col("institution"), country))
+    FunderIngestConfig(4320319992L, AwardFieldMap(
+      provenance = "bhf_annual_reports",
       priority = 395,
       mintKey = lower(col("funder_award_id")),
       funderAwardId = col("funder_award_id"),
       displayName = col("title"),
-      description = lit(null).cast("string"),
       amount = col("amount").try_cast("double"),
       currency = col("currency"),
       fundingType = col("funding_type"),
       funderScheme = col("funder_scheme"),
-      startDate = lit(null).cast("date"),
-      endDate = lit(null).cast("date"),
       startYear = sy,
       endYear = when(sy.isNotNull && durYears.isNotNull, sy + durYears),
       leadInvestigator = lead,
       landingPageUrl = col("landing_page_url"),
-      doi = lit(null).cast("string"),
       rowFilter = col("funder_award_id").isNotNull &&
-        col("title").isNotNull)
+        col("title").isNotNull))
   }
 }

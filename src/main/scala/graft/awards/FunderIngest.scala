@@ -3,6 +3,76 @@ package graft.awards
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+/** The per-funder field mapping shared by both ingest shapes (the
+  * single-funder cross-join and the resolved multi-funder join). Each
+  * award field is declared here once. A field the source does not map
+  * keeps its default, a typed NULL (for the investigator slots, the
+  * NULL investigator struct / array; for works_api_url, the standard
+  * mint-derived URL). The fields without a default decide what a row
+  * is and which rows land, so every config states them. */
+final case class AwardFieldMap(
+    provenance: String,
+    priority: Int,
+    /** The hash-key suffix: `abs(xxhash64(funder_id || ':' || mintKey))`.
+      * USAspending/ANR pass `lower(raw_id)`; Abel `'abel:' || slug`. */
+    mintKey: Column,
+    funderAwardId: Column,
+    displayName: Column,
+    fundingType: Column,
+    /** Step-2 WHERE: rows without a usable source award id are dropped. */
+    rowFilter: Column,
+    description: Column = lit(null).cast("string"),
+    amount: Column = lit(null).cast("double"),
+    currency: Column = lit(null).cast("string"),
+    funderScheme: Column = lit(null).cast("string"),
+    startDate: Column = lit(null).cast("date"),
+    endDate: Column = lit(null).cast("date"),
+    startYear: Column = lit(null).cast("int"),
+    endYear: Column = lit(null).cast("int"),
+    leadInvestigator: Column = FunderIngest.nullInvestigator,
+    landingPageUrl: Column = lit(null).cast("string"),
+    doi: Column = lit(null).cast("string"),
+    /** The full investigator list — null for most sources; NSERC fills
+      * it from the co-applicants side table (CreateNSERCAwards cell 8's
+      * `coapplicants_agg` LEFT JOIN — `FunderConfigs.nserc` +
+      * `nsercCoapplicantsAgg`). */
+    investigators: Column = FunderIngest.nullInvestigators,
+    /** None → the standard mint-derived works_api_url; Some(expr) for
+      * the sources whose notebooks deviate (`FunderConfigs.cruk` /
+      * `FunderConfigs.ncn` emit NULL). */
+    worksApiUrl: Option[Column] = None,
+    /** The co-lead slot — null for most sources; FWO fills it from the
+      * FRIS co-promoter (CreateFWOAwards.ipynb cell 12's
+      * `colead_given_name/colead_family_name` CASE). */
+    coLeadInvestigator: Column = FunderIngest.nullInvestigator)
+
+/** The two ingest shapes: how a raw row is bound to its funder. */
+sealed trait FunderIngestShape {
+  def fields: AwardFieldMap
+}
+
+/** The single-funder archetype: every row belongs to `funderId`. */
+final case class FunderIngestConfig(funderId: Long, fields: AwardFieldMap)
+  extends FunderIngestShape
+
+/** The resolved multi-funder archetype (NIH ExPORTER's
+  * administering_ic map, GTR's grant-reference prefix map, CORDIS'
+  * framework/scheme routing): one raw landing carries awards of
+  * SEVERAL funders and a per-row expression resolves which, before a
+  * broadcast join against a bounded funder lookup.
+  *
+  * `resolvedFunderId` is evaluated against the raw columns; rows
+  * resolving to NULL are dropped (the reference's
+  * `WHERE matched_funder_id IS NOT NULL` — GTR) — sources that want a
+  * default instead bake a `coalesce(..., lit(default))` into the
+  * expression (NIH, ERC). The resolved id then feeds the same mint
+  * (`funder_id || ':' || mintKey`), so the same source award id under
+  * two funders mints two distinct award ids, exactly as the
+  * reference's per-row `f.funder_id` concat does. */
+final case class ResolvedFunderIngestConfig(resolvedFunderId: Column,
+    fields: AwardFieldMap)
+  extends FunderIngestShape
+
 /** The per-funder award ingest pattern (reference: the ~100
   * `notebooks/awards/Create<Funder>Awards.ipynb` one-offs — every one
   * is the SAME transform with per-funder field mappings; studied
@@ -28,129 +98,66 @@ import org.apache.spark.sql.functions._
   *  - the §6.3 completeness and §6.7 amount/currency fail-fast
   *    verification reports (post-PR-80 canonical queries).
   *
+  * The defaults rule: a config states only the fields it maps. Every
+  * field the source leaves unmapped takes its [[AwardFieldMap]]
+  * default, a typed NULL, so a config never restates one; the fields
+  * with no default (provenance, priority, mint key, award id, title,
+  * funding type, row filter) plus the funder binding are always
+  * written out.
+  *
   * 100 TB posture: the transform is a single narrow projection over
   * the raw landing with one broadcast 1-row cross join; the landing
   * slice replace is a partition-prunable anti-filter + union. The
   * registry lookup reads 2 rows driver-side (a bounded keyed lookup,
   * same class as the IdMinter max-id).
   */
-/** The per-funder field mapping shared by both ingest shapes (the
-  * single-funder cross-join and the resolved multi-funder join). */
-sealed trait AwardFieldMap {
-  def provenance: String
-  def priority: Int
-  def mintKey: Column
-  def funderAwardId: Column
-  def displayName: Column
-  def description: Column
-  def amount: Column
-  def currency: Column
-  def fundingType: Column
-  def funderScheme: Column
-  def startDate: Column
-  def endDate: Column
-  def startYear: Column
-  def endYear: Column
-  def leadInvestigator: Column
-  def landingPageUrl: Column
-  def doi: Column
-  def rowFilter: Column
-  /** The full investigator list — null for most sources; NSERC fills
-    * it from the co-applicants side table (CreateNSERCAwards cell 8's
-    * `coapplicants_agg` LEFT JOIN — `FunderConfigs.nserc` +
-    * `nsercCoapplicantsAgg`). */
-  def investigators: Column
-  /** None → the standard mint-derived works_api_url; Some(expr) for
-    * the sources whose notebooks deviate (`FunderConfigs.cruk` /
-    * `FunderConfigs.ncn` emit NULL). */
-  def worksApiUrl: Option[Column]
-  /** The co-lead slot — null for most sources; FWO fills it from the
-    * FRIS co-promoter (CreateFWOAwards.ipynb cell 12's
-    * `colead_given_name/colead_family_name` CASE). */
-  def coLeadInvestigator: Column
-}
-
-final case class FunderIngestConfig(
-    funderId: Long,
-    provenance: String,
-    priority: Int,
-    /** The hash-key suffix: `abs(xxhash64(funder_id || ':' || mintKey))`.
-      * USAspending/ANR pass `lower(raw_id)`; Abel `'abel:' || slug`. */
-    mintKey: Column,
-    funderAwardId: Column,
-    displayName: Column,
-    description: Column,
-    amount: Column,
-    currency: Column,
-    fundingType: Column,
-    funderScheme: Column,
-    startDate: Column,
-    endDate: Column,
-    startYear: Column,
-    endYear: Column,
-    leadInvestigator: Column,
-    landingPageUrl: Column,
-    doi: Column,
-    /** Step-2 WHERE: rows without a usable source award id are dropped. */
-    rowFilter: Column,
-    investigators: Column = FunderIngest.nullInvestigators,
-    worksApiUrl: Option[Column] = None,
-    coLeadInvestigator: Column = FunderIngest.nullInvestigator)
-  extends AwardFieldMap
-
-/** The resolved multi-funder archetype (NIH ExPORTER's
-  * administering_ic map, GTR's grant-reference prefix map, CORDIS'
-  * framework/scheme routing): one raw landing carries awards of
-  * SEVERAL funders and a per-row expression resolves which, before a
-  * broadcast join against a bounded funder lookup.
-  *
-  * `resolvedFunderId` is evaluated against the raw columns; rows
-  * resolving to NULL are dropped (the reference's
-  * `WHERE matched_funder_id IS NOT NULL` — GTR) — sources that want a
-  * default instead bake a `coalesce(..., lit(default))` into the
-  * expression (NIH, ERC). The resolved id then feeds the same mint
-  * (`funder_id || ':' || mintKey`), so the same source award id under
-  * two funders mints two distinct award ids, exactly as the
-  * reference's per-row `f.funder_id` concat does. */
-final case class ResolvedFunderIngestConfig(
-    provenance: String,
-    priority: Int,
-    /** Per-row funder resolution over the raw columns; NULL → dropped. */
-    resolvedFunderId: Column,
-    mintKey: Column,
-    funderAwardId: Column,
-    displayName: Column,
-    description: Column,
-    amount: Column,
-    currency: Column,
-    fundingType: Column,
-    funderScheme: Column,
-    startDate: Column,
-    endDate: Column,
-    startYear: Column,
-    endYear: Column,
-    leadInvestigator: Column,
-    landingPageUrl: Column,
-    doi: Column,
-    rowFilter: Column,
-    investigators: Column = FunderIngest.nullInvestigators,
-    worksApiUrl: Option[Column] = None,
-    coLeadInvestigator: Column = FunderIngest.nullInvestigator)
-  extends AwardFieldMap
-
 object FunderIngest {
+
+  /** The affiliation `ids` array type of an investigator slot. */
+  private[awards] val affIds: String =
+    "array<struct<id:string,type:string,asserted_by:string>>"
 
   /** The shared investigator slot type (identical across all three
     * pattern notebooks). */
   val InvestigatorType: String =
     "struct<given_name:string,family_name:string,orcid:string," +
       "role_start:date,affiliation:struct<name:string,country:string," +
-      "ids:array<struct<id:string,type:string,asserted_by:string>>>>"
+      s"ids:$affIds>>"
 
   def nullInvestigator: Column = lit(null).cast(InvestigatorType)
 
   def nullInvestigators: Column =
     lit(null).cast(s"array<$InvestigatorType>")
+
+  /** One investigator slot; orcid, role start and affiliation ids are
+    * NULL unless the source publishes them. */
+  private[awards] def investigator(given: Column, family: Column,
+      affName: Column, affCountry: Column,
+      orcid: Column = lit(null).cast("string"),
+      roleStart: Column = lit(null).cast("date"),
+      ids: Column = lit(null).cast(affIds)): Column =
+    struct(given.as("given_name"), family.as("family_name"),
+      orcid.as("orcid"), roleStart.as("role_start"),
+      struct(affName.as("name"), affCountry.as("country"),
+        ids.as("ids")).as("affiliation"))
+
+  /** TRY_TO_DATE over an ISO `yyyy-MM-dd` string. */
+  private[awards] def d(c: Column): Column =
+    to_date(try_to_timestamp(c, lit("yyyy-MM-dd")))
+
+  /** Blank-to-NULL: `NULLIF(TRIM(c), '')`. */
+  private[awards] def nzt(c: Column): Column = nullif(trim(c), lit(""))
+
+  /** An ordered LIKE cascade (a scheme→type CASE): the first arm whose
+    * `%pattern%` matches wins, `default` otherwise — NULL input falls
+    * to the default exactly as SQL CASE does. One flat CASE WHEN. */
+  def likeCascade(c: Column, arms: Seq[(String, String)],
+      default: String): Column = {
+    val ((p0, v0), rest) = (arms.head, arms.tail)
+    rest.foldLeft(when(c.like(s"%$p0%"), v0)) { case (acc, (p, v)) =>
+      acc.when(c.like(s"%$p%"), v)
+    }.otherwise(default)
+  }
 
   private def defaultMint(c: Column): Column =
     pmod(abs(xxhash64(c)), lit(9000000000L))
@@ -207,8 +214,8 @@ object FunderIngest {
     val f = requireFunder(funders, cfg.funderId)
       .select(col("funder_id").as("__fid"), col("display_name").as("__fdn"),
         col("ror_id").as("__fror"), col("doi").as("__fdoi"))
-    projectAward(raw.filter(cfg.rowFilter).crossJoin(broadcast(f)),
-      cfg, nowTs, mintId)
+    projectAward(raw.filter(cfg.fields.rowFilter).crossJoin(broadcast(f)),
+      cfg.fields, nowTs, mintId)
   }
 
   /** The resolved multi-funder Step-2 transform (NIH cell 5 / GTR
@@ -224,12 +231,12 @@ object FunderIngest {
     val lk = funderLookup.select(col("funder_id").as("__fid"),
       col("display_name").as("__fdn"), col("ror_id").as("__fror"),
       col("doi").as("__fdoi"))
-    val joined = raw.filter(cfg.rowFilter)
+    val joined = raw.filter(cfg.fields.rowFilter)
       .withColumn("__rfid", cfg.resolvedFunderId)
       .filter(col("__rfid").isNotNull)
       .join(broadcast(lk), col("__rfid") === col("__fid"))
       .drop("__rfid")
-    projectAward(joined, cfg, nowTs, mintId)
+    projectAward(joined, cfg.fields, nowTs, mintId)
   }
 
   /** The shared award projection over a frame that has the raw
@@ -275,10 +282,10 @@ object FunderIngest {
   /** Step 3: replace the funder's (provenance, priority) slice of the
     * shared raw landing (DELETE + INSERT in the reference). */
   def landRaw(rawLanding: DataFrame, transformed: DataFrame,
-      cfg: AwardFieldMap): DataFrame =
+      cfg: FunderIngestShape): DataFrame =
     WorkFunders.insertAwardsToRaw(rawLanding,
-      transformed.drop("provenance"), cfg.provenance, cfg.priority,
-      keep = lit(true))
+      transformed.drop("provenance"), cfg.fields.provenance,
+      cfg.fields.priority, keep = lit(true))
 
   /** The additive FY-extension append (CreateDODAwards cells 10-11):
     * extension rows whose (lowercased) funder_award_id the primary
@@ -294,9 +301,12 @@ object FunderIngest {
         "left_anti"))
   }
 
-  /** §6.3 data completeness (post-PR-80 canonical form). */
-  def completenessReport(awards: DataFrame): DataFrame =
-    awards.agg(
+  private def pctOfTotal(c: Column): Column =
+    round(try_divide(c, count(lit(1))) * 100.0, 1)
+
+  /** The §6.3 data completeness aggregates, `total` first. */
+  private def completenessAggs: Seq[Column] =
+    Seq(
       count(lit(1)).as("total"),
       count(col("display_name")).as("has_title"),
       count(col("description")).as("has_description"),
@@ -306,27 +316,32 @@ object FunderIngest {
       count(col("landing_page_url")).as("has_url"),
       count(col("lead_investigator")).as("has_pi"),
       sum(col("amount")).as("total_funding"),
-      round(try_divide(count(col("amount")), count(lit(1))) * 100.0, 1)
-        .as("pct_with_amount"),
-      round(try_divide(count(col("start_date")), count(lit(1))) * 100.0, 1)
-        .as("pct_with_start_date"),
-      round(try_divide(count(col("description")), count(lit(1))) * 100.0, 1)
-        .as("pct_description"))
+      pctOfTotal(count(col("amount"))).as("pct_with_amount"),
+      pctOfTotal(count(col("start_date"))).as("pct_with_start_date"),
+      pctOfTotal(count(col("description"))).as("pct_description"))
 
-  /** §6.7 amount/currency fail-fast (mandatory for monetary sources).
-    * `currencies` is sorted so the report is deterministic. */
-  def amountCheck(awards: DataFrame): DataFrame =
-    awards.agg(
-      count(lit(1)).as("total"),
-      sum(when(col("amount") > 0, 1).otherwise(0)).as("has_amount_nonzero"),
-      round(try_divide(sum(when(col("amount") > 0, 1).otherwise(0)),
-        count(lit(1))) * 100.0, 1).as("pct_amount"),
+  /** The §6.7 amount/currency aggregates beyond `total`; `currencies`
+    * is sorted so the report is deterministic. */
+  private def amountAggs: Seq[Column] = {
+    val nonzero = sum(when(col("amount") > 0, 1).otherwise(0))
+    Seq(
+      nonzero.as("has_amount_nonzero"),
+      pctOfTotal(nonzero).as("pct_amount"),
       countDistinct(col("currency")).as("distinct_currencies"),
       sort_array(collect_set(col("currency"))).as("currencies"),
       round(min(col("amount")), 0).as("min_amt"),
       round(max(col("amount")), 0).as("max_amt"),
       round(avg(when(col("amount") > 0, col("amount"))), 0)
         .as("avg_nonzero_amt"))
+  }
+
+  /** §6.3 data completeness. */
+  def completenessReport(awards: DataFrame): DataFrame =
+    awards.agg(completenessAggs.head, completenessAggs.tail: _*)
+
+  /** §6.7 amount/currency fail-fast (mandatory for monetary sources). */
+  def amountCheck(awards: DataFrame): DataFrame =
+    awards.agg(count(lit(1)).as("total"), amountAggs: _*)
 
   /** Both verification reports for EVERY (provenance, priority) slice
     * of a landed table in ONE keyed aggregation pass (the reference
@@ -335,32 +350,7 @@ object FunderIngest {
     * landing scans once). */
   def sliceReports(landed: DataFrame): DataFrame =
     landed.groupBy(col("provenance"), col("priority"))
-      .agg(
-        count(lit(1)).as("total"),
-        count(col("display_name")).as("has_title"),
-        count(col("description")).as("has_description"),
-        count(col("amount")).as("has_amount"),
-        count(col("start_date")).as("has_start_date"),
-        count(col("end_date")).as("has_end_date"),
-        count(col("landing_page_url")).as("has_url"),
-        count(col("lead_investigator")).as("has_pi"),
-        sum(col("amount")).as("total_funding"),
-        round(try_divide(count(col("amount")), count(lit(1))) * 100.0, 1)
-          .as("pct_with_amount"),
-        round(try_divide(count(col("start_date")), count(lit(1))) * 100.0, 1)
-          .as("pct_with_start_date"),
-        round(try_divide(count(col("description")), count(lit(1))) * 100.0, 1)
-          .as("pct_description"),
-        sum(when(col("amount") > 0, 1L).otherwise(0L))
-          .as("has_amount_nonzero"),
-        round(try_divide(sum(when(col("amount") > 0, 1).otherwise(0)),
-          count(lit(1))) * 100.0, 1).as("pct_amount"),
-        countDistinct(col("currency")).as("distinct_currencies"),
-        sort_array(collect_set(col("currency"))).as("currencies"),
-        round(min(col("amount")), 0).as("min_amt"),
-        round(max(col("amount")), 0).as("max_amt"),
-        round(avg(when(col("amount") > 0, col("amount"))), 0)
-          .as("avg_nonzero_amt"))
+      .agg(completenessAggs.head, completenessAggs.tail ++ amountAggs: _*)
       .withColumn("slice", concat(col("provenance"), lit(":"),
         col("priority").cast("string")))
       .drop("provenance", "priority")
@@ -376,9 +366,8 @@ object FunderIngest {
       priority: Int): FunderIngestConfig = {
     val title = coalesce(col("prime_award_base_transaction_description"),
       col("transaction_description"))
-    def d(c: Column) = to_date(try_to_timestamp(c, lit("yyyy-MM-dd")))
-    FunderIngestConfig(
-      funderId = funderId, provenance = provenance, priority = priority,
+    FunderIngestConfig(funderId, AwardFieldMap(
+      provenance = provenance, priority = priority,
       mintKey = lower(col("award_id_fain")),
       funderAwardId = col("award_id_fain"),
       displayName = title, description = title,
@@ -390,11 +379,9 @@ object FunderIngest {
       endDate = d(col("period_of_performance_current_end_date")),
       startYear = year(d(col("period_of_performance_start_date"))),
       endYear = year(d(col("period_of_performance_current_end_date"))),
-      leadInvestigator = nullInvestigator,
       landingPageUrl = col("usaspending_permalink"),
-      doi = lit(null).cast("string"),
       rowFilter = col("award_id_fain").isNotNull &&
-        trim(col("award_id_fain")) =!= "")
+        trim(col("award_id_fain")) =!= ""))
   }
 
   /** ANR open-data grants (CreateANRAwards.ipynb cell 7): the
@@ -402,40 +389,27 @@ object FunderIngest {
     * RNSR-coded affiliation id, start_year falling back to the call's
     * edition year, no end dates in the source. */
   def anr: FunderIngestConfig = {
-    val prog = lower(col("funding_program"))
-    val fundingType =
-      when(prog.like("%jcjc%"), "fellowship")
-        .when(prog.like("%jeunes%chercheur%"), "fellowship")
-        .when(prog.like("%chaire%"), "fellowship")
-        .when(prog.like("%postdoc%"), "fellowship")
-        .when(prog.like("%equipex%"), "infrastructure")
-        .when(prog.like("%labex%"), "infrastructure")
-        .when(prog.like("%infrastruct%"), "infrastructure")
-        .when(prog.like("%idex%"), "infrastructure")
-        .when(prog.like("%formation%"), "training")
-        .when(prog.like("%astrid%"), "research")
-        .when(prog.like("%blanc%"), "research")
-        .when(prog.like("%aapg%"), "research")
-        .otherwise("grant")
+    val fundingType = likeCascade(lower(col("funding_program")), Seq(
+      "jcjc" -> "fellowship", "jeunes%chercheur" -> "fellowship",
+      "chaire" -> "fellowship", "postdoc" -> "fellowship",
+      "equipex" -> "infrastructure", "labex" -> "infrastructure",
+      "infrastruct" -> "infrastructure", "idex" -> "infrastructure",
+      "formation" -> "training", "astrid" -> "research",
+      "blanc" -> "research", "aapg" -> "research"), "grant")
     val orcid = when(col("pi_orcid").isNotNull && col("pi_orcid") =!= "",
       when(col("pi_orcid").like("https://orcid.org/%"), col("pi_orcid"))
         .otherwise(concat(lit("https://orcid.org/"), col("pi_orcid"))))
-    val affIds = when(col("rnsr_code").isNotNull,
+    val rnsrIds = when(col("rnsr_code").isNotNull,
       array(struct(col("rnsr_code").as("id"), lit("rnsr").as("type"),
         lit("anr").as("asserted_by"))))
-      .otherwise(lit(null)
-        .cast("array<struct<id:string,type:string,asserted_by:string>>"))
-    val lead = when(col("pi_family_name").isNotNull, struct(
-      col("pi_given_name").as("given_name"),
-      col("pi_family_name").as("family_name"),
-      orcid.as("orcid"),
-      lit(null).cast("date").as("role_start"),
-      struct(col("institution").as("name"),
-        coalesce(col("country"), lit("France")).as("country"),
-        affIds.as("ids")).as("affiliation")))
-    val sd = to_date(try_to_timestamp(col("start_date"), lit("yyyy-MM-dd")))
-    FunderIngestConfig(
-      funderId = 4320320883L, provenance = "anr_opendata", priority = 6,
+      .otherwise(lit(null).cast(affIds))
+    val lead = when(col("pi_family_name").isNotNull,
+      investigator(col("pi_given_name"), col("pi_family_name"),
+        col("institution"), coalesce(col("country"), lit("France")),
+        orcid = orcid, ids = rnsrIds))
+    val sd = d(col("start_date"))
+    FunderIngestConfig(4320320883L, AwardFieldMap(
+      provenance = "anr_opendata", priority = 6,
       mintKey = lower(col("project_id")),
       funderAwardId = col("project_id"),
       displayName = col("title"), description = col("abstract"),
@@ -444,15 +418,12 @@ object FunderIngest {
       fundingType = fundingType,
       funderScheme = col("funding_program"),
       startDate = sd,
-      endDate = lit(null).cast("date"),
       startYear = coalesce(year(sd), col("edition_year").try_cast("int")),
-      endYear = lit(null).cast("int"),
       leadInvestigator = lead,
       landingPageUrl = concat(lit("https://anr.fr/Projet-"),
         col("project_id")),
-      doi = lit(null).cast("string"),
       rowFilter = col("project_id").isNotNull &&
-        trim(col("project_id")) =!= "")
+        trim(col("project_id")) =!= ""))
   }
 
   /** Abel Prize (CreateAbelPrizeAwards.ipynb cell 11 — the prize
@@ -472,10 +443,9 @@ object FunderIngest {
       concat(lit("Declined the prize. "), col("citation")))
       .when(col("declined"), lit("Declined the prize."))
       .otherwise(col("citation"))
-    val mayFirst = to_date(try_to_timestamp(
-      concat(col("year").cast("string"), lit("-05-01")), lit("yyyy-MM-dd")))
-    FunderIngestConfig(
-      funderId = 8651541334L, provenance = "abelprize_no", priority = 51,
+    val mayFirst = d(concat(col("year").cast("string"), lit("-05-01")))
+    FunderIngestConfig(8651541334L, AwardFieldMap(
+      provenance = "abelprize_no", priority = 51,
       mintKey = concat(lit("abel:"), col("slug")),
       funderAwardId = concat(lit("abel-"), col("slug")),
       displayName = concat(lit("Abel Prize "), col("year").cast("string"),
@@ -486,17 +456,9 @@ object FunderIngest {
       startDate = mayFirst, endDate = mayFirst,
       startYear = col("year").try_cast("int"),
       endYear = col("year").try_cast("int"),
-      leadInvestigator = struct(
-        col("given_name").as("given_name"),
-        col("family_name").as("family_name"),
-        lit(null).cast("string").as("orcid"),
-        lit(null).cast("date").as("role_start"),
-        struct(col("institution").as("name"),
-          lit(null).cast("string").as("country"),
-          lit(null).cast("array<struct<id:string,type:string," +
-            "asserted_by:string>>").as("ids")).as("affiliation")),
+      leadInvestigator = investigator(col("given_name"),
+        col("family_name"), col("institution"), lit(null).cast("string")),
       landingPageUrl = col("source_url"),
-      doi = lit(null).cast("string"),
-      rowFilter = col("slug").isNotNull && col("year").isNotNull)
+      rowFilter = col("slug").isNotNull && col("year").isNotNull))
   }
 }

@@ -69,6 +69,40 @@ object Incremental {
       .drop("__nh", "__ph", "__pu")
   }
 
+  /** A scalar field of a canonical content string: its string form, or
+    * `dflt` when NULL. */
+  def contentStr(c: Column, dflt: String): Column =
+    coalesce(c.cast("string"), lit(dflt))
+
+  /** A nested field of a canonical content string: its JSON, or `dflt`
+    * when NULL. */
+  def contentJson(c: Column, dflt: String): Column =
+    coalesce(to_json(c), lit(dflt))
+
+  /** Pre-rebuild snapshot of an API table: (id, updated_date,
+    * content_hash), the hash taken over the entity's canonical content
+    * string. */
+  def hashSnapshot(api: DataFrame, contentKey: Column): DataFrame =
+    api.select(col("id"), col("updated_date"),
+      xxhash64(contentKey).as("content_hash"))
+
+  /** Post-rebuild MERGE of an API table: new ids and changed content get
+    * `now`; unchanged rows keep their previous date. Unlike
+    * [[bumpUpdatedDate]], the hash is xxhash64 of the entity's canonical
+    * content string (hash equality ⟺ string equality, so a SQL oracle
+    * can gate on the string) and the join is on `id`. */
+  def stampUpdatedDate(api: DataFrame, prevHashes: DataFrame,
+      contentKey: Column, now: Column): DataFrame = {
+    val ph = prevHashes.select(col("id").as("__pid"),
+      col("updated_date").as("__pdate"), col("content_hash").as("__ph"))
+    api.withColumn("__nh", xxhash64(contentKey))
+      .join(ph, col("id") === col("__pid"), "left")
+      .withColumn("updated_date",
+        when(col("__pid").isNull || col("__nh") =!= col("__ph"), now)
+          .otherwise(col("__pdate")))
+      .drop("__pid", "__pdate", "__ph", "__nh")
+  }
+
   /** High-watermark incremental read: rows strictly above the stored
     * watermark (a data column, so replays are idempotent). */
   def aboveWatermark(df: DataFrame, seqCol: Column, watermark: Option[Long]): DataFrame =

@@ -1,7 +1,6 @@
 package graft.entities
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Institutions API entity build (reference: notebooks/institutions/
@@ -101,49 +100,16 @@ object InstitutionsApi {
         col("oa_works_count"), col("cited_by_count"))), asc = false)
         .as("counts_by_year"))
 
-  /** `institution_roles`: the reference's OR-keyed `entity_link` join
-    * rewritten as a union of two equijoins (the Funders-API idiom,
-    * `Funders.scala`), works_count routed per role (institution →
-    * main_agg, publisher → publishers_api, funder → funders_api), then
-    * the keep-all-non-funders-but-top-funder dedup.
+  /** `institution_roles` ([[EntityRoles.roles]]): the own institution
+    * role (works_count from main_agg) plus linked publisher and funder
+    * roles.
     * @param entityLinks (id_1, id_2) prefixed entity-link pairs
     * @param entityCounts (entity_id, works_count) — the P/F-prefixed
     *   works counts of the publishers_api / funders_api tables */
   def roles(institutions: DataFrame, entityLinks: DataFrame,
-      ma: DataFrame, entityCounts: DataFrame): DataFrame = {
-    val inst = institutions.filter(col("merge_into_id").isNull)
-      .select(col("id").as("institution_id"),
-        concat(lit("I"), col("id").cast("string")).as("__ikey"))
-    val own = inst
-      .join(ma.select(col("institution_id"), col("works_count")),
-        Seq("institution_id"), "left")
-      .select(col("institution_id"), lit("institution").as("role"),
-        concat(lit(OA), col("__ikey")).as("id"), col("works_count"))
-    val links = entityLinks.select(col("id_1"), col("id_2"))
-    val linked = inst.join(broadcast(links), col("id_1") === col("__ikey"))
-        .select(col("institution_id"), col("id_2").as("__ent"))
-      .unionByName(inst.join(broadcast(links), col("id_2") === col("__ikey"))
-        .select(col("institution_id"), col("id_1").as("__ent")))
-      .filter(col("__ent").startsWith("P") || col("__ent").startsWith("F"))
-      .join(broadcast(entityCounts.select(col("entity_id").as("__ent"),
-        col("works_count"))), Seq("__ent"), "left")
-      .select(col("institution_id"),
-        when(col("__ent").startsWith("P"), "publisher").otherwise("funder")
-          .as("role"),
-        concat(lit(OA), col("__ent")).as("id"), col("works_count"))
-    val all = own.unionByName(linked)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("institution_id"), col("role"))
-          .orderBy(col("works_count").desc_nulls_last, col("id").asc)))
-      .filter(col("rn") === 1 || col("role") =!= "funder")
-    val byRoleId: (Column, Column) => Column = (l, r) =>
-      when(l("role") < r("role"), -1).when(l("role") > r("role"), 1)
-        .when(l("id") < r("id"), -1).when(l("id") > r("id"), 1).otherwise(0)
-    all.groupBy(col("institution_id"))
-      .agg(array_sort(collect_list(struct(col("role"), col("id"),
-        coalesce(col("works_count"), lit(0)).cast("int").as("works_count"))),
-        byRoleId).as("roles"))
-  }
+      ma: DataFrame, entityCounts: DataFrame): DataFrame =
+    EntityRoles.roles(institutions, "institution_id", "I", "institution",
+      ma, "P" -> "publisher", entityLinks, entityCounts)
 
   /** `repositories`: this institution's repository-typed sources, API-
     * shaped (S-URL id, I-URL host organization, single-element
@@ -225,8 +191,9 @@ object InstitutionsApi {
     *  - `entityLinks` / `entityCounts`: see [[roles]];
     *  - `sources`, `rorRelationships`, `rorTypes`, `rorLabels`,
     *    `rorAliases`: see the per-rollup docs.
-    * The CTAS leaves updated_date NULL — [[stampUpdatedDate]] fills it
-    * from the previous snapshot. */
+    * The CTAS leaves updated_date NULL —
+    * [[graft.core.Incremental.stampUpdatedDate]] fills it from the
+    * previous snapshot over [[contentKey]]. */
   def assemble(institutions: DataFrame, ror: DataFrame, ancestors: DataFrame,
       superSystemIds: Seq[Long], wb: DataFrame, entityLinks: DataFrame,
       entityCounts: DataFrame, sources: DataFrame, rorRelationships: DataFrame,
@@ -334,9 +301,8 @@ object InstitutionsApi {
     * equality, so the oracle can gate on the string while the engine
     * hashes it). topic_share is excluded — corpus-dependent, exactly as
     * the reference comments. */
-  def contentKey(api: DataFrame): Column = {
-    def s(c: Column, dflt: String) = coalesce(c.cast("string"), lit(dflt))
-    def j(c: Column, dflt: String) = coalesce(to_json(c), lit(dflt))
+  def contentKey: Column = {
+    import graft.core.Incremental.{contentJson => j, contentStr => s}
     concat_ws("|",
       col("id").cast("string"),
       s(col("display_name"), ""), s(col("ror"), ""), s(col("type"), ""),
@@ -359,25 +325,5 @@ object InstitutionsApi {
       j(col("associated_institutions"), "[]"),
       j(col("topics"), "[]"), j(col("counts_by_year"), "[]"),
       s(col("status"), "active"))
-  }
-
-  /** Cell-2 snapshot: (id, updated_date, content_hash) before the
-    * rebuild. */
-  def hashSnapshot(api: DataFrame): DataFrame =
-    api.select(col("id"), col("updated_date"),
-      xxhash64(contentKey(api)).as("content_hash"))
-
-  /** Cell-5 MERGE: new and changed-content rows get `now`; unchanged
-    * rows keep their previous date. */
-  def stampUpdatedDate(api: DataFrame, prevHashes: DataFrame,
-      now: Column): DataFrame = {
-    val ph = prevHashes.select(col("id").as("__pid"),
-      col("updated_date").as("__pdate"), col("content_hash").as("__ph"))
-    api.withColumn("__nh", xxhash64(contentKey(api)))
-      .join(ph, col("id") === col("__pid"), "left")
-      .withColumn("updated_date",
-        when(col("__pid").isNull || col("__nh") =!= col("__ph"), now)
-          .otherwise(col("__pdate")))
-      .drop("__pid", "__pdate", "__ph", "__nh")
   }
 }

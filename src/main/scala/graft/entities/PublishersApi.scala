@@ -1,7 +1,6 @@
 package graft.entities
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Publishers API entity build (reference: notebooks/publishers/
@@ -85,45 +84,12 @@ object PublishersApi {
           asc = false).as("sorted_citations"))
   }
 
-  /** `publisher_roles`: own publisher role + linked institution/funder
-    * roles from the entity_link OR-join (union-of-equijoins), top-
-    * funder-only dedup, (role, id)-sorted (documented deviation — the
-    * reference leaves COLLECT_LIST unordered). */
+  /** `publisher_roles` ([[EntityRoles.roles]]): the own publisher role
+    * plus linked institution and funder roles. */
   def roles(publishers: DataFrame, entityLinks: DataFrame,
-      workCounts: DataFrame, entityCounts: DataFrame): DataFrame = {
-    val pub = publishers.filter(col("merge_into_id").isNull)
-      .select(col("id").as("publisher_id"),
-        concat(lit("P"), col("id").cast("string")).as("__pkey"))
-    val own = pub
-      .join(workCounts.select(col("publisher_id"), col("works_count")),
-        Seq("publisher_id"), "left")
-      .select(col("publisher_id"), lit("publisher").as("role"),
-        concat(lit(OA), col("__pkey")).as("id"), col("works_count"))
-    val links = entityLinks.select(col("id_1"), col("id_2"))
-    val linked = pub.join(broadcast(links), col("id_1") === col("__pkey"))
-        .select(col("publisher_id"), col("id_2").as("__ent"))
-      .unionByName(pub.join(broadcast(links), col("id_2") === col("__pkey"))
-        .select(col("publisher_id"), col("id_1").as("__ent")))
-      .filter(col("__ent").startsWith("I") || col("__ent").startsWith("F"))
-      .join(broadcast(entityCounts.select(col("entity_id").as("__ent"),
-        col("works_count"))), Seq("__ent"), "left")
-      .select(col("publisher_id"),
-        when(col("__ent").startsWith("I"), "institution").otherwise("funder")
-          .as("role"),
-        concat(lit(OA), col("__ent")).as("id"), col("works_count"))
-    val all = own.unionByName(linked)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("publisher_id"), col("role"))
-          .orderBy(col("works_count").desc_nulls_last, col("id").asc)))
-      .filter(col("rn") === 1 || col("role") =!= "funder")
-    val byRoleId: (Column, Column) => Column = (l, r) =>
-      when(l("role") < r("role"), -1).when(l("role") > r("role"), 1)
-        .when(l("id") < r("id"), -1).when(l("id") > r("id"), 1).otherwise(0)
-    all.groupBy(col("publisher_id"))
-      .agg(array_sort(collect_list(struct(col("role"), col("id"),
-        coalesce(col("works_count"), lit(0)).cast("int").as("works_count"))),
-        byRoleId).as("roles"))
-  }
+      workCounts: DataFrame, entityCounts: DataFrame): DataFrame =
+    EntityRoles.roles(publishers, "publisher_id", "P", "publisher",
+      workCounts, "I" -> "institution", entityLinks, entityCounts)
 
   /** The full publishers_api assembly (cell 1). Inputs:
     *  - `publishers`: registry (id, display_name, alternate_titles /
@@ -133,8 +99,9 @@ object PublishersApi {
     *    merge_into_id);
     *  - `pairs`: [[workPairs]] output;
     *  - `entityLinks` / `entityCounts`: see [[roles]].
-    * The CTAS leaves updated_date NULL — [[stampUpdatedDate]] fills
-    * it. */
+    * The CTAS leaves updated_date NULL —
+    * [[graft.core.Incremental.stampUpdatedDate]] over [[contentKey]]
+    * fills it. */
   def assemble(publishers: DataFrame, pairs: DataFrame,
       entityLinks: DataFrame, entityCounts: DataFrame, recentYearMin: Int,
       yearMin: Int = 2014, yearMax: Int): DataFrame = {
@@ -189,9 +156,8 @@ object PublishersApi {
 
   /** Cells-0/2 canonical content string (hash equality ⟺ string
     * equality — see [[InstitutionsApi.contentKey]]). */
-  def contentKey(api: DataFrame): Column = {
-    def s(c: Column, dflt: String) = coalesce(c.cast("string"), lit(dflt))
-    def j(c: Column, dflt: String) = coalesce(to_json(c), lit(dflt))
+  def contentKey: Column = {
+    import graft.core.Incremental.{contentJson => j, contentStr => s}
     concat_ws("|",
       col("id").cast("string"),
       s(col("display_name"), ""),
@@ -205,23 +171,5 @@ object PublishersApi {
       s(col("works_count"), "0"), s(col("cited_by_count"), "0"),
       j(col("summary_stats"), "{}"),
       j(col("roles"), "[]"), j(col("counts_by_year"), "[]"))
-  }
-
-  /** Cell-0 snapshot: (id, updated_date, content_hash). */
-  def hashSnapshot(api: DataFrame): DataFrame =
-    api.select(col("id"), col("updated_date"),
-      xxhash64(contentKey(api)).as("content_hash"))
-
-  /** Cell-2 MERGE: new and changed rows get `now`; unchanged keep. */
-  def stampUpdatedDate(api: DataFrame, prevHashes: DataFrame,
-      now: Column): DataFrame = {
-    val ph = prevHashes.select(col("id").as("__pid"),
-      col("updated_date").as("__pdate"), col("content_hash").as("__ph"))
-    api.withColumn("__nh", xxhash64(contentKey(api)))
-      .join(ph, col("id") === col("__pid"), "left")
-      .withColumn("updated_date",
-        when(col("__pid").isNull || col("__nh") =!= col("__ph"), now)
-          .otherwise(col("__pdate")))
-      .drop("__pid", "__pdate", "__ph", "__nh")
   }
 }

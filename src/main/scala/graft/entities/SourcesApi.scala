@@ -175,8 +175,9 @@ object SourcesApi {
     *  - `institutions` / `publishers`: (id, display_name[,
     *    parent_publisher STRUCT<id>]) dims;
     *  - `wb`: [[worksBase]] output.
-    * The CTAS leaves updated_date NULL — [[stampUpdatedDate]] fills it
-    * from the previous hash snapshot. */
+    * The CTAS leaves updated_date NULL —
+    * [[graft.core.Incremental.stampUpdatedDate]] fills it from the
+    * previous hash snapshot over [[contentKey]]. */
   def assemble(sources: DataFrame, metricsPre: DataFrame,
       institutions: DataFrame, publishers: DataFrame, wb: DataFrame,
       recentYearMin: Int): DataFrame = {
@@ -273,9 +274,8 @@ object SourcesApi {
     * created dates and the derived URL fields — hash equality ⟺ string
     * equality, so a SQL oracle can gate on the string while the engine
     * hashes it. */
-  def contentKey(api: DataFrame): Column = {
-    def s(c: Column, dflt: String) = coalesce(c.cast("string"), lit(dflt))
-    def j(c: Column, dflt: String) = coalesce(to_json(c), lit(dflt))
+  def contentKey: Column = {
+    import graft.core.Incremental.{contentJson => j, contentStr => s}
     concat_ws("|",
       col("id").cast("string"),
       s(col("display_name"), ""), s(col("issn_l"), ""),
@@ -298,25 +298,5 @@ object SourcesApi {
       j(col("societies"), "[]"), j(col("alternate_titles"), "[]"),
       s(col("ids").getField("wikidata"), ""),
       j(col("topics"), "[]"), j(col("counts_by_year"), "[]"))
-  }
-
-  /** Cell-1 snapshot: (id, updated_date, content_hash) of the current
-    * table, taken before the rebuild. */
-  def hashSnapshot(api: DataFrame): DataFrame =
-    api.select(col("id"), col("updated_date"),
-      xxhash64(contentKey(api)).as("content_hash"))
-
-  /** Cell-4 MERGE: new rows and changed-content rows get `now`;
-    * unchanged rows keep their previous date. */
-  def stampUpdatedDate(api: DataFrame, prevHashes: DataFrame,
-      now: Column): DataFrame = {
-    val ph = prevHashes.select(col("id").as("__pid"),
-      col("updated_date").as("__pdate"), col("content_hash").as("__ph"))
-    api.withColumn("__nh", xxhash64(contentKey(api)))
-      .join(ph, col("id") === col("__pid"), "left")
-      .withColumn("updated_date",
-        when(col("__pid").isNull || col("__nh") =!= col("__ph"), now)
-          .otherwise(col("__pdate")))
-      .drop("__pid", "__pdate", "__ph", "__nh")
   }
 }

@@ -262,10 +262,10 @@ object TopicHierarchy {
       date_trunc("SECOND", col("created_date")).as("created_date"))
   }
 
-  // ---- hash-gated updated_date (the *_api_hash snapshot + MERGE) ----
+  // ---- hash-gated updated_date: the content strings the *_api_hash
+  // snapshot and MERGE (graft.core.Incremental.stampUpdatedDate) hash ----
 
-  private def s(c: Column, dflt: String) = coalesce(c.cast("string"), lit(dflt))
-  private def j(c: Column, dflt: String) = coalesce(to_json(c), lit(dflt))
+  import graft.core.Incremental.{contentJson => j, contentStr => s}
 
   /** The per-level CONCAT_WS('|') content strings — field lists
     * verbatim from the notebook's hash cells (derived URL fields and
@@ -306,23 +306,4 @@ object TopicHierarchy {
     j(col("display_name_alternatives"), "[]"),
     j(col("fields"), "[]"), j(col("siblings"), "[]"),
     s(col("works_count"), "0"), s(col("cited_by_count"), "0"))
-
-  /** Pre-rebuild snapshot: (id, updated_date, content_hash). */
-  def hashSnapshot(api: DataFrame, key: Column): DataFrame =
-    api.select(col("id"), col("updated_date"),
-      xxhash64(key).as("content_hash"))
-
-  /** Post-rebuild MERGE: new ids and changed content get `now`;
-    * unchanged rows keep their previous date. */
-  def stampUpdatedDate(api: DataFrame, prevHashes: DataFrame, key: Column,
-      now: Column): DataFrame = {
-    val ph = prevHashes.select(col("id").as("__pid"),
-      col("updated_date").as("__pdate"), col("content_hash").as("__ph"))
-    api.withColumn("__nh", xxhash64(key))
-      .join(broadcast(ph), col("id") === col("__pid"), "left")
-      .withColumn("updated_date",
-        when(col("__pid").isNull || col("__nh") =!= col("__ph"), now)
-          .otherwise(col("__pdate")))
-      .drop("__pid", "__pdate", "__ph", "__nh")
-  }
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Incremental, Tables}
 import graft.resolve.SourceMatcher
 
 /** Oracle-gated queries for the round-6 pipeline modules: the
@@ -549,10 +549,11 @@ object PipelineQueries {
     val wb1 = SourcesApi.worksBase(works.filter(pmod(col("id"), lit(997)) =!= 5))
     def api(wb: DataFrame) = SourcesApi.assemble(sources, metricsPre,
       institutions, publishers, wb, recentYearMin = 2023)
-    val snap1 = SourcesApi.hashSnapshot(api(wb1)
-      .withColumn("updated_date", lit("2024-01-01").cast("timestamp")))
-    val stamped = SourcesApi.stampUpdatedDate(api(wb2), snap1,
-      lit("2024-02-02").cast("timestamp"))
+    val snap1 = Incremental.hashSnapshot(api(wb1)
+      .withColumn("updated_date", lit("2024-01-01").cast("timestamp")),
+      SourcesApi.contentKey)
+    val stamped = Incremental.stampUpdatedDate(api(wb2), snap1,
+      SourcesApi.contentKey, lit("2024-02-02").cast("timestamp"))
     stamped.select(
       col("id"), col("display_name"), col("issn_l"),
       to_json(col("issn")).as("issn_json"),
@@ -1040,10 +1041,11 @@ object PipelineQueries {
     def api(wb: DataFrame) = InstitutionsApi.assemble(institutions, ror,
       ancestors, supers, wb, links, entityCounts, sources, rorRel, rorTypes,
       rorLabels, rorAliases, recentYearMin = 2018)
-    val snap = InstitutionsApi.hashSnapshot(api(wb1)
-      .withColumn("updated_date", lit("2024-01-01").cast("timestamp")))
-    val stamped = InstitutionsApi.stampUpdatedDate(api(wb2), snap,
-      lit("2024-02-02").cast("timestamp"))
+    val snap = Incremental.hashSnapshot(api(wb1)
+      .withColumn("updated_date", lit("2024-01-01").cast("timestamp")),
+      InstitutionsApi.contentKey)
+    val stamped = Incremental.stampUpdatedDate(api(wb2), snap,
+      InstitutionsApi.contentKey, lit("2024-02-02").cast("timestamp"))
     stamped.select(
       col("id"), col("display_name"), col("ror"), col("country_code"),
       col("type"), col("type_id"),
@@ -1167,10 +1169,11 @@ object PipelineQueries {
       works.filter(pmod(col("id"), lit(991)) =!= 3))
     def api(wp: DataFrame) = PublishersApi.assemble(publishers, wp, links,
       entityCounts, recentYearMin = 2022, yearMin = 2014, yearMax = 2021)
-    val snap = PublishersApi.hashSnapshot(api(wp1)
-      .withColumn("updated_date", lit("2024-03-01").cast("timestamp")))
-    val stamped = PublishersApi.stampUpdatedDate(api(wp2), snap,
-      lit("2024-04-04").cast("timestamp"))
+    val snap = Incremental.hashSnapshot(api(wp1)
+      .withColumn("updated_date", lit("2024-03-01").cast("timestamp")),
+      PublishersApi.contentKey)
+    val stamped = Incremental.stampUpdatedDate(api(wp2), snap,
+      PublishersApi.contentKey, lit("2024-04-04").cast("timestamp"))
     stamped.select(
       col("id"), col("display_name"),
       to_json(col("lineage")).as("lineage_json"),

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Incremental, Tables}
 
 /** Oracle-gated queries for the topic-API compositions: the
   * award-topics pipeline (q76, notebooks/topics/award_topics_*) and
@@ -287,8 +287,8 @@ object TopicApiQueries {
     val now = lit("2024-06-01").cast("timestamp")
     def stamped(gen1: DataFrame, gen2: DataFrame,
         key: org.apache.spark.sql.Column) =
-      TopicHierarchy.stampUpdatedDate(gen2,
-        TopicHierarchy.hashSnapshot(gen1.withColumn("updated_date", old), key),
+      Incremental.stampUpdatedDate(gen2, broadcast(
+        Incremental.hashSnapshot(gen1.withColumn("updated_date", old), key)),
         key, now)
     val dS = stamped(d1, d2, TopicHierarchy.domainsContentKey)
     val fS = stamped(f1, f2, TopicHierarchy.fieldsContentKey)

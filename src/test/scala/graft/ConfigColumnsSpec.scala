@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.ColumnExprAccess
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.awards.{AwardFieldMap, FunderConfigs,
+import graft.awards.{FunderConfigs, FunderIngestShape,
   ResolvedFunderIngestConfig}
 
 /** Standing config-vs-notebook column-existence audit.
@@ -22,7 +22,9 @@ import graft.awards.{AwardFieldMap, FunderConfigs,
   * The machinery is reflective, so a new tranche def is picked up
   * automatically — landing a config without (a) a notebook citation
   * in its Scaladoc and (b) regenerated resources
-  * (`python3 dev/extract_config_notebooks.py`) fails here.
+  * (`python3 dev/extract_config_notebooks.py`) fails here, and so does
+  * a cited def that drops out of the reflection (its signature no
+  * longer zero-arg / currentYear), so no config skips the audit.
   */
 class ConfigColumnsSpec extends AnyFunSuite {
 
@@ -50,16 +52,14 @@ class ConfigColumnsSpec extends AnyFunSuite {
 
   /** Raw-source column names a config references: the root of every
     * unresolved attribute across all of its field expressions. */
-  private def referencedColumns(c: AwardFieldMap): Set[String] = {
-    val fields: Seq[Column] = Seq(c.mintKey, c.funderAwardId,
-      c.displayName, c.description, c.amount, c.currency, c.fundingType,
-      c.funderScheme, c.startDate, c.endDate, c.startYear, c.endYear,
-      c.leadInvestigator, c.landingPageUrl, c.doi, c.rowFilter,
-      c.investigators, c.coLeadInvestigator) ++ c.worksApiUrl.toSeq ++
-      (c match {
-        case r: ResolvedFunderIngestConfig => Seq(r.resolvedFunderId)
-        case _ => Nil
-      })
+  private def referencedColumns(c: FunderIngestShape): Set[String] = {
+    val fields: Seq[Column] = c.fields.productIterator.toSeq.collect {
+      case col: Column => col
+      case Some(col: Column) => col
+    } ++ (c match {
+      case r: ResolvedFunderIngestConfig => Seq(r.resolvedFunderId)
+      case _ => Nil
+    })
     fields.flatMap { col =>
       ColumnExprAccess.expr(col).collect {
         case u: UnresolvedAttribute => u.nameParts.head.toLowerCase
@@ -76,10 +76,11 @@ class ConfigColumnsSpec extends AnyFunSuite {
 
   /** Every public zero-arg / currentYear-arg def on FunderConfigs
     * returning a config shape. */
-  private lazy val configs: Seq[(String, AwardFieldMap)] = {
+  private lazy val configs: Seq[(String, FunderIngestShape)] = {
     val obj = FunderConfigs
     obj.getClass.getMethods.toSeq
-      .filter(m => classOf[AwardFieldMap].isAssignableFrom(m.getReturnType))
+      .filter(m =>
+        classOf[FunderIngestShape].isAssignableFrom(m.getReturnType))
       .filter(m => m.getParameterCount == 0 ||
         (m.getParameterCount == 1 &&
           m.getParameterTypes()(0) == java.lang.Integer.TYPE))
@@ -88,7 +89,7 @@ class ConfigColumnsSpec extends AnyFunSuite {
         val cfg =
           if (m.getParameterCount == 0) m.invoke(obj)
           else m.invoke(obj, Integer.valueOf(2026))
-        m.getName -> cfg.asInstanceOf[AwardFieldMap]
+        m.getName -> cfg.asInstanceOf[FunderIngestShape]
       }
   }
 
@@ -104,6 +105,29 @@ class ConfigColumnsSpec extends AnyFunSuite {
     assert(uncited.isEmpty,
       s"\nconfig defs whose Scaladoc cites no Create*.ipynb notebook: " +
         uncited.mkString(", "))
+  }
+
+  test("every cited def is reflected: a def whose signature leaves " +
+    "the zero-arg / currentYear shape drops out of the audit loudly") {
+    val reflected = configs.map(_._1).toSet
+    val unreflected = citations.keySet -- reflected
+    assert(unreflected.isEmpty,
+      s"\nconfig_notebooks.tsv cites defs the reflection no longer " +
+        s"finds (renamed, removed, or their signature changed), so " +
+        "their columns go unaudited: " +
+        unreflected.toSeq.sorted.mkString(", "))
+    assert(reflected.size === citations.size)
+  }
+
+  test("every config's expressions resolve to source columns (the " +
+    "audit below is not vacuous)") {
+    val blind = configs.collect {
+      case (name, cfg) if referencedColumns(cfg).isEmpty => name
+    }
+    assert(blind.isEmpty,
+      s"\nconfigs whose field expressions yield no source column — " +
+        s"the Column-to-expression bridge is not converting: " +
+        blind.mkString(", "))
   }
 
   test("every column a config references exists in its cited " +

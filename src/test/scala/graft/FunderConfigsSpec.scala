@@ -244,7 +244,8 @@ class FunderConfigsSpec extends AnyFunSuite {
       .withColumn("assistance_type_code",
         when(col("award_id_fain") === "FAIN-D", "09").otherwise("04"))
     val cfg = FunderConfigs.dod
-    assert(cfg.provenance === "usaspending" && cfg.priority === 26)
+    assert(cfg.fields.provenance === "usaspending" &&
+      cfg.fields.priority === 26)
     val primary = FunderIngest.transform(raw, reg, cfg, now)
     val extension = FunderIngest.transform(
       ext.filter(FunderConfigs.dodFyExtensionFilter), reg, cfg, now)
@@ -551,16 +552,19 @@ class FunderConfigsSpec extends AnyFunSuite {
     val r = FunderConfigs.usaSpendingRegistry
     assert(r.size === 14)
     assert(r("nasa").funderId === 4320306101L &&
-      r("nasa").provenance === "usaspending" && r("nasa").priority === 23)
+      r("nasa").fields.provenance === "usaspending" &&
+      r("nasa").fields.priority === 23)
     assert(r("cdc").funderId === 4320332162L &&
-      r("cdc").provenance === "usaspending_cdc" && r("cdc").priority === 55)
-    assert(r("noaa").priority === 88 && r("usaid").priority === 75)
+      r("cdc").fields.provenance === "usaspending_cdc" &&
+      r("cdc").fields.priority === 55)
+    assert(r("noaa").fields.priority === 88 &&
+      r("usaid").fields.priority === 75)
     // the shared-provenance trio is disambiguated by funder_id; all
     // OTHER configs own a unique (provenance, priority) slice
-    val shared = r.values.filter(_.provenance == "usaspending").toSeq
+    val shared = r.values.filter(_.fields.provenance == "usaspending").toSeq
     assert(shared.map(_.funderId).distinct.size === 3)
-    val own = r.values.filterNot(_.provenance == "usaspending")
-      .map(c => (c.provenance, c.priority)).toSeq
+    val own = r.values.filterNot(_.fields.provenance == "usaspending")
+      .map(c => (c.fields.provenance, c.fields.priority)).toSeq
     assert(own.distinct.size === own.size)
     // distinct funders everywhere
     assert(r.values.map(_.funderId).toSeq.distinct.size === 14)
@@ -2029,7 +2033,7 @@ class FunderConfigsSpec extends AnyFunSuite {
     // the three ministries and GACR land at DISTINCT (prov, priority)
     val slices = Seq(FunderConfigs.gacr, FunderConfigs.mze,
       FunderConfigs.mvcr, FunderConfigs.mpo)
-      .map(c => (c.provenance, c.priority))
+      .map(c => (c.fields.provenance, c.fields.priority))
     assert(slices.distinct.length === 4)
   }
 
@@ -2697,7 +2701,8 @@ class FunderConfigsSpec extends AnyFunSuite {
     assert(ovr2.head.getAs[String]("provenance") === "vlaamse_regering_fris")
     val frisSlices = Seq(FunderConfigs.fwo(2026),
       FunderConfigs.vlaamseRegering(2026), FunderConfigs.vlaio(2026),
-      FunderConfigs.belspo(2026)).map(c => (c.provenance, c.priority))
+      FunderConfigs.belspo(2026))
+      .map(c => (c.fields.provenance, c.fields.priority))
     assert(frisSlices.distinct.length === 4)
 
     val et = Seq(
@@ -2726,7 +2731,7 @@ class FunderConfigsSpec extends AnyFunSuite {
       .compareTo(new java.math.BigDecimal("5000")) === 0)
     assert(oef.head.getAs[String]("currency") === "EUR")
     assert(Seq(FunderConfigs.etisEtag, FunderConfigs.etisEtf)
-      .map(c => (c.provenance, c.priority)).distinct.length === 2)
+      .map(c => (c.fields.provenance, c.fields.priority)).distinct.length === 2)
   }
 
   test("Templeton / MinCiencias / Telethon / Sweden-America / Arnold " +
@@ -3298,8 +3303,8 @@ class FunderConfigsSpec extends AnyFunSuite {
       FunderConfigs.hunanNsf, FunderConfigs.jiangxiNsf,
       FunderConfigs.liaoningNsf, FunderConfigs.nssfc,
       FunderConfigs.shandongNsf, FunderConfigs.shanghaiNsf)
-    assert(all12.map(c => (c.provenance, c.priority)).distinct.length
-      === 12)
+    assert(all12.map(c => (c.fields.provenance, c.fields.priority))
+      .distinct.length === 12)
     assert(all12.map(_.funderId).distinct.length === 12)
   }
 
@@ -3461,9 +3466,9 @@ class FunderConfigsSpec extends AnyFunSuite {
       FunderConfigs.brainPrize, FunderConfigs.crafoordPrize,
       FunderConfigs.balzanPrize, FunderConfigs.millenniumPrize,
       FunderConfigs.kingFaisalPrize, FunderConfigs.danDavidPrize)
-    assert(prizes.map(c => (c.provenance, c.priority)).distinct.length
-      === 8)
-    assert(prizes.forall(_.fundingType.toString.contains("prize")))
+    assert(prizes.map(c => (c.fields.provenance, c.fields.priority))
+      .distinct.length === 8)
+    assert(prizes.forall(_.fields.fundingType.toString.contains("prize")))
   }
 
   // ---------------------------------------------------------------
@@ -3800,7 +3805,7 @@ class FunderConfigsSpec extends AnyFunSuite {
     // the three cards + Deutsche Krebshilfe land at distinct slices
     assert(Seq(FunderConfigs.deutscheKrebshilfe, FunderConfigs.doeOffSci,
       FunderConfigs.frqnt, FunderConfigs.frqs)
-      .map(c => (c.provenance, c.priority)).distinct.length === 4)
+      .map(c => (c.fields.provenance, c.fields.priority)).distinct.length === 4)
 
     val em = Seq(("yip-2019-x", "EMBO Young Investigator — X Y",
         Some("Young Investigator Programme"), "2019", "2022",
@@ -4372,8 +4377,8 @@ class FunderConfigsSpec extends AnyFunSuite {
     assert(otp.head.getAs[String]("provenance") === "templeton_prize")
     assert(FunderConfigs.templeton.funderId
       === FunderConfigs.templetonPrize.funderId) // same funder,
-    assert(FunderConfigs.templeton.provenance
-      !== FunderConfigs.templetonPrize.provenance) // distinct slices
+    assert(FunderConfigs.templeton.fields.provenance
+      !== FunderConfigs.templetonPrize.fields.provenance) // distinct slices
     val tpl = otp.head.getAs[Row]("lead_investigator")
     assert(tpl.getAs[java.sql.Date]("role_start").toString
       === "1973-04-01")

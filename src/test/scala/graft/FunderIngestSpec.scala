@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{ColumnExprAccess, Row}
 import org.apache.spark.sql.functions._
 import graft.awards.FunderIngest
 
@@ -137,6 +137,29 @@ class FunderIngestSpec extends AnyFunSuite {
     assert(r3.getAs[String]("funding_type") === "research")
     assert(r3.getAs[String]("landing_page_url")
       === "https://anr.fr/Projet-ANR-19-ASTR-0007")
+  }
+
+  test("likeCascade: first matching arm wins, NULL falls to the default, " +
+    "one flat CASE WHEN") {
+    val c = lower(col("scheme"))
+    val arms = Seq("fellow" -> "fellowship", "young" -> "research",
+      "infra" -> "infrastructure")
+    val cascade = FunderIngest.likeCascade(c, arms, "grant")
+    val out = Seq(Some("Young Fellow"), Some("young investigator"),
+      Some("INFRA-1"), Some("other"), None).toDF("scheme")
+      .select(col("scheme"), cascade.as("t")).collect()
+      .map(r => Option(r.getString(0)) -> r.getString(1)).toMap
+    assert(out(Some("Young Fellow")) === "fellowship") // both match: first
+    assert(out(Some("young investigator")) === "research")
+    assert(out(Some("INFRA-1")) === "infrastructure")
+    assert(out(Some("other")) === "grant")
+    assert(out(None) === "grant") // NULL input: no arm matches
+    val handWritten = when(c.like("%fellow%"), "fellowship")
+      .when(c.like("%young%"), "research")
+      .when(c.like("%infra%"), "infrastructure")
+      .otherwise("grant")
+    assert(ColumnExprAccess.expr(cascade) ===
+      ColumnExprAccess.expr(handWritten))
   }
 
   test("landing replaces exactly the funder's (provenance, priority) slice") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.Incremental
 import graft.entities.InstitutionsApi
 
 /** Semantics pins for the Institutions API build — the oracle (q89)
@@ -179,13 +180,14 @@ class InstitutionsApiSpec extends AnyFunSuite {
         Seq.empty[(String, String)].toDF("ror_id", "alias"),
         recentYearMin = 2023)
     }
-    val prev = InstitutionsApi.hashSnapshot(
+    val prev = Incremental.hashSnapshot(
       api(Seq((1L, 5), (2L, 6)))
-        .withColumn("updated_date", lit("2024-01-01").cast("timestamp")))
+        .withColumn("updated_date", lit("2024-01-01").cast("timestamp")),
+      InstitutionsApi.contentKey)
     // I5 gains a work → changed; I6 unchanged
-    val out = InstitutionsApi.stampUpdatedDate(
+    val out = Incremental.stampUpdatedDate(
       api(Seq((1L, 5), (3L, 5), (2L, 6))), prev,
-      lit("2024-02-02").cast("timestamp"))
+      InstitutionsApi.contentKey, lit("2024-02-02").cast("timestamp"))
       .select(col("id"), date_format(col("updated_date"), "yyyy-MM-dd"))
       .orderBy("id").collect().map(r => (r.getLong(0), r.getString(1)))
     assert(out.toSeq == Seq((5L, "2024-02-02"), (6L, "2024-01-01")))

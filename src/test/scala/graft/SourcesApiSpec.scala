@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.Incremental
 import graft.entities.SourcesApi
 
 /** Semantics pins for the Sources API entity build — the oracle (q75)
@@ -147,16 +148,18 @@ class SourcesApiSpec extends AnyFunSuite {
     val gen2 = mkWorks(Seq( // w2 dropped → only s1's content changes
       (1L, 1L, 5, 2020, ""), (3L, 2L, 1, 2020, "")))
     val d1 = lit("2024-01-01").cast("timestamp")
-    val snap = SourcesApi.hashSnapshot(api(gen1).withColumn("updated_date", d1))
-    val stamped = SourcesApi.stampUpdatedDate(api(gen2), snap,
+    val key = SourcesApi.contentKey
+    val snap = Incremental.hashSnapshot(
+      api(gen1).withColumn("updated_date", d1), key)
+    val stamped = Incremental.stampUpdatedDate(api(gen2), snap, key,
       lit("2024-02-02").cast("timestamp"))
       .select(col("id"), col("updated_date").cast("date").cast("string"))
       .orderBy("id").collect()
     assert(stamped(0).getString(1) == "2024-02-02") // s1 changed
     assert(stamped(1).getString(1) == "2024-01-01") // s2 untouched
     // a row absent from the snapshot counts as new → stamped now
-    val fresh = SourcesApi.stampUpdatedDate(api(gen2),
-      snap.filter(col("id") === 1), lit("2024-02-02").cast("timestamp"))
+    val fresh = Incremental.stampUpdatedDate(api(gen2),
+      snap.filter(col("id") === 1), key, lit("2024-02-02").cast("timestamp"))
       .select(col("id"), col("updated_date").cast("date").cast("string"))
       .orderBy("id").collect()
     assert(fresh(1).getString(1) == "2024-02-02")

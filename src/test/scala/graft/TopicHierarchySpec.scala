@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.Incremental
 import graft.entities.TopicHierarchy
 
 /** Pins the topic-hierarchy API build semantics
@@ -144,9 +145,9 @@ class TopicHierarchySpec extends AnyFunSuite {
       TopicHierarchy.topicsApi(topics, subfields, fields, domains, counts)
     val gen1 = api(topicsDim.filter(col("topic_id") =!= 10002), counts1)
       .withColumn("updated_date", lit("2024-01-01").cast("timestamp"))
-    val snap = TopicHierarchy.hashSnapshot(gen1,
+    val snap = Incremental.hashSnapshot(gen1,
       TopicHierarchy.topicsContentKey)
-    val out = TopicHierarchy.stampUpdatedDate(api(topicsDim, counts2), snap,
+    val out = Incremental.stampUpdatedDate(api(topicsDim, counts2), snap,
         TopicHierarchy.topicsContentKey,
         lit("2024-06-01").cast("timestamp"))
       .select(col("id"),
