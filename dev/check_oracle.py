@@ -18,7 +18,7 @@ oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
     # stringify everything for a stable sort/compare (lists/structs incl.)
-    s = df.applymap(lambda v: repr(v))
+    s = df.map(lambda v: repr(v))
     return s.sort_values(by=list(s.columns)).reset_index(drop=True)
 
 fails, passes = [], []

@@ -22,6 +22,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  - q37: MinHash slots come from the native `minhash_slots` kernel
   *  - q115: no `count(distinct` and no `Expand` in the overlap count,
   *    and no SortMergeJoin (the flags are landed before their join)
+  *  - q71: no SortMergeJoin, and each location input scanned once
+  *    (the source attach is one pass, not one branch per provenance)
   *  - q115/q134: the checks read the plans of the landings the query
   *    wrote as well as its own (the overlap count and the URL election
   *    run inside landings)
@@ -55,7 +57,7 @@ object ExplainAudit extends AdaptiveSparkPlanHelper {
 
   /** Exact number of `check(...)` calls a full run performs (named
     * checks + the generic per-query single-partition screen). */
-  val ExpectedChecks = 268
+  val ExpectedChecks = 270
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -177,7 +179,12 @@ object ExplainAudit extends AdaptiveSparkPlanHelper {
 
     val p71 = plan("q71_source_matcher")
     check(p71.contains("BroadcastHashJoin"),
-      "q71 broadcasts the registry-side source indexes (location side never shuffles to match)")
+      "q71 broadcasts the registry-side source indexes")
+    check(!p71.contains("SortMergeJoin"),
+      "q71 joins the locations to every index by broadcast, never sort-merge")
+    check("orders\\.parquet".r.findAllMatchIn(p71).size <= 2,
+      "q71 plans each of its two location inputs once (orders.parquet " +
+        "scanned at most twice: no per-provenance split and union)")
 
     val p78 = plan("q78_affiliation_refine")
     check(p78.contains("BroadcastHashJoin"),

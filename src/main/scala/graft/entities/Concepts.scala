@@ -52,10 +52,7 @@ object Concepts {
     * @param registry (concept_id, wikidata_id, display_name, level)
     * @return (work_id, concepts, keywords) — concepts capped at 40,
     *         keywords dynamically sized 2..12 by the tanh curve. */
-  def enrichLmOutput(lm: DataFrame, registry: DataFrame,
-      filterThreshold: Double = 0.20, baseMid: Double = 5.0,
-      halfRange: Double = 6.0, centerSize: Int = 7,
-      slope: Double = 0.05): DataFrame = {
+  def enrichLmOutput(lm: DataFrame, registry: DataFrame): DataFrame = {
     // slug regex chain evaluated ONCE per registry row (vocabulary-
     // bounded, broadcast side) — not once per exploded work-concept row
     val reg = registry.withColumn("__slug",
@@ -76,10 +73,12 @@ object Concepts {
       slice(array_sort(collect_set(cStruct), cmp), 1, 40).as("concepts"),
       array_sort(array_distinct(array_compact(collect_list(kStruct))), cmp)
         .as("keywords_full"))
+    // the reference's keyword count: 5 + 6·tanh((n − 7) · 0.05), n the
+    // keywords scoring above 0.20, clamped to 2..12
     val nAbove = size(filter(col("keywords_full"),
-      k => k.getField("score") > filterThreshold))
-    val target = greatest(lit(2), least(lit(12), round(lit(baseMid) +
-      lit(halfRange) * tanh((nAbove - lit(centerSize)) * lit(slope)))))
+      k => k.getField("score") > 0.20))
+    val target = greatest(lit(2), least(lit(12),
+      round(lit(5.0) + lit(6.0) * tanh((nAbove - lit(7)) * lit(0.05)))))
     agg.select(col("work_id"), col("concepts"),
       slice(filter(col("keywords_full"), k => k.getField("score") > 0),
         lit(1), target.cast("int")).as("keywords"))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.functions.TextFunctions
 
@@ -18,12 +17,9 @@ import graft.functions.TextFunctions
   *    equal), Jaccard pairs from rare-shingle (document-frequency
   *    filtered) prefix blocking. All are shuffle-on-key joins AQE can
   *    skew-split.
-  *  - shingle→integer ids default to `TextFunctions.charHash` — a
-  *    per-row 56-bit polynomial hash (no vocabulary shuffle, no global
-  *    sort) that a SQL oracle reproduces exactly. The sorted-dictionary
-  *    mode (row_number over distinct shingles) survives only as an
-  *    explicit debug/parity option: its `Window.orderBy` with no
-  *    partitionBy funnels the whole vocabulary through one task.
+  *  - shingle→integer ids are `TextFunctions.charHash` — a per-row
+  *    56-bit polynomial hash (no vocabulary shuffle, no global sort)
+  *    that a SQL oracle reproduces exactly.
   */
 object Dedup {
   val Prime: Long = graft.plans.MinHashSlots.Prime
@@ -139,18 +135,11 @@ object Dedup {
   def shingles(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
     df.select(col(idCol), explode(TextFunctions.wordShingles(col(textCol), k)).as("shingle"))
 
-  /** Attach integer shingle ids. Default (hashed) path: per-row 56-bit
+  /** Attach integer shingle ids: per-row 56-bit
     * [[TextFunctions.charHash]] — full-width ids, so distinct shingles
-    * essentially never collide, and NO vocabulary-wide shuffle or sort.
-    * `hashed = false` keeps the old sorted-dictionary assignment for
-    * debugging only (single-task global sort — never register it). */
-  def withShingleIds(sh: DataFrame, hashed: Boolean = true): DataFrame =
-    if (hashed) sh.withColumn("sid", TextFunctions.charHash(col("shingle")))
-    else {
-      val dict = sh.select(col("shingle")).distinct()
-        .withColumn("sid", row_number().over(Window.orderBy(col("shingle"))).cast("long"))
-      sh.join(dict, "shingle")
-    }
+    * essentially never collide, and NO vocabulary-wide shuffle or sort. */
+  def withShingleIds(sh: DataFrame): DataFrame =
+    sh.withColumn("sid", TextFunctions.charHash(col("shingle")))
 
   def hashA(i: Int): Long = graft.plans.MinHashSlots.hashA(i)
   def hashB(i: Int): Long = graft.plans.MinHashSlots.hashB(i)

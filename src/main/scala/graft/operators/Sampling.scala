@@ -312,20 +312,12 @@ object Sampling {
     * returns both twins — the old window form would have kept exactly
     * one arbitrarily, which is not better, just differently wrong).
     * Pipelines with non-unique natural ids must pre-compose a unique
-    * row key (e.g. concat(id, pos)).
-    *
-    * `broadcastElected` — the elected frame is ≤ cap · |strata| rows
-    * by construction; when the CALLER knows the strata cardinality is
-    * bounded (training mixtures stratify by source/language/domain —
-    * dozens to thousands), pass true to pin the semi join broadcast
-    * so the corpus NEVER shuffles for the cap (left to AQE, a
-    * conservative pre-runtime size estimate can shuffle the full
-    * corpus against a 10k-row elected frame — observed on the Zipf
-    * bench). Default false: strata cardinality is unbounded in
-    * general and a wrong hint OOMs the driver. */
+    * row key (e.g. concat(id, pos)). The elected frame is ≤ cap ·
+    * |strata| rows, but strata cardinality is unbounded in general, so
+    * the semi join's strategy is left to AQE rather than pinned
+    * broadcast. */
   def stratifiedCap(df: DataFrame, strata: Seq[String], idCol: String,
-      seed: String, cap: Int,
-      broadcastElected: Boolean = false): DataFrame = {
+      seed: String, cap: Int): DataFrame = {
     val isIntegral = {
       import org.apache.spark.sql.types._
       df.schema(idCol).dataType match {
@@ -344,7 +336,7 @@ object Sampling {
         lit(null).cast("string")).as("__tk"))
       .select(renamed.map { case (c, a) => col(c).as(a) } :+
         explode(col("__tk.id")).as("__eid"): _*)
-    df.join(if (broadcastElected) broadcast(elected) else elected,
+    df.join(elected,
       renamed.map { case (c, a) => col(c) <=> col(a) }
         .reduce(_ && _) && idStr === col("__eid"), "left_semi")
   }

@@ -7,32 +7,39 @@ import org.apache.spark.sql.expressions.Window
 /** SourceMatcher: attach a source_id to every location — the
   * CreateLocationsWithSources step (reference: notebooks/end2end/
   * CreateLocationsWithSources.ipynb:73-87, the `locations_w_sources`
-  * CTAS). Locations route by provenance into four primary tiers, then
-  * unmatched rows fall through a display-name match and a manual
-  * url/doi/source-name/publisher cascade:
+  * CTAS, then the MERGEs of cells 3-7). A location's provenance names
+  * the registry keys it may match on:
   *
-  *  - repo/repo_backfill  → endpoint_id equijoin against the
-  *    endpoint→source map (first source per endpoint by id asc);
-  *  - datacite            → datacite_client id extracted from `ids[]`
-  *    joined to the exploded per-source datacite_ids;
-  *  - pubmed              → the constant PubMed source;
-  *  - everything else     → ISSNs extracted from `ids[]` (namespace
-  *    contains "issn", relationship self-ish or null), ranked
-  *    eissn > lissn > pissn then id text, joined to the exploded
-  *    per-source ISSN index.
+  *  - repo/repo_backfill  → its endpoint_id, via the endpoint→source
+  *    map;
+  *  - datacite            → the datacite_client ids in `ids[]`
+  *    (relationship self or null);
+  *  - pubmed              → none: the constant PubMed source;
+  *  - everything else     → the ISSNs in `ids[]` (namespace contains
+  *    "issn", relationship self-ish or null), ranked
+  *    eissn > lissn > pissn then id text.
   *
-  * Scale posture: every tier is a keyed equijoin; the source-side
-  * indexes (ISSN / endpoint / datacite explodes) are registry-sized
-  * (thousands of rows), so each join broadcasts; the only work-sized
-  * shuffles are the per-native_id row_number dedups, all bounded by the
-  * handful of ids a single location carries.
+  * The best-ranked key found in the registry wins (for datacite, the
+  * lowest source id). Rows still unmatched then fall through the unique
+  * display-name match, the manual url/doi/name/publisher cascade, the
+  * ebook-platform publisher match (cell 5) and the normalized
+  * display-name match (cell 7). Each input row leaves as exactly one
+  * output row, matched from its own `ids`.
+  *
+  * Scale posture: one pass over the locations. The registry side is one
+  * key index `(key_type, key) → (id, is_oa)` and three unique-name
+  * indexes, all registry-sized (thousands of rows) and broadcast. The
+  * location side is exploded to the handful of keys a row carries,
+  * joined, and cut back to one row per input row by one row_number on a
+  * row id; its partial WindowGroupLimit leaves one row per location
+  * before the only location-side shuffle. No step splits the locations
+  * and unions them back, so each location input is planned once.
   *
   * Determinism deviation (documented): the reference's per-work
-  * best-match row_number breaks ties arbitrarily when one ISSN maps to
-  * several sources; here the ISSN/datacite indexes are first deduped to
-  * one source per key (row_number by id asc = the reference's own
-  * `id_row_number` idiom, which its final join leaves unused), so every
-  * pick is deterministic.
+  * best-match row_number breaks ties arbitrarily when one key maps to
+  * several sources; here every key resolves to its lowest source id
+  * (the reference's own `id_row_number` idiom, which its final join
+  * leaves unused), so every pick is deterministic.
   */
 object SourceMatcher {
 
@@ -53,153 +60,86 @@ object SourceMatcher {
     4306525896L) // Research Square duplicate
 
   /** All PubMed locations attach to the PubMed source. */
-  val pubmedSourceId = 4306525036L
+  private[resolve] val pubmedSourceId = 4306525036L
 
   /** `ids[].relationship` values that still denote "this work's own
     * ISSN" (version/variant/translation links). */
-  val issnRelationships: Seq[String] = Seq(
+  private[resolve] val issnRelationships: Seq[String] = Seq(
     "self", "IsVersionOf", "IsNewVersionOf", "IsPreviousVersionOf",
     "IsVariantFormOf", "IsOriginalFormOf", "IsIdentialTo",
     "IsTranslationOf", "HasTranslation")
 
-  /** Registry rows eligible for matching: not merged away, id present,
-    * not on the exclusion list. */
-  def filteredSources(sources: DataFrame,
-      excluded: Seq[Long] = defaultExcludedIds): DataFrame =
-    sources.filter(col("merge_into_id").isNull && col("id").isNotNull &&
-      !col("id").isin(excluded: _*))
-
-  /** ISSN → (source id, is_oa) index: explode per-source ISSN arrays,
-    * keep the lowest source id per ISSN. */
-  def issnIndex(filtered: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("issn")).orderBy(col("id").asc)
-    filtered.select(col("id"), col("is_oa").as("is_oa_source"),
-        explode(col("issns")).as("issn"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-  }
-
-  /** endpoint_id → (source id, is_oa) index via the endpoint→source
-    * map; first source per endpoint by id asc. */
-  def endpointIndex(endpointToSource: DataFrame, filtered: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("endpoint_id")).orderBy(col("id").asc)
-    endpointToSource.join(filtered,
-        endpointToSource("source_id") === filtered("id"))
-      .select(endpointToSource("endpoint_id"), filtered("id"),
-        filtered("is_oa").as("is_oa_source"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-  }
-
-  /** datacite client id → (source id, is_oa) index. */
-  def dataciteIndex(filtered: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("datacite_id")).orderBy(col("id").asc)
-    filtered.filter(col("datacite_ids").isNotNull && size(col("datacite_ids")) > 0)
-      .select(col("id"), col("is_oa").as("is_oa_source"),
-        explode(col("datacite_ids")).as("datacite_id"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-  }
-
   private def issnNamespaceRank(ns: Column): Column =
     when(ns === "eissn", 1).when(ns === "lissn", 2).when(ns === "pissn", 3)
 
-  /** Primary-tier attach: route by provenance, return every location
-    * with `source_id` / `is_oa_source` (null when no tier matched).
-    * `locations` must carry provenance, native_id, ids[], endpoint_id. */
-  def attachPrimary(locations: DataFrame, sources: DataFrame,
-      endpointToSource: DataFrame,
-      excluded: Seq[Long] = defaultExcludedIds): DataFrame = {
-    val srcF = filteredSources(sources, excluded)
+  /** (key_type, key) → the lowest eligible source id and its is_oa, over
+    * the live registry rows that have an id and are not excluded. */
+  private def registryIndex(live: DataFrame, endpointToSource: DataFrame,
+      excluded: Seq[Long]): DataFrame = {
+    val f = live.filter(col("id").isNotNull && !col("id").isin(excluded: _*))
+    def keyed(keyType: String, key: Column, from: DataFrame = f) =
+      from.select(lit(keyType).as("__kt"), key.as("__k"), f("id"), f("is_oa"))
+    keyed("issn", explode(col("issns")))
+      .unionByName(keyed("datacite", explode(col("datacite_ids"))))
+      .unionByName(keyed("endpoint", endpointToSource("endpoint_id").cast("string"),
+        endpointToSource.join(f, endpointToSource("source_id") === f("id"))))
+      .groupBy(col("__kt"), col("__k"))
+      .agg(min(col("id")).as("__src_id"), min_by(col("is_oa"), col("id")).as("__src_oa"))
+  }
+
+  /** The CTAS: every location with the source of its best-ranked key
+    * found in `index` (`source_id` / `is_oa_source`, null when none). */
+  private def bestMatch(locations: DataFrame, index: DataFrame): DataFrame = {
+    val prov = col("provenance")
+    val repo = prov.isin("repo", "repo_backfill")
+    val datacite = prov === "datacite"
+    val pubmed = prov === "pubmed"
+    def selfIds(keep: (Column, Column) => Column) = filter(col("ids"), x =>
+      keep(x.getField("namespace"), x.getField("relationship")))
+    val candidates = when(repo || pubmed, lit(null))
+      .when(datacite, selfIds((ns, rel) => ns === "datacite_client" &&
+        (rel === "self" || rel.isNull)))
+      .otherwise(selfIds((ns, rel) => ns.contains("issn") &&
+        (rel.isin(issnRelationships.map(lit): _*) || rel.isNull)))
+    val keyType = when(repo, "endpoint").when(datacite, "datacite").otherwise("issn")
     val cols = locations.columns.map(col)
-
-    // other (crossref/landing_page/…): extract self-ish ISSNs, rank
-    // eissn > lissn > pissn then id text, take the best match per work.
-    val others = locations.filter(
-      !col("provenance").isin("repo", "repo_backfill", "datacite", "pubmed"))
-    val relevant = explode_outer(filter(col("ids"), x =>
-      x.getField("namespace").contains("issn") &&
-        (x.getField("relationship").isin(issnRelationships.map(lit): _*) ||
-          x.getField("relationship").isNull)))
-    val ranked = others.select(cols :+ relevant.as("__rel"): _*)
-      .withColumn("__nid_rn", row_number().over(Window.partitionBy(col("native_id"))
-        .orderBy(issnNamespaceRank(col("__rel.namespace")).asc_nulls_last,
-          col("__rel.id").asc_nulls_last)))
-    // index columns aliased (__src_id/__src_oa) so a caller-supplied
-    // `id`/`is_oa_source` location column can never make the window /
-    // select references ambiguous (same idiom as the repo tier's __ep).
-    val issnMatches = ranked
-      .join(broadcast(issnIndex(srcF)
-          .select(col("issn"), col("id").as("__src_id"),
-            col("is_oa_source").as("__src_oa"))),
-        ranked("__rel.id") === col("issn"))
-      .withColumn("__best", row_number().over(Window.partitionBy(col("native_id"))
-        .orderBy(col("__nid_rn").asc, col("__src_id").asc)))
+    // per input row (a row id, not native_id, which may repeat): a match
+    // first, then the ISSN rank; datacite candidates all tie on rank, so
+    // their lowest source id wins
+    val best = Window.partitionBy(col("__rid")).orderBy(col("__src_id").isNull,
+      issnNamespaceRank(col("__c.namespace")).asc_nulls_last,
+      when(keyType === "issn", col("__c.id")).asc_nulls_last, col("__src_id"))
+    locations.withColumn("__rid", monotonically_increasing_id())
+      .select(cols ++ Seq(col("__rid"), explode_outer(candidates).as("__c")): _*)
+      .join(broadcast(index), keyType === col("__kt") &&
+        when(repo, col("endpoint_id").cast("string")).otherwise(col("__c.id")) === col("__k"),
+        "left")
+      .withColumn("__best", row_number().over(best))
       .filter(col("__best") === 1)
-      .select(col("native_id").as("__mid"), col("__src_id").as("source_id"),
-        col("__src_oa").as("is_oa_source"))
-    val othersFinal = others.join(issnMatches,
-      others("native_id") === col("__mid"), "left").drop("__mid")
-
-    // datacite: extract the datacite_client id, join the client index,
-    // keep the lowest-source match per work (unmatched rows stay).
-    val datacite = locations.filter(col("provenance") === "datacite")
-    val clientId = explode_outer(filter(col("ids"), x =>
-      x.getField("namespace") === "datacite_client" &&
-        (x.getField("relationship") === "self" ||
-          x.getField("relationship").isNull)))
-    val dcFinal = datacite.select(cols :+ clientId.as("__client"): _*)
-      .join(broadcast(dataciteIndex(srcF)
-          .select(col("datacite_id"), col("id").as("__src_id"),
-            col("is_oa_source").as("__src_oa"))),
-        col("__client.id") === col("datacite_id"), "left")
-      .withColumn("__best", row_number().over(Window.partitionBy(col("native_id"))
-        .orderBy(col("__src_id").asc_nulls_last)))
-      .filter(col("__best") === 1)
-      .select(cols ++ Seq(col("__src_id").as("source_id"),
-        col("__src_oa").as("is_oa_source")): _*)
-
-    // pubmed: constant source.
-    val pmFinal = locations.filter(col("provenance") === "pubmed")
-      .select(cols ++ Seq(lit(pubmedSourceId).as("source_id"),
-        lit(false).as("is_oa_source")): _*)
-
-    // repo: endpoint_id equijoin.
-    val repoFinal = locations
-      .filter(col("provenance").isin("repo", "repo_backfill"))
-      .join(broadcast(endpointIndex(endpointToSource, srcF)
-          .select(col("endpoint_id").as("__ep"), col("id").as("source_id"),
-            col("is_oa_source"))),
-        col("endpoint_id") === col("__ep"), "left")
-      .drop("__ep")
-
-    val out = cols ++ Seq(col("source_id"), col("is_oa_source"))
-    Seq(othersFinal, dcFinal, pmFinal, repoFinal)
-      .map(_.select(out: _*)).reduce(_.unionByName(_))
+      .select(cols ++ Seq(
+        when(pubmed, lit(pubmedSourceId)).otherwise(col("__src_id")).as("source_id"),
+        when(pubmed, lit(false)).otherwise(col("__src_oa")).as("is_oa_source")): _*)
   }
 
-  /** Display-name fallback: sources whose display_name is unique in the
-    * registry (merge redirects excluded, exclusion list NOT applied —
-    * the reference matches against the raw registry here) match
-    * unmatched locations on source_name. */
-  def displayNameFallback(attached: DataFrame, sources: DataFrame): DataFrame = {
-    val uniq = sources.filter(col("merge_into_id").isNull)
-      .groupBy(col("display_name"))
-      .agg(max(col("id")).as("__sid"), max(col("is_oa")).as("__oa"),
-        count(lit(1)).as("__cnt"))
-      .filter(col("__cnt") === 1 && col("display_name").isNotNull)
-      .drop("__cnt")
-    val matched = attached.filter(col("source_id").isNotNull)
-    val unmatched = attached.filter(col("source_id").isNull)
-      .drop("source_id", "is_oa_source")
-      .join(broadcast(uniq), col("source_name") === col("display_name"), "left")
-      .withColumn("source_id", col("__sid"))
-      .withColumn("is_oa_source", col("__oa"))
-      .drop("display_name", "__sid", "__oa")
-    matched.unionByName(unmatched)
+  /** Fills the source_id of still-unmatched rows whose `key` equals the
+    * key of exactly one row of `rows` (`__fk`, `id`, `is_oa`), and their
+    * is_oa_source too when `withOa`: a broadcast left join, then a
+    * coalesce. */
+  private def fillUnique(attached: DataFrame, key: Column, rows: DataFrame,
+      withOa: Boolean): DataFrame = {
+    val idx = rows.groupBy(col("__fk"))
+      .agg(max(col("id")).as("__fid"), max(col("is_oa")).as("__foa"),
+        count(lit(1)).as("__fn"))
+      .filter(col("__fn") === 1 && col("__fk").isNotNull)
+    val joined = attached.join(broadcast(idx),
+      col("source_id").isNull && key === col("__fk"), "left")
+      .withColumn("source_id", coalesce(col("source_id"), col("__fid")))
+    (if (withOa) joined.withColumn("is_oa_source",
+        coalesce(col("is_oa_source"), col("__foa")))
+      else joined).drop("__fk", "__fid", "__foa", "__fn")
   }
 
-  /** Manual cascade over still-unmatched rows: landing/pdf base-URL
+  /** Manual cascade for still-unmatched rows: landing/pdf base-URL
     * map, DOI-prefix map, source-name map, publisher contains — the
     * hand-curated rules at the tail of the reference CTAS.
     *
@@ -207,7 +147,7 @@ object SourceMatcher {
     * `try_parse_url(url, 'HOST')`; this regex keeps userinfo/port forms
     * ("host:8080", "user@host") that parse_url would strip. Equivalent
     * for well-formed http(s) URLs, which is all this data carries. */
-  def manualFallback(attached: DataFrame): Column = {
+  private[resolve] def manualRules: Column = {
     val baseUrl = regexp_extract(
       coalesce(col("landing_page_url"), col("pdf_url")),
       "https?://(www\\.)?([^/]+)", 2)
@@ -231,20 +171,9 @@ object SourceMatcher {
       "research square" -> 4306402450L)
       .foldLeft(byDoi) { case (acc, (nm, sid)) =>
         acc.when(lower(col("source_name")) === nm, sid) }
-    val byPublisher = byName.when(
+    byName.when(
       lower(col("publisher")).contains("research square platform"),
       4306402450L)
-    coalesce(col("source_id"), byPublisher)
-  }
-
-  /** Full cascade: primary tiers → display-name fallback → manual
-    * rules. Output = locations + (source_id, is_oa_source). */
-  def attachSources(locations: DataFrame, sources: DataFrame,
-      endpointToSource: DataFrame,
-      excluded: Seq[Long] = defaultExcludedIds): DataFrame = {
-    val primary = attachPrimary(locations, sources, endpointToSource, excluded)
-    val withNames = displayNameFallback(primary, sources)
-    withNames.withColumn("source_id", manualFallback(withNames))
   }
 
   // ── Post-CTAS passes (CreateLocationsWithSources.ipynb cells 3-7) ──
@@ -252,7 +181,7 @@ object SourceMatcher {
   /** The notebook's shared normalization for the two post-CTAS MERGEs:
     * `LOWER(REGEXP_REPLACE(x, '[^\p{L}\p{N}]', ''))` — strip everything
     * but letters and digits, lowercase. */
-  def normalizedName(c: Column): Column =
+  private[resolve] def normalizedName(c: Column): Column =
     lower(regexp_replace(c, "[^\\p{L}\\p{N}]", ""))
 
   /** Source-native raw-type strings that mark a location as a book for
@@ -260,7 +189,7 @@ object SourceMatcher {
     * nulled by then — the cascade owns type — so the reference matches
     * the measured crossref/datacite enums + repo eu-repo URIs + top
     * free-text variants). */
-  val bookRawTypes: Seq[String] = Seq(
+  private[resolve] val bookRawTypes: Seq[String] = Seq(
     "book", "books", "book-chapter", "book chapter", "bookchapter",
     "ebook chapter", "book-part", "book part", "bookpart", "book section",
     "book article", "chapter", "inbook", "monograph", "printed monograph",
@@ -270,68 +199,42 @@ object SourceMatcher {
   /** Cell 7's exclusion list is the CTAS list MINUS the Research Square
     * duplicate (4306525896) — the notebook repeats the ids inline and
     * the final-fallback copy has only the 10; kept faithful. */
-  val normalizedFallbackExcludedIds: Seq[Long] =
+  private[resolve] val normalizedFallbackExcludedIds: Seq[Long] =
     defaultExcludedIds.filterNot(_ == 4306525896L)
 
-  /** Cell 3: add `normalized_source_name` and, for book-raw-typed rows
-    * with a publisher, `normalized_book_publisher`. */
-  def withNormalizedColumns(attached: DataFrame): DataFrame =
-    attached
+  /** The CTAS, then the display-name fallback and the manual rules, then
+    * the post-CTAS passes in notebook order: normalized columns
+    * (cell 3), the ebook-platform publisher match on book-raw-typed rows
+    * (cell 5), the normalized display-name final fallback (cell 7).
+    * Output = `locations` + source_id, is_oa_source,
+    * normalized_source_name, normalized_book_publisher; only the
+    * display-name fallback also sets is_oa_source (the reference MERGEs
+    * leave it untouched). `locations` must carry provenance, ids[],
+    * endpoint_id, source_name, publisher, raw_type, best_doi,
+    * landing_page_url and pdf_url. The display-name fallback matches
+    * the raw registry; the exclusion lists apply to the CTAS and to
+    * cell 7 only. */
+  def attachSourcesFull(locations: DataFrame, sources: DataFrame,
+      endpointToSource: DataFrame,
+      excluded: Seq[Long] = defaultExcludedIds): DataFrame = {
+    val live = sources.filter(col("merge_into_id").isNull)
+    def rows(key: Column, from: DataFrame = live) =
+      from.select(key.as("__fk"), col("id"), col("is_oa"))
+    val ctas = fillUnique(
+        bestMatch(locations, registryIndex(live, endpointToSource, excluded)),
+        col("source_name"), rows(col("display_name")), withOa = true)
+      .withColumn("source_id", coalesce(col("source_id"), manualRules))
       .withColumn("normalized_source_name", normalizedName(col("source_name")))
       .withColumn("normalized_book_publisher",
         when(lower(col("raw_type")).isin(bookRawTypes: _*) &&
           col("publisher").isNotNull, normalizedName(col("publisher"))))
-
-  /** Cell 5 MERGE: 'ebook platform' registry rows whose NORMALIZED
-    * publisher is unique fill still-unmatched book-typed locations by
-    * normalized publisher. Only source_id is set (the reference MERGE
-    * leaves is_oa_source untouched). */
-  def ebookPublisherFill(attached: DataFrame, sources: DataFrame): DataFrame = {
-    val idx = sources
-      .filter(col("type") === "ebook platform" && col("publisher").isNotNull &&
-        col("merge_into_id").isNull)
-      .select(col("id").as("__bp_sid"),
-        normalizedName(col("publisher")).as("__np"))
-      .groupBy(col("__np"))
-      .agg(max(col("__bp_sid")).as("__bp_sid"), count(lit(1)).as("__cnt"))
-      .filter(col("__cnt") === 1).drop("__cnt")
-    attached.join(broadcast(idx),
-        col("source_id").isNull && col("normalized_book_publisher").isNotNull &&
-          col("normalized_book_publisher") === col("__np"), "left")
-      .withColumn("source_id", coalesce(col("source_id"), col("__bp_sid")))
-      .drop("__np", "__bp_sid")
-  }
-
-  /** Cell 7 MERGE — the final fallback: registry rows whose NORMALIZED
-    * display_name is unique (merge redirects out, cell-7 exclusion list
-    * applied) fill still-unmatched locations by normalized source name.
-    * Two display names that collide after normalization count as 2 and
-    * are dropped by the uniqueness gate. Only source_id is set. */
-  def normalizedDisplayNameFill(attached: DataFrame, sources: DataFrame,
-      excluded: Seq[Long] = normalizedFallbackExcludedIds): DataFrame = {
-    val idx = sources
-      .filter(col("merge_into_id").isNull && !col("id").isin(excluded: _*))
-      .select(col("id").as("__nd_sid"),
-        normalizedName(col("display_name")).as("__nn"))
-      .groupBy(col("__nn"))
-      .agg(max(col("__nd_sid")).as("__nd_sid"), count(lit(1)).as("__cnt"))
-      .filter(col("__cnt") === 1 && col("__nn").isNotNull).drop("__cnt")
-    attached.join(broadcast(idx),
-        col("source_id").isNull && col("normalized_source_name") === col("__nn"),
-        "left")
-      .withColumn("source_id", coalesce(col("source_id"), col("__nd_sid")))
-      .drop("__nn", "__nd_sid")
-  }
-
-  /** CTAS + the three post-CTAS passes in notebook order: normalized
-    * columns (cell 3) → ebook-platform publisher match (cell 5) →
-    * normalized display-name final fallback (cell 7). `locations` must
-    * additionally carry `raw_type` and `publisher`. */
-  def attachSourcesFull(locations: DataFrame, sources: DataFrame,
-      endpointToSource: DataFrame,
-      excluded: Seq[Long] = defaultExcludedIds): DataFrame = {
-    val ctas = attachSources(locations, sources, endpointToSource, excluded)
-    normalizedDisplayNameFill(
-      ebookPublisherFill(withNormalizedColumns(ctas), sources), sources)
+    val ebook = fillUnique(ctas, col("normalized_book_publisher"),
+      rows(normalizedName(col("publisher")), live.filter(
+        col("type") === "ebook platform" && col("publisher").isNotNull)),
+      withOa = false)
+    fillUnique(ebook, col("normalized_source_name"),
+      rows(normalizedName(col("display_name")),
+        live.filter(!col("id").isin(normalizedFallbackExcludedIds: _*))),
+      withOa = false)
   }
 }

@@ -3,7 +3,7 @@ package graft.serve
 import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The partitioned full-snapshot export layout (reference:
@@ -128,112 +128,86 @@ object SnapshotWriter {
     f.delete()
   }
 
-  /** Walk `updated_date=*` and return (relativePath, size, fullPath)
-    * sorted by relative path. */
-  private def enumerate(outDir: String, ext: String): Seq[(String, Long, String)] = {
+  /** Walk `updated_date=*` and return (relativePath, size) sorted by
+    * relative path. */
+  private def enumerate(outDir: String, ext: String): Seq[(String, Long)] = {
     val root = new File(outDir)
     Option(root.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith("updated_date=")).toSeq
       .flatMap { p =>
         Option(p.listFiles()).getOrElse(Array.empty)
           .filter(_.getName.endsWith(s".$ext"))
-          .map(f => (s"${p.getName}/${f.getName}", f.length(),
-            f.getAbsolutePath))
+          .map(f => (s"${p.getName}/${f.getName}", f.length()))
       }.sortBy(_._1)
   }
 
-  private def partitionedWrite(df: DataFrame, counts: Option[DataFrame],
-      recordsPerFile: Int)(write: DataFrame => Unit): Unit = {
-    val prepped = counts match {
-      case Some(c) =>
-        withSalt(df, c)
-          .repartition(col("_partition_date"), col("salt")).drop("salt")
-      case None =>
-        df.withColumn("_partition_date", partitionDate).coalesce(1)
-    }
-    write(prepped)
-  }
+  /** Rows per file of `files` (keyed by the last two path segments,
+    * `updated_date=…/part_…`): each read partition tallies its own
+    * files and the driver sums the small maps, so no file path is ever
+    * shuffled. With no data column selected, a parquet read decodes
+    * nothing but footers. */
+  private def rowsPerFile(files: DataFrame): Map[String, Long] =
+    files.select(input_file_name()).rdd
+      .mapPartitions(rows => Iterator.single(rows.foldLeft(Map.empty[String, Long]) {
+        (m, r) => val p = r.getString(0); m.updated(p, m.getOrElse(p, 0L) + 1L)
+      }))
+      .collect().iterator.flatten.toSeq
+      .groupMapReduce(_._1.split("/").takeRight(2).mkString("/"))(_._2)(_ + _)
 
-  /** Gzip JSONL export for one entity. Returns the per-entity meta
-    * (per-file record counts come from ONE distributed read grouped
-    * by input file, not a per-file driver loop). */
-  def exportJsonl(spark: SparkSession, df: DataFrame, outBase: String,
-      entity: String, salt: Boolean = false,
-      recordsPerFile: Int = 400000,
-      counts: Option[DataFrame] = None): EntityMeta = {
-    val outDir = s"$outBase/jsonl/$entity"
+  /** One entity in one format: partition by date (salted inside hot
+    * dates when `salt`), write through `write`, rename to the reference
+    * layout, then count each file's rows by reading it back through
+    * `read` and write the per-entity meta. */
+  private def exportEntity(df: DataFrame, outBase: String, entity: String,
+      format: String, writtenExt: String, ext: String, salt: Boolean,
+      recordsPerFile: Int, counts: Option[DataFrame])(
+      write: DataFrameWriter[Row] => String => Unit,
+      read: String => DataFrame): EntityMeta = {
+    val outDir = s"$outBase/$format/$entity"
     deleteRec(new File(outDir))
-    val c = if (salt) Some(counts.getOrElse(dateCounts(df))) else None
-    partitionedWrite(df, c, recordsPerFile) { d =>
-      d.write.mode("overwrite")
-        .option("compression", "gzip")
-        .option("maxRecordsPerFile", recordsPerFile)
-        .option("ignoreNullFields", "false")
-        .partitionBy("_partition_date")
-        .json(outDir)
+    val prepped =
+      if (salt) withSalt(df, counts.getOrElse(dateCounts(df)))
+        .repartition(col("_partition_date"), col("salt")).drop("salt")
+      else df.withColumn("_partition_date", partitionDate).coalesce(1)
+    write(prepped.write.mode("overwrite")
+      .option("maxRecordsPerFile", recordsPerFile)
+      .partitionBy("_partition_date"))(outDir)
+    renamePartitions(outDir, writtenExt, ext)
+    val files = enumerate(outDir, ext)
+    val perFile =
+      if (files.isEmpty) Map.empty[String, Long]
+      else rowsPerFile(read(s"$outDir/updated_date=*"))
+    val entries = files.map { case (rel, size) =>
+      FileEntry(s"$outDir/$rel", size, perFile.getOrElse(rel, 0L))
     }
-    renamePartitions(outDir, "gz", "gz")
-    val files = enumerate(outDir, "gz")
-    val countsByFile: Map[String, Long] =
-      if (files.isEmpty) Map.empty
-      else spark.read.text(s"$outDir/updated_date=*")
-        .groupBy(input_file_name().as("path")).count()
-        .collect()
-        .map(r => (r.getString(0).split("/").takeRight(2).mkString("/"),
-          r.getLong(1)))
-        .toMap
-    val entries = files.map { case (rel, size, _) =>
-      FileEntry(s"$outDir/$rel", size, countsByFile.getOrElse(rel, 0L))
-    }
-    val meta = EntityMeta(entity, "jsonl",
+    val meta = EntityMeta(entity, format,
       entries.map(_.recordCount).sum, entries.map(_.contentLength).sum,
       entries)
     writeMeta(outBase, meta)
     meta
   }
 
+  /** Gzip JSONL export for one entity. Returns the per-entity meta. */
+  def exportJsonl(spark: SparkSession, df: DataFrame, outBase: String,
+      entity: String, salt: Boolean = false,
+      recordsPerFile: Int = 400000,
+      counts: Option[DataFrame] = None): EntityMeta =
+    exportEntity(df, outBase, entity, "jsonl", "gz", "gz", salt, recordsPerFile, counts)(
+      w => w.option("compression", "gzip").option("ignoreNullFields", "false").json(_),
+      spark.read.text(_))
+
   /** Snappy parquet export for one entity — same partition/salt shape;
     * INT64-micros timestamps (the reference pins outputTimestampType
-    * so non-Spark readers can decode). Footer-only record counts. */
+    * so non-Spark readers can decode). */
   def exportParquet(spark: SparkSession, df: DataFrame, outBase: String,
       entity: String, salt: Boolean = false,
       recordsPerFile: Int = 400000,
       counts: Option[DataFrame] = None): EntityMeta = {
-    val outDir = s"$outBase/parquet/$entity"
-    deleteRec(new File(outDir))
     spark.conf.set("spark.sql.parquet.outputTimestampType",
       "TIMESTAMP_MICROS")
-    val c = if (salt) Some(counts.getOrElse(dateCounts(df))) else None
-    partitionedWrite(df, c, recordsPerFile) { d =>
-      d.write.mode("overwrite")
-        .option("compression", "snappy")
-        .option("maxRecordsPerFile", recordsPerFile)
-        .partitionBy("_partition_date")
-        .parquet(outDir)
-    }
-    renamePartitions(outDir, "snappy.parquet", "parquet")
-    val files = enumerate(outDir, "parquet")
-    // Per-file record counts from ONE distributed read grouped by
-    // input file (same shape as the jsonl path) — never a per-file
-    // driver `count()` loop, which at a 500M-row export is ~1,250
-    // serial tiny jobs. The empty projection keeps the scan
-    // footer-weight: no data columns are decoded.
-    val countsByFile: Map[String, Long] =
-      if (files.isEmpty) Map.empty
-      else spark.read.parquet(s"$outDir/updated_date=*")
-        .groupBy(input_file_name().as("path")).count()
-        .collect()
-        .map(r => (r.getString(0).split("/").takeRight(2).mkString("/"),
-          r.getLong(1)))
-        .toMap
-    val entries = files.map { case (rel, size, _) =>
-      FileEntry(s"$outDir/$rel", size, countsByFile.getOrElse(rel, 0L))
-    }
-    val meta = EntityMeta(entity, "parquet",
-      entries.map(_.recordCount).sum, entries.map(_.contentLength).sum,
-      entries)
-    writeMeta(outBase, meta)
-    meta
+    exportEntity(df, outBase, entity, "parquet", "snappy.parquet", "parquet", salt,
+      recordsPerFile, counts)(
+      w => w.option("compression", "snappy").parquet(_), spark.read.parquet(_))
   }
 
   private def writeMeta(outBase: String, m: EntityMeta): Unit = {

@@ -25,6 +25,16 @@ class SnapshotWriterSpec extends AnyFunSuite {
       col("created_date").cast("timestamp"),
       concat(lit("doc "), col("id")).as("body"))
 
+  /** Each file's record count, keyed `updated_date=…/part_NNNN.ext`. */
+  private def perFile(m: SnapshotWriter.EntityMeta): Map[String, Long] =
+    m.files.map(f => f.url.split("/").takeRight(2).mkString("/") -> f.recordCount).toMap
+
+  private def expectedPerFile(ext: String): Map[String, Long] = Map(
+    s"updated_date=2023-06-15/part_0000.$ext" -> 1L,
+    s"updated_date=2024-01-01/part_0000.$ext" -> 2L,
+    s"updated_date=2024-01-01/part_0001.$ext" -> 1L,
+    s"updated_date=2024-01-02/part_0000.$ext" -> 1L)
+
   test("jsonl export: layout, part naming, per-file counts, meta") {
     val out = Files.createTempDirectory("graft-snap").toString
     val meta = SnapshotWriter.exportJsonl(spark, fixture, out, "works",
@@ -39,6 +49,7 @@ class SnapshotWriterSpec extends AnyFunSuite {
     assert(meta.entity === "works" && meta.format === "jsonl")
     assert(meta.recordCount === 5)
     assert(meta.files.map(_.recordCount).sum === 5)
+    assert(perFile(meta) === expectedPerFile("gz"))
     assert(meta.files.forall(_.contentLength > 0))
     // meta JSON written and update_meta-parseable
     val metaFile = s"$out/_meta/jsonl/works.json"
@@ -57,6 +68,8 @@ class SnapshotWriterSpec extends AnyFunSuite {
     val (j, p) = SnapshotWriter.exportAllFormats(spark, fixture, out,
       "works", salt = true, recordsPerFile = 2)
     assert(j.recordCount === 5 && p.recordCount === 5)
+    assert(perFile(j) === expectedPerFile("gz"))
+    assert(perFile(p) === expectedPerFile("parquet"))
     val pf = new File(s"$out/parquet/works/updated_date=2024-01-01")
       .listFiles().map(_.getName)
     assert(pf.forall(n => n.startsWith("part_") && n.endsWith(".parquet")))
