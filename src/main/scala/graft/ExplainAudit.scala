@@ -24,6 +24,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    and no SortMergeJoin (the flags are landed before their join)
   *  - q71: no SortMergeJoin, and each location input scanned once
   *    (the source attach is one pass, not one branch per provenance)
+  *  - q90: the publisher stats and totals are one rollup (no separate
+  *    aggregate keyed on publisher_id for each)
   *  - q115/q134: the checks read the plans of the landings the query
   *    wrote as well as its own (the overlap count and the URL election
   *    run inside landings)
@@ -57,7 +59,7 @@ object ExplainAudit extends AdaptiveSparkPlanHelper {
 
   /** Exact number of `check(...)` calls a full run performs (named
     * checks + the generic per-query single-partition screen). */
-  val ExpectedChecks = 270
+  val ExpectedChecks = 271
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -462,6 +464,16 @@ object ExplainAudit extends AdaptiveSparkPlanHelper {
     check("""partial_\w*topkrows""".r.findFirstIn(p75x.toLowerCase).isDefined,
       "q75 topics_and_share elects top-25 in the bounded aggregate — " +
         "buffer ∝ k, not the topic vocabulary")
+
+    // each build of q90 (the snapshot's and the stamped one) aggregates
+    // its work pairs on publisher_id in the rollup, which both the
+    // attach and the own role read, in counts_by_year's collect and in
+    // the roles array: 4 aggregates, each a partial and a final half
+    val p90 = plan("q90_publishers_api")
+    check("""(?m)^Keys \[1\]: \[publisher_id#\d+L?\]$""".r
+        .findAllMatchIn(p90).size <= 2 * 4 * 2,
+      "q90 publisher stats and totals are one rollup — no separate " +
+        "aggregate over the same work pairs for each")
 
     val p89x = plan("q89_institutions_api")
     check("""partial_\w*topkrows""".r.findFirstIn(p89x.toLowerCase).isDefined,

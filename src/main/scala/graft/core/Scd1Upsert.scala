@@ -71,32 +71,4 @@ object Scd1Upsert {
   /** Live (non-deleted) view of a tombstoned state. */
   def current(state: DataFrame): DataFrame =
     state.filter(!col("__deleted")).drop("__deleted")
-
-  /** Apply a change batch onto existing state: union then latest-wins.
-    * Target rows count as sequence −∞ ties-lose (i.e. any change with
-    * sequence ≥ target's stored sequence wins; `ignoreNullUpdates`
-    * refinement can be layered with per-column coalesce by the caller).
-    * NOTE: deletes are dropped, not tombstoned — replay of OLDER
-    * changes after a delete can resurrect a key; use
-    * [[applyTombstoned]] for incremental/streaming application. */
-  def apply(
-      target: DataFrame,
-      changes: DataFrame,
-      keys: Seq[String],
-      sequenceBy: Column,
-      tiebreak: Seq[Column] = Nil,
-      deleteWhen: Option[Column] = None): DataFrame = {
-    val isDel = deleteWhen.getOrElse(lit(false))
-    val tagged = changes.withColumn("__is_delete", coalesce(isDel, lit(false)))
-      .withColumn("__is_new", lit(true))
-    val base = target.withColumn("__is_delete", lit(false))
-      .withColumn("__is_new", lit(false))
-    val unioned = base.unionByName(tagged.select(base.columns.map(col).toSeq: _*))
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy((sequenceBy.desc +: col("__is_new").desc +: tiebreak.map(_.desc)): _*)
-    unioned
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && !col("__is_delete"))
-      .drop("__rn", "__is_delete", "__is_new")
-  }
 }

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 /** Authors satellite entity build (reference: notebooks/authors/
   * CreateAuthors.ipynb — author_works_staging explode, author_topics
   * grouping-sets counts+shares, top-5 x_concepts, affiliations with
-  * active-year sets, counts_by_year, content-hash change stamping).
+  * active-year sets, counts_by_year; the content-hash change stamping
+  * is [[graft.core.Incremental]]'s).
   *
   * Scale: every aggregate shuffles once on author_id with map-side
   * partials; the topics pass computes per-author counts AND corpus
@@ -125,11 +126,8 @@ object Authors {
     * citation counts. Input: (author_id, pub_year, is_oa,
     * work_cited_by_count). */
   def countsByYear(staging: DataFrame): DataFrame =
-    staging.filter(col("pub_year").isNotNull)
-      .groupBy(col("author_id"), col("pub_year").cast("int").as("year"))
-      .agg(count(lit(1)).cast("int").as("works_count"),
-        sum(when(col("is_oa"), 1).otherwise(0)).cast("int").as("oa_works_count"),
-        sum(col("work_cited_by_count")).cast("int").as("cited_by_count"))
+    Metrics.yearly(staging, "author_id",
+      Metrics.intCounts(count(lit(1)), col("work_cited_by_count")): _*)
 
   /** Last known institution: the institution on the author's most recent
     * work (max_by over (pub_year, work_id) — deterministic tiebreak). */
@@ -139,29 +137,4 @@ object Authors {
       .agg(max_by(col("institution_id"),
         struct(col("pub_year"), col("work_id"), col("institution_id")))
         .as("last_known_institution"))
-
-  /** Content hash over the serialized author row (cell 5/9): drives
-    * updated_date stamping — only changed authors get a new date. The
-    * hash includes every exported field EXCEPT topic_share (corpus-
-    * dependent, the reference excludes it for the same reason). */
-  def contentHash(cols: Seq[Column]): Column =
-    xxhash64(concat_ws("|", cols.map(c => coalesce(c.cast("string"), lit(""))): _*))
-
-  /** Stamp updated_date by hash comparison against the previous
-    * snapshot (cell 9 MERGE): unchanged rows keep their date. */
-  def stampUpdated(current: DataFrame, prev: Option[DataFrame], idCol: String,
-      hashCol: Column, now: Column): DataFrame = {
-    val hashed = current.withColumn("__h", hashCol)
-    prev match {
-      case None => hashed.withColumn("updated_date", now).drop("__h")
-      case Some(p) =>
-        val ph = p.select(col(idCol).as("__pid"), col("__h").as("__ph"),
-          col("updated_date").as("__pdate"))
-        hashed.join(ph, col(idCol) === col("__pid"), "left")
-          .withColumn("updated_date",
-            when(col("__pid").isNull || col("__h") =!= col("__ph"), now)
-              .otherwise(col("__pdate")))
-          .drop("__pid", "__ph", "__pdate", "__h")
-    }
-  }
 }

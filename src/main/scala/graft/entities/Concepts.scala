@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   *    dedup then counts aggregation, joined to registry metadata
   *    (wikipedia JSON parse for concepts, min created date for
   *    keywords).
-  *  - change detection across rebuilds: [[Authors.contentHash]] /
-  *    [[Authors.stampUpdated]] (the hash cells are shared verbatim
-  *    across the satellite API notebooks).
+  *  - change detection across rebuilds: [[graft.core.Incremental]]
+  *    (the hash cells are shared verbatim across the satellite API
+  *    notebooks).
   *
   * Scale: registry sides are vocabulary-bounded (~65K concepts) —
   * broadcast; the works side takes exactly one shuffle per
@@ -167,7 +167,9 @@ object Concepts {
 
   // The API notebooks' content-hash change detection (xxhash64 over
   // '|'-joined columns, updated_date preserved unless content moved)
-  // is [[Authors.contentHash]] + [[Authors.stampUpdated]] — the same
-  // cells appear verbatim in CreateAuthors/CreateConceptsAPI/
-  // CreateKeywordsAPI; tested in AuthorsSpec.
+  // is [[graft.core.Incremental.hashSnapshot]] +
+  // [[graft.core.Incremental.stampUpdatedDate]] — the same cells
+  // appear verbatim in CreateAuthors/CreateConceptsAPI/
+  // CreateKeywordsAPI; tested in IncrementalSpec and the entity API
+  // specs.
 }

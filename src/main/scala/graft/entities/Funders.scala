@@ -47,19 +47,6 @@ object Funders {
       col("cited_by_count").cast("int").as("cited_by_count"),
       col("open_access.is_oa").cast("boolean").as("is_oa")), Seq("work_id"))
 
-  /** Per-(funder, year) counts collected newest-year-first
-    * (`counts_by_year` correlated subquery). */
-  def countsByYear(wfEnriched: DataFrame): DataFrame =
-    wfEnriched.filter(col("pub_year").isNotNull)
-      .groupBy(col("funder_id"), col("pub_year").cast("int").as("year"))
-      .agg(countDistinct(col("work_id")).cast("int").as("works_count"),
-        sum(when(col("is_oa"), 1).otherwise(0)).cast("int").as("oa_works_count"),
-        sum(col("cited_by_count")).cast("int").as("cited_by_count"))
-      .groupBy(col("funder_id"))
-      .agg(sort_array(collect_list(struct(col("year"), col("works_count"),
-        col("oa_works_count"), col("cited_by_count"))), asc = false)
-        .as("counts_by_year"))
-
   /** Roles assembly (`funder_roles` CTE): the funder's own role plus
     * linked institutions/publishers from the entity-link table, each
     * with its API works_count; one row per (funder, role) by
@@ -121,7 +108,11 @@ object Funders {
   def assemble(funders: DataFrame, wfEnriched: DataFrame, awards: DataFrame,
       entityLinks: DataFrame, institutionCounts: DataFrame,
       publisherCounts: DataFrame, recentYearMin: Int): DataFrame = {
-    val metrics = Metrics.summaryStats(wfEnriched, "funder_id", recentYearMin)
+    // a funder listed twice on one work counts the work once
+    val metrics = Metrics.rollup(wfEnriched, "funder_id",
+      countDistinct(col("work_id")).cast("int"), recentYearMin)
+    val countsByYear = Metrics.countsByYear(wfEnriched, "funder_id",
+      Metrics.intCounts(countDistinct(col("work_id"))): _*)
     val awardCounts = awards.filter(col("funder_id").isNotNull)
       .groupBy(col("funder_id"))
       .agg(count(lit(1)).cast("int").as("awards_count"))
@@ -132,7 +123,7 @@ object Funders {
       .join(metrics, Seq("funder_id"), "left")
       .join(awardCounts, Seq("funder_id"), "left")
       .join(rolesDf, Seq("funder_id"), "left")
-      .join(countsByYear(wfEnriched), Seq("funder_id"), "left")
+      .join(countsByYear, Seq("funder_id"), "left")
       .select(
         col("funder_id").as("id"),
         col("display_name"),
@@ -147,15 +138,11 @@ object Funders {
           col("ror_id").as("ror"), col("wikidata_id").as("wikidata"),
           col("crossref_id").as("crossref"), col("doi").as("doi")).as("ids"),
         coalesce(col("works_count"), lit(0)).as("works_count"),
-        coalesce(col("cited_by_count"), lit(0)).as("cited_by_count"),
+        coalesce(col("cited_by_count").cast("int"), lit(0))
+          .as("cited_by_count"),
         coalesce(col("awards_count"), lit(0)).as("awards_count"),
         coalesce(col("roles"), emptyRoles).as("roles"),
         col("counts_by_year"),
-        struct(
-          coalesce(col("recent_mean_citedness"), lit(0.0))
-            .as("2yr_mean_citedness"),
-          col("h_index"),
-          coalesce(col("i10_index"), lit(0)).as("i10_index"))
-          .as("summary_stats"))
+        Metrics.summaryStruct.as("summary_stats"))
   }
 }

@@ -47,16 +47,4 @@ object Institutions {
         x => x.getField("ancestor_id")).as("lineage_ids"),
         count(lit(1)).cast("int").as("n_ancestors"),
         max(col("generation")).cast("int").as("max_generation"))
-
-  /** Roll descendant counts up the hierarchy: every institution's
-    * measure is credited to itself AND every ancestor (the API's
-    * lineage-inclusive works_count semantics). */
-  def lineageRollup(measures: DataFrame, anc: DataFrame, idCol: String,
-      valueCol: String): DataFrame = {
-    val self = measures.select(col(idCol).as("target_id"), col(valueCol).as("__v"))
-    val up = measures.join(anc, col(idCol) === col("institution_id"))
-      .select(col("ancestor_id").as("target_id"), col(valueCol).as("__v"))
-    self.unionByName(up).groupBy(col("target_id"))
-      .agg(sum(col("__v")).as(valueCol))
-  }
 }

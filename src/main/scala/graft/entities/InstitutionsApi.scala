@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * The q89 fixture pins this asymmetry with double-affiliation works.
   *
   * Deviations (documented): the recent mean uses the e6-exact floor
-  * protocol of [[Metrics.summaryStats]] in place of the reference's
+  * protocol of [[Metrics.rollup]] in place of the reference's
   * engine AVG (cross-engine FP determinism); `recentYearMin` pins the
   * reference's `YEAR(current_date()) - 2`; the roles dedup window
   * orders by `works_count DESC NULLS LAST, id` exactly as the
@@ -63,42 +63,6 @@ object InstitutionsApi {
         col("cited_by_count").cast("int").as("cited_by_count"),
         col("open_access.is_oa").cast("boolean").as("is_oa"),
         col("topics").as("work_topics"))
-
-  /** `main_agg_pre` + `main_agg` fused: distinct works_count, raw-grain
-    * citation totals / i10 / h-index buffer / recent mean (e6-exact). */
-  def mainAgg(wb: DataFrame, recentYearMin: Int): DataFrame = {
-    val recent = when(col("pub_year") >= recentYearMin, col("cited_by_count"))
-    val mean = sum(recent).cast("double") /
-      nullif(count(recent).cast("double"), lit(0.0))
-    wb.groupBy(col("institution_id"))
-      .agg(
-        countDistinct(col("work_id")).cast("int").as("works_count"),
-        sum(col("cited_by_count")).cast("int").as("cited_by_count"),
-        count(when(col("cited_by_count") >= 10, 1)).cast("int").as("i10_index"),
-        (floor(mean * 1000000 + 0.5) / 1000000.0).as("recent_mean_citedness"),
-        sort_array(collect_list(col("cited_by_count")), asc = false)
-          .as("__sorted"))
-      .withColumn("h_index", Metrics.hIndex(col("__sorted")).cast("int"))
-      .drop("__sorted")
-  }
-
-  /** `counts_by_year_agg`: DISTINCT (work, institution) pairs → per-year
-    * counts, collected newest-first, years below `yearMin` dropped (the
-    * reference FILTERs `x.year >= 2010` after collecting). */
-  def countsByYear(wb: DataFrame, yearMin: Int = 2010): DataFrame =
-    wb.select(col("work_id"), col("institution_id"), col("pub_year"),
-        col("cited_by_count"), col("is_oa"))
-      .distinct()
-      .filter(col("pub_year").isNotNull)
-      .groupBy(col("institution_id"), col("pub_year").cast("int").as("year"))
-      .agg(countDistinct(col("work_id")).cast("int").as("works_count"),
-        sum(when(col("is_oa"), 1).otherwise(0)).cast("int").as("oa_works_count"),
-        sum(col("cited_by_count")).cast("int").as("cited_by_count"))
-      .filter(col("year") >= yearMin)
-      .groupBy(col("institution_id"))
-      .agg(sort_array(collect_list(struct(col("year"), col("works_count"),
-        col("oa_works_count"), col("cited_by_count"))), asc = false)
-        .as("counts_by_year"))
 
   /** `institution_roles` ([[EntityRoles.roles]]): the own institution
     * role (works_count from main_agg) plus linked publisher and funder
@@ -200,40 +164,39 @@ object InstitutionsApi {
       rorTypes: DataFrame, rorLabels: DataFrame, rorAliases: DataFrame,
       recentYearMin: Int): DataFrame = {
     val superArr = array(superSystemIds.map(lit(_)): _*)
-    val lineage = ancestors.select(col("institution_id"),
+    val lineage = ancestors.select(col("institution_id").as("id"),
       filter(col("lineage_ids"), x => !array_contains(superArr, x))
         .as("lineage_ids"))
-    val ma = mainAgg(wb, recentYearMin)
-    val ts = SourcesApi.topicsAndShare(wb, topK = 25, key = "institution_id")
-      .withColumnRenamed("source_id", "institution_id")
-    val emptySummary = struct(lit(0.0).as("2yr_mean_citedness"),
-      lit(0).cast("int").as("h_index"), lit(0).cast("int").as("i10_index"))
+    // citations per occurrence, works counted distinct (the grain quirk
+    // above); counts_by_year over the DISTINCT (work, institution) pairs
+    // from 2010 on (the reference FILTERs `x.year >= 2010`)
+    val ma = Metrics.rollup(wb, "institution_id",
+      countDistinct(col("work_id")).cast("int"), recentYearMin)
+    val pairs = wb.select(col("work_id"), col("institution_id"),
+      col("pub_year"), col("cited_by_count"), col("is_oa")).distinct()
+    val cby = Metrics.countsByYear(pairs.filter(col("pub_year") >= 2010),
+      "institution_id", Metrics.intCounts(countDistinct(col("work_id"))): _*)
     val bareRor = regexp_replace(col("ror_id"), "https://ror\\.org/", "")
+    def byId(df: DataFrame): DataFrame =
+      df.withColumnRenamed("institution_id", "id")
 
     institutions.filter(col("merge_into_id").isNull)
       .join(broadcast(ror.select(col("id").as("ror_id"),
         col("status").as("__status"))), Seq("ror_id"), "left")
-      .join(ma.withColumnRenamed("institution_id", "__ma_id"),
-        col("id") === col("__ma_id"), "left").drop("__ma_id")
-      .join(ts.withColumnRenamed("institution_id", "__ts_id"),
-        col("id") === col("__ts_id"), "left").drop("__ts_id")
-      .join(broadcast(lineage.withColumnRenamed("institution_id", "__il_id")),
-        col("id") === col("__il_id"), "left").drop("__il_id")
+      .join(byId(ma), Seq("id"), "left")
+      .join(byId(SourcesApi.topicsAndShare(wb, topK = 25,
+        key = "institution_id")), Seq("id"), "left")
+      .join(broadcast(lineage), Seq("id"), "left")
       .join(broadcast(rorAlternativeNames(rorLabels, rorAliases)
           .select(col("ror_id").as("__ra_ror"), col("alt_names"))),
         bareRor === col("__ra_ror"), "left").drop("__ra_ror")
-      .join(roles(institutions, entityLinks, ma, entityCounts)
-          .withColumnRenamed("institution_id", "__ir_id")
-          .withColumnRenamed("roles", "__roles"),
-        col("id") === col("__ir_id"), "left").drop("__ir_id")
-      .join(broadcast(repositories(sources, institutions)
-          .withColumnRenamed("institution_id", "__rp_id")),
-        col("id") === col("__rp_id"), "left").drop("__rp_id")
-      .join(broadcast(associatedInstitutions(institutions, rorRelationships,
-          rorTypes).withColumnRenamed("institution_id", "__ai_id")),
-        col("id") === col("__ai_id"), "left").drop("__ai_id")
-      .join(countsByYear(wb).withColumnRenamed("institution_id", "__cy_id"),
-        col("id") === col("__cy_id"), "left").drop("__cy_id")
+      .join(byId(roles(institutions, entityLinks, ma, entityCounts)),
+        Seq("id"), "left")
+      .join(broadcast(byId(repositories(sources, institutions))), Seq("id"),
+        "left")
+      .join(broadcast(byId(associatedInstitutions(institutions,
+        rorRelationships, rorTypes))), Seq("id"), "left")
+      .join(byId(cby), Seq("id"), "left")
       .select(
         col("id"),
         col("ror_id").as("ror"),
@@ -256,13 +219,14 @@ object InstitutionsApi {
             coalesce(col("alt_names"), array().cast("array<string>")))))),
           array().cast("array<string>")).as("display_name_alternatives"),
         coalesce(col("works_count"), lit(0)).as("works_count"),
-        coalesce(col("cited_by_count"), lit(0)).as("cited_by_count"),
+        coalesce(col("cited_by_count").cast("int"), lit(0))
+          .as("cited_by_count"),
         struct(
           concat(lit(OA + "I"), col("id").cast("string")).as("openalex"),
           col("ror_id").as("ror"), col("grid_id").as("grid"),
           col("wiki_page").as("wikipedia"), col("wikidata_id").as("wikidata"))
           .as("ids"),
-        coalesce(col("__roles"), array().cast(
+        coalesce(col("roles"), array().cast(
           "array<struct<role:string,id:string,works_count:int>>")).as("roles"),
         coalesce(col("repositories"), array().cast(
           "array<struct<id:string,display_name:string," +
@@ -284,11 +248,7 @@ object InstitutionsApi {
         coalesce(col("counts_by_year"), array().cast(
           "array<struct<year:int,works_count:int,oa_works_count:int," +
             "cited_by_count:int>>")).as("counts_by_year"),
-        when(col("works_count").isNotNull, struct(
-            coalesce(col("recent_mean_citedness"), lit(0.0))
-              .as("2yr_mean_citedness"),
-            col("h_index"), col("i10_index")))
-          .otherwise(emptySummary).as("summary_stats"),
+        Metrics.zeroedSummaryStruct.as("summary_stats"),
         coalesce(col("__status"), lit("active")).as("status"),
         concat(lit("https://api.openalex.org/works?filter=institutions.id:I"),
           col("id").cast("string")).as("works_api_url"),

@@ -19,12 +19,13 @@ import org.apache.spark.sql.functions._
   * no ordering (partition-order nondeterminism — unlike the
   * institutions build, which ARRAY_SORTs); we sort (role ASC, id ASC)
   * so the output is well-defined. The recent mean uses the e6-exact
-  * floor protocol of [[Metrics.summaryStats]]; `recentYearMin` /
+  * floor protocol of [[Metrics.rollup]]; `recentYearMin` /
   * `yearMax` pin the reference's `YEAR(current_date())` horizons.
   *
   * Scale posture: one explode + distinct of the works table (a single
-  * shuffle on the pair key), then single hash aggregations keyed by
-  * publisher_id; the registry, entity-link, and counts inputs are
+  * shuffle on the pair key), then one [[Metrics.rollup]] (stats and
+  * totals in one hash aggregation) and one counts_by_year pass keyed
+  * by publisher_id; the registry, entity-link, and counts inputs are
   * registry-sized broadcasts.
   */
 object PublishersApi {
@@ -46,50 +47,12 @@ object PublishersApi {
         col("publication_year"), col("cited_by_count"))
       .distinct()
 
-  /** `publisher_total_counts` + `publisher_yearly_counts` +
-    * `work_counts_by_publisher_id` fused: totals plus the year-bounded
-    * newest-first counts_by_year (no oa column in this entity's
-    * year structs — cell 1). */
-  def workCounts(pairs: DataFrame, yearMin: Int = 2014,
-      yearMax: Int): DataFrame = {
-    val totals = pairs.groupBy(col("publisher_id"))
-      .agg(count(col("work_id")).as("works_count"),
-        sum(col("cited_by_count")).as("cited_by_count"))
-    val yearly = pairs
-      .filter(col("publication_year").isNotNull &&
-        col("publication_year") >= yearMin &&
-        col("publication_year") <= yearMax)
-      .groupBy(col("publisher_id"), col("publication_year").as("year"))
-      .agg(count(col("work_id")).as("works_count"),
-        sum(col("cited_by_count")).as("cited_by_count"))
-      .groupBy(col("publisher_id"))
-      .agg(sort_array(collect_list(struct(col("year"), col("works_count"),
-        col("cited_by_count"))), asc = false).as("counts_by_year"))
-    totals.join(yearly, Seq("publisher_id"), "left")
-  }
-
-  /** `publisher_stats`: recent mean (e6-exact), i10, and the DESC
-    * citation buffer the h-index folds over. */
-  def stats(pairs: DataFrame, recentYearMin: Int): DataFrame = {
-    val recent = when(col("publication_year") >= recentYearMin,
-      col("cited_by_count"))
-    val mean = sum(recent).cast("double") /
-      nullif(count(recent).cast("double"), lit(0.0))
-    pairs.groupBy(col("publisher_id"))
-      .agg(
-        count(when(col("cited_by_count") >= 10, 1)).cast("int")
-          .as("i10_index"),
-        (floor(mean * 1000000 + 0.5) / 1000000.0).as("two_year_mean"),
-        sort_array(collect_list(col("cited_by_count").cast("int")),
-          asc = false).as("sorted_citations"))
-  }
-
   /** `publisher_roles` ([[EntityRoles.roles]]): the own publisher role
     * plus linked institution and funder roles. */
   def roles(publishers: DataFrame, entityLinks: DataFrame,
-      workCounts: DataFrame, entityCounts: DataFrame): DataFrame =
+      ma: DataFrame, entityCounts: DataFrame): DataFrame =
     EntityRoles.roles(publishers, "publisher_id", "P", "publisher",
-      workCounts, "I" -> "institution", entityLinks, entityCounts)
+      ma, "I" -> "institution", entityLinks, entityCounts)
 
   /** The full publishers_api assembly (cell 1). Inputs:
     *  - `publishers`: registry (id, display_name, alternate_titles /
@@ -105,19 +68,23 @@ object PublishersApi {
   def assemble(publishers: DataFrame, pairs: DataFrame,
       entityLinks: DataFrame, entityCounts: DataFrame, recentYearMin: Int,
       yearMin: Int = 2014, yearMax: Int): DataFrame = {
-    val wc = workCounts(pairs, yearMin, yearMax)
+    // `publisher_stats` and `publisher_total_counts` are one rollup;
+    // this entity's works carry no OA flag
+    val rows = pairs.select(col("publisher_id"), col("work_id"),
+      col("publication_year").as("pub_year"), col("cited_by_count"),
+      lit(null).cast("boolean").as("is_oa"))
+    val ma = Metrics.rollup(rows, "publisher_id", count(col("work_id")),
+      recentYearMin)
+    val cby = Metrics.countsByYear(
+      rows.filter(col("pub_year").between(yearMin, yearMax)), "publisher_id",
+      count(col("work_id")).as("works_count"),
+      sum(col("cited_by_count")).as("cited_by_count"))
+    def byId(df: DataFrame): DataFrame = df.withColumnRenamed("publisher_id", "id")
     publishers.filter(col("merge_into_id").isNull)
-      .join(wc.withColumnRenamed("publisher_id", "__wc_id")
-          .withColumnRenamed("works_count", "__wc")
-          .withColumnRenamed("cited_by_count", "__cc"),
-        col("id") === col("__wc_id"), "left").drop("__wc_id")
-      .join(stats(pairs, recentYearMin)
-          .withColumnRenamed("publisher_id", "__ps_id"),
-        col("id") === col("__ps_id"), "left").drop("__ps_id")
-      .join(roles(publishers, entityLinks, wc, entityCounts)
-          .withColumnRenamed("publisher_id", "__pr_id")
-          .withColumnRenamed("roles", "__roles"),
-        col("id") === col("__pr_id"), "left").drop("__pr_id")
+      .join(byId(ma), Seq("id"), "left")
+      .join(byId(cby), Seq("id"), "left")
+      .join(byId(roles(publishers, entityLinks, ma, entityCounts)), Seq("id"),
+        "left")
       .select(
         col("id"),
         array(concat(lit(OA + "P"), col("id").cast("string"))).as("lineage"),
@@ -134,14 +101,10 @@ object PublishersApi {
           .as("ids"),
         col("ror_id"), col("image_url"), col("image_thumbnail_url"),
         col("wikidata_id"), col("homepage_url"),
-        coalesce(col("__wc"), lit(0L)).as("works_count"),
-        coalesce(col("__cc"), lit(0L)).as("cited_by_count"),
-        struct(
-          coalesce(col("two_year_mean"), lit(0.0)).as("2yr_mean_citedness"),
-          Metrics.hIndex(col("sorted_citations")).cast("int").as("h_index"),
-          coalesce(col("i10_index"), lit(0)).as("i10_index"))
-          .as("summary_stats"),
-        coalesce(col("__roles"), array().cast(
+        coalesce(col("works_count"), lit(0L)).as("works_count"),
+        coalesce(col("cited_by_count"), lit(0L)).as("cited_by_count"),
+        Metrics.summaryStruct.as("summary_stats"),
+        coalesce(col("roles"), array().cast(
           "array<struct<role:string,id:string,works_count:int>>")).as("roles"),
         coalesce(col("counts_by_year"), array().cast(
           "array<struct<year:int,works_count:bigint,cited_by_count:bigint>>"))

@@ -48,38 +48,14 @@ object SourcesApi {
         col("created_date"),
         col("topics").as("work_topics"))
 
-  /** `main_agg_pre` + `main_agg` fused into ONE hash aggregation:
-    * counts, i10, recent mean (exact-decimal e6 protocol — see
-    * [[Metrics.summaryStats]]), h-index from the DESC-sorted citation
-    * array, and the second-truncated min created date. `recentYearMin`
-    * pins the reference's `YEAR(current_date()) - 2` horizon. */
-  def mainAgg(worksBase: DataFrame, recentYearMin: Int): DataFrame = {
-    val recent = when(col("pub_year") >= recentYearMin, col("cited_by_count"))
-    val mean = sum(recent).cast("double") /
-      nullif(count(recent).cast("double"), lit(0.0))
-    worksBase.groupBy(col("source_id"))
-      .agg(
-        count(lit(1)).cast("int").as("works_count"),
-        sum(col("cited_by_count")).cast("int").as("cited_by_count"),
-        sum(when(col("is_oa"), 1).otherwise(0)).cast("int").as("oa_works_count"),
-        count(when(col("cited_by_count") >= 10, 1)).cast("int").as("i10_index"),
-        (floor(mean * 1000000 + 0.5) / 1000000.0).as("recent_mean_citedness"),
-        sort_array(collect_list(col("cited_by_count")), asc = false)
-          .as("__sorted"),
-        date_trunc("SECOND", min(col("created_date")).cast("timestamp"))
-          .as("created_date"))
-      .withColumn("h_index", Metrics.hIndex(col("__sorted")).cast("int"))
-      .drop("__sorted")
-  }
-
   /** `topics_and_share`: distinct (entity, work, topic) rows → one
     * GROUPING SETS aggregation for per-entity counts and corpus totals,
     * top-25 `topics` (count DESC, id ASC) and `topic_share`
     * (value DESC, id ASC; value = ROUND(count/total, 7)). The same
     * template serves sources (`source_id`, the default) and
     * institutions (`institution_id` — CreateInstitutionsApi.ipynb's
-    * identical `topics_and_share` CTE); `key` picks the grouping
-    * column. */
+    * identical `topics_and_share` CTE); `key` names the grouping
+    * column, in and out. */
   def topicsAndShare(worksBase: DataFrame, topK: Int = 25,
       key: String = "source_id"): DataFrame = {
     val awt = worksBase.filter(col("work_id").isNotNull)
@@ -132,7 +108,7 @@ object SourcesApi {
           payload).as("__tc"),
         graft.operators.TopK.topKRows(topK)(col("__value_e7"),
           col("topic_id"), payload).as("__tv"))
-      .select(col("source_id"),
+      .select(col("source_id").as(key),
         transform(col("__tc"), e => struct(e.getField("id").as("id"),
           p(e).getField("display_name").as("display_name"),
           e.getField("score").cast("int").as("count"),
@@ -146,22 +122,6 @@ object SourcesApi {
           p(e).getField("field").as("field"),
           p(e).getField("domain").as("domain"))).as("topic_share"))
   }
-
-  /** Per-(source, year) counts collected newest-year-first — the
-    * correlated `counts_by_year` subquery as one two-level aggregate. */
-  def countsByYear(worksBase: DataFrame): DataFrame =
-    worksBase.filter(col("pub_year").isNotNull)
-      .groupBy(col("source_id"), col("pub_year").cast("int").as("year"))
-      .agg(count(lit(1)).cast("int").as("works_count"),
-        sum(when(col("is_oa"), 1).otherwise(0)).cast("int").as("oa_works_count"),
-        sum(col("cited_by_count")).cast("int").as("cited_by_count"))
-      .groupBy(col("source_id"))
-      .agg(sort_array(collect_list(struct(col("year"), col("works_count"),
-        col("oa_works_count"), col("cited_by_count"))), asc = false)
-        .as("counts_by_year"))
-
-  private val emptySummary = struct(lit(0.0).as("2yr_mean_citedness"),
-    lit(0).cast("int").as("h_index"), lit(0).cast("int").as("i10_index"))
 
   /** The full sources_api assembly (cell 3). Inputs:
     *  - `sources`: legacy-shape registry (id, display_name, issn_l,
@@ -195,16 +155,15 @@ object SourcesApi {
     val isRepoOrMeta = isRepo || col("type") === "metadata"
     val instUrl = concat(lit(OA + "I"), col("institution_id").cast("string"))
     val pubUrl = concat(lit(OA + "P"), col("publisher_id").cast("string"))
+    def byId(df: DataFrame): DataFrame = df.withColumnRenamed("source_id", "id")
     src
-      .join(mainAgg(wb, recentYearMin).withColumnRenamed("source_id", "__ma_id"),
-        col("id") === col("__ma_id"), "left")
-      .drop("__ma_id")
-      .join(topicsAndShare(wb).withColumnRenamed("source_id", "__ts_id"),
-        col("id") === col("__ts_id"), "left")
-      .drop("__ts_id")
-      .join(countsByYear(wb).withColumnRenamed("source_id", "__cy_id"),
-        col("id") === col("__cy_id"), "left")
-      .drop("__cy_id")
+      .join(byId(Metrics.rollup(wb, "source_id", count(lit(1)).cast("int"),
+        recentYearMin,
+        date_trunc("SECOND", min(col("created_date")).cast("timestamp"))
+          .as("created_date"))), Seq("id"), "left")
+      .join(byId(topicsAndShare(wb)), Seq("id"), "left")
+      .join(byId(Metrics.countsByYear(wb, "source_id",
+        Metrics.intCounts(count(lit(1))): _*)), Seq("id"), "left")
       .select(
         col("id"), col("issn_l"), col("issns").as("issn"), col("display_name"),
         when(isRepo, instUrl).otherwise(pubUrl).as("host_organization"),
@@ -216,12 +175,9 @@ object SourcesApi {
           .as("host_organization_lineage"),
         coalesce(col("works_count"), lit(0)).as("works_count"),
         coalesce(col("oa_works_count"), lit(0)).as("oa_works_count"),
-        coalesce(col("cited_by_count"), lit(0)).as("cited_by_count"),
-        when(col("works_count").isNotNull, struct(
-            coalesce(col("recent_mean_citedness"), lit(0.0))
-              .as("2yr_mean_citedness"),
-            col("h_index"), col("i10_index")))
-          .otherwise(emptySummary).as("summary_stats"),
+        coalesce(col("cited_by_count").cast("int"), lit(0))
+          .as("cited_by_count"),
+        Metrics.zeroedSummaryStruct.as("summary_stats"),
         coalesce(col("is_oa"), lit(false)).as("is_oa"),
         coalesce(col("is_in_doaj"), lit(false)).as("is_in_doaj"),
         col("is_in_doaj_start_year").cast("int").as("is_in_doaj_since_year"),

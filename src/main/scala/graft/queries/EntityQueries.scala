@@ -217,7 +217,9 @@ object EntityQueries {
     val wf = o.select((col("o_custkey") % 100).as("funder_id"),
       k.as("work_id"), (k % 23).as("cited_by_count"),
       (k % 2 === 0).as("is_oa"), year(col("o_orderdate")).as("pub_year"))
-    graft.entities.Metrics.summaryStats(wf, "funder_id", recentYearMin = 1997)
+    graft.entities.Metrics.rollup(wf, "funder_id",
+        countDistinct(col("work_id")).cast("int"), recentYearMin = 1997)
+      .withColumn("cited_by_count", col("cited_by_count").cast("int"))
   }
 
   /** §2.3 institution ancestry: recursive parent-hierarchy closure as a

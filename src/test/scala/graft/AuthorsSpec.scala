@@ -66,6 +66,19 @@ class AuthorsSpec extends AnyFunSuite {
     assert(affs == Seq(("iX", Seq(2022, 2020)), ("iY", Seq(2021))))
   }
 
+  test("countsByYear: flat per-year rows; rows without a year dropped") {
+    val staging = Seq(
+      (1L, Option(2020), true, 3L), (1L, Option(2020), false, 4L),
+      (1L, Option(2021), true, 10L), (1L, Option.empty[Int], true, 99L),
+      (2L, Option.empty[Int], false, 5L))
+      .toDF("author_id", "pub_year", "is_oa", "work_cited_by_count")
+    val out = Authors.countsByYear(staging)
+    assert(out.columns.toSeq == Seq("author_id", "year", "works_count",
+      "oa_works_count", "cited_by_count"))
+    assert(out.as[(Long, Int, Int, Int, Int)].collect().toSet ==
+      Set((1L, 2020, 2, 1, 7), (1L, 2021, 1, 1, 10)))
+  }
+
   test("lastKnownInstitution: most recent work wins with deterministic tiebreak") {
     val awi = Seq((1L, 2020, 5L, "iOld"), (1L, 2022, 9L, "iNew"), (1L, 2022, 8L, "iMid"))
       .toDF("author_id", "pub_year", "work_id", "institution_id")
@@ -86,36 +99,9 @@ class AuthorsSpec extends AnyFunSuite {
     // cycle: each node sees the other once, never itself, and terminates
     assert(byInst("x") == Set(("y", 1)))
     assert(byInst("y") == Set(("x", 1)))
-    val roll = Institutions.lineageRollup(
-      Seq(("a", 5L), ("b", 2L), ("c", 1L)).toDF("id", "n"), anc, "id", "n")
-      .as[(String, Long)].collect().toMap
-    assert(roll("c") == 8L && roll("b") == 7L && roll("a") == 5L)
-  }
-
-  test("Publishers: hierarchy-inclusive sources count") {
-    import graft.entities.Publishers
-    val edges = Seq(("imprint1", "house"), ("imprint2", "house"), ("house", "group"))
-      .toDF("child_id", "parent_id")
-    val sources = Seq(("s1", "imprint1"), ("s2", "imprint1"), ("s3", "imprint2"),
-      ("s4", "house"), ("s5", null)).toDF("source_id", "publisher_id")
-    val h = Publishers.hierarchy(edges)
-    val counts = Publishers.sourcesCount(sources, h)
-      .as[(String, Long)].collect().toMap
-    assert(counts("imprint1") == 2 && counts("imprint2") == 1)
-    assert(counts("house") == 4)  // own 1 + imprints' 3
-    assert(counts("group") == 4)  // everything below
-  }
-
-  test("stampUpdated: unchanged rows keep their date, changed/new advance") {
-    val now = lit("2024-06-01")
-    val v1 = Seq((1L, "a"), (2L, "b")).toDF("id", "payload")
-    val s1 = Authors.stampUpdated(v1, None, "id",
-      Authors.contentHash(Seq(col("payload"))), lit("2024-01-01"))
-    val prev = s1.withColumn("__h", Authors.contentHash(Seq(col("payload"))))
-    val v2 = Seq((1L, "a"), (2L, "CHANGED"), (3L, "new")).toDF("id", "payload")
-    val s2 = Authors.stampUpdated(v2, Some(prev), "id",
-      Authors.contentHash(Seq(col("payload"))), now)
-    val dates = s2.select("id", "updated_date").as[(Long, String)].collect().toMap
-    assert(dates(1L) == "2024-01-01" && dates(2L) == "2024-06-01" && dates(3L) == "2024-06-01")
+    // the lineage rollup: one array per institution, closest first
+    val lin = Institutions.lineage(anc).select("institution_id", "lineage_ids")
+      .as[(String, Seq[String])].collect().toMap
+    assert(lin("a") == Seq("b", "c") && lin("b") == Seq("c"))
   }
 }

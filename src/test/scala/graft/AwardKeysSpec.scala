@@ -165,14 +165,17 @@ class AwardKeysSpec extends AnyFunSuite {
       null)
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val sess = spark
-    val fRows = new java.util.ArrayList[Row]()
-    funders.foreach(f => fRows.add(Row(f)))
-    val fDf = sess.createDataFrame(fRows,
-      StructType(Seq(StructField("funder_id", LongType, nullable = true))))
-    val bDf = battery.toDF("raw")
-    val rDf = Seq(Some(true), Some(false), None).toDF("reg")
-    val crossed = fDf.crossJoin(bDf).crossJoin(rDf)
+    // the funder x battery x side product is built in Scala as one
+    // local relation: projected over a nested-loop join instead, the
+    // several-hundred-arm spec chains overflow the join's generated
+    // method and Spark falls back to interpreting it
+    val product = new java.util.ArrayList[Row]()
+    for (f <- funders; raw <- battery;
+         reg <- Seq[java.lang.Boolean](true, false, null))
+      product.add(Row(f, raw, reg))
+    val crossed = spark.createDataFrame(product, StructType(Seq(
+        StructField("funder_id", LongType), StructField("raw", StringType),
+        StructField("reg", BooleanType))))
       .withColumn("n", AwardKeys.normalized(col("raw")))
     val out = crossed.select(col("funder_id"), col("raw"), col("reg"),
       AwardKeys.sharpKeyNorm(col("funder_id"), col("n"), col("reg"))

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.authors.AuthorMatcher
 import graft.ingest.CrossrefParser
 import graft.resolve.WorkIdResolver
-import graft.serve.{Guardrails, SnapshotExport}
+import graft.serve.Guardrails
 import graft.works.{TypeClassifier, WorksBase}
 
 /** The walden-domain minimum slice (SURVEY §7.2) on FIXTURES.md-shaped
@@ -190,22 +190,6 @@ class DomainSliceSpec extends AnyFunSuite {
     assert(!ref.passed && ref.value == 1)
     assert(Guardrails.runAll(Seq(churnOk)).isRight)
     assert(Guardrails.runAll(Seq(churnOk, churnBad)).isLeft)
-  }
-
-  test("SnapshotExport: caps, null-dropping JSON, bounded files") {
-    val df = Seq((1L, "x" * 100, null.asInstanceOf[String]), (2L, "b", "t"))
-      .toDF("id", "title", "subtitle")
-    val capped = SnapshotExport.capStrings(df, Map("title" -> 10))
-    assert(capped.filter(col("id") === 1).select("title").as[String].collect()(0).length == 10)
-    val json = SnapshotExport.toJsonLines(capped, Seq("id", "title", "subtitle"))
-      .as[String].collect().sorted
-    assert(json(0) == """{"id":1,"title":"xxxxxxxxxx"}""") // null subtitle dropped
-    val dir = java.nio.file.Files.createTempDirectory("graft-export").toString
-    SnapshotExport.writeJson(
-      capped.withColumn("json", to_json(struct(col("id")))), col("id"), "json",
-      dir, partitions = 2, maxRecordsPerFile = 1)
-    val lines = spark.read.text(dir).count()
-    assert(lines == 2)
   }
 
   test("DataCiteParser: attrs projection, ORCID scheme pick, year date") {

@@ -48,13 +48,47 @@ class FundersSpec extends AnyFunSuite {
   }
 
   test("countsByYear: newest-first buckets with distinct work counts") {
+    // F1 lists work 10 twice; F2 has no works; F3's works all lack a
+    // publication year
     val wfe = Seq(
-      (1L, 10L, 2020, 4, true), (1L, 11L, 2020, 2, false),
-      (1L, 12L, 2021, 9, true))
+      (1L, 10L, Option(2020), 4, true), (1L, 10L, Option(2020), 4, true),
+      (1L, 11L, Option(2020), 2, false), (1L, 12L, Option(2021), 9, true),
+      (3L, 30L, None, 12, false))
       .toDF("funder_id", "work_id", "pub_year", "cited_by_count", "is_oa")
-    val out = Funders.countsByYear(wfe).collect()
-    val rows = out(0).getSeq[org.apache.spark.sql.Row](1)
+    val funders = Seq(1L, 2L, 3L).toDF("funder_id").selectExpr("funder_id",
+      "concat('F', funder_id) AS display_name",
+      "CAST(NULL AS STRING) AS alternate_titles",
+      "CAST(NULL AS STRING) AS country_code",
+      "CAST(NULL AS STRING) AS description",
+      "CAST(NULL AS STRING) AS homepage_url",
+      "CAST(NULL AS STRING) AS image_url",
+      "CAST(NULL AS STRING) AS image_thumbnail_url",
+      "CAST(NULL AS STRING) AS ror_id", "CAST(NULL AS STRING) AS wikidata_id",
+      "CAST(NULL AS STRING) AS crossref_id", "CAST(NULL AS STRING) AS doi",
+      "CAST(NULL AS BIGINT) AS merge_into_id")
+    val noCounts = Seq.empty[(String, Int)].toDF("entity_id", "works_count")
+    val out = Funders.assemble(funders, wfe,
+        Seq.empty[Long].toDF("funder_id"),
+        Seq.empty[(String, String)].toDF("id_1", "id_2"), noCounts, noCounts,
+        recentYearMin = 2021)
+      .select("works_count", "cited_by_count", "summary_stats",
+        "counts_by_year")
+      .orderBy("id").collect()
+    val rows = out(0).getSeq[org.apache.spark.sql.Row](3)
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)))
-    assert(rows == Seq((2021, 1, 1, 9), (2020, 2, 1, 6)))
+    // the repeated edge counts the work once but its flags and
+    // citations per edge, in the year buckets and in the totals
+    assert(rows == Seq((2021, 1, 1, 9), (2020, 2, 2, 10)))
+    assert(out(0).getInt(0) == 3 && out(0).getInt(1) == 19)
+    val s1 = out(0).getStruct(2)
+    assert(s1.getDouble(0) == 9.0 && s1.getInt(1) == 3 && s1.getInt(2) == 0)
+    // no works: zero counts, NULL h_index, NULL counts_by_year
+    val s2 = out(1).getStruct(2)
+    assert(out(1).getInt(0) == 0 && out(1).getInt(1) == 0)
+    assert(s2.getDouble(0) == 0.0 && s2.isNullAt(1) && s2.getInt(2) == 0)
+    assert(out(1).isNullAt(3))
+    // no publication years: counted, but no year bucket
+    assert(out(2).getInt(0) == 1 && out(2).getStruct(2).getInt(1) == 1)
+    assert(out(2).isNullAt(3))
   }
 }

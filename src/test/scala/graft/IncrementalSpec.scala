@@ -21,17 +21,18 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("Incremental.bumpUpdatedDate only on content change") {
-    val prevHashes = Seq((1L, "a")).toDF("k", "v")
+    val prevHashes = Seq((1L, "a"), (3L, "c")).toDF("k", "v")
       .withColumn("content_hash", Incremental.contentHash(Seq(col("v"))))
       .withColumn("updated_date", lit("2020-01-01").cast("timestamp"))
       .select("k", "content_hash", "updated_date")
-    val next = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    val next = Seq((1L, "a"), (2L, "b"), (3L, "CHANGED")).toDF("k", "v")
     val out = Incremental.bumpUpdatedDate(next, prevHashes, Seq("k"), Seq("v"),
         lit("2024-06-01").cast("timestamp"))
       .select(col("k"), col("updated_date").cast("string"))
       .as[(Long, String)].collect().toMap
     assert(out(1L).startsWith("2020-01-01"))  // unchanged → keeps old date
     assert(out(2L).startsWith("2024-06-01"))  // new → bumped
+    assert(out(3L).startsWith("2024-06-01"))  // changed → bumped
   }
 
   test("Incremental.aboveWatermark filters strictly above") {

@@ -19,11 +19,12 @@ class InstitutionsApiSpec extends AnyFunSuite {
 
   /** (work_id, instIds, cited, py) → works rows; instIds like "5,5,7"
     * yields one authorship per listed institution (so "5,5" is the
-    * double-affiliation case). */
+    * double-affiliation case); py 0 is a work without a publication
+    * year. */
   private def mkWorks(rows: Seq[(Long, String, Int, Int)]): DataFrame =
     rows.toDF("wid", "insts", "cited", "py")
       .selectExpr(
-        "wid AS id", "py AS publication_year",
+        "wid AS id", "NULLIF(py, 0) AS publication_year",
         "CAST(NULL AS DATE) AS publication_date", "cited AS cited_by_count",
         "named_struct('is_oa', wid % 2 = 0) AS open_access",
         "CAST(NULL AS ARRAY<STRUCT<id:STRING,display_name:STRING," +
@@ -33,27 +34,75 @@ class InstitutionsApiSpec extends AnyFunSuite {
           "array(named_struct('id', concat('https://openalex.org/I', x))))) " +
           "AS authorships")
 
+  /** The full assembly over registry rows `ids` with every optional
+    * input empty. */
+  private def api(ids: Seq[Long], wb: DataFrame): DataFrame =
+    InstitutionsApi.assemble(
+      ids.map(i => (i, Option.empty[Long])).toDF("id", "merge_into_id")
+        .selectExpr("id", "CAST(NULL AS STRING) AS ror_id",
+          "concat('Inst ', id) AS display_name",
+          "'US' AS iso3166_code", "'education' AS type",
+          "CAST(NULL AS STRING) AS official_page",
+          "CAST(NULL AS STRING) AS image_url",
+          "CAST(NULL AS STRING) AS image_thumbnail_url",
+          "CAST(NULL AS ARRAY<STRING>) AS display_name_acronyms",
+          "CAST(NULL AS ARRAY<STRING>) AS display_name_alternatives",
+          "CAST(NULL AS STRING) AS city",
+          "CAST(NULL AS BIGINT) AS geonames_city_id",
+          "CAST(NULL AS STRING) AS region",
+          "CAST(NULL AS STRING) AS country",
+          "CAST(NULL AS DOUBLE) AS latitude",
+          "CAST(NULL AS DOUBLE) AS longitude",
+          "CAST(NULL AS STRING) AS grid_id",
+          "CAST(NULL AS STRING) AS wiki_page",
+          "CAST(NULL AS STRING) AS wikidata_id",
+          "DATE '2020-01-01' AS created_date", "merge_into_id"),
+      Seq.empty[(String, String)].toDF("id", "status"),
+      Seq.empty[(Long, Seq[Long])].toDF("institution_id", "lineage_ids"),
+      Seq(777L), wb,
+      Seq.empty[(String, String)].toDF("id_1", "id_2"),
+      Seq.empty[(String, Int)].toDF("entity_id", "works_count"),
+      Seq.empty[(Long, String, Option[Long], String, Option[Long])]
+        .toDF("id", "display_name", "institution_id", "type",
+          "merge_into_id"),
+      Seq.empty[(String, String, String)].toDF("ror_id", "related_ror_id",
+        "relationship_type"),
+      Seq.empty[(String, String)].toDF("ror_id", "type"),
+      Seq.empty[(String, String)].toDF("ror_id", "label"),
+      Seq.empty[(String, String)].toDF("ror_id", "alias"),
+      recentYearMin = 2023)
+
   test("worksBase/mainAgg: the reference's non-deduplicated grain — " +
     "double affiliation doubles citations but not works_count") {
+    // I8 has no works; I9's works all lack a publication year
     val wb = InstitutionsApi.worksBase(mkWorks(Seq(
-      (1L, "5,5", 10, 2020), (2L, "5", 4, 2020), (3L, "7", 2, 2024))))
-    assert(wb.count() == 4) // w1 contributes TWO rows for I5
-    val r = InstitutionsApi.mainAgg(wb, recentYearMin = 2023)
-      .filter(col("institution_id") === 5)
-      .select("works_count", "cited_by_count", "i10_index", "h_index")
-      .collect()(0)
+      (1L, "5,5", 10, 2020), (2L, "5", 4, 2020), (3L, "7", 2, 2024),
+      (4L, "9", 11, 0), (5L, "9", 1, 0))))
+    assert(wb.count() == 6) // w1 contributes TWO rows for I5
+    val out = api(Seq(5L, 8L, 9L), wb)
+      .select("works_count", "cited_by_count", "summary_stats",
+        "counts_by_year")
+      .orderBy("id").collect()
+    def summary(r: Row) = {
+      val s = r.getStruct(2); (s.getDouble(0), s.getInt(1), s.getInt(2))
+    }
     // works_count distinct = 2; citations 10+10+4 = 24; i10 counts the
     // duplicated 10 twice; h over [10,10,4] = 3
-    assert(r.getInt(0) == 2 && r.getInt(1) == 24)
-    assert(r.getInt(2) == 2 && r.getInt(3) == 3)
+    assert(out(0).getInt(0) == 2 && out(0).getInt(1) == 24)
+    assert(summary(out(0)) == ((0.0, 3, 2)))
+    // the year bucket counts the double-affiliated work once
+    assert(out(0).getSeq[Row](3).map(r => (r.getInt(0), r.getInt(1),
+      r.getInt(3))) == Seq((2020, 2, 14)))
+    assert(out(1).getInt(0) == 0 && out(1).getInt(1) == 0)
+    assert(summary(out(1)) == ((0.0, 0, 0)) && out(1).getSeq[Row](3).isEmpty)
+    assert(out(2).getInt(0) == 2 && out(2).getInt(1) == 12)
+    assert(summary(out(2)) == ((0.0, 1, 1)) && out(2).getSeq[Row](3).isEmpty)
   }
 
   test("countsByYear: DISTINCT pair grain and the 2010 floor") {
     val wb = InstitutionsApi.worksBase(mkWorks(Seq(
       (1L, "5,5", 10, 2015), (2L, "5", 4, 2009))))
-    val rows = InstitutionsApi.countsByYear(wb).collect()
-    assert(rows.length == 1)
-    val cby = rows(0).getSeq[Row](1)
+    val cby = api(Seq(5L), wb).select("counts_by_year").head().getSeq[Row](0)
     // the 2009 work is dropped by the floor; the 2015 duplicate pair
     // dedups → works_count 1, cited 10 (not 20)
     assert(cby.map(r => (r.getInt(0), r.getInt(1), r.getInt(3))) ==
@@ -69,9 +118,8 @@ class InstitutionsApiSpec extends AnyFunSuite {
       ("I5", "X9")).toDF("id_1", "id_2") // non-P/F dropped
     val counts = Seq(("F1", 10), ("P1", 3)).toDF("entity_id", "works_count")
     // F2/F3 have no counts row → NULL ranks last; F1 wins
-    val ma = InstitutionsApi.mainAgg(InstitutionsApi.worksBase(mkWorks(Seq(
-      (1L, "5", 2, 2020)))), 2023)
-    val r = InstitutionsApi.roles(inst, links, ma, counts).collect()(0)
+    val own = Seq((5L, 1)).toDF("institution_id", "works_count")
+    val r = InstitutionsApi.roles(inst, links, own, counts).collect()(0)
       .getSeq[Row](1).map(x => (x.getString(0), x.getString(1), x.getInt(2)))
     assert(r == Seq(
       ("funder", "https://openalex.org/F1", 10),
@@ -141,52 +189,16 @@ class InstitutionsApiSpec extends AnyFunSuite {
   }
 
   test("stampUpdatedDate: new and changed rows get now; unchanged keep") {
-    def api(rows: Seq[(Long, Int)]): DataFrame = {
-      val wb = InstitutionsApi.worksBase(mkWorks(
-        rows.map { case (w, i) => (w, i.toString, 1, 2020) }))
-      InstitutionsApi.assemble(
-        Seq((5L, Option.empty[Long]), (6L, Option.empty[Long]))
-          .toDF("id", "merge_into_id")
-          .selectExpr("id", "CAST(NULL AS STRING) AS ror_id",
-            "concat('Inst ', id) AS display_name",
-            "'US' AS iso3166_code", "'education' AS type",
-            "CAST(NULL AS STRING) AS official_page",
-            "CAST(NULL AS STRING) AS image_url",
-            "CAST(NULL AS STRING) AS image_thumbnail_url",
-            "CAST(NULL AS ARRAY<STRING>) AS display_name_acronyms",
-            "CAST(NULL AS ARRAY<STRING>) AS display_name_alternatives",
-            "CAST(NULL AS STRING) AS city",
-            "CAST(NULL AS BIGINT) AS geonames_city_id",
-            "CAST(NULL AS STRING) AS region",
-            "CAST(NULL AS STRING) AS country",
-            "CAST(NULL AS DOUBLE) AS latitude",
-            "CAST(NULL AS DOUBLE) AS longitude",
-            "CAST(NULL AS STRING) AS grid_id",
-            "CAST(NULL AS STRING) AS wiki_page",
-            "CAST(NULL AS STRING) AS wikidata_id",
-            "DATE '2020-01-01' AS created_date", "merge_into_id"),
-        Seq.empty[(String, String)].toDF("id", "status"),
-        Seq.empty[(Long, Seq[Long])].toDF("institution_id", "lineage_ids"),
-        Seq(777L), wb,
-        Seq.empty[(String, String)].toDF("id_1", "id_2"),
-        Seq.empty[(String, Int)].toDF("entity_id", "works_count"),
-        Seq.empty[(Long, String, Option[Long], String, Option[Long])]
-          .toDF("id", "display_name", "institution_id", "type",
-            "merge_into_id"),
-        Seq.empty[(String, String, String)].toDF("ror_id", "related_ror_id",
-          "relationship_type"),
-        Seq.empty[(String, String)].toDF("ror_id", "type"),
-        Seq.empty[(String, String)].toDF("ror_id", "label"),
-        Seq.empty[(String, String)].toDF("ror_id", "alias"),
-        recentYearMin = 2023)
-    }
+    def gen(rows: Seq[(Long, Int)]): DataFrame =
+      api(Seq(5L, 6L), InstitutionsApi.worksBase(mkWorks(
+        rows.map { case (w, i) => (w, i.toString, 1, 2020) })))
     val prev = Incremental.hashSnapshot(
-      api(Seq((1L, 5), (2L, 6)))
+      gen(Seq((1L, 5), (2L, 6)))
         .withColumn("updated_date", lit("2024-01-01").cast("timestamp")),
       InstitutionsApi.contentKey)
     // I5 gains a work → changed; I6 unchanged
     val out = Incremental.stampUpdatedDate(
-      api(Seq((1L, 5), (3L, 5), (2L, 6))), prev,
+      gen(Seq((1L, 5), (3L, 5), (2L, 6))), prev,
       InstitutionsApi.contentKey, lit("2024-02-02").cast("timestamp"))
       .select(col("id"), date_format(col("updated_date"), "yyyy-MM-dd"))
       .orderBy("id").collect().map(r => (r.getLong(0), r.getString(1)))

@@ -14,10 +14,11 @@ class PublishersApiSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** (work_id, publisherIds "5,5,7", cited, py) → works rows. */
+  /** (work_id, publisherIds "5,5,7", cited, py) → works rows; py 0 is
+    * a work without a publication year. */
   private def mkWorks(rows: Seq[(Long, String, Int, Int)]): DataFrame =
     rows.toDF("wid", "pubs", "cited", "py")
-      .selectExpr("wid AS id", "py AS publication_year",
+      .selectExpr("wid AS id", "NULLIF(py, 0) AS publication_year",
         "cited AS cited_by_count",
         "transform(split(pubs, ','), x -> named_struct('source', " +
           "named_struct('host_organization', " +
@@ -67,17 +68,30 @@ class PublishersApiSpec extends AnyFunSuite {
     val s6 = api(1).getStruct(api(1).fieldIndex("summary_stats"))
     assert(s5.getDouble(0) == 12.0 && s5.getInt(1) == 1 && s5.getInt(2) == 1)
     assert(s6.getDouble(0) == 0.0 && s6.isNullAt(1) && s6.getInt(2) == 0)
+    // the publisher with no works: bigint zero counts, [] counts_by_year
+    assert(api(1).getLong(api(1).fieldIndex("works_count")) == 0L)
+    assert(api(1).getLong(api(1).fieldIndex("cited_by_count")) == 0L)
+    assert(api(1).getSeq[Row](api(1).fieldIndex("counts_by_year")).isEmpty)
   }
 
   test("counts_by_year bounds: below-2014 and above-yearMax years kept " +
     "in totals but cut from the year array") {
-    val api = PublishersApi.assemble(mkReg(Seq(5L)),
+    val api = PublishersApi.assemble(mkReg(Seq(5L, 8L)),
       PublishersApi.workPairs(mkWorks(Seq(
-        (1L, "5", 1, 2013), (2L, "5", 2, 2015), (3L, "5", 3, 2022)))),
-      noLinks, noCounts, recentYearMin = 2022, yearMax = 2021).collect()(0)
-    assert(api.getLong(api.fieldIndex("works_count")) == 3L)
-    val cby = api.getSeq[Row](api.fieldIndex("counts_by_year"))
-    assert(cby.map(_.getInt(0)) == Seq(2015))
+        (1L, "5", 1, 2013), (2L, "5", 2, 2015), (3L, "5", 3, 2022),
+        (4L, "8", 11, 0), (5L, "8", 4, 0)))),
+      noLinks, noCounts, recentYearMin = 2022, yearMax = 2021)
+      .orderBy("id").collect()
+    assert(api(0).getLong(api(0).fieldIndex("works_count")) == 3L)
+    val cby = api(0).getSeq[Row](api(0).fieldIndex("counts_by_year"))
+    assert(cby.map(r => (r.getInt(0), r.getLong(1), r.getLong(2))) ==
+      Seq((2015, 1L, 2L)))
+    // works that all lack a publication year: counted, no year bucket
+    val p8 = api(1)
+    assert(p8.getLong(p8.fieldIndex("works_count")) == 2L)
+    assert(p8.getLong(p8.fieldIndex("cited_by_count")) == 15L)
+    assert(p8.getStruct(p8.fieldIndex("summary_stats")).getInt(1) == 2)
+    assert(p8.getSeq[Row](p8.fieldIndex("counts_by_year")).isEmpty)
   }
 
   test("from_json registry parsing: malformed JSON → null array") {

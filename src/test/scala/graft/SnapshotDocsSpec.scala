@@ -53,6 +53,17 @@ class SnapshotDocsSpec extends AnyFunSuite {
     assert(trunc(s).isEmpty)
   }
 
+  test("sanitizeString caps at maxLen chars; short and null pass through") {
+    val out = Seq(Option("x" * 100), Option("short"), Option.empty[String])
+      .toDF("s").select(SnapshotDocs.sanitizeString(col("s"), 10))
+      .as[Option[String]].collect().toSeq
+    assert(out === Seq(Some("x" * 10), Some("short"), None))
+    // the 32K default (the search sink's term limit)
+    val long = Seq("y" * 40000).toDF("s")
+      .select(SnapshotDocs.sanitizeString(col("s"))).as[String].head()
+    assert(long.length == 32000)
+  }
+
   test("sanitizeName strips non-LNPSZ chars and collapses whitespace") {
     val out = Seq("Bü\u0007chner\t  Straße ", "a\u0000b")
       .toDF("s").select(SnapshotDocs.sanitizeName(col("s"))).as[String]

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Incremental
@@ -27,14 +27,16 @@ class SourcesApiSpec extends AnyFunSuite {
     "'field',CAST(NULL AS STRING),'domain',CAST(NULL AS STRING)," +
     "'score',CAST(NULL AS DOUBLE))"
 
-  /** (work_id, source_id, cited, pub_year, topicsExpr) → works rows. */
+  /** (work_id, source_id, cited, pub_year, topicsExpr) → works rows;
+    * pub_year 0 is a work without a publication year. */
   private def mkWorks(rows: Seq[(Long, Long, Int, Int, String)]): DataFrame =
     rows.toDF("wid", "sid", "cited", "py", "tex")
       .selectExpr(
         "wid AS id",
         "named_struct('source', named_struct('id', " +
           "concat('https://openalex.org/S', sid))) AS primary_location",
-        "py AS publication_year", "CAST(NULL AS DATE) AS publication_date",
+        "NULLIF(py, 0) AS publication_year",
+        "CAST(NULL AS DATE) AS publication_date",
         "cited AS cited_by_count",
         "named_struct('is_oa', wid % 2 = 0) AS open_access",
         "DATE '2021-05-05' AS created_date",
@@ -43,19 +45,6 @@ class SourcesApiSpec extends AnyFunSuite {
           s"WHEN tex = 'AC' THEN array(${t("A")}, ${t("C")}) " +
           s"WHEN tex = 'A' THEN array(${t("A")}) " +
           s"ELSE CAST(NULL AS $topicT) END AS topics")
-
-  test("mainAgg: h-index fold, i10, exact recent mean on the horizon") {
-    val wb = SourcesApi.worksBase(mkWorks(Seq(
-      (1L, 1L, 10, 2020, ""), (2L, 1L, 3, 2020, ""),
-      (3L, 1L, 0, 2020, ""), (4L, 1L, 8, 2024, ""))))
-    val r = SourcesApi.mainAgg(wb, recentYearMin = 2023)
-      .select("works_count", "cited_by_count", "i10_index", "h_index",
-        "recent_mean_citedness").collect()(0)
-    // sorted desc [10,8,3,0] → h=3; only the 2024 work is "recent"
-    assert(r.getInt(0) == 4 && r.getInt(1) == 21 && r.getInt(2) == 1)
-    assert(r.getInt(3) == 3)
-    assert(r.getDouble(4) == 8.0)
-  }
 
   test("topicsAndShare: per-work dedup, null-id filter, count-vs-value order") {
     // s1: w1 carries topic A twice (dedup → one), w2 carries A, B and a
@@ -135,6 +124,38 @@ class SourcesApiSpec extends AnyFunSuite {
     assert(out(2).getString(1) == null) // null publisher_id → null host
     assert(out(2).getSeq[String](3) == Seq.empty)
     assert(out(2).getInt(4) == 0) // no works → zero counts
+  }
+
+  test("mainAgg: h-index fold, i10, exact recent mean on the horizon") {
+    // the reference's main_agg as the shared rollup computes it; s2 has
+    // no works (zero summary, [] counts_by_year) and s3's works all lack
+    // a publication year (counted, but in no year bucket)
+    val sources = mkSources(Seq((1L, Some(7L), None, "journal"),
+      (2L, Some(7L), None, "journal"), (3L, Some(7L), None, "journal")))
+    val wb = SourcesApi.worksBase(mkWorks(Seq(
+      (1L, 1L, 10, 2020, ""), (2L, 1L, 3, 2020, ""),
+      (3L, 1L, 0, 2020, ""), (4L, 1L, 8, 2024, ""),
+      (5L, 3L, 12, 0, ""), (6L, 3L, 2, 0, ""))))
+    val out = SourcesApi.assemble(sources, metricsPre, institutions,
+        publishers, wb, recentYearMin = 2023)
+      .select("works_count", "cited_by_count", "summary_stats",
+        "counts_by_year")
+      .orderBy("id").collect()
+    def summary(r: Row) = {
+      val s = r.getStruct(2); (s.getDouble(0), s.getInt(1), s.getInt(2))
+    }
+    def years(r: Row) = r.getSeq[Row](3)
+      .map(y => (y.getInt(0), y.getInt(1), y.getInt(2), y.getInt(3)))
+    // sorted desc [10,8,3,0] → h=3; only the 2024 work is "recent"
+    assert(out(0).getInt(0) == 4 && out(0).getInt(1) == 21)
+    assert(summary(out(0)) == ((8.0, 3, 1)))
+    // newest first; the even work ids are OA
+    assert(years(out(0)) == Seq((2024, 1, 1, 8), (2020, 3, 1, 13)))
+    assert(out(1).getInt(0) == 0 && out(1).getInt(1) == 0)
+    assert(summary(out(1)) == ((0.0, 0, 0)) && years(out(1)).isEmpty)
+    // no recent work → mean 0.0; h over [12,2] = 2
+    assert(out(2).getInt(0) == 2 && out(2).getInt(1) == 14)
+    assert(summary(out(2)) == ((0.0, 2, 1)) && years(out(2)).isEmpty)
   }
 
   test("stampUpdatedDate: changed gets now, unchanged keeps, new gets now") {
