@@ -77,24 +77,32 @@ class CoreSpec extends AnyFunSuite {
     assert(out == Seq("new"))
   }
 
-  test("Scd1Upsert.applyTombstoned + current: last writer wins, deletes " +
-    "stick, stale loses") {
-    def live(state: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
-      Scd1Upsert.current(state).select("k", "v").as[(Long, String)]
-        .collect().toSet
+  private def live(state: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
+    Scd1Upsert.current(state).select("k", "v").as[(Long, String)]
+      .collect().toSet
+
+  test("Scd1Upsert.apply: last-writer-wins with delete propagation") {
     val dead = Some(col("v") === "DEAD")
     val s0 = Scd1Upsert.applyTombstoned(None,
-      Seq((1L, "x", 10L), (2L, "y", 10L), (4L, "new", 30L))
-        .toDF("k", "v", "seq"), Seq("k"), col("seq"), deleteWhen = dead)
+      Seq((1L, "x", 10L), (2L, "y", 10L)).toDF("k", "v", "seq"),
+      Seq("k"), col("seq"), deleteWhen = dead)
     val s1 = Scd1Upsert.applyTombstoned(Some(s0),
       Seq((1L, "x2", 20L), (2L, "DEAD", 20L), (3L, "z", 5L))
         .toDF("k", "v", "seq"), Seq("k"), col("seq"), deleteWhen = dead)
-    assert(live(s1) == Set((1L, "x2"), (3L, "z"), (4L, "new")))
-    // a stale change loses to newer state, and to the delete's tombstone
+    assert(live(s1) == Set((1L, "x2"), (3L, "z")))
+    // the delete's tombstone keeps a later, older-sequence change out
     val s2 = Scd1Upsert.applyTombstoned(Some(s1),
-      Seq((4L, "stale", 20L), (2L, "revived", 15L)).toDF("k", "v", "seq"),
+      Seq((2L, "revived", 15L)).toDF("k", "v", "seq"),
       Seq("k"), col("seq"), deleteWhen = dead)
-    assert(live(s2) == Set((1L, "x2"), (3L, "z"), (4L, "new")))
+    assert(live(s2) == Set((1L, "x2"), (3L, "z")))
+  }
+
+  test("Scd1Upsert.apply: stale change loses to newer state") {
+    val s0 = Scd1Upsert.applyTombstoned(None,
+      Seq((1L, "new", 30L)).toDF("k", "v", "seq"), Seq("k"), col("seq"))
+    val s1 = Scd1Upsert.applyTombstoned(Some(s0),
+      Seq((1L, "stale", 20L)).toDF("k", "v", "seq"), Seq("k"), col("seq"))
+    assert(live(s1) == Set((1L, "new")))
   }
 
   test("AlignSchema: pad missing, cast, recurse into struct and array<struct>") {
